@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   /** Headline queries: one per major capability group, always the scale-path
@@ -85,6 +88,23 @@ object Bench {
     * of record). */
   private val SpreadGate = 0.15
 
+  /** Seconds to run one query's `count()`. A query that throws aborts the
+    * sweep with its name: a failure must never pass as a fast time. */
+  private[graft] def timed(spark: SparkSession, sfDir: String, name: String,
+                           fn: (SparkSession, String) => DataFrame): Double = {
+    // Label every job with its query (guide §1.5): the UI/event log can
+    // then attribute stage and task metrics per query. Thread-local, no
+    // effect on timing.
+    spark.sparkContext.setJobDescription(s"bench:$name")
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case NonFatal(e) => throw new RuntimeException(s"bench query $name failed", e)
+    } finally spark.sparkContext.setJobDescription(null)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -150,18 +170,7 @@ object Bench {
     case class SweepRun(nullT: Double, times: Seq[Double])
     def sweep(): SweepRun = {
       val nt = nullProbe()
-      SweepRun(nt, selected.map { name =>
-        val fn = SparkEntry.queries(name)
-        // Label every job with its query (guide §1.5): the UI/event log can
-        // then attribute stage and task metrics per query. Thread-local, no
-        // effect on timing.
-        spark.sparkContext.setJobDescription(s"bench:$name")
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.setJobDescription(null)
-        dt
-      })
+      SweepRun(nt, selected.map(name => timed(spark, sfDir, name, SparkEntry.queries(name))))
     }
     // allRuns grows until the min-reproducibility gate passes or the retry
     // budget is spent. Outlier rejection (round-11 verdict, fix #2): a run

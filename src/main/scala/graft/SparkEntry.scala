@@ -5952,17 +5952,8 @@ object SparkEntry {
   // customer↔supplier co-purchase graph (operators/Graph.scala)
   // ------------------------------------------------------------------
 
-  /** Bipartite customer↔supplier co-purchase graph: one edge per (customer,
-    * supplier) pair linked by at least one order's lineitem, weight = how
-    * many lineitems link them, both directions present (undirected graph as
-    * a symmetric directed edge list — no dangling nodes by construction;
-    * [[graft.operators.Graph.pageRank]] still carries the dangling term).
-    * Node ids namespaced `c:`/`s:` so the two key spaces cannot collide. */
-  /** Dev-tool accessors (graft.R16Plans): the graph queries' input frames,
-    * exposed so the plan-dump tool can capture the unrolled round tree. */
-  private[graft] def graphEdgesFor(s: SparkSession, d: String): DataFrame =
-    coPurchaseEdges(s, d)
-  private[graft] def graphSeedsFor(s: SparkSession, d: String): DataFrame =
+  /** Label-propagation seeds: every tenth customer, labelled by its nation. */
+  private def graphSeedsFor(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).filter(col("c_custkey") % 10 === 0)
       .select((col("c_custkey").cast("long") * 2).as("node"),
         col("c_nationkey").as("label"))
@@ -5978,6 +5969,12 @@ object SparkEntry {
     concat(when(pmod(node, lit(2L)) === 0L, lit("c:")).otherwise(lit("s:")),
       shiftrightunsigned(node, 1).cast("string"))
 
+  /** Bipartite customer↔supplier co-purchase graph: one edge per (customer,
+    * supplier) pair linked by at least one order's lineitem, weight = how
+    * many lineitems link them, both directions present (undirected graph as
+    * a symmetric directed edge list — no dangling nodes by construction;
+    * [[graft.operators.Graph.pageRank]] still carries the dangling term).
+    * Node ids namespaced `c:`/`s:` so the two key spaces cannot collide. */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
     // group on the RAW INTEGER keys (r16) and keep the node ids as LONGS all
     // the way through the iteration (r17 — see graphNodeName): the entries
@@ -6133,9 +6130,9 @@ object SparkEntry {
       // the DuckDB twin is a real hash gate.
       (s, d) => {
         val settled = StreamingViews.runToMemory(s, s"$d/events.parquet",
-          "graft_whh_sink", src => StreamingViews.streamHeavyHitterCounts(
+          "graft_whh_sink", src => StreamingViews.hourCounts(
             Tables.normalizeEventTs(src).withColumn("ts", col("ts").cast("timestamp")),
-            itemCol = "event_type"))
+            groupCol = "event_type"))
         StreamingViews.topKPerWindow(settled, "hour_bucket", "event_type",
           "cnt", k = 3)
       },

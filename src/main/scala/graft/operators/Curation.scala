@@ -803,16 +803,11 @@ object Curation {
     * a one-row crossJoin is not stream-safe. The plan is then explode +
     * stream-static LEFT equi-joins (stateless) + the per-doc aggregate (the
     * only streaming state); run in complete/update mode. Batch-equivalent
-    * bit-for-bit: `lit(nTypes)` divides exactly as the crossJoined column. */
-  def lmScoreKneserNeyTransferStreamSafe(train: DataFrame, score: DataFrame,
-                                         discount: Double = 0.75): DataFrame =
-    // checkpoint the frozen model's corpus aggregate once: a stream-static
-    // join re-evaluates its static side EVERY micro-batch, so without the
-    // checkpoint each trigger would re-tokenize and re-aggregate the whole
-    // train corpus — with it, every batch (and the nTypes scalar) reads
-    // vocab²-bounded materialized blocks
-    lmScoreKneserNeyTransferStreamSafeFrom(knTransferCounts(train), score, discount)
-
+    * bit-for-bit: `lit(nTypes)` divides exactly as the crossJoined column.
+    * Pass the train corpus checkpointed through [[knTransferCounts]]: a
+    * stream-static join re-evaluates its static side EVERY micro-batch, so
+    * without the checkpoint each trigger would re-tokenize and re-aggregate
+    * the whole train corpus. */
   private[graft] def lmScoreKneserNeyTransferStreamSafeFrom(
       trainCounts: DataFrame, score: DataFrame,
       discount: Double = 0.75): DataFrame = {

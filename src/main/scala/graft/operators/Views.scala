@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's five hand-maintained Cassandra materialized views
   * (`/root/reference/README.md:216-289`, write path `cassandra_subscriber.py:102-233`)
@@ -46,13 +47,20 @@ object Views {
     * `new_customer_geo_counts_by_hour (hour_bucket, country_region_name, city)`
     * (`cassandra_subscriber.py:169-176`). Over the testdata role mapping,
     * `event_type` plays country and `props.$.k` plays city. One grouped count —
-    * the per-city resolution the geo endpoint returns (`realtime_api.py:210-217`). */
-  def geoCounts(events: DataFrame, countryCol: String = "event_type"): DataFrame =
+    * the per-city resolution the geo endpoint returns (`realtime_api.py:210-217`).
+    * `props` is JSON text in the events table and `STRUCT<k>` after
+    * [[graft.streaming.QueueIngest.decodeFrames]]; both read the same `k`. */
+  def geoCounts(events: DataFrame, countryCol: String = "event_type"): DataFrame = {
+    val city = events.schema("props").dataType match {
+      case _: StructType => col("props.k")
+      case _ => get_json_object(col("props"), "$.k")
+    }
     events.groupBy(
         Ops.hourBucket(col("ts")).as("hour_bucket"),
         col(countryCol).as("country"),
-        get_json_object(col("props"), "$.k").cast("long").as("city"))
+        city.cast("long").as("city"))
       .agg(count(lit(1)).as("new_customers_count"))
+  }
 
   /** `new_products_total_count_by_time` (`README.md:258-261`): multi-granularity
     * prefixed bucket counters (`cassandra_subscriber.py:208-221`). */

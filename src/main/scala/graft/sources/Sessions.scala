@@ -32,8 +32,8 @@ object Sessions {
   /** One `cores` knob drives both the local master and the shuffle-partition
     * count — a pair like ("local[32]", 4) would silently skew every measured
     * number, so the API makes it unrepresentable. */
-  def builder(cores: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -41,14 +41,4 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
       .config("spark.ui.enabled", "false")
-    // Dev-only profiling hook (unset in driver runs): event-log the session
-    // so per-query job/stage/task metrics can be attributed offline — the
-    // measure-first loop of the optimization guide (§1.5, §7.1).
-    sys.env.get("SPARK_GRAFT_EVENTLOG_DIR") match {
-      case Some(dir) =>
-        b.config("spark.eventLog.enabled", "true")
-          .config("spark.eventLog.dir", dir)
-      case None => b
-    }
-  }
 }

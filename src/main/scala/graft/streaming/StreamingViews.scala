@@ -21,7 +21,10 @@ import graft.operators.{Ops, Views}
 object StreamingViews {
 
   /** A1 streaming: tumbling 1-hour counts by group (counter table
-    * `new_customer_geo_counts_by_hour`). Update output mode = the counter UPDATE. */
+    * `new_customer_geo_counts_by_hour`). Update output mode = the counter UPDATE.
+    * Keyed by an item column it is also the exact streaming heavy-hitters count:
+    * rank the settled aggregate with [[topKPerWindow]]; [[streamHeavyHittersSketch]]
+    * is the bounded-state form for unbounded item domains. */
   def hourCounts(events: DataFrame, groupCol: String = "event_type",
                  watermark: String = "1 day"): DataFrame =
     events.withWatermark("ts", watermark)
@@ -54,27 +57,12 @@ object StreamingViews {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Streaming HEAVY HITTERS — the update-mode twin of the batch
-    * `q_heavy_hitters(_by_key)` family: the STREAM side is the windowed
-    * (window, item) count — exactly [[hourCounts]]'s stateful shape, state
-    * bounded by watermark horizon × item cardinality — and the top-k
-    * selection runs over the SETTLED aggregate via [[topKPerWindow]]
-    * read-side. Splitting it this way keeps the streaming state a plain
-    * count (update-mode incremental, no re-sorting per micro-batch); the
-    * rank only ever sees (windows × items) aggregate rows, never raw
-    * events. For item domains too wide to count exactly (URLs, raw tokens),
-    * the bounded-memory batch form is `Ops.approxHeavyHittersByKey` over
-    * the landed window — a Misra-Gries sketch per window key. */
-  def streamHeavyHitterCounts(events: DataFrame, itemCol: String = "event_type",
-                              watermark: String = "1 day"): DataFrame =
-    hourCounts(events, itemCol, watermark)
-
   /** Carried per-window Misra-Gries state: update counter + the bounded
     * counter map. */
   case class MgSketchState(nUpdates: Long, counts: Map[String, Long])
 
   /** Streaming Misra-Gries heavy hitters with BOUNDED state per window — the
-    * unbounded-item-domain form [[streamHeavyHitterCounts]] defers to: the
+    * unbounded-item-domain form of [[hourCounts]]' exact count: the
     * exact windowed count keeps one state row per (window, item), which an
     * unbounded domain (URLs, user agents, raw tokens) grows without limit;
     * here `flatMapGroupsWithState` keeps capacity-bounded sketches (the
@@ -250,13 +238,6 @@ object StreamingViews {
           .as("time_bucket"),
         col("cnt"))
   }
-
-  /** A4 streaming: last-write-wins latest row per key (`customer_latest_info`
-    * upsert). `dropDuplicates` keeps the FIRST row per key within the stream;
-    * last-write-wins needs the latest, so the idiomatic form is a foreachBatch
-    * MERGE — here the per-micro-batch reduction that a sink would merge. */
-  def latestPerKeyBatchwise(events: DataFrame, key: String = "user_id"): DataFrame =
-    Ops.latestPerKey(events, Seq(key), Seq(col("ts").desc, col("event_id").desc))
 
   /** Carried LWW state: the winning (event time, id) per key. */
   case class LwwState(tsMicros: Long, eventId: Long)
@@ -777,8 +758,21 @@ object StreamingViews {
     * watermark and the join condition bounds event time on both sides, so Spark
     * evicts join state once the watermark passes `ts + maxGap` — state is bounded
     * by the gap horizon, not the stream length (the 100 TB requirement for any
-    * stream-stream join). Inner join: matches emit as soon as both sides arrive
-    * (append mode), no watermark wait.
+    * stream-stream join).
+    *
+    * `joinType` "inner": matches emit as soon as both sides arrive (append mode),
+    * no watermark wait. "left_outer" also reports the non-conversions ("views
+    * with NO purchase within T"): an unmatched left row can only emit once the
+    * watermark passes `l_ts + maxGap` (before that a matching right event could
+    * still arrive), so null-extended rows trail the watermark — the inherent
+    * outer-join latency, not a bug; state eviction is the same as inner.
+    *
+    * Operational note: the watermark only advances on rows that REACH the
+    * EventTimeWatermark operator at runtime — Catalyst pushes the branch
+    * filters below it, so event types kept by neither branch do not move the
+    * watermark, and a quiet period on the joined types delays null-extended
+    * emission even while other traffic flows (StreamingSpec demonstrates
+    * with heartbeat rows of a kept type).
     *
     * Shape precedent: the reference correlates a customer's events only through
     * per-key tables; this is the general "what followed X within T" correlation
@@ -786,37 +780,8 @@ object StreamingViews {
   def streamStreamJoin(events: DataFrame, keyCol: String = "user_id",
                        leftType: String = "view", rightType: String = "purchase",
                        maxGap: String = "30 minutes",
-                       watermark: String = "1 day"): DataFrame = {
-    val wm = events.withWatermark("ts", watermark)
-    val left = wm.filter(col("event_type") === leftType)
-      .select(col(keyCol).as("k"), col("event_id").as("l_event_id"), col("ts").as("l_ts"))
-    val right = wm.filter(col("event_type") === rightType)
-      .select(col(keyCol).as("rk"), col("event_id").as("r_event_id"), col("ts").as("r_ts"))
-    left.join(right,
-        col("k") === col("rk") &&
-          col("r_ts") > col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxGap"))
-      .select(col("k").as(keyCol), col("l_event_id"), col("r_event_id"))
-  }
-
-  /** [[streamStreamJoin]], LEFT OUTER form — the attribution query that must
-    * also report the non-conversions ("views with NO purchase within T").
-    * Unlike the inner join, an unmatched left row can only emit once the
-    * watermark passes `l_ts + maxGap` (before that a matching right event
-    * could still arrive), so null-extended rows trail the watermark — the
-    * inherent outer-join latency, not a bug; state eviction is identical to
-    * the inner form (bounded by the gap horizon).
-    *
-    * Operational note: the watermark only advances on rows that REACH the
-    * EventTimeWatermark operator at runtime — Catalyst pushes the branch
-    * filters below it, so event types kept by neither branch do not move the
-    * watermark, and a quiet period on the joined types delays null-extended
-    * emission even while other traffic flows (StreamingSpec demonstrates
-    * with heartbeat rows of a kept type). */
-  def streamStreamJoinLeftOuter(events: DataFrame, keyCol: String = "user_id",
-                                leftType: String = "view", rightType: String = "purchase",
-                                maxGap: String = "30 minutes",
-                                watermark: String = "1 day"): DataFrame = {
+                       watermark: String = "1 day",
+                       joinType: String = "inner"): DataFrame = {
     val wm = events.withWatermark("ts", watermark)
     val left = wm.filter(col("event_type") === leftType)
       .select(col(keyCol).as("k"), col("event_id").as("l_event_id"), col("ts").as("l_ts"))
@@ -826,7 +791,7 @@ object StreamingViews {
         col("k") === col("rk") &&
           col("r_ts") > col("l_ts") &&
           col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxGap"),
-        "left_outer")
+        joinType)
       .select(col("k").as(keyCol), col("l_event_id"), col("r_event_id"))
   }
 

