@@ -120,13 +120,8 @@ object ScaleSmoke {
         events.select(col("user_id"), col("ts"), col("event_id"), col("value")),
         "user_id", "ts", "value", "event_id").count()
     }
-    // A/B pair: the argmax aggregate and the window form are alternative
-    // plans for the same operator — they must agree on the key count
-    val lwwKeys = time("latestPerKeyAgg argmax (hot key)", exactly(100003)) {
-      Ops.latestPerKeyAgg(events, Seq("user_id"), Seq(col("ts"), col("event_id"))).count()
-    }
-    time("latestPerKey window (hot key)", exactly(lwwKeys)) {
-      Ops.latestPerKey(events, Seq("user_id"), Seq(col("ts").desc, col("event_id").desc)).count()
+    time("latestPerKey argmax (hot key)", exactly(100003)) {
+      Ops.latestPerKey(events, Seq("user_id"), Seq(col("ts"), col("event_id"))).count()
     }
     time("topN 100 (TakeOrdered)", exactly(100)) {
       Ops.topN(events, 100, Seq(col("ts").desc, col("event_id").asc)).count()

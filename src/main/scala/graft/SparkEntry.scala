@@ -1379,8 +1379,7 @@ object SparkEntry {
           when(pmod(col("event_id"), lit(10)) === 0, "D")
             .when(pmod(col("event_id"), lit(10)) < 3, "U")
             .otherwise("I").as("op"))
-        Ops.applyChanges(ch, Seq("user_id"),
-          Seq(col("ts").desc, col("event_id").desc))
+        Ops.applyChanges(ch, Seq("user_id"), Seq(col("ts"), col("event_id")))
       },
       Some("""WITH ch AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
                 CASE WHEN event_id % 10 = 0 THEN 'D'
@@ -3243,7 +3242,7 @@ object SparkEntry {
         persistedEqualityGate(
           Similarity.ivfPqProbePersisted(s, pathA, cents, books,
             q, survivors, 10, nprobe = 6, rerankFactor = 8),
-          Similarity.ivfPqTopKWithModels(survivors, q, 10, (cents, books),
+          Similarity.ivfPqTopK(survivors, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -3275,7 +3274,7 @@ object SparkEntry {
         persistedEqualityGate(
           Similarity.ivfPqProbePersisted(s, pathA, cents, books,
             q, emb, 10, nprobe = 6, rerankFactor = 8),
-          Similarity.ivfPqTopKWithModels(emb, q, 10, (cents, books),
+          Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -3335,7 +3334,8 @@ object SparkEntry {
         topkRecallGate(
           Similarity.bruteForceTopK(emb, q, 10),
           Similarity.ivfPqTopK(emb, q, 10,
-            nlist = 8, nprobe = 6, m = 16, ksub = 32, iters = 3, rerankFactor = 8),
+            Similarity.trainIvfPq(emb, nlist = 8, m = 16, ksub = 32, iters = 3),
+            nprobe = 6, rerankFactor = 8),
           k = 10, floor = 0.8)
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -3361,7 +3361,7 @@ object SparkEntry {
           // the twin probes under the SAME deterministic models the entry
           // just trained — a refit with equal params reproduces them
           // bit-for-bit (trainIvfPq contract), so retraining was pure waste
-          Similarity.ivfPqTopKWithModels(emb, q, 10, (cents, books),
+          Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -3387,8 +3387,8 @@ object SparkEntry {
         Similarity.writeIvfPqIndex(base, cents, books, pathA)
         Similarity.appendIvfPqIndex(batch, cents, books, pathA)
         // comparison target = the IN-MEMORY IVFADC twin under the same frozen
-        // models (r17, the sim_ivf_persisted_* quartet's existing shape):
-        // probe(write(X)) ≡ ivfPqTopKWithModels(X) is spec-asserted, so the
+        // models (the sim_ivf_persisted_* quartet's shape):
+        // probe(write(X)) ≡ ivfPqTopK(X) is spec-asserted, so the
         // full-rebuild index write that existed only to be probed once is
         // dropped — same gate verdict, one full persisted write less, and the
         // twin encodes through an independent projection (a shared
@@ -3396,7 +3396,7 @@ object SparkEntry {
         persistedEqualityGate(
           Similarity.ivfPqProbePersisted(s, pathA, cents, books,
             q, emb, 10, nprobe = 6, rerankFactor = 8),
-          Similarity.ivfPqTopKWithModels(emb, q, 10, (cents, books),
+          Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -4754,19 +4754,17 @@ object SparkEntry {
       // static, the distinct-type total rides as a collected literal (a
       // model parameter, like Bloom bits), so the stream pays stateless
       // stream-static LEFT joins + one per-doc aggregate. Settled stream
-      // scores must equal the batch transfer form multiset-exactly — which
-      // also pins the literal-total and crossJoin forms bit-equal.
+      // scores must equal the batch transfer form multiset-exactly.
       (s, d) => {
         val docs = Tables.documents(s, d)
         val train = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         // fit the frozen model ONCE and hand the same checkpointed blocks to
-        // both faces (r17): the stream pass and its batch twin previously
-        // each ran the identical train-side tokenize+aggregate+checkpoint —
-        // the fit is deterministic, so sharing it changes job count only
+        // both faces: the fit is deterministic, so sharing it changes job
+        // count only
         val counts = Curation.knTransferCounts(train)
         val streamed = StreamingViews.runToMemory(s, s"$d/documents.parquet",
           "graft_wkn_sink",
-          src => Curation.lmScoreKneserNeyTransferStreamSafeFrom(counts,
+          src => Curation.lmScoreKneserNeyTransferFrom(counts,
             src.filter(pmod(col("doc_id"), lit(2)) === 1)),
           outputMode = "complete")
         val batch = Curation.lmScoreKneserNeyTransferFrom(counts,
@@ -6352,7 +6350,7 @@ object SparkEntry {
           "graft_wfun_sink", src => StreamingViews.streamFunnel(
             Tables.normalizeEventTs(src), Seq("signup", "view", "purchase"),
             maxSpanHours = 168), outputMode = "update")
-        Ops.latestPerKeyAgg(settled, Seq("user_id"), Seq(col("n_updates")))
+        Ops.latestPerKey(settled, Seq("user_id"), Seq(col("n_updates")))
           .filter(col("stage_reached") >= 1)
           .select(col("user_id"), col("stage_reached"))
       },
@@ -6382,7 +6380,7 @@ object SparkEntry {
             Tables.normalizeEventTs(src)), outputMode = "update")
         // update-mode sink appends every batch's winner; the true LWW is the
         // greatest emission per key (monotone state)
-        Ops.latestPerKeyAgg(settled, Seq("user_id"),
+        Ops.latestPerKey(settled, Seq("user_id"),
           Seq(col("ts_micros"), col("event_id")))
       },
       Some("""SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_micros, event_id

@@ -542,7 +542,7 @@ object Curation {
     // Negative seeds encode strip-proof ("seedm7", not "seed-7"): the
     // oracle-hash normalizer strips non-alphanumerics, so a '-' sign would
     // collapse seeds 7 and -7 into the same key stream on that path while
-    // the xxhash64 path kept them distinct (advisor, round 5).
+    // the xxhash64 path kept them distinct.
     val seedTok = if (seed < 0) s"seedm${seed.toString.drop(1)}" else s"seed$seed"
     val seeded = concat(lit(s"$seedTok "), col("text"))
     val key = if (fastHash) TextFns.fastFingerprint(seeded)
@@ -600,7 +600,7 @@ object Curation {
     *
     * Scale shape: the count model is two aggregates over the exploded bigram
     * stream (vocab²-bounded — megabytes for a word vocab, independent of
-    * corpus size), `localCheckpoint`ed once (r16: the context-total agg and
+    * corpus size), `localCheckpoint`ed once (the context-total agg and
     * the model join are two references, and an unmaterialized plan re-runs
     * the corpus aggregation per reference) and re-attached via equi-joins
     * that AQE broadcasts; the bigram stream is tokenize-once + one
@@ -610,9 +610,9 @@ object Curation {
   def lmScore(docs: DataFrame): DataFrame = {
     // bigrams are 2-gram shingles — same tokenize-once kernel as the dedup
     // paths; empty array (sub-2-token doc) explodes to nothing.
-    // (r17 note: a fanOut repartition before the tokenize was tried and
-    // REVERTED — tokenize feeding a map-side-combined count aggregate gains
-    // nothing from extra partitions and paid a measured extra stage.)
+    // (no fanOut repartition before the tokenize: tokenize feeding a
+    // map-side-combined count aggregate gains nothing from extra partitions
+    // and paid a measured extra stage.)
     val bigrams = docs
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
@@ -624,7 +624,7 @@ object Curation {
     // key in constraint-inference filters and double the corpus shuffle.
     // checkpoint the one corpus aggregate (vocab²-bounded) so the context
     // totals and the model join read materialized blocks instead of
-    // re-running the corpus scan per lazy reference — the r16 KN-family
+    // re-running the corpus scan per lazy reference — the KN-family
     // one-scan discipline, applied uniformly
     val bigramCounts = bigrams.groupBy(col("bg"))
       .agg(count(lit(1)).as("c_bg"))
@@ -669,7 +669,7 @@ object Curation {
     * type total is a scalar aggregate riding a one-row broadcast crossJoin
     * (the [[tokenDistributionDrift]] normalizer pattern) — NEVER a
     * `sum().over(Window.partitionBy())`, which would funnel the 10⁸–10⁹-row
-    * web-scale continuation table through a single task (r15 verdict). The
+    * web-scale continuation table through a single task. The
     * corpus-scale bigram stream still pays exactly ONE scoring equi-join.
     * At 100 TB: train the counts on an [[graft.operators.Ops.hashSample]] —
     * only the scoring pass must read every row. */
@@ -737,9 +737,9 @@ object Curation {
     * Scale shape: model tables are train-vocab-bounded; the score-side bigram
     * stream tokenizes once and pays three LEFT equi-joins against them (left
     * joins plant no constraint-inference filters on the stream side, so the
-    * split-derived w1/w2 keys are computed once) plus a one-row totals
-    * broadcast. At 100 TB the model is a persisted artifact; only the scoring
-    * pass reads the corpus. */
+    * split-derived w1/w2 keys are computed once); the type total rides as a
+    * collected literal. At 100 TB the model is a persisted artifact; only the
+    * scoring pass reads the corpus. */
   def lmScoreKneserNeyTransfer(train: DataFrame, score: DataFrame,
                                discount: Double = 0.75): DataFrame =
     lmScoreKneserNeyTransferFrom(knTransferCounts(train), score, discount)
@@ -747,11 +747,10 @@ object Curation {
   /** The frozen KN transfer model's ONE corpus aggregate, checkpointed
     * (vocab²-bounded): the three model joins, the left/right-stats
     * derivations and the totals scalar all read materialized blocks instead
-    * of re-running the train scan per lazy reference (r15 verdict — the
-    * KN-family one-scan discipline). Public-to-the-entries (r17) so a
-    * stream≡batch gate fits the model ONCE and hands the same blocks to both
-    * faces — the fit is deterministic, so this changes job count, not
-    * values. */
+    * of re-running the train scan per lazy reference (the KN-family
+    * one-scan discipline). Visible to the entries so a stream≡batch gate fits
+    * the model ONCE and hands the same blocks to both faces — the fit is
+    * deterministic, so this changes job count, not values. */
   private[graft] def knTransferCounts(train: DataFrame): DataFrame = {
     val bigrams = train
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
@@ -764,6 +763,17 @@ object Curation {
       .localCheckpoint(true)
   }
 
+  /** [[lmScoreKneserNeyTransfer]] over an already-fitted
+    * [[knTransferCounts]] model, batch and streaming alike. The distinct-type
+    * total is COLLECTED into a literal — it is a frozen model PARAMETER (like
+    * the Bloom filter's bits or k-means centroids), and a one-row crossJoin
+    * is not stream-safe. The plan is then explode + LEFT equi-joins against
+    * the model tables (stateless stream-static joins on a stream) + the
+    * per-doc aggregate (the only streaming state; run a stream in
+    * complete/update mode). The model must be checkpointed: a stream-static
+    * join re-evaluates its static side EVERY micro-batch, so without the
+    * checkpoint each trigger would re-tokenize and re-aggregate the whole
+    * train corpus. */
   private[graft] def lmScoreKneserNeyTransferFrom(trainCounts: DataFrame,
       score: DataFrame, discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1,
@@ -775,53 +785,10 @@ object Curation {
     val leftStats = trainCounts.groupBy("w1")
       .agg(sum(col("c_bg")).as("c_w1"), count(lit(1)).as("n1p_w1"))
     val rightStats = trainCounts.groupBy("w2").agg(count(lit(1)).as("n1p_w2"))
-    val totals = rightStats.agg(sum(col("n1p_w2")).as("n_types"))
-    val pCont = coalesce(col("n1p_w2").cast("double"), lit(1.0)) / col("n_types")
-    bigramsOf(score)
-      .withColumn("w1", element_at(split(col("bg"), " "), 1))
-      .withColumn("w2", element_at(split(col("bg"), " "), 2))
-      .join(trainCounts.select("bg", "c_bg"), Seq("bg"), "left")
-      .join(leftStats, Seq("w1"), "left")
-      .join(rightStats, Seq("w2"), "left")
-      .crossJoin(broadcast(totals))
-      .select(col("doc_id"), col("c_bg"),
-        when(col("c_bg").isNotNull,
-          (col("c_bg") - lit(discount)) / col("c_w1") +
-            lit(discount) * col("n1p_w1") / col("c_w1") * pCont)
-        .when(col("c_w1").isNotNull,
-          lit(discount) * col("n1p_w1") / col("c_w1") * pCont)
-        .otherwise(pCont).as("p_kn"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("c_bg").isNull, 1L).otherwise(0L)).as("n_oov_bigrams"),
-        round(avg(log(col("p_kn"))), 6).as("kn_score"))
-  }
-
-  /** Streaming face of [[lmScoreKneserNeyTransfer]]: identical arithmetic,
-    * but the distinct-type total is COLLECTED into a literal — it is a frozen
-    * model PARAMETER (like the Bloom filter's bits or k-means centroids), and
-    * a one-row crossJoin is not stream-safe. The plan is then explode +
-    * stream-static LEFT equi-joins (stateless) + the per-doc aggregate (the
-    * only streaming state); run in complete/update mode. Batch-equivalent
-    * bit-for-bit: `lit(nTypes)` divides exactly as the crossJoined column.
-    * Pass the train corpus checkpointed through [[knTransferCounts]]: a
-    * stream-static join re-evaluates its static side EVERY micro-batch, so
-    * without the checkpoint each trigger would re-tokenize and re-aggregate
-    * the whole train corpus. */
-  private[graft] def lmScoreKneserNeyTransferStreamSafeFrom(
-      trainCounts: DataFrame, score: DataFrame,
-      discount: Double = 0.75): DataFrame = {
-    require(discount > 0 && discount < 1,
-      s"absolute discount must be in (0,1), got $discount")
-    def bigramsOf(docs: DataFrame) = docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(TextFns.shinglesFromTokens(col("toks"), 2)).as("bg"))
-    val leftStats = trainCounts.groupBy("w1")
-      .agg(sum(col("c_bg")).as("c_w1"), count(lit(1)).as("n1p_w1"))
-    val rightStats = trainCounts.groupBy("w2").agg(count(lit(1)).as("n1p_w2"))
-    val nTypes: Long = rightStats.agg(sum(col("n1p_w2"))).head().getLong(0)
-    val pCont = coalesce(col("n1p_w2").cast("double"), lit(1.0)) / lit(nTypes)
+    // null for an empty model: every p_kn (and so kn_score) is then null
+    val nTypes = rightStats.agg(sum(col("n1p_w2"))).head().get(0)
+    val pCont = coalesce(col("n1p_w2").cast("double"), lit(1.0)) /
+      lit(nTypes).cast("double")
     bigramsOf(score)
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
       .withColumn("w2", element_at(split(col("bg"), " "), 2))
@@ -863,7 +830,7 @@ object Curation {
     // checkpoint the per-doc scores (3 narrow columns, distributed): the
     // threshold aggregate and the assignment pass are two references to this
     // frame, and an unmaterialized plan would run the whole KN scoring join
-    // — a corpus scan — once per reference (r15 verdict discipline)
+    // — a corpus scan — once per reference
     val scored = lmScoreKneserNey(docs, discount).localCheckpoint(true)
     val ps = (1 until nBuckets).map(i => i.toDouble / nBuckets)
     val th = scored
@@ -993,7 +960,7 @@ object Curation {
     * a scalar aggregate riding a one-row broadcast crossJoin (the
     * [[tokenDistributionDrift]] pattern) — NEVER a
     * `sum().over(Window.partitionBy())`, which would funnel a web-scale
-    * vocab (10⁸–10⁹ types) through one task (r15 verdict); the PMI join is
+    * vocab (10⁸–10⁹ types) through one task; the PMI join is
     * equi-keyed on single tokens against the vocab-bounded count tables and
     * the final top-N is TakeOrderedAndProject. */
   def cooccurrencePmi(docs: DataFrame, minCount: Long = 5, topN: Int = 100): DataFrame = {
@@ -1095,9 +1062,9 @@ object Curation {
     *
     * Scale shape: ONE map-side-combined token-count aggregate over the corpus
     * (the floor for any frequency statistic), then the global frequency rank
-    * via a TWO-PASS RANGE-PARTITIONED row_number (r14 verdict ask #5 — the
-    * previous unpartitioned window serialized a true web-scale vocab,
-    * 10⁸–10⁹ types, through one task): range-exchange the type table on the
+    * via a TWO-PASS RANGE-PARTITIONED row_number (an unpartitioned window
+    * would serialize a true web-scale vocab, 10⁸–10⁹ types, through one
+    * task): range-exchange the type table on the
     * rank order, take a per-partition histogram (one tiny action on the
     * persisted frame — |shuffle partitions| rows), broadcast the cumulative
     * offsets back, and rank = offset(partition) + row_number within the
@@ -1432,8 +1399,8 @@ object Curation {
     * Scale shape: one tokenize+explode and ONE vocab-keyed count aggregate
     * per side (map-side combined — the corpus never shuffles raw text), then
     * everything downstream runs on vocab-BOUNDED frames with NO single-task
-    * step (r14 verdict ask #5 — the previous form funneled the vocab through
-    * unpartitioned windows for the normalizer, the total, and the rank): the
+    * step (never unpartitioned windows for the normalizer, the total, or
+    * the rank, which would funnel the vocab through one task): the
     * per-side normalizer and js_total are scalar aggregates broadcast back
     * via one-row crossJoins (the [[mixtureTemperature]] pattern), and the
     * top-N is `orderBy().limit()` — Spark's TakeOrderedAndProject, a
@@ -1530,7 +1497,7 @@ object Curation {
     // checkpoint the assembled count model once (hashBuckets- or
     // union-vocab-bounded): the totals scalar and the corpus probe join are
     // two references, and an unmaterialized plan would re-run BOTH corpus
-    // feature aggregations per reference (the r16 KN-family discipline)
+    // feature aggregations per reference (the KN-family discipline)
     val model = cntR.join(cntT, Seq("f"), "full_outer")
       .select(col("f"), coalesce(col("c_r"), lit(0L)).as("c_r"),
         coalesce(col("c_t"), lit(0L)).as("c_t"))

@@ -144,7 +144,7 @@ object Dedup {
     * managed buffer slots.) */
   def minhashSignatures(docs: DataFrame, shingleSize: Int = 3,
                         numHashes: Int = 64): DataFrame =
-    // fanOut (r17): the normalize+shingle+hash map stage is the expensive
+    // fanOut: the normalize+shingle+hash map stage is the expensive
     // per-row work and must not serialize on a narrow scan (no-op at scale)
     Similarity.fanOut(docs, "doc_id")
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
@@ -285,7 +285,7 @@ object Dedup {
   def simhashes(docs: DataFrame): DataFrame = {
     // Same explode-once shape as MinHash: one xxhash64 per token, then 64 sign-sum
     // aggregates (map-side combinable) instead of re-tokenizing per bit.
-    val hashed = Similarity.fanOut(docs, "doc_id") // r17: no-op at scale
+    val hashed = Similarity.fanOut(docs, "doc_id") // no-op at scale
       .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
       .select(col("doc_id"), xxhash64(col("tok")).as("h"))
     val bitAggs = (0 until 64).map { b =>
@@ -321,7 +321,7 @@ object Dedup {
     simhashPairsOf(simhashes(docs), maxHamming)
 
   /** [[simhashPairs]] over a PRECOMPUTED (doc_id, simhash) table — the
-    * persisted-signature / shared-truth form (r17): a gate that also needs
+    * persisted-signature / shared-truth form: a gate that also needs
     * the raw hashes (the all-pairs Hamming truth) materializes them once and
     * feeds both sides instead of re-tokenizing the corpus per reference. */
   def simhashPairsOf(hashes: DataFrame, maxHamming: Int = 8): DataFrame = {
@@ -355,116 +355,58 @@ object Dedup {
     * through pair edges) — the keep/drop decision a dedup pipeline actually
     * needs (keep = `doc_id == cluster_id`).
     *
-    * Algorithm: iterative min-label propagation to a fixpoint — each round every
-    * node takes the min of its own label and its neighbors' labels; converges in
-    * O(component diameter) rounds. This is the scalable formulation (each round
-    * is one shuffle-join + aggregate; no driver-side union-find, no edge list on
-    * one machine); `localCheckpoint` cuts the growing lineage each round. Near-dup
-    * components are short chains in practice, so diameter stays small.
-    */
-  def resolveClusters(docs: DataFrame, pairs: DataFrame,
-                      maxIter: Int = 20,
-                      smallGraphThreshold: Long = 1000000L): DataFrame = {
-    // Size-adaptive fast path (the same decision shape as a broadcast join):
-    // near-dup edge sets are usually TINY relative to the corpus — when the
-    // blocked pair count fits the driver comfortably, a collected union-find
-    // replaces O(diameter) distributed rounds (each a shuffle join + action)
-    // with one collect + one broadcast-joined label map. The distributed
-    // path below remains the 100 TB form for edge sets that don't fit;
-    // PropertySpec asserts both paths produce identical components.
+    * Size-adaptive, the same decision shape as a broadcast join: near-dup edge
+    * sets are usually TINY relative to the corpus, so when the pair count fits
+    * the driver ([[maxDriverEdges]]) one collected union-find plus one
+    * broadcast-joined label map replaces any number of distributed rounds.
+    * Larger edge sets fall back to [[resolveClustersStar]], whose round bound
+    * does not depend on component diameter. Both paths emit the same
+    * components (PropertySpec asserts it on random graphs). */
+  def resolveClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val pc = pairs.persist()
     val edgeCount = pc.count()
-    if (edgeCount <= smallGraphThreshold) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pc.select(col("a_id").cast("long"), col("b_id").cast("long")).collect()
-        .foreach { r =>
-          val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-          // union by MIN root so the representative is the component minimum
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-      val labels = parent.keys.toSeq.map(x => (x, find(x)))
+    if (edgeCount > maxDriverEdges) {
+      // the star form checkpoints its edge list eagerly, so the cached pairs
+      // can go as soon as it returns
+      val star = resolveClustersStar(docs, pc)
       pc.unpersist()
-      val spark = docs.sparkSession
-      import spark.implicits._
-      return docs.select(col("doc_id"))
-        .join(broadcast(labels.toDF("doc_id", "label")), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_id"))
-        .withColumn("keep", col("doc_id") === col("cluster_id"))
+      return star
     }
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    pc.select(col("a_id").cast("long"), col("b_id").cast("long")).collect()
+      .foreach { r =>
+        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+        // union by MIN root so the representative is the component minimum
+        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      }
+    val labels = parent.keys.toSeq.map(x => (x, find(x)))
     pc.unpersist()
-    resolveClustersDistributed(docs, pairs, maxIter)
-  }
-
-  /** The distributed label-propagation form of [[resolveClusters]] — always
-    * taken when the edge set exceeds the driver threshold. */
-  private[graft] def resolveClustersDistributed(docs: DataFrame, pairs: DataFrame,
-                                                maxIter: Int = 20): DataFrame = {
-    // Materialize the pair set once: the symmetric edge union references it
-    // through TWO branches, which would evaluate the (expensive) pair-generation
-    // join twice; the edge list then re-enters the plan every round. Both are
-    // small relative to docs (pairs are the blocked candidates, already reduced).
-    // localCheckpoint persists its RDD; everything but the final round's result
-    // is freed before returning (a library that leaks a cached RDD per call
-    // would bleed executor storage in a long-lived session).
-    var toFree: List[DataFrame] = Nil
-    def ckpt(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); toFree ::= c; c }
-    val p = ckpt(pairs)
-    val edges = ckpt(p.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionAll(p.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct())
-    // Iterate only over nodes that have edges; singletons (the vast majority of
-    // a corpus) join back at the end with label = self.
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src").as("id")).agg(min(col("label")).as("nlabel"))
-      val stepped = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          col("label").as("old"))
-      // pointer compression: follow the label's own label (labels always point
-      // at node ids) — halves the rounds to O(log diameter)
-      val compressed = ckpt(stepped.alias("x")
-        .join(labels.alias("y"), col("x.label") === col("y.id"), "left")
-        .select(col("x.id").as("id"),
-          least(col("x.label"), coalesce(col("y.label"), col("x.label"))).as("label"),
-          col("x.old").as("old")))
-      converged = compressed.filter(col("label") =!= col("old")).isEmpty
-      labels = compressed.select("id", "label") // compressed is already checkpointed
-      i += 1
-    }
-    // A truncated exit would assign non-minimal labels silently — refuse.
-    if (!converged) throw new IllegalStateException(
-      s"resolveClusters did not converge in $maxIter rounds — component diameter " +
-        "exceeds the budget; raise maxIter or use resolveClustersStar")
-    // free every intermediate checkpoint; the final one (head — backing `labels`)
-    // stays until the caller's plan has consumed it
-    toFree.drop(1).foreach(df => try df.unpersist() catch { case _: Throwable => () })
+    val spark = docs.sparkSession
+    import spark.implicits._
     docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+      .join(broadcast(labels.toDF("doc_id", "label")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_id"))
       .withColumn("keep", col("doc_id") === col("cluster_id"))
   }
 
-  /** [[resolveClusters]] alternative with DIAMETER-INDEPENDENT round bounds:
-    * alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) — O(log² n)
-    * rounds worst case where min-label propagation needs O(component
-    * diameter). Use this form when components can be adversarially deep
-    * (long duplicate chains); the min-label form stays preferable for the
-    * short-chain shape near-dup corpora produce (fewer shuffles per round).
+  /** Largest pair set [[resolveClusters]] collects to the driver (16 bytes
+    * per edge: ~16 MB at the bound). */
+  private[graft] val maxDriverEdges: Long = 1000000L
+
+  /** The distributed connected-component form of [[resolveClusters]], with
+    * DIAMETER-INDEPENDENT round bounds: alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14) — O(log² n) rounds worst case where min-label
+    * propagation needs O(component diameter), so adversarially deep
+    * components (long duplicate chains) converge as fast as short ones.
     *
     * Per round: large-star hangs every larger-than-center neighbor onto the
     * center's minimum (flattens deep trees without growing any star), then
@@ -623,7 +565,7 @@ object Dedup {
     //    interpreted per-row filter (HOFs break whole-stage codegen). The
     //    outer form infers nothing, and the null filter references the
     //    GENERATED attribute, so nothing can push below the Generate.
-    val post = Similarity.fanOut(docs, "doc_id") // r17: no-op at scale
+    val post = Similarity.fanOut(docs, "doc_id") // no-op at scale
       .select(col("doc_id"), TextFns.normalizeNonNull(col("text")).as("norm"))
       .select(col("doc_id"), split(col("norm"), " ").as("toks"))
       .select(col("doc_id"),
@@ -707,7 +649,7 @@ object Dedup {
     // (no per-gram re-split) and explode_OUTER + post-Generate null filter so
     // the inferred size(...)>0 constraint cannot push down and re-derive the
     // shingle pipeline per scan row
-    val gramSets = Similarity.fanOut(docs, "doc_id") // r17: no-op at scale
+    val gramSets = Similarity.fanOut(docs, "doc_id") // no-op at scale
       .select(col("doc_id"), TextFns.normalizeNonNull(col("text")).as("norm"))
       .select(col("doc_id"), split(col("norm"), " ").as("toks"))
       .select(col("doc_id"),
@@ -801,7 +743,7 @@ object Dedup {
     // normalizeNonNull: the block is a JOIN KEY — a nullable key would make
     // constraint inference re-derive the regex normalize in isnotnull filters
     // (see TextFns.normalizeNonNull).
-    val g = Similarity.fanOut(docs, "doc_id") // r17: no-op at scale
+    val g = Similarity.fanOut(docs, "doc_id") // no-op at scale
       .select(col("doc_id"), TextFns.normalizeNonNull(col("text")).as("norm"))
       .select(col("doc_id"), substring(col("norm"), 1, prefixLen).as("block"),
         split(col("norm"), " ").as("toks"))
@@ -1216,7 +1158,7 @@ object Dedup {
                          md5Keys: Boolean = false): DataFrame = {
     require(k >= 1, s"gram size must be >= 1, got $k")
     val hash = winnowGramHash(md5Keys)
-    // NO fanOut here (r17, measured): the persisted-lifecycle entries call
+    // NO fanOut here (measured): the persisted-lifecycle entries call
     // this function 3–4 times per query around bucketed writes and probes —
     // an unconditional fan-out added one exchange + one planning pass per
     // call and regressed the whole persisted family, while the tokenize
@@ -1256,7 +1198,7 @@ object Dedup {
                   maxDf: Int = 1000, md5Keys: Boolean = false): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    // fanOut here, NOT in winnowFingerprints (r17): the tokenize+winnow map
+    // fanOut here, NOT in winnowFingerprints: the tokenize+winnow map
     // stage must not serialize on a narrow scan, but the fingerprint
     // function also feeds bucketed index WRITES where extra input partitions
     // multiply the file count (no-op at scale either way)

@@ -294,7 +294,7 @@ object Graph {
     * until a labeled in-neighbor appears. The per-node argmax is ONE
     * skew-immune hash aggregation ([[graft.functions.ArgMaxAgg]] on
     * `struct(cnt, -label)` — map-side partial, no per-node window sort), the
-    * same shape as [[Ops.latestPerKeyAgg]]. Deterministic: integer votes,
+    * same shape as [[Ops.latestPerKey]]. Deterministic: integer votes,
     * total tie-break. */
   def labelPropagate(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
                      checkpoint: Boolean = true): DataFrame = {

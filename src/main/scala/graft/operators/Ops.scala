@@ -67,36 +67,18 @@ object Ops {
 
   /** A4: last-write-wins per key (the reference's Cassandra upsert into
     * `customer_latest_info`, `cassandra_subscriber.py:124-144` + PK `README.md:217`).
-    * Keeps exactly one row per key: greatest (orderCol, tieBreak). The tie-break makes
-    * the result deterministic under replay/reorder — mirroring the reference's
-    * clustering-key tie-break (`README.md:281-282`).
+    * Keeps exactly one row per key: the one with the greatest `ordCols`,
+    * compared lexicographically as a struct (pass e.g. (ts, event_id) — the
+    * unique tie-break makes the result deterministic under replay/reorder,
+    * mirroring the reference's clustering-key tie-break, `README.md:281-282`).
+    * A null field sorts below every real value, so a real `ts` beats a null.
     *
-    * Scale: one hash shuffle on `keys`; `row_number` needs no global sort. For
-    * heavily-skewed keys prefer the `max_by(struct)` formulation (partial aggregation
-    * map-side); we use row_number for exact multi-column tie-break semantics.
-    */
-  def latestPerKey(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** A4, aggregation form: same LWW semantics as [[latestPerKey]] via a
-    * hash-aggregatable argmax ([[graft.functions.ArgMaxAgg]]) — lexicographic
-    * struct ordering, greatest wins (pass e.g. (ts, event_id); equal to
-    * row_number over (ts DESC, id DESC)).
-    *
-    * Scale: this is the skew-immune shape — partial aggregation reduces every
-    * hot key map-side before the shuffle, where the window form must sort the
-    * entire hot-key partition on one task. NOT `max_by`: its struct buffer is
-    * not hash-aggregate-mutable, so Catalyst lowers it to SortAggregate — a
-    * full per-partition sort by the grouping key, the very cost this form
-    * exists to avoid (measured 2x the window form at 10M rows; the native
-    * argmax runs in ObjectHashAggregate, no sort anywhere). Prefer it
-    * whenever the order is a plain greatest-of-struct; keep [[latestPerKey]]
-    * for mixed asc/desc tie-breaks. */
-  def latestPerKeyAgg(df: DataFrame, keys: Seq[String], ordCols: Seq[Column]): DataFrame = {
+    * Scale: a hash-aggregatable argmax ([[graft.functions.ArgMaxAgg]]) —
+    * partial aggregation reduces every hot key map-side before the one keyed
+    * shuffle, and ObjectHashAggregate needs no sort anywhere. NOT `max_by`:
+    * its struct buffer is not hash-aggregate-mutable, so Catalyst lowers it
+    * to SortAggregate, a full per-partition sort by the grouping key. */
+  def latestPerKey(df: DataFrame, keys: Seq[String], ordCols: Seq[Column]): DataFrame = {
     val payload = struct(df.columns.toIndexedSeq.map(col): _*)
     df.groupBy(keys.map(col): _*)
       .agg(graft.functions.ArgMaxAgg.argMax(struct(ordCols: _*), payload).as("__p"))
@@ -309,18 +291,17 @@ object Ops {
     * `cassandra_subscriber.py:124-144` — Cassandra upserts can't delete a key
     * through the same path; real CDC feeds carry deletes) to the full
     * insert/update/delete contract a lakehouse merge needs: per key the
-    * LATEST change by `order` wins, and when that winner is a delete the key
+    * LATEST change by `ordCols` wins, and when that winner is a delete the key
     * vanishes from the output.
     *
-    * Scale: identical shuffle shape to [[latestPerKey]] — ONE hash shuffle on
-    * `keys`, rank-filter, then a map-side delete filter; the delete filter
-    * runs after the rank so a delete followed by a re-insert (by `order`)
-    * correctly resurrects the key. Skewed keys: same `max_by` escape hatch as
-    * [[latestPerKeyAgg]] applies.
+    * Scale: the shuffle shape of [[latestPerKey]] — ONE keyed argmax
+    * exchange, then a map-side delete filter; the delete filter runs after
+    * the argmax so a delete followed by a re-insert (by `ordCols`) correctly
+    * resurrects the key.
     */
-  def applyChanges(changes: DataFrame, keys: Seq[String], order: Seq[Column],
+  def applyChanges(changes: DataFrame, keys: Seq[String], ordCols: Seq[Column],
                    opCol: String = "op", deleteOp: String = "D"): DataFrame =
-    latestPerKey(changes, keys, order)
+    latestPerKey(changes, keys, ordCols)
       .filter(col(opCol) =!= deleteOp)
       .drop(opCol)
 

@@ -60,7 +60,7 @@ object Similarity {
     * O(rows·|queries|)/P parallelism — always a win when the pair work
     * dominates, at ANY scale; on a corpus whose scan already has ≥ P
     * partitions (every real deployment) this is a no-op and no exchange is
-    * added. MEASURED rule of application (r17): only where the broadcast
+    * added. MEASURED rule of application: only where the broadcast
     * side is corpus-scale by contract (batch kNN, all-pairs dedup, anchor
     * mining) — on the bounded-probe serving paths (nprobe·|q| ≤ ~100 rows)
     * the per-row work is tiny and the added stage/exchange was a measured
@@ -530,7 +530,7 @@ object Similarity {
       // old layout never had) may legitimately lack a live dir; for every
       // other affected cell a missing dir means the single-writer contract
       // broke between listing and swap — refuse loudly rather than move
-      // staged rows in over an inconsistent layout (advisor, r14)
+      // staged rows in over an inconsistent layout
       if (!newCells.contains(c) || fs.exists(live)) {
         if (!fs.rename(live, new org.apache.hadoop.fs.Path(trash, s"cell=$c")))
           sys.error(s"swap aborted: cannot move live $live aside — " +
@@ -639,7 +639,7 @@ object Similarity {
     // side from the same collected array: evaluating the `queries` subplan
     // twice would cost an extra job and, on a non-deterministic source, could
     // produce probe rows whose cells were never collected (silent candidate
-    // loss — advisor, round 9).
+    // loss).
     val probedRows = collectProbes(queries, centroids, nprobe)
     val cells = probedRows.map(_._3).distinct.sorted
     import spark.implicits._
@@ -723,7 +723,7 @@ object Similarity {
   }
 
   /** Keep/drop decision over [[semanticDupPairs]]: connected components over
-    * the within-cell pair edges (shared [[Dedup.resolveClusters]] min-label
+    * the within-cell pair edges (shared [[Dedup.resolveClusters]]
     * machinery), representative = smallest vec_id per component. Output
     * (vec_id, cluster_id, keep) mirrors the document-side dedup contract, so
     * a curation pipeline can swap text-based and embedding-based dedup
@@ -790,8 +790,8 @@ object Similarity {
       .orderBy(col("h").asc, col("vec_id").asc).limit(ksub)
       .select("emb").collect().map(_.getSeq[Double](0).toArray)
     require(seeds.length == ksub, s"corpus has ${seeds.length} rows < ksub=$ksub")
-    // dim read off the collected seed rows — a separate size() job per
-    // training (r17: one less driver roundtrip on every PQ path)
+    // dim read off the collected seed rows, not a separate size() job per
+    // training (one less driver roundtrip on every PQ path)
     val dim = seeds.head.length
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
@@ -902,20 +902,14 @@ object Similarity {
     * Cost per query: nprobe/nlist of the corpus ADC-scanned from m ints per
     * vector — both the scan FRACTION (IVF) and the BYTES per scanned vector
     * (PQ) shrink, which is why this is the billion-scale architecture.
-    * Shortlist re-ranks exactly against full-precision vectors. */
+    * Shortlist re-ranks exactly against full-precision vectors.
+    *
+    * `models` come from [[trainIvfPq]] — the serving shape: a persisted-index
+    * gate probes its in-memory twin under the SAME deterministic models it
+    * trained for the index, never a refit. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
-                iters: Int = 2, rerankFactor: Int = 4): DataFrame =
-    ivfPqTopKWithModels(corpus, queries, k,
-      trainIvfPq(corpus, nlist, m, ksub, iters), nprobe, rerankFactor)
-
-  /** [[ivfPqTopK]] under ALREADY-TRAINED models — the serving shape, and the
-    * in-memory twin of a persisted-index gate that trained the SAME
-    * deterministic (cents, books) already (r17: the gate used to refit
-    * identical models — ~6 extra driver jobs — per invocation). */
-  def ivfPqTopKWithModels(corpus: DataFrame, queries: DataFrame, k: Int,
-                          models: (Centroids, Codebooks), nprobe: Int = 4,
-                          rerankFactor: Int = 4): DataFrame = {
+                models: (Centroids, Codebooks), nprobe: Int = 4,
+                rerankFactor: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     val (cents, books) = models
     val centDf = broadcast(spark.createDataFrame(cents.map { case (id, c) => (id, c) })
@@ -945,14 +939,6 @@ object Similarity {
     else exactRerank(heapTopK(scored, rerankFactor * k), corpus, queries, k)
   }
 
-  /** Persist the IVFADC index: `(vec_id, codes)` residual-PQ rows laid out
-    * CELL-PARTITIONED on disk — the billion-scale serving layout (FAISS
-    * `IVFx,PQy` on object storage): both the scan FRACTION (partition-pruned
-    * cells) and the BYTES per scanned row (m code bytes, not the vector)
-    * shrink. Centroids and codebooks are kilobyte-scale driver models,
-    * persisted separately like any model artifact. `books` must be trained on
-    * the RESIDUALS under these same `cents` (as [[ivfPqTopK]] does) — the
-    * probe decomposes dot(q, x̂) = dot(q, centroid) + dot(q, residual̂). */
   /** The stored-row projection shared by build and append: nearest-cell
     * assignment + residual-PQ codes under (cents, books). */
   private def ivfPqIndexRows(vecs: DataFrame, cents: Centroids,
@@ -967,6 +953,14 @@ object Similarity {
           zip_with(col("emb"), col("cent"), (a, b) => a - b), books).as("codes"))
   }
 
+  /** Persist the IVFADC index: `(vec_id, codes)` residual-PQ rows laid out
+    * CELL-PARTITIONED on disk — the billion-scale serving layout (FAISS
+    * `IVFx,PQy` on object storage): both the scan FRACTION (partition-pruned
+    * cells) and the BYTES per scanned row (m code bytes, not the vector)
+    * shrink. Centroids and codebooks are kilobyte-scale driver models,
+    * persisted separately like any model artifact. `books` must be trained on
+    * the RESIDUALS under these same `cents` (as [[trainIvfPq]] fits them) — the
+    * probe decomposes dot(q, x̂) = dot(q, centroid) + dot(q, residual̂). */
   def writeIvfPqIndex(corpus: DataFrame, cents: Centroids, books: Codebooks,
                       path: String): Unit =
     ivfPqIndexRows(corpus, cents, books)
@@ -1208,8 +1202,8 @@ object Similarity {
       .filter(col(col0).isNotNull)
       .select(VectorFns.toDoubleArray(col(col0)).as("v"))
       .as[Array[Double]]
-    // SINGLE corpus-touching job (advisor, r13 — the pivot used to cost a
-    // separate take(1) job and depended on partition order): each partition
+    // SINGLE corpus-touching job (a global pivot would cost a separate
+    // take(1) job and depend on partition order): each partition
     // shifts by ITS OWN first row (a local, typical-magnitude pivot — the
     // same cancellation guard), and the driver recombines the per-partition
     // shifted moments onto the first non-empty partition's pivot with the
@@ -1457,11 +1451,11 @@ object Similarity {
     // PERSIST (not localCheckpoint) so the release below actually releases:
     // Dataset.unpersist on a localCheckpoint'd frame is a cache-manager
     // no-op — the blocks belong to the internal checkpoint RDD, which only
-    // the ContextCleaner ever frees (advisor, r14) — while persist/unpersist
+    // the ContextCleaner ever frees — while persist/unpersist
     // are symmetric through the cache manager. The count() pays the d×d
     // projection ONCE; every downstream pass (PQ training rounds, encode,
     // ADC scan, rerank join) then reads the cache (measured 2207 s → 83 s at
-    // the 1M×32 stress when this materialization was first added, r13).
+    // the 1M×32 stress).
     val rc = rot(corpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rc.count()
     val train = if (trainMod == 1) rc
@@ -1473,7 +1467,7 @@ object Similarity {
     // Materialize the RESULT (|queries|·k rows — model-scale) so its lineage
     // severs from `rc`, then release the corpus-sized cache before returning:
     // bench sweeps invoke this many times per session and would otherwise
-    // accumulate a corpus of blocks per call (advisor, r13).
+    // accumulate a corpus of blocks per call.
     try pqTopKEncoded(pqEncode(rc, books), rc, rot(queries), books, k,
       rerankFactor).localCheckpoint()
     finally rc.unpersist()

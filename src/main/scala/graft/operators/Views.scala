@@ -20,7 +20,7 @@ object Views {
     * The Cassandra upsert keeps the latest write; we keep the latest EVENT TIME with a
     * deterministic id tie-break (the upsert's wall-clock race, made reproducible). */
   def latestInfo(events: DataFrame, key: String = "user_id"): DataFrame =
-    Ops.latestPerKeyAgg(events, Seq(key), Seq(col("ts"), col("event_id")))
+    Ops.latestPerKey(events, Seq(key), Seq(col("ts"), col("event_id")))
 
   /** `global_recent_customers` (`README.md:272-282`): global recency log. The
     * reference pins one hot partition (`fixed_partition_key='all_customers'`,

@@ -73,7 +73,7 @@ object StreamingViews {
     * (window, shard) ([[settleSketch]], the [[streamFunnel]] argmax
     * discipline), then rank with [[topKPerWindow]].
     *
-    * SHARDING (the 100 TB hot-key fix, r14 verdict): keying state by the
+    * SHARDING (the 100 TB hot-key fix): keying state by the
     * window alone funnels EVERY event of a window through one task — and for
     * a live stream the current hour is the single hottest possible key, so
     * that one task serializes the whole feed. `shards > 1` re-keys state to
@@ -87,7 +87,7 @@ object StreamingViews {
     * distinct items no decrement ever fires and the settled counts are EXACT
     * (the driver-gated regime, equal to the batch windowed count).
     *
-    * EVICTION (r14 verdict): `eventTimeEviction = true` watermarks the
+    * EVICTION: `eventTimeEviction = true` watermarks the
     * stream (`watermarkDelay`) and arms an event-time timeout per sketch at
     * `window_end + allowedLatenessMs`: once the watermark passes it, the
     * sketch re-emits its settled counters one last time (same `n_updates` —
@@ -117,8 +117,8 @@ object StreamingViews {
         date_format(col("ts"), "yyyyMMddHH").as("hour_bucket"),
         pmod(xxhash64(col(itemCol).cast("string")), lit(shards.toLong)).cast("int").as("shard"),
         col(itemCol).cast("string").as("item"),
-        // end of the SESSION-TIMEZONE hour, like hour_bucket above (r15
-        // advisory): raw UTC epoch-hour arithmetic diverges from
+        // end of the SESSION-TIMEZONE hour, like hour_bucket above: raw
+        // UTC epoch-hour arithmetic diverges from
         // date_format's bucket in a fractional-offset session (e.g.
         // +05:30), letting the eviction deadline land mid-bucket — the
         // sketch would evict early and the max-settle could keep either
@@ -250,7 +250,7 @@ object StreamingViews {
     * key that saw traffic. Scale: state is one 16-byte record per key, hash
     * partitioned — 10^9 keys ≈ tens of GB across a cluster's state stores.
     *
-    * IDLE TTL (r15 verdict): the default keeps every key's record forever —
+    * IDLE TTL: the default keeps every key's record forever —
     * exact reference parity (Cassandra rows don't expire either). For bounded
     * deployments, `eventIdleTimeout` (milliseconds of EVENT time) arms an
     * event-time timeout per key at `winner_ts + ttl` — the winner's ts is the
@@ -410,10 +410,10 @@ object StreamingViews {
     * `watermarkCol` empty this is plain streaming `dropDuplicates(key)` —
     * UNBOUNDED per-key state for the lifetime of the query — which is only
     * safe for bounded test streams and short-lived backfills, so that form
-    * now requires the explicit `unboundedStateOk = true` opt-in instead of
-    * being the silent default a production caller could drift into (advisor
-    * finding, round 11). Streams that carry event time pass `watermarkCol`
-    * and get watermark-bounded dedup state. */
+    * requires the explicit `unboundedStateOk = true` opt-in instead of
+    * being the silent default a production caller could drift into. Streams
+    * that carry event time pass `watermarkCol` and get watermark-bounded
+    * dedup state. */
   private def settleOncePerKey(matched: DataFrame, key: String,
                                watermarkCol: String, watermark: String,
                                unboundedStateOk: Boolean): DataFrame =
@@ -579,8 +579,8 @@ object StreamingViews {
       Multimodal.imageDHash(spark, media).toDF())
     val good = baseIndex.groupBy("bkey").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("bkey")
-    // materialize the df-bounded base slice ONCE at query construction (r15
-    // advisory): a stream-static join re-evaluates its static subtree every
+    // materialize the df-bounded base slice ONCE at query construction: a
+    // stream-static join re-evaluates its static subtree every
     // micro-batch, so an unmaterialized plan would re-scan the full index
     // AND re-run the df aggregation shuffle per trigger — defeating the
     // zero-base-exchange probe at scale. The checkpointed slice is
@@ -641,7 +641,7 @@ object StreamingViews {
     * ONLY while no stage-1 event has arrived (t1 unknown — the unbounded
     * regime; once t1 exists the horizon filter is the bound, and capping
     * there could evict within-horizon events still needed to complete the
-    * chain, undercounting vs batch — advisor, round 9), keeping the EARLIEST
+    * chain, undercounting vs batch), keeping the EARLIEST
     * events by (ts, stage) (deterministic; earliest events are the ones a
     * yet-unseen stage-1 window can still qualify). Defaults preserve the
     * exact-batch-equivalent behavior of the hash-gated entry. */
@@ -823,7 +823,7 @@ object StreamingViews {
     * LWW winners is the global LWW (the fold is associative). */
   def latestFromIncrements(spark: SparkSession, outDir: String): DataFrame =
     Ops.latestPerKey(spark.read.parquet(s"$outDir/latest_increment"),
-      Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
+      Seq("user_id"), Seq(col("ts"), col("event_id")))
       .drop("batch")
 
   /** CDC ingest: maintain a change log (insert/update/delete ops) from a
@@ -842,7 +842,7 @@ object StreamingViews {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Ops.latestPerKey(batch, keys, orderCols.map(c => col(c).desc))
+        Ops.latestPerKey(batch, keys, orderCols.map(col))
           .write.mode("overwrite")
           .parquet(s"$outDir/changes/batch=$batchId")
         ()
@@ -857,7 +857,7 @@ object StreamingViews {
                          orderCols: Seq[String], opCol: String = "op",
                          deleteOp: String = "D"): DataFrame =
     Ops.applyChanges(spark.read.parquet(s"$outDir/changes"),
-        keys, orderCols.map(c => col(c).desc), opCol, deleteOp)
+        keys, orderCols.map(col), opCol, deleteOp)
       .drop("batch")
 
   // Staged source dirs and their schemas, keyed by original path — one staging

@@ -67,27 +67,22 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("A4 both LWW forms agree when timestamps are null: a real ts always beats null") {
+  test("A4 latestPerKey: a real ts always beats a null ts") {
     // ord = struct(ts, id): a null ts field sorts below every real ts in the
-    // struct ordering (asc nulls-first), matching the window form's
-    // `ts.desc` nulls-last — pin the parity so neither form lets a
-    // null-event-time replay overwrite a real profile
+    // struct ordering (asc nulls-first) — a null-event-time replay must never
+    // overwrite a real profile
     val df = spark.sql(
       """SELECT * FROM VALUES
          (1L, 10L, TIMESTAMP'2024-01-01 10:00:00', 'real'),
          (2L, 10L, CAST(NULL AS TIMESTAMP), 'null-ts'),
          (3L, 20L, CAST(NULL AS TIMESTAMP), 'only-null')
          AS t(event_id, user_id, ts, tag)""")
-    val agg = Ops.latestPerKeyAgg(df, Seq("user_id"), Seq($"ts", $"event_id"))
-    val win = Ops.latestPerKey(df, Seq("user_id"), Seq($"ts".desc, $"event_id".desc))
-    val a = rowSet(agg.select("user_id", "event_id"))
-    assert(a === rowSet(win.select("user_id", "event_id")))
-    assert(a === Set(Seq(10L, 1L), Seq(20L, 3L)))
+    val r = Ops.latestPerKey(df, Seq("user_id"), Seq($"ts", $"event_id"))
+    assert(rowSet(r.select("user_id", "event_id")) === Set(Seq(10L, 1L), Seq(20L, 3L)))
   }
 
   test("A4 latestPerKey keeps exactly one deterministic row per key") {
-    val r = Ops.latestPerKey(events, Seq("user_id"),
-      Seq($"ts".desc, $"event_id".desc))
+    val r = Ops.latestPerKey(events, Seq("user_id"), Seq($"ts", $"event_id"))
     // user 10: events 3 and 6 tie on ts; id desc wins -> 6. user 20: event 5.
     assert(rowSet(r.select("user_id", "event_id")) ===
       Set(Seq(10L, 6L), Seq(20L, 5L)))
@@ -99,7 +94,7 @@ class OpsSpec extends SparkSpec {
       (2L, 1L, 20.0, "I"), (2L, 2L, 0.0, "D"), (2L, 3L, 22.0, "I"), // resurrected
       (3L, 5L, 30.0, "I")                                           // plain insert
     ).toDF("k", "seq", "v", "op")
-    val r = rowSet(Ops.applyChanges(ch, Seq("k"), Seq(col("seq").desc)))
+    val r = rowSet(Ops.applyChanges(ch, Seq("k"), Seq(col("seq"))))
     assert(r === Set(Seq(2L, 3L, 22.0), Seq(3L, 5L, 30.0)))
   }
 

@@ -185,6 +185,28 @@ class PlanSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, p)
   }
 
+  test("LWW compactions: one keyed exchange into an ObjectHashAggregate, no Window") {
+    // the CDC merge and the read-side compaction of maintained increments
+    // both run the argmax LWW: partial aggregation map-side, one user-keyed
+    // shuffle, and no per-key window sort anywhere
+    val dir = java.nio.file.Files.createTempDirectory("graft_lww_plan").toString
+    val ev = Tables.events(spark, d)
+    Seq(0, 1).foreach { b =>
+      Views.latestInfo(ev.filter(pmod(col("event_id"), lit(2)) === b))
+        .write.parquet(s"$dir/latest_increment/batch=$b")
+    }
+    Seq("q_cdc_merge" -> SparkEntry.queries("q_cdc_merge")(spark, d),
+        "latestFromIncrements" -> graft.streaming.StreamingViews.latestFromIncrements(spark, dir))
+      .foreach { case (name, df) =>
+        df.collect()
+        val p = physical(df).split("== Initial Plan ==").head
+        assert("Exchange hashpartitioning".r.findAllIn(p).size === 1, s"$name:\n$p")
+        assert(p.contains("Exchange hashpartitioning(user_id"), s"$name:\n$p")
+        assert(p.contains("ObjectHashAggregate"), s"$name:\n$p")
+        assert(!p.contains("Window"), s"$name must not sort keys in a window:\n$p")
+      }
+  }
+
   test("runtime bloom filter prunes the big side of a selective shuffle join") {
     // The 100 TB shape: a big fact shuffle-joins a dim that a filter makes
     // selective — Spark's runtime bloom filter (built on the dim side, pushed
@@ -478,7 +500,7 @@ class PlanSpec extends SparkSpec {
       "q_triangle_count" -> 8, // edge dedup + degree agg + orientation joins + wedge/closure equi-joins + node count; every exchange carries 8-byte endpoints
       // round-10 session additions: the KN LM family + unigram tokenizer
       "text_lm_score_kn" -> 4, // r16: bigram counts CHECKPOINT once; left/right stats re-derive from the blocks (2 vocab-bounded aggs) + scoring bigram re-tokenize + per-doc agg; model joins broadcast, n_types is a one-row broadcast scalar (the window is gone)
-      "text_lm_score_kn_transfer" -> 4, // r16: train counts CHECKPOINT once; left/right stat aggs read the blocks + the score stream's per-doc agg; the three model joins broadcast, totals ride a one-row broadcast
+      "text_lm_score_kn_transfer" -> 3, // train counts CHECKPOINT once; left/right stat aggs read the blocks + the score stream's per-doc agg; the three model joins broadcast, the type total is a collected literal
       "pipeline_perplexity_buckets" -> 0, // r16: the KN scores CHECKPOINT (threshold agg + assignment both read the blocks — one scoring pass, not two); the percentile agg is a benign one-row SinglePartition, assignment a broadcast crossJoin
       "text_unigram_token_count" -> 0, // EM fit is driver-side (word-freq agg runs in training, not this plan); the scored plan is the map-only native encode
       "text_unigram_encode_fixed" -> 0, // pinned-vocab Viterbi: map-only

@@ -135,18 +135,10 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter($"vec_id" < 5)
     val persisted = rowSet(Similarity.ivfPqProbePersisted(spark, path, cents, books,
       queries, emb, 10, nprobe = 5, rerankFactor = 4))
-    // the in-memory form refits the same deterministic models internally
     val inMemory = rowSet(Similarity.ivfPqTopK(emb, queries, 10,
-      nlist = 8, nprobe = 5, m = 16, ksub = 32, iters = 3, rerankFactor = 4))
+      (cents, books), nprobe = 5, rerankFactor = 4))
     assert(persisted === inMemory,
       "persisted IVFADC probe diverged from the in-memory composition")
-    // r17: the models-taking serving form must equal the self-training form
-    // under the same deterministic fit (the persisted gates now reuse the
-    // entry's trained models instead of refitting identical ones)
-    val withModels = rowSet(Similarity.ivfPqTopKWithModels(emb, queries, 10,
-      (cents, books), nprobe = 5, rerankFactor = 4))
-    assert(withModels === inMemory,
-      "ivfPqTopKWithModels diverged from the self-training form")
   }
 
   test("ivfProbePersisted is bit-identical to ivfProbeAssigned on the same centroids") {
@@ -570,14 +562,16 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter($"vec_id" < 20)
     val exact = topMap(Similarity.bruteForceTopK(emb, queries, 10))
     val r = recallOf(exact, topMap(Similarity.ivfPqTopK(emb, queries, 10,
-      nlist = 8, nprobe = 6, m = 16, ksub = 32, iters = 3, rerankFactor = 8)))
+      Similarity.trainIvfPq(emb, nlist = 8, m = 16, ksub = 32, iters = 3),
+      nprobe = 6, rerankFactor = 8)))
     info(f"ivfPqTopK(nlist=8, nprobe=6, m=16, ksub=32, rerank=8k) recall@10 = $r%.3f")
     assert(r >= 0.8, f"IVFADC recall $r%.3f below 0.8 floor — raise nprobe/m/rerank")
   }
 
   test("ivfPqTopK finds identical vectors (same cell, same residual codes)") {
     val r = Similarity.ivfPqTopK(emb, emb.filter($"vec_id" === 1), 1,
-      nlist = 2, nprobe = 1, m = 2, ksub = 4, iters = 1, rerankFactor = 2)
+      Similarity.trainIvfPq(emb, nlist = 2, m = 2, ksub = 4, iters = 1),
+      nprobe = 1, rerankFactor = 2)
     val top = r.filter($"rank" === 1).head()
     assert(top.getLong(1) === 3L, s"identical vector must rank first, got $top")
     assert(top.getDouble(2) === 1.0)

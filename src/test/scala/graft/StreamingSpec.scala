@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.{Ops, Views}
 import graft.streaming.{QueueIngest, StreamingViews}
+import org.apache.spark.sql.streaming.Trigger
 
 /** A queue transport frame (kafka wire shape) for MemoryStream tests. */
 case class QueueFrame(key: Array[Byte], value: Array[Byte], topic: String,
@@ -185,7 +186,7 @@ class StreamingSpec extends SparkSpec {
       stream.addData(b1); q.processAllAvailable()
       stream.addData(b2); q.processAllAvailable()
     } finally q.stop()
-    val settled = Ops.latestPerKeyAgg(spark.table("t_funnel"),
+    val settled = Ops.latestPerKey(spark.table("t_funnel"),
         Seq("user_id"), Seq(col("n_updates")))
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     // user 1: view@12:45 was in [12:30, 13:30] but the late signup moves the
@@ -343,7 +344,7 @@ class StreamingSpec extends SparkSpec {
       stream.addData(events.take(1)); q.processAllAvailable()
       stream.addData(events.drop(1)); q.processAllAvailable()
     } finally q.stop()
-    val settled = Ops.latestPerKeyAgg(spark.table("t_funnel_evt_parity"),
+    val settled = Ops.latestPerKey(spark.table("t_funnel_evt_parity"),
         Seq("user_id"), Seq(col("n_updates")))
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     // hand-computed batch verdicts: user 1 chains signup->view (stage 2);
@@ -370,7 +371,7 @@ class StreamingSpec extends SparkSpec {
       stream.addData(Seq(TestEvent(3, 1, "signup", ts("2024-01-01 10:00:00"), 0, "{}")))
       q.processAllAvailable()
     } finally q.stop()
-    val settled = Ops.latestPerKeyAgg(spark.table("t_funnel_cap"),
+    val settled = Ops.latestPerKey(spark.table("t_funnel_cap"),
         Seq("user_id"), Seq(col("n_updates")))
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     // uncapped the user reaches stage 3; the capped buffer lost the purchase
@@ -523,7 +524,7 @@ class StreamingSpec extends SparkSpec {
     // update-mode memory sink appends each batch's emission; the winner per key
     // is monotone, so max(ts, id) per key is the settled state
     val settled = graft.operators.Ops.latestPerKey(spark.table("t_lww_state"),
-      Seq("user_id"), Seq(col("ts_micros").desc, col("event_id").desc))
+      Seq("user_id"), Seq(col("ts_micros"), col("event_id")))
     assert(rowSet(settled.select("user_id", "event_id")) ===
       rowSet(Views.latestInfo(allEvents.toDF()).select("user_id", "event_id")))
   }
@@ -568,7 +569,7 @@ class StreamingSpec extends SparkSpec {
     // the settled view (argmax per key over all emissions) equals batch LWW
     // over the same events — eviction is invisible to the settled answer
     val settled = graft.operators.Ops.latestPerKey(spark.table("t_lww_ttl"),
-      Seq("user_id"), Seq(col("ts_micros").desc, col("event_id").desc))
+      Seq("user_id"), Seq(col("ts_micros"), col("event_id")))
     assert(rowSet(settled.select("user_id", "event_id")) ===
       Set(Seq(1L, 3L), Seq(2L, 2L)))
   }
@@ -760,7 +761,7 @@ class StreamingSpec extends SparkSpec {
     // stream state == batch applyChanges over the full change log
     assert(rowSet(state.select("k", "seq", "v")) ===
       rowSet(Ops.applyChanges((b0 ++ b1).toDF("k", "seq", "v", "op"),
-        Seq("k"), Seq(col("seq").desc)).select("k", "seq", "v")))
+        Seq("k"), Seq(col("seq"))).select("k", "seq", "v")))
     assert(rowSet(state.select("k", "seq", "v")) ===
       Set(Seq(2L, 3L, 22.0), Seq(3L, 2L, 33.0)))
   }
@@ -785,6 +786,57 @@ class StreamingSpec extends SparkSpec {
     val compacted = StreamingViews.latestFromIncrements(spark, s"$dir/out")
     assert(rowSet(compacted.select("user_id", "event_id")) ===
       rowSet(Views.latestInfo(allEvents.toDF()).select("user_id", "event_id")))
+  }
+
+  /** Stream `batches` (one parquet file each, one micro-batch per file)
+    * through `start` with a checkpoint, then delete the last `commits/N`
+    * marker and restart, so Spark re-runs that batchId over the same
+    * offsets. Returns `read` of the output directory before and after. */
+  private def replayLast[T](batches: Seq[org.apache.spark.sql.DataFrame])(
+      start: (org.apache.spark.sql.DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)(read: String => T): (T, T) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    batches.foreach(_.coalesce(1).write.mode("append").parquet(s"$dir/src"))
+    val schema = spark.read.parquet(s"$dir/src").schema
+    def run(): Unit = {
+      val q = start(spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$dir/src"), s"$dir/out", s"$dir/ckpt")
+      try q.awaitTermination() finally q.stop()
+    }
+    run()
+    val before = read(s"$dir/out")
+    val last = batches.size - 1
+    val marker = new java.io.File(s"$dir/ckpt/commits/$last")
+    assert(marker.delete(), s"no commit marker for batch $last")
+    new java.io.File(s"$dir/ckpt/commits/.$last.crc").delete()
+    run()
+    assert(marker.exists(), s"batch $last was not re-run")
+    (before, read(s"$dir/out"))
+  }
+
+  test("maintainViews replay: a re-run batchId leaves recent_log and the LWW compaction unchanged") {
+    val (before, after) = replayLast(Seq(allEvents.take(3).toDF(), allEvents.drop(3).toDF()))(
+      StreamingViews.maintainViews(_, _, _, trigger = Trigger.AvailableNow())) { out =>
+      (spark.read.parquet(s"$out/recent_log").count(),
+        rowSet(StreamingViews.latestFromIncrements(spark, out)))
+    }
+    assert(after === before)
+    assert(after._1 === allEvents.size)
+    assert(after._2 === rowSet(Views.latestInfo(allEvents.toDF())))
+  }
+
+  test("maintainChangeLog replay: a re-run batchId leaves the applied state unchanged") {
+    val b0 = Seq((1L, 1L, 10.0, "I"), (2L, 1L, 20.0, "I"), (3L, 1L, 30.0, "I"))
+    val b1 = Seq((1L, 2L, 0.0, "D"), (2L, 2L, 0.0, "D"), (2L, 3L, 22.0, "I"),
+                 (3L, 2L, 33.0, "U"))
+    val (before, after) = replayLast(Seq(b0, b1).map(_.toDF("k", "seq", "v", "op")))(
+      StreamingViews.maintainChangeLog(_, _, _, Seq("k"), Seq("seq"),
+        trigger = Trigger.AvailableNow())) { out =>
+      rowSet(StreamingViews.stateFromChangeLog(spark, out, Seq("k"), Seq("seq"))
+        .select("k", "seq", "v"))
+    }
+    assert(after === before)
+    assert(after === Set(Seq(2L, 3L, 22.0), Seq(3L, 2L, 33.0)))
   }
 
   test("streaming incremental dedup: in-stream repeats drop, base-corpus docs anti-join out") {

@@ -6,6 +6,7 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [query ...]
 For each query with an oracle in oracle_sql.json: run the SQL in DuckDB over the
 sf parquet tables, load the Spark parquet result, sort columns by name and rows
 by all columns, and compare values exactly (floats to 9 significant digits).
+A MISSING output prints the exception Verify recorded for it in failed.json.
 """
 import json, sys, glob, math
 import duckdb
@@ -32,13 +33,20 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracles = json.load(open(f"{out}/oracle_sql.json"))
+    try:
+        failed = json.load(open(f"{out}/failed.json"))
+    except FileNotFoundError:
+        failed = {}
     fails = 0
     for name, sql in sorted(oracles.items()):
         if only and name not in only:
             continue
         files = glob.glob(f"{out}/{name}/*.parquet")
         if not files:
-            print(f"{name}: MISSING spark output"); fails += 1; continue
+            why = failed.get(name)
+            reason = (f" ({why['class']}: {why['message'].splitlines()[0] if why['message'] else ''})"
+                      if why else "")
+            print(f"{name}: MISSING spark output{reason}"); fails += 1; continue
         spark_df = con.execute(
             f"SELECT * FROM read_parquet({files!r})").df()
         oracle_df = con.execute(sql).df()
