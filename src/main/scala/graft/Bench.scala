@@ -105,6 +105,14 @@ object Bench {
     } finally spark.sparkContext.setJobDescription(null)
   }
 
+  /** Untimed warm-up: parquet footers, file listing, codegen/JIT baseline —
+    * so the timed loop measures the operators, not session initialization.
+    * An unreadable table aborts the run: Spark's error names its path. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    graft.sources.Tables.names.foreach(n => graft.sources.Tables.table(spark, sfDir, n).count())
+    graft.sources.Tables.events(spark, sfDir).count()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -116,13 +124,7 @@ object Bench {
     // shrinking the reported total (advisor finding, round 2).
     val missing = headline.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"headline names missing from SparkEntry.queries: ${missing.mkString(", ")}")
-    // Untimed warmup: parquet footers, file listing, codegen/JIT baseline —
-    // so the timed loop measures the operators, not session initialization.
-    graft.sources.Tables.names.foreach { n =>
-      try graft.sources.Tables.table(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
-    }
-    try graft.sources.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // Sweep-major timing: each "run" is one full pass over every selected query,
     // so per-run totals measure the same code under the host conditions of that
     // moment — the spread between runs is pure environment noise. min-of-3 per

@@ -354,8 +354,8 @@ object SparkEntry {
   // machinery, not production dataflow — at 100 TB the same gates run over a
   // hash-sampled slice (Ops.hashSample keeps them deterministic), exactly as
   // a production recall monitor samples its ground truth. The approximate
-  // operators under test are the scale path; their plans are snapshotted in
-  // operator form in PLANS.md.
+  // operators under test are the scale path; PlanSpec pins their plans in
+  // operator form.
   // ------------------------------------------------------------------
 
   /** Materialize a gate input once. r17 NOTE (measured, then mostly
@@ -2585,7 +2585,7 @@ object SparkEntry {
       // per bucket, staged + checked trash-then-rename swap), and probe the
       // compacted table. Shares the append/rebuild oracle, so the hash-match
       // IS the compaction-preserves-every-probe-answer proof; the file-count
-      // drop itself is asserted in LakeSpec and at stress in SCALE.md.
+      // drop itself is asserted in LakeSpec.
       (s, d) => {
         val docs = Tables.documents(s, d)
         val base = docs.filter(col("doc_id") % 20 =!= 0)
@@ -2624,7 +2624,7 @@ object SparkEntry {
       // build/append/compact oracle, so the hash-match IS the
       // rebucket-preserves-every-probe-answer proof; the layout change
       // itself (file count, zero-exchange probe plan at n′) is asserted in
-      // LakeSpec and at stress in SCALE.md.
+      // LakeSpec.
       (s, d) => {
         val docs = Tables.documents(s, d)
         val base = docs.filter(col("doc_id") % 20 =!= 0)
@@ -2750,7 +2750,7 @@ object SparkEntry {
       // then comes from array_intersect over candidate gram arrays.
       // WIRED IN ITS WINNING REGIME (verdict r9 task 2): the raw sf fixtures
       // have max gram df 25 — no mid-df boilerplate, the regime where the
-      // prefix machinery is pure overhead and the base form wins (SCALE.md
+      // prefix machinery is pure overhead and the base form wins (measured
       // A/B). So this entry PLANTS the regime the form exists for: each doc
       // gains a deterministic boilerplate tail whose inner gram is shared by
       // its doc_id%10 group (df ≈ n/10 — mid-df), plus one corpus-wide gram
@@ -2763,8 +2763,8 @@ object SparkEntry {
       // fixture is the doc_id%4 quarter-corpus (verdict r9 task 2's "shrink
       // its fixture"): at fixture scale NO pair space explodes enough for the
       // prefix machinery's constants to pay for themselves — the measured
-      // WIN evidence for this form is ScaleSmoke's 200k-doc mid-df A/B
-      // (SCALE.md: 5.1 s vs the base form's 13.8 s) — so the sweep entry's
+      // WIN evidence for this form is a 200k-doc mid-df A/B (5.1 s vs the
+      // base form's 13.8 s) — so the sweep entry's
       // job is exercising
       // the distinctive dataflow (rarest-first flags, flag-only buckets,
       // array-intersect rescoring) hash-exactly, not re-proving the win.
@@ -5179,7 +5179,7 @@ object SparkEntry {
     Q("pipeline_split_fp", // the 100 TB path of pipeline_split as a
       // DRIVER-VISIBLE gate: identical split semantics keyed on xxhash64
       // instead of the char-wise rolling hash (one hash pass, ~20x at 1M
-      // docs per ScaleSmoke). The PropertySpec gates, promoted: per-split
+      // docs). The PropertySpec gates, promoted: per-split
       // proportions track the slow-hash form (fracs_ok) and exact duplicates
       // never split apart (dup_consistent — the leak-proof-splits property);
       // n_docs is DuckDB-exact. Tolerance is 5pp HERE, not the spec's 1pp:

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.DataType
   * so the planner silently lowers it to SortAggregate, which SORTS every map
   * partition by the grouping key before the partial step. That is exactly the
   * cost the agg-based last-write-wins claims to avoid; measured 2x slower
-  * than the window form at 10M rows / 100k keys (ScaleSmoke). As a
+  * than the window form at 10M rows / 100k keys. As a
   * TypedImperativeAggregate this runs in ObjectHashAggregate: map-side hash
   * reduce, one surviving row per (task, key) into the shuffle, no sort
   * anywhere.

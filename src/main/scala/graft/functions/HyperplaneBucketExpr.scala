@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * 64 planes the unrolled alternative (one codegen dot per bit) overruns the
   * JIT method threshold. This emits one constant-size nested loop over a
   * `double[][]` reference (1M x 32-dim x 64 planes: 13.4 s HOF -> ~1 s here;
-  * ScaleSmoke guards it).
+  * PlanSpec bounds the generated method size at 64 planes).
   *
   * Semantics: bit b (MSB-first over the plane order) = 1 iff dot(v, plane_b)
   * >= 0, summed over min(len(v), len(plane)) elements. Null array or null

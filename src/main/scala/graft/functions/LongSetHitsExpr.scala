@@ -30,9 +30,9 @@ case class LongSetHitsExpr(child: Expression, set: Array[Long])
       "use the Bloom regime (decontaminateBloom) or the broadcast-join form")
 
   /** Stable plan rendering: the default Array toString would embed a JVM
-    * identity hash (`[J@1a2b3c`) in every explain/PLANS.md snapshot, making
-    * the committed plan record churn on each regeneration. Render length +
-    * content hash instead — deterministic for identical models. */
+    * identity hash (`[J@1a2b3c`) in every explain output, so two plans of
+    * the same model would print differently. Render length + content hash
+    * instead — deterministic for identical models. */
   override protected def stringArgs: Iterator[Any] = Iterator(child,
     s"set(n=${set.length}, h=${java.util.Arrays.hashCode(set).toHexString})")
 

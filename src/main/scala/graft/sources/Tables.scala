@@ -35,11 +35,14 @@ object Tables {
     *
     * `ts` is ns-precision parquet, which Spark 4 refuses to read as a timestamp
     * (PARQUET_TYPE_ILLEGAL); we read it as a long (legacy conf) and truncate to a
-    * µs `timestamp_ntz` — exactly DuckDB's `CAST(ts AS TIMESTAMP)`.
+    * µs `timestamp_ntz` — exactly DuckDB's `CAST(ts AS TIMESTAMP)`. The conf is
+    * the session's, set by `Sessions.builder`: a loader never changes it, since
+    * that would change every other query on the session.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    require(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong").toBoolean,
+      "Tables.events needs spark.sql.legacy.parquet.nanosAsLong=true; " +
+        "build the session with graft.sources.Sessions.builder")
     normalizeEventTs(table(spark, dir, "events"))
   }
 

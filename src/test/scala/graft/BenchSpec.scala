@@ -10,4 +10,14 @@ class BenchSpec extends SparkSpec {
     assert(e.getMessage.contains("q_throws"))
     assert(e.getCause.getMessage.contains("boom"))
   }
+
+  test("warmUp: a missing table aborts the run and names the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_warm")
+    graft.sources.Tables.names.filterNot(_ == "lineitem").foreach { n =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"/root/testdata/sf0.001/$n.parquet"),
+        dir.resolve(s"$n.parquet"))
+    }
+    val e = intercept[Exception](Bench.warmUp(spark, dir.toString))
+    assert(e.getMessage.contains("lineitem"), e.getMessage)
+  }
 }

@@ -3,11 +3,23 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.Lake
 
-/** Storage-layout maintenance: the bucketed-table compaction half of the
-  * build/append lifecycle ([[Lake.compactBucketed]]) and the file-level swap
-  * machinery it shares with `Dedup.deleteFromWinnowIndex`. */
+/** Storage sources: the table loaders' session contract, and storage-layout
+  * maintenance — the bucketed-table compaction half of the build/append
+  * lifecycle ([[Lake.compactBucketed]]) and the file-level swap machinery it
+  * shares with `Dedup.deleteFromWinnowIndex`. */
 class LakeSpec extends SparkSpec {
   import spark.implicits._
+
+  test("Tables.events refuses a session without nanosAsLong and leaves its conf alone") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val other = spark.newSession()
+    other.conf.set(key, "false")
+    val e = intercept[IllegalArgumentException](
+      graft.sources.Tables.events(other, "/root/testdata/sf0.001"))
+    assert(e.getMessage.contains("Sessions.builder"), e.getMessage)
+    assert(other.conf.get(key) === "false")
+    assert(spark.conf.get(key) === "true")
+  }
 
   private def fsFor(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
