@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 
@@ -420,15 +420,13 @@ object Dedup {
     * oracle as `dedup_clusters`). */
   def resolveClustersStar(docs: DataFrame, pairs: DataFrame,
                           maxIter: Int = 30): DataFrame = {
-    var toFree: List[DataFrame] = Nil
-    def ckpt(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); toFree ::= c; c }
     def sym(e: DataFrame): DataFrame =
       e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-    val p = ckpt(pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
+    val p = pairs.select(col("a_id").as("src"), col("b_id").as("dst")).localCheckpoint()
     // canonical form: each undirected edge once, larger endpoint first
-    var canon = ckpt(p.select(greatest(col("src"), col("dst")).as("src"),
+    var canon = p.select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
+      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
     def checksum(e: DataFrame): (Long, Long) = {
       val r = e.agg(count(lit(1)),
         coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L))).head()
@@ -454,8 +452,8 @@ object Dedup {
         .select(col("dst").as("src"), col("m").as("dst"))
         .unionAll(minsS.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
-      canon = ckpt(small.select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst")).distinct())
+      canon = small.select(greatest(col("src"), col("dst")).as("src"),
+          least(col("src"), col("dst")).as("dst")).distinct().localCheckpoint()
       val cur = checksum(canon)
       stable = cur == prev
       prev = cur
@@ -470,7 +468,6 @@ object Dedup {
     val labels = sym(canon).groupBy(col("src").as("doc_id"))
       .agg(min(col("dst")).as("lbl"))
       .select(col("doc_id"), least(col("lbl"), col("doc_id")).as("label"))
-    toFree.drop(1).foreach(df => try df.unpersist() catch { case _: Throwable => () })
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -769,9 +766,11 @@ object Dedup {
     * scheme tested (two-ended and shared-5-gram both 28/41) — size maxDist
     * to typo/OCR variation, not to a similarity search.
     * Both blocks are equi-keys: two shuffle joins + union, never an OR-join
-    * nested loop. The banded DP ([[graft.functions.BandedEditDistanceExpr]])
-    * abandons a pair at maxDist+1 — O(len·maxDist) per pair, not O(len²) —
-    * and runs once per DISTINCT candidate (dedup before the DP). */
+    * nested loop. The suffix join skips pairs whose prefixes also match, so
+    * the two candidate sets are disjoint and, for unique `doc_id`s, the union
+    * holds each pair once without a dedup that would shuffle the text. The
+    * banded DP ([[graft.functions.BandedEditDistanceExpr]]) abandons a pair
+    * at maxDist+1 — O(len·maxDist) per pair, not O(len²). */
   def editDistancePairs(docs: DataFrame, maxDist: Int = 5,
                         blockLen: Int = 40): DataFrame = {
     // normalizeNonNull: a nullable join-key expression makes constraint
@@ -790,16 +789,16 @@ object Dedup {
     // |len(a) - len(b)| <= maxDist is a NECESSARY condition for the distance
     // bound and costs two cached ints per pair — it prunes candidates before
     // any DP runs.
-    def cands(block: String) =
+    def cands(block: String, cond: Column) =
       a.join(b, col(s"a.$block") === col(s"b.$block") &&
           col("a.doc_id") < col("b.doc_id") &&
-          abs(col("a.len") - col("b.len")) <= maxDist)
+          abs(col("a.len") - col("b.len")) <= maxDist && cond)
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
           col("a.norm").as("norm_a"), col("b.norm").as("norm_b"))
     // The single `>= 0` filter is the complete distance gate: the banded DP
     // returns -1 for anything past maxDist.
-    cands("pblock").unionAll(cands("sblock"))
-      .dropDuplicates("a_id", "b_id")
+    cands("pblock", lit(true))
+      .unionAll(cands("sblock", col("a.pblock") =!= col("b.pblock")))
       .select(col("a_id"), col("b_id"),
         graft.functions.BandedEditDistanceExpr.bandedEditDistance(
           col("norm_a"), col("norm_b"), maxDist).as("edit_dist"))

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge
 
 /** Iterative graph analytics over plain `(src, dst[, weight])` edge lists —
   * the entity-importance / label-spreading layer a crawl-curation pipeline
@@ -10,20 +12,20 @@ import org.apache.spark.sql.functions._
   * has no graph capability at all (CQL cannot join, let alone iterate); this
   * extends the engine the same way the dedup layer's connected components do
   * ([[Dedup.resolveClustersStar]]), and reuses its iteration discipline:
-  * fixed round count, every round `localCheckpoint`ed so the plan stays
+  * fixed round count, materialized with `localCheckpoint` so the plan stays
   * shallow and no subtree ever evaluates twice.
   *
   * 100 TB shape, both operators: the EDGE LIST is the big table and it is
   * never mutated — only the per-node state (rank / label, 16 bytes a row)
   * moves between rounds. Each round is one equi-join of edges against the
   * node-state table on `src` plus ONE map-side-combined shuffle of `(dst,
-  * partial)` — the canonical distributed power-iteration dataflow. A
-  * deployment pre-partitions edges by `src` (`Lake.writeBucketed`) so the
-  * per-round join never re-exchanges the edges; the node-state exchange is
-  * `O(|V|)`, not `O(|E|)`. Tested behavior, not just a claim: PlanSpec's
-  * "bucketed edges" gate runs pageRank over the same edge data plain and
-  * bucketed and pins ≥ 1 exchange saved per round (measured 38 → 23 at
-  * iters = 2 when pinned). */
+  * partial)` — the canonical distributed power-iteration dataflow. Edges are
+  * exchanged once into a src-partitioned checkpoint that records its
+  * partitioning ([[org.apache.spark.sql.graft.CheckpointBridge]]); rounds
+  * never re-exchange them, so the per-round exchange is `O(|V|)`, not
+  * `O(|E|)`. Both operators plan under the session's own AQE setting and
+  * change no session conf. PlanSpec's "executed chain" test pins exactly
+  * one exchange per round on the real path. */
 object Graph {
 
   /** PageRank by `iters` power iterations from the uniform vector.
@@ -43,209 +45,86 @@ object Graph {
     * are cheap to add: convergence to 1e-6 on the bipartite entry graph takes
     * ~30; the entry pins 5 for oracle size. */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-               weightCol: String = "", checkpoint: Boolean = true): DataFrame =
-    pageRankImpl(edges, iters, damping, weightCol, checkpoint,
-      materializeResult = true)
-
-  /** Plan-evidence probe (r17, the r16-verdict evidence ask): the EXACT
-    * dataflow [[pageRank]] materializes on a dangling-free graph — the real
-    * partitioned setup checkpoints plus the lazily unrolled round chain —
-    * returned UNMATERIALIZED so PlanSpec can pin the executed (AQE-final)
-    * shape and the plan dumps show the tree that actually runs, not a
-    * post-checkpoint `ExistingRDD` scan. Requires a dangling-free graph. */
-  private[graft] def pageRankUnrolledForPlan(edges: DataFrame, iters: Int = 5,
-      damping: Double = 0.85, weightCol: String = ""): DataFrame =
-    pageRankImpl(edges, iters, damping, weightCol, checkpoint = true,
-      materializeResult = false)
-
-  private def pageRankImpl(edges: DataFrame, iters: Int, damping: Double,
-                           weightCol: String, checkpoint: Boolean,
-                           materializeResult: Boolean): DataFrame = {
-    var toFree: List[DataFrame] = Nil
-    def ckpt(df: DataFrame): DataFrame =
-      if (!checkpoint) df // plan inspection only — an unevaluated round tree
-      else { val c = df.localCheckpoint(); toFree ::= c; c }
-    // Setup frames that per-round joins/aggregations key on are materialized
-    // with their PARTITIONING RECORDED (r16): under AQE, `localCheckpoint`
-    // captures `UnknownPartitioning` (the AdaptiveSparkPlanExec wrapper hides
-    // the final plan's partitioning), so every round re-exchanged the edge
-    // table; planning just these setup checkpoints statically records
-    // hashpartitioning(src|node, np) in the LogicalRDD and EnsureRequirements
-    // then elides the per-round edge/node-side exchanges outright — the local
-    // realization of the "deployment pre-partitions edges by src" story in
-    // the object doc. Rounds themselves keep AQE (its runtime broadcast of
-    // the O(|V|) rank table is exactly right there).
-    def ckptStatic(df: DataFrame): DataFrame =
-      if (!checkpoint) df
-      else {
-        val sess = df.sparkSession
-        val prev = sess.conf.get("spark.sql.adaptive.enabled")
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        try ckpt(df)
-        finally sess.conf.set("spark.sql.adaptive.enabled", prev)
-      }
+               weightCol: String = ""): DataFrame = {
     val np = edges.sparkSession.sessionState.conf.numShufflePartitions
     val base =
       (if (weightCol.isEmpty) edges.select(col("src"), col("dst"), lit(1.0).as("w"))
        else edges.select(col("src"), col("dst"), col(weightCol).cast("double").as("w")))
         .filter(col("src").isNotNull && col("dst").isNotNull)
-    // r17 setup slimming (guide §2.4 "two operations keyed the same way can
-    // share one exchange"): the edge table checkpoints ALREADY PARTITIONED by
-    // src, so the loop-invariant out-weight aggregation AND the out-weight
-    // join both run straight off the checkpoint blocks with NO further
-    // exchange — the old flow paid a separate outw exchange plus a full-|E|
-    // repartition exchange (and their two extra driver jobs: the outw
-    // checkpoint and the dangling count probe).
-    val e0 =
-      if (!checkpoint) base
-      else ckptStatic(base.repartition(np, col("src")))
-    // nodes carry their in/out coverage flags (r17): one aggregation derives
-    // (a) the node set, (b) whether any node is DANGLING (no out-edges — the
-    // old outw.count() probe job), and (c) whether every node has an in-edge
-    // (full in-coverage ⇒ the per-round contribution aggregate covers exactly
-    // the node set, so the per-round `nodes LEFT JOIN contribs` is the
-    // identity re-keying and is skipped outright — one broadcast join less
-    // per round). Flags are exact set membership, not estimates.
-    val nodesPlan =
-      e0.select(col("src").as("node"), lit(0L).as("isDst"))
-        .unionAll(e0.select(col("dst").as("node"), lit(1L).as("isDst")))
+    // out-weight is loop-invariant: attach it to every edge once, as a window
+    // over the src-partitioned edges (no exchange beyond the repartition), so
+    // each round's contribution pass is a single (edges ⋈ ranks) join
+    val e = CheckpointBridge.localCheckpoint(base.repartition(np, col("src"))
+      .withColumn("outw", sum(col("w")).over(Window.partitionBy(col("src")))))
+    // nodes carry their in/out coverage flags: one aggregation derives the
+    // node set, whether any node is DANGLING (no out-edges), and whether
+    // every node has an in-edge (full in-coverage ⇒ the per-round
+    // contribution aggregate covers exactly the node set, so the per-round
+    // `nodes LEFT JOIN contribs` is the identity re-keying and is skipped).
+    // Flags are exact set membership, not estimates.
+    val nodes = CheckpointBridge.localCheckpoint(
+      e.select(col("src").as("node"), lit(0L).as("isDst"))
+        .unionAll(e.select(col("dst").as("node"), lit(1L).as("isDst")))
         .groupBy(col("node"))
         .agg(max(col("isDst")).as("hasInL"), min(col("isDst")).as("noOutL"))
         .select(col("node"), (col("hasInL") === 1L).as("hasIn"),
-          (col("noOutL") === 1L).as("noOut"))
-    // out-weight is LOOP-INVARIANT: attach it to the edges ONCE, so each
-    // round's contribution pass is a single (edges ⋈ ranks) join instead of
-    // re-joining the out-weight table every round (r16: one join and its
-    // build dropped from every round; the summed expression is unchanged —
-    // still sum(rank * w / outw) grouped by dst). r17: outw is a subtree of
-    // e's one checkpoint job (partial+final agg over the src-partitioned
-    // blocks, then a co-partitioned join) — it no longer materializes as its
-    // own checkpoint.
-    val outw = e0.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val ePlan = e0.join(outw, Seq("src"))
-    // one scalar row to the driver (order + coverage), not data. An
-    // un-checkpointed tree is for plan inspection only: it keeps the general
-    // dangling-broadcast, left-join shape and probes nothing beyond n.
-    var nodes: DataFrame = null
-    var e: DataFrame = null
-    var n = 0.0
-    var hasDangling = true
-    var fullInCoverage = false
-    if (!checkpoint) {
-      nodes = nodesPlan
-      e = e0.repartition(np, col("src")).join(outw, Seq("src"))
-      n = nodes.count().toDouble
-    } else {
-      // Given the e0 checkpoint, the nodes table (+ its scalar stats probe)
-      // and the out-weight-joined edge table are INDEPENDENT jobs — overlap
-      // them from two driver threads (guide §2.6: actions are only
-      // sequential because the driver calls them sequentially) so the second
-      // job's tasks back-fill the first's tail. AQE is off for BOTH plans
-      // (one toggle around the pair — the per-plan flip would race).
-      val sess = e0.sparkSession
-      val prev = sess.conf.get("spark.sql.adaptive.enabled")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fNodes = scala.concurrent.Future {
-            val nd = nodesPlan.localCheckpoint()
-            val r = nd.agg(count(lit(1)).as("n"),
-              sum(when(col("noOut"), 1L).otherwise(0L)).as("nDang"),
-              sum(when(col("hasIn"), 1L).otherwise(0L)).as("nIn")).collect()(0)
-            (nd, r)
-          }
-          val fE = scala.concurrent.Future(ePlan.localCheckpoint())
-          val (nd, r) = scala.concurrent.Await.result(
-            fNodes, scala.concurrent.duration.Duration.Inf)
-          e = scala.concurrent.Await.result(
-            fE, scala.concurrent.duration.Duration.Inf)
-          nodes = nd
-          toFree = e :: nodes :: toFree
-          n = r.getLong(0).toDouble
-          hasDangling = r.getLong(1) > 0L
-          fullInCoverage = r.getLong(2) == r.getLong(0)
-        } finally pool.shutdown()
-      } finally sess.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+          (col("noOutL") === 1L).as("noOut")))
+    // one scalar row to the driver (order + coverage), not data
+    val stats = nodes.agg(count(lit(1)).as("n"),
+      sum(when(col("noOut"), 1L).otherwise(0L)).as("nDang"),
+      sum(when(col("hasIn"), 1L).otherwise(0L)).as("nIn")).collect()(0)
+    val n = stats.getLong(0).toDouble
+    val hasDangling = stats.getLong(1) > 0L
+    val fullInCoverage = stats.getLong(2) == stats.getLong(0)
     val nodeSet = nodes.select(col("node"))
-    val ranks0 = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    var ranks: DataFrame = null
-    if (checkpoint && !hasDangling) {
-      // LAZY UNROLL (r17, guide §1.2 "the distributed algorithm first"):
-      // without a dangling term each round references the rank table exactly
-      // ONCE, so the unrolled `iters`-round tree is a linear chain — nothing
-      // in it ever evaluates twice — and the per-round eager localCheckpoint
-      // barriers (the r16-verdict-identified dominant cost at this SF: 1 +
-      // iters blocking driver roundtrips + block writes) buy nothing. Build
-      // the whole chain lazily over the partitioned setup checkpoints and
-      // materialize ONCE at the end; AQE plans it stage by stage with the
-      // same per-round operators (runtime-broadcast rank join + the one
-      // canonical dst-keyed partial-agg exchange), so per-round arithmetic
-      // and partial-sum grouping are unchanged — the oracle stays hash-green.
-      ranks = ranks0
-      var round = 0
-      while (round < iters) {
-        val contribs = e
-          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("w") / col("outw")).as("contrib"))
+    // Σ over in-neighbors: edges join the 2-column rank table (never the
+    // reverse), partial-aggregated on dst before the exchange. Round 0 joins
+    // nothing: every src is a node and every start rank is 1/N.
+    def contribs(ranks: DataFrame, round: Int): DataFrame =
+      (if (round == 0) e.withColumn("rank", lit(1.0 / n))
+       else e.join(ranks.withColumnRenamed("node", "src"), Seq("src")))
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("rank") * col("w") / col("outw")).as("contrib"))
+    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
+    if (!hasDangling) {
+      // LAZY UNROLL: without a dangling term each round references the rank
+      // table exactly once, so the unrolled `iters`-round tree is a linear
+      // chain — nothing in it evaluates twice — and per-round checkpoint
+      // barriers buy nothing; the chain materializes once at the end.
+      for (round <- 0 until iters) {
+        val c = contribs(ranks, round)
         // full in-coverage (probed exactly above): `contribs` holds one row
-        // per node — the left join against the node set would re-key the
-        // identical rows, so the round is the aggregate plus the affine map
-        // and each round drops a broadcast build + join from the chain.
-        // Arithmetic is unchanged either way (coalesce only fires on rows
-        // the coverage probe proved cannot exist).
+        // per node, so the left join against the node set is skipped
         ranks =
           if (fullInCoverage)
-            contribs.select(col("node"),
-              (lit((1.0 - damping) / n) + lit(damping) *
-                col("contrib")).as("rank"))
-          else nodeSet.join(contribs, Seq("node"), "left")
+            c.select(col("node"),
+              (lit((1.0 - damping) / n) + lit(damping) * col("contrib")).as("rank"))
+          else nodeSet.join(c, Seq("node"), "left")
             .select(col("node"),
               (lit((1.0 - damping) / n) + lit(damping) *
                 coalesce(col("contrib"), lit(0.0))).as("rank"))
-        round += 1
       }
-      if (!materializeResult) {
-        // plan-evidence probe: hand back the unmaterialized chain (setup
-        // checkpoints stay persisted for the caller's explain/collect)
-        return ranks
-      }
-      ranks = ckpt(ranks) // one materialization of the whole chain
+      ranks.localCheckpoint()
     } else {
-      require(materializeResult,
-        "pageRankUnrolledForPlan requires a dangling-free graph")
       // dangling-mass graphs reference `ranks` twice per round (contribution
       // join + dangling semi-join) — per-round checkpoints stay, otherwise
-      // the unrolled tree doubles per round. r17: the dangling-node set is a
-      // FILTER on the nodes table's exact coverage flag (the old anti-join
-      // against outw, precomputed by the same aggregation that built nodes).
+      // the unrolled tree doubles per round. The dangling-node set is a
+      // filter on the nodes table's exact coverage flag.
       val dangNodes = nodes.filter(col("noOut")).select(col("node"))
-      ranks = ckpt(ranks0)
-      var round = 0
-      while (round < iters) {
-        // Σ over in-neighbors: edges join the 2-column rank table (never the
-        // reverse), partial-aggregated on dst before the exchange
-        val contribs = e
-          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("w") / col("outw")).as("contrib"))
-        val base = nodeSet.join(contribs, Seq("node"), "left")
+      ranks = ranks.localCheckpoint()
+      for (round <- 0 until iters) {
+        val base = nodeSet.join(contribs(ranks, round), Seq("node"), "left")
         // dangling mass: single-row aggregate, broadcast into the update
         val dang = ranks.join(dangNodes, Seq("node"), "left_semi")
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        ranks = ckpt(base.crossJoin(broadcast(dang))
+        ranks = base.crossJoin(broadcast(dang))
           .select(col("node"),
             (lit((1.0 - damping) / n) + lit(damping) *
-              (coalesce(col("contrib"), lit(0.0)) + col("dang") / n)).as("rank")))
-        round += 1
+              (coalesce(col("contrib"), lit(0.0)) + col("dang") / n)).as("rank"))
+          .localCheckpoint()
       }
+      ranks
     }
-    toFree.drop(1).foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    ranks
   }
 
   /** Per-node triangle counts over an undirected edge list — the clustering-
@@ -296,49 +175,18 @@ object Graph {
     * `struct(cnt, -label)` — map-side partial, no per-node window sort), the
     * same shape as [[Ops.latestPerKey]]. Deterministic: integer votes,
     * total tie-break. */
-  def labelPropagate(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
-                     checkpoint: Boolean = true): DataFrame = {
-    var toFree: List[DataFrame] = Nil
-    def ckpt(df: DataFrame): DataFrame =
-      if (!checkpoint) df // plan inspection only — an unevaluated round tree
-      else { val c = df.localCheckpoint(); toFree ::= c; c }
-    // edges materialize PARTITIONED BY src with the partitioning recorded
-    // (static plan — see pageRank's ckptStatic note; the AQE toggle wraps the
-    // eager localCheckpoint itself, which is when planning happens): every
-    // round's edges ⋈ labels join then streams the edge table, no exchange
-    val eBase = edges.select(col("src"), col("dst"))
+  def labelPropagate(edges: DataFrame, seeds: DataFrame, iters: Int = 3): DataFrame = {
+    // edges materialize partitioned by src with the partitioning recorded:
+    // every round's edges ⋈ labels join streams the edge table, no exchange
+    val np = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val e = CheckpointBridge.localCheckpoint(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    val sPlan = seeds.select(col("node"), col("label").cast("long").as("label"))
-    var e: DataFrame = null
-    var s: DataFrame = null
-    if (!checkpoint) { e = eBase; s = sPlan }
-    else {
-      // the edge and seed checkpoints are independent jobs — overlap them
-      // (guide §2.6), with ONE static-AQE window around the pair (the
-      // partitioned edge plan needs it; the seed projection is indifferent)
-      val sess = edges.sparkSession
-      val np = sess.sessionState.conf.numShufflePartitions
-      val prev = sess.conf.get("spark.sql.adaptive.enabled")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fE = scala.concurrent.Future(
-            eBase.repartition(np, col("src")).localCheckpoint())
-          val fS = scala.concurrent.Future(sPlan.localCheckpoint())
-          e = scala.concurrent.Await.result(
-            fE, scala.concurrent.duration.Duration.Inf)
-          s = scala.concurrent.Await.result(
-            fS, scala.concurrent.duration.Duration.Inf)
-          toFree = s :: e :: toFree
-        } finally pool.shutdown()
-      } finally sess.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+      .repartition(np, col("src")))
+    // the seeds frame is read once, however nondeterministic its source
+    val s = seeds.select(col("node"), col("label").cast("long").as("label"))
+      .localCheckpoint()
     var labels = s
-    var round = 0
-    while (round < iters) {
+    for (_ <- 0 until iters) {
       val voted = e
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"), col("label"))
@@ -346,17 +194,13 @@ object Graph {
         .groupBy(col("node"))
         .agg(graft.functions.ArgMaxAgg.argMax(
           struct(col("cnt"), -col("label")), col("label")).as("label"))
-      // LAZY UNROLL (r17, the pageRank rationale): `labels` is referenced
-      // exactly once per round (the vote join — the union/anti sides read
-      // the checkpointed SEED table, not the evolving labels), so the
-      // unrolled tree is linear and the per-round eager checkpoint barrier
-      // buys nothing; the whole chain materializes once below. Votes are
+      // LAZY UNROLL (the pageRank rationale): `labels` is referenced exactly
+      // once per round (the vote join — the union/anti sides read the
+      // checkpointed SEED table, not the evolving labels), so the unrolled
+      // tree is linear; the whole chain materializes once below. Votes are
       // integer counts with a total tie-break — no float-order surface.
       labels = s.unionByName(voted.join(s, Seq("node"), "left_anti"))
-      round += 1
     }
-    if (checkpoint) labels = ckpt(labels) // one materialization of the chain
-    toFree.filter(_ ne labels).foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    labels
+    labels.localCheckpoint()
   }
 }

@@ -869,16 +869,11 @@ object StreamingViews {
   /** Run any streaming view over a bounded parquet path via the file source and a
     * named memory sink, synchronously; returns the settled result. This is how the
     * oracle-checked `w1_stream_hour_counts` query executes a REAL streaming query
-    * inside the batch Verify harness.
-    *
-    * The harness pins `spark.sql.shuffle.partitions` to `shufflePartitions` for
-    * the duration of the query: state-store count is set once at first batch, and
-    * 32 stores for a bounded verify/bench stream is pure per-batch overhead —
-    * a real deployment sizes this to its key cardinality instead. */
+    * inside the batch Verify harness. The stream's state-store count is the
+    * session's `spark.sql.shuffle.partitions`, read once at its first batch. */
   def runToMemory(spark: SparkSession, path: String, sinkName: String,
                   view: DataFrame => DataFrame,
-                  outputMode: String = "complete",
-                  shufflePartitions: Int = 4): DataFrame = {
+                  outputMode: String = "complete"): DataFrame = {
     // The file stream source lists a DIRECTORY; the testdata tables are single
     // parquet files, so stage the file into a temp dir once per JVM (tiny at
     // verify SF; a real deployment streams from a landing directory anyway).
@@ -892,14 +887,10 @@ object StreamingViews {
       } else p
       (dir, spark.read.parquet(dir).schema)
     })
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    try {
-      val src = spark.readStream.schema(schema).parquet(srcPath)
-      val q = view(src).writeStream
-        .outputMode(outputMode).format("memory").queryName(sinkName).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val src = spark.readStream.schema(schema).parquet(srcPath)
+    val q = view(src).writeStream
+      .outputMode(outputMode).format("memory").queryName(sinkName).start()
+    try q.processAllAvailable() finally q.stop()
     spark.table(sinkName)
   }
 }

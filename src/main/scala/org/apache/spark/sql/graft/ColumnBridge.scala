@@ -8,8 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`,
   * spark/sql/core .../classic/columnNodeSupport.scala); extension libraries
   * shipping native expressions conventionally expose them from a shim inside
-  * the `org.apache.spark.sql` namespace — this file is the only one outside
-  * the `graft` package. */
+  * the `org.apache.spark.sql` namespace; this package holds the library's
+  * only such shims (this one and [[CheckpointBridge]]). */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -2,8 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graft.ListenerBusBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.{Ops, Similarity, Views}
 import graft.sources.Tables
@@ -596,7 +601,7 @@ class PlanSpec extends SparkSpec {
       "s_queue_decode" -> 0, // encode -> decode round trip is one projection chain
       "pipeline_chunk" -> 0, // tokenize-once projection + posexplode: one map-only Generate
       "pipeline_curate_fp" -> 1, // language/quality filters run map-side; the one exchange carries xxhash64(norm), never text
-      "dedup_edit_distance" -> 1, // prefix-block joins broadcast with the length gate in the condition; one (a_id, b_id) pair dedup
+      "dedup_edit_distance" -> 0, // prefix- and suffix-block joins broadcast with the length gate in the condition; the two blocks are disjoint, so no pair dedup
       "sim_binary_topk" -> 1, // sign-Hamming shortlist heap-topk on query_id; rerank joins broadcast the id-only shortlist
       "sim_topk_bruteforce" -> 2, // heap-topk on query_id + the corpus fanOut; queries broadcast (dedicated tests above)
       "sim_ivf_topk" -> 4) // GATE FORM: probe heap-topk (printed twice: once reused) + the exact twin's heap-topk and fanOut; assignment map-only (dedicated IVF tests above)
@@ -647,62 +652,99 @@ class PlanSpec extends SparkSpec {
       s"shuffle-count drift above pinned bounds:\n  actual: ${drift.toSeq.sorted}\n  pinned: ${drift.keys.toSeq.sorted.map(n => n -> pinned(n))}")
   }
 
+  /** The executed plan of every query `body` runs on this session, in
+    * completion order — the real path, checkpoints included. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusBridge.flush(spark) // earlier queries' events must not land here
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusBridge.flush(spark) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** The plan that ran: a finalized AdaptiveSparkPlan prints "== Final
+    * Plan ==" followed by "== Initial Plan ==". */
+  private def ran(p: SparkPlan): String = p.toString.split("== Initial Plan ==").head
+
+  /** The bipartite customer -> supplier graph over sf0.001, materialized so
+    * the listener sees only the operator's own jobs. */
+  private def directedGraph() = Tables.orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
+    .join(Tables.lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
+      col("o_orderkey") === col("l_orderkey"))
+    .select((col("o_custkey").cast("long") * 2).as("src"),
+      (col("l_suppkey").cast("long") * 2 + 1).as("dst")).distinct()
+    .localCheckpoint()
+
   test("pageRank round: node-state exchanges only, no cartesian, dangling term broadcasts") {
-    // One un-checkpointed power iteration over the co-purchase graph: the
-    // shape every round repeats at 100 TB. The dangling-mass single-row
-    // aggregate must enter as a broadcast (BroadcastNestedLoopJoin), never a
-    // CartesianProduct; every hash exchange carries (node|src|dst, rank|w)
-    // pairs — per-node state and edges — never anything wider.
-    val e = Tables.orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(concat(lit("c:"), col("o_custkey")).as("src"),
-        concat(lit("s:"), col("l_suppkey")).as("dst")).distinct()
-    val df = graft.operators.Graph.pageRank(
-      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-      iters = 1, checkpoint = false)
-    val p = physical(df)
+    // One power iteration over the directed graph, whose suppliers are all
+    // dangling: the shape every round repeats at 100 TB. The dangling-mass
+    // single-row aggregate must enter as a broadcast, never a
+    // CartesianProduct, and every hash exchange of every job — setup and
+    // round — partitions on a graph key, so only per-node state and edge
+    // keys ever cross the wire, never a wide payload.
+    val e = directedGraph()
+    val plans = executedPlans(graft.operators.Graph.pageRank(e, iters = 1)).map(ran)
+    assert(plans.nonEmpty)
+    val p = plans.mkString("\n")
     assert(!p.contains("CartesianProduct"), s"pageRank round grew a cartesian:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"dangling mass must broadcast:\n$p")
-    // Exchange COUNT of the unrolled tree is meaningless (each un-checkpointed
-    // reference re-plans its subtree; the runtime path materializes each round
-    // so none repeat) — the invariant is that every exchange partitions on a
-    // GRAPH KEY (node/src/dst or the edge-build pair), i.e. only per-node
-    // state and edge keys ever cross the wire, never a wide payload.
     val badKeys = p.linesIterator
       .filter(_.contains("Exchange hashpartitioning"))
-      .filterNot(l => Seq("node#", "src#", "dst#", "c#", "s#").exists(l.contains))
+      .filterNot(l => Seq("node#", "src#", "dst#").exists(l.contains))
       .toSeq
     assert(badKeys.isEmpty,
       s"exchange partitioned on a non-graph key:\n${badKeys.mkString("\n")}")
   }
 
   test("pageRank executed chain: one dst exchange per round, no edge-side shuffle (r17)") {
-    // The EXECUTED shape of the code pageRank actually materializes (the r16
-    // verdict's evidence ask): the lazily unrolled no-dangling chain over the
-    // partitioned setup checkpoints. After collect() the AQE-final plan must
-    // show (a) exactly `iters` hashpartitioning exchanges — the canonical
-    // O(|V|·P) dst-keyed partial-agg exchange per round and NOTHING else: the
-    // edge and node checkpoints' recorded hashpartitioning(src|node) elide
-    // every join-side exchange — and (b) no cartesian product.
-    val e = Tables.orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey").cast("long") * 2).as("src"),
-        (col("l_suppkey").cast("long") * 2 + 1).as("dst")).distinct()
+    // The jobs pageRank runs on the symmetric (dangling-free) graph: the
+    // src-partitioned edge checkpoint, the node checkpoint, the stats probe
+    // and the lazily unrolled round chain. The chain's AQE-final plan must
+    // show exactly `iters` dst-keyed exchanges — the canonical O(|V|·P)
+    // partial-agg exchange per round — and no exchange of edge rows: the
+    // edge checkpoint's recorded hashpartitioning(src) elides every
+    // edge-side exchange. Across all jobs the edges are exchanged once.
+    val e = directedGraph()
+    val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
     val iters = 3
-    val df = graft.operators.Graph.pageRankUnrolledForPlan(
-      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-      iters = iters)
-    df.collect() // finalize the adaptive plan
-    val p = physical(df).split("== Initial Plan ==").head
-    assert(!p.contains("CartesianProduct"), s"chain grew a cartesian:\n$p")
-    val ex = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(ex.size == iters,
-      s"expected exactly $iters per-round dst exchanges, got ${ex.size}:\n${ex.mkString("\n")}\n$p")
-    assert(ex.forall(l => l.contains("dst#") || l.contains("node#")),
-      s"a round exchange partitions on a non-rank key (edge-side shuffle?):\n${ex.mkString("\n")}")
+    val plans = executedPlans(graft.operators.Graph.pageRank(sym, iters = iters))
+    val all = plans.map(ran).mkString("\n")
+    assert(!all.contains("CartesianProduct"), s"pageRank grew a cartesian:\n$all")
+    val stages = new AdaptiveSparkPlanHelper {}
+    def shuffles(p: SparkPlan) = stages.collect(p) { case s: ShuffleExchangeExec => s }
+    def carriesEdges(s: ShuffleExchangeExec) =
+      Set("src", "dst").subsetOf(s.output.map(_.name).toSet)
+    val chain = shuffles(plans.last)
+    val dstKeyed = chain.count(_.outputPartitioning match {
+      case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("dst")
+      case _ => false
+    })
+    assert(chain.size == iters && dstKeyed == iters,
+      s"expected exactly $iters exchanges, one dst exchange per round:\n${ran(plans.last)}")
+    assert(!chain.exists(carriesEdges), s"a round exchanged edge rows:\n${ran(plans.last)}")
+    assert(plans.flatMap(shuffles).count(carriesEdges) == 1,
+      s"edges must be exchanged exactly once:\n$all")
+  }
+
+  test("graph operators plan every exchanging job adaptively and leave the session conf as found") {
+    // Switching AQE off around a checkpoint would switch it off for every
+    // query running on the session: every job the graph entries run keeps
+    // the session's AQE, and no conf is left changed.
+    val before = spark.conf.getAll
+    val plans = executedPlans(Seq("q_pagerank", "q_pagerank_weighted", "q_label_propagation")
+      .foreach(q => SparkEntry.queries(q)(spark, d).collect()))
+    val exchanging = plans.filter(p => ran(p).contains("Exchange"))
+    assert(exchanging.nonEmpty)
+    val static = exchanging.filterNot(_.isInstanceOf[AdaptiveSparkPlanExec])
+    assert(static.isEmpty, s"jobs planned without AQE:\n${static.mkString("\n")}")
+    assert(spark.conf.getAll === before)
   }
 
   test("fingerprint canonical dedup shuffles 8-byte keys, never document text") {
@@ -864,46 +906,5 @@ class PlanSpec extends SparkSpec {
     val p = physical(df)
     assert(p.contains("ReusedExchange"),
       s"stage k-1 subtree recomputed per stage instead of exchange reuse:\n$p")
-  }
-
-  test("bucketed edges remove edge-side exchanges from pageRank rounds") {
-    // the Graph scaladoc claim, made measurable: edges pre-partitioned by src
-    // satisfy every per-round src-keyed requirement (the edges⋈ranks join and
-    // the out-weight aggregation) straight off the scan, so only the |V|-row
-    // rank tables are ever exchanged. Compared against the identical data as
-    // a plain (unbucketed) parquet table under the same plan.
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_bucket").toString
-    val edges = spark.range(400).select(
-      pmod(col("id") * 13, lit(40)).as("src"),
-      pmod(col("id") * 7 + 1, lit(40)).as("dst"))
-    edges.write.parquet(s"$dir/plain")
-    graft.sources.Lake.writeBucketed(edges, s"$dir/bucketed", "graft_pr_edges", "src", 4)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // the at-scale join path
-    try {
-      def exchCount(e: DataFrame): Int = {
-        val df = graft.operators.Graph.pageRank(e, iters = 2, checkpoint = false)
-        df.collect()
-        "Exchange hashpartitioning".r.findAllIn(physical(df)).size
-      }
-      val plainN = exchCount(spark.read.parquet(s"$dir/plain"))
-      val buckN = exchCount(spark.table("graft_pr_edges"))
-      info(s"pageRank(iters=2) exchanges: plain=$plainN bucketed=$buckN")
-      // at least one edge-side exchange saved PER ROUND (measured 38 -> 23
-      // at pin time: every src-keyed requirement the unrolled tree re-plans
-      // is satisfied straight off the bucketed scan)
-      assert(plainN - buckN >= 2,
-        s"bucketed edges must save >= 1 exchange/round (plain=$plainN bucketed=$buckN)")
-      // and the bucketed run really read buckets, not a plain scan
-      val pBuck = {
-        val df = graft.operators.Graph.pageRank(spark.table("graft_pr_edges"),
-          iters = 1, checkpoint = false)
-        df.collect(); physical(df)
-      }
-      assert(pBuck.contains("SelectedBucketsCount"), pBuck)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS graft_pr_edges")
-    }
   }
 }
