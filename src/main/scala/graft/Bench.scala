@@ -8,10 +8,10 @@ object Bench {
   /** Headline queries: one per major capability group, always the scale-path
     * form where two forms exist. The driver-facing stdout JSON line reports only
     * this subset so the line stays short enough for the harness's tail capture
-    * to parse (round 1's 75-entry line was truncated → `parsed: null`), but the
+    * to parse (a 75-entry line was truncated → `parsed: null`), but the
     * COMPLETE sweep over every `SparkEntry.queries` entry is always run and
     * written to `bench_full.json` in the working directory so no query's fate
-    * is invisible (round-2 verdict finding #3). */
+    * is invisible. */
   private val headline = Seq(
     "q1_pricing_summary", "q3_join_topn", "j1_enrich_lookup",
     "a1_hour_counts", "a2_bucket_counts", "a4_latest_per_key",
@@ -22,37 +22,32 @@ object Bench {
     "text_quality", "w1_stream_hour_counts",
     "search_bm25", "pipeline_decontaminate", "dedup_incremental",
     "text_bpe_token_count",
-    // round-5 capabilities
     "search_bm25_batch", "search_postings", "dedup_exact_canonical",
     "pipeline_split", "q_sessionize",
-    // round-6 capabilities
     "dedup_dup_spans", "search_hybrid_rrf",
     "text_nb_classify", "sim_centroid_classify",
-    // round-7 capabilities
     "search_tfidf_topk", "sim_rp_topk",
     "dedup_incremental_minhash", "pipeline_embedding_outliers",
-    // round-8 capabilities
     "q_funnel", "q_heavy_hitters", "q_target_encode",
-    // round-9 capabilities
     "sim_ivf_persisted_topk", "pipeline_decontaminate_bloom",
-    // round-10 capabilities: real-codec multimodal round trip, binary ANN,
-    // span-level (surgical) decontamination
+    // real-codec multimodal round trip, binary ANN, span-level (surgical)
+    // decontamination
     "multimodal_blob_features", "sim_binary_topk", "pipeline_decontaminate_trim",
-    // round-10 LM + tokenizer families: frozen-model Kneser-Ney scoring and
-    // the unigram-LM (SentencePiece-family) train+encode path
+    // LM + tokenizer families: frozen-model Kneser-Ney scoring and the
+    // unigram-LM (SentencePiece-family) train+encode path
     "text_lm_score_kn_transfer", "text_unigram_token_count",
-    // round-11 capabilities: CCNet-style boilerplate removal (map-only frozen-
+    // CCNet-style boilerplate removal (map-only frozen-
     // model form), winnowing (MOSS) sampled-fingerprint near-dup pairs,
     // cluster-balanced pruning (Sorscher et al. / DataComp), and IVF-probed
     // hard-negative mining for contrastive training data
     "pipeline_remove_boilerplate_stateless", "dedup_winnow_pairs",
     "pipeline_cluster_balance", "sim_hard_negatives_ivf",
-    // round-12 capabilities: format-aware frame/window extraction (GIF block
+    // format-aware frame/window extraction (GIF block
     // walk, RIFF/PCM windowing), pixel-level PNG resize, and the on-disk
     // fp-bucketed winnow fingerprint index
     "multimodal_gif_frames", "multimodal_wav_windows",
     "multimodal_resize_png_pixels", "dedup_winnow_persisted",
-    // round-13 capabilities: full GIF LZW pixel decode, the winnow index's
+    // full GIF LZW pixel decode, the winnow index's
     // delete/compact lifecycle halves, baseline JPEG decode and MJPEG-in-AVI
     // video frame extraction
     "multimodal_gif_pixels", "dedup_winnow_persisted_delete",
@@ -60,7 +55,7 @@ object Bench {
     "multimodal_jpeg_pixels", "multimodal_avi_frames",
     "sim_pca_topk", "pipeline_embedding_whiten",
     "multimodal_jpeg_color_pixels", "sim_opq_topk", "w_stream_pca_drift",
-    // round-14 capabilities: scene-cut/keyframe detection over MJPEG AVI,
+    // scene-cut/keyframe detection over MJPEG AVI,
     // fixed-bin WAV spectra, streaming heavy hitters, and the re-bucket /
     // re-split layout rebuilds
     "multimodal_scene_cuts", "multimodal_wav_spectrum",
@@ -69,23 +64,20 @@ object Bench {
     "multimodal_keyframes", "multimodal_wav_resample",
     "multimodal_dhash", "dedup_image_clusters",
     "w_stream_heavy_hitters_sketch", "w_stream_image_clusters",
-    // round-16 capability: the image index's bucket-count rebuild (the last
-    // missing lifecycle half; KN/PMI normalizer rewrites ride the existing
-    // text_lm_score_kn_transfer headline entry)
+    // the image index's bucket-count rebuild (its last lifecycle half)
     "dedup_image_persisted_rebucket")
 
   /** Reported-number reproducibility gate: the statistic of record is the
     * per-query MIN over sweeps, so stability means "the minimum reproduces",
     * not "every sweep takes the same time" — this host's raw sweep totals
     * swing ±25% between back-to-back identical runs (measured: 61→93 s for
-    * the same code within one JVM, round-6), so a raw-total gate would refuse
+    * the same code within one JVM), so a raw-total gate would refuse
     * every snapshot while the min-sum stays put. min_spread = (sum of each
     * query's SECOND-best time) / (sum of best times) − 1: if a second
     * independent sweep lands within 15% of the minimum on aggregate, the
     * reported total is reproducible, whatever the host did to the worst runs.
     * Raw per-run totals are still recorded in the JSON as the noise evidence
-    * (round-5 verdict: the noisiest run must never silently become the number
-    * of record). */
+    * (the noisiest run must never silently become the number of record). */
   private val SpreadGate = 0.15
 
   /** Seconds to run one query's `count()`. A query that throws aborts the
@@ -121,17 +113,17 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Fail fast on a renamed/removed headline query instead of silently
-    // shrinking the reported total (advisor finding, round 2).
+    // shrinking the reported total.
     val missing = headline.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"headline names missing from SparkEntry.queries: ${missing.mkString(", ")}")
     warmUp(spark, sfDir)
     // Sweep-major timing: each "run" is one full pass over every selected query,
     // so per-run totals measure the same code under the host conditions of that
     // moment — the spread between runs is pure environment noise. min-of-3 per
-    // query by default; run 1 additionally absorbs per-query codegen/JIT, so
-    // the stability spread is computed over runs 2..N only.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // SEPARATE extra-sweep budgets (advisor, round 12): a noisy session that
+    // query; run 1 additionally absorbs per-query codegen/JIT, so the
+    // stability spread is computed over runs 2..N only.
+    val runs = 3
+    // SEPARATE extra-sweep budgets: a noisy session that
     // spends a shared budget entirely on outlier replacement would leave the
     // spread gate zero retries and land an avoidable `_unstable` artifact —
     // the spread gate always keeps its own reserve.
@@ -144,11 +136,11 @@ object Bench {
       else { args.foreach(a => require(SparkEntry.queries.contains(a), s"unknown query: $a")); args.toSeq }
 
     // Host-speed probe: a fixed, data-independent, codegen-bound query (sum
-    // over a 67M-row range) timed three times per sweep. Its cross-round trajectory
-    // calibrates host noise — when every query AND the probe inflate by the
-    // same factor between rounds, the host slowed down, not the plans
-    // (rounds 4→5 and 7→8 both showed uniform ~1.2–1.5× swings that had to
-    // be re-adjudicated as noise; this field makes that check arithmetic).
+    // over a 67M-row range) timed three times per sweep. Its trajectory across
+    // snapshots calibrates host noise — when every query AND the probe inflate
+    // by the same factor between two snapshots, the host slowed down, not the
+    // plans (uniform ~1.2–1.5× swings have been observed; this field makes
+    // that check arithmetic).
     def nullProbeOnce(): Double = {
       val t0 = System.nanoTime()
       spark.range(1L << 26).selectExpr("sum(id * 3 + 1) AS s").collect()
@@ -161,8 +153,8 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     // Three probes per sweep, MEDIAN of the three as the sweep's probe: a
-    // single probe is one sample of a noisy host and its cross-round minimum
-    // swung 40% between r11 and r12, making the normalized headline read as a
+    // single probe is one sample of a noisy host and its minimum across
+    // snapshots swung 40%, making the normalized headline read as a
     // regression while raw times and plans improved. The median of three is
     // stable against one transient spike in either direction; probes cost
     // ~0.3 s each, noise in the statistic of record cost a full adjudication.
@@ -175,10 +167,10 @@ object Bench {
       SweepRun(nt, selected.map(name => timed(spark, sfDir, name, SparkEntry.queries(name))))
     }
     // allRuns grows until the min-reproducibility gate passes or the retry
-    // budget is spent. Outlier rejection (round-11 verdict, fix #2): a run
-    // whose null probe exceeds 1.5× the session's minimum was timed on a
-    // transiently loaded host (r11's driver record shipped one 1164.8 s sweep
-    // with a 3× probe floor and earned an `_unstable` artifact) — such runs
+    // budget is spent. Outlier rejection: a run whose null probe exceeds
+    // 1.5× the session's reference was timed on a transiently loaded host
+    // (one recorded 1164.8 s sweep had a 3× probe floor and earned an
+    // `_unstable` artifact) — such runs
     // are EXCLUDED from the spread gate and the per-query minima and replaced
     // by a fresh sweep while budget lasts, so host spikes stop forcing
     // adjudication of the bench record. All probes are still reported.
@@ -197,7 +189,7 @@ object Bench {
     // the retry budget; 2.0x only catches the genuine multi-x spikes.
     val TotalOutlierFactor = 2.0
     def accepted = {
-      // Reference = the session MEDIAN probe, not the minimum (r16): one
+      // Reference = the session MEDIAN probe, not the minimum: one
       // anomalously FAST probe (observed: 0.069 s among 0.10-0.11 s
       // siblings) dragged the min down and cascaded every normal sweep into
       // rejection, leaving a degenerate min-of-ONE-run artifact. A fast
@@ -239,23 +231,23 @@ object Bench {
       val qs = rs.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
       val runTotals = matrix.map(r => f(r.sum)).mkString("[", ",", "]")
       val nulls = nullTimes.map(f).mkString("[", ",", "]")
-      // value_normalized = value / median(accepted runs' probes): cross-round
+      // value_normalized = value / median(accepted runs' probes): snapshot
       // comparison in one division — when the host slows down, the probe
       // rises by the same factor as every query, so the ratio is
-      // host-speed-invariant (verdict r9 task 6). ROBUST form (verdict r12
-      // task 6): the normalizer is the MEDIAN probe over ACCEPTED sweeps
-      // (each itself a median-of-3), not the session minimum — the min is an
-      // extreme order statistic and its 40% r11→r12 swing made the normalized
-      // headline read as a regression while raw times and plans improved.
-      // The "normalization" field documents the statistic inside the
-      // artifact so the round-over-round comparison is self-describing.
+      // host-speed-invariant. ROBUST form: the normalizer is the MEDIAN probe
+      // over ACCEPTED sweeps (each itself a median-of-3), not the session
+      // minimum — the min is an extreme order statistic whose 40% swing made
+      // the normalized headline read as a regression while raw times and
+      // plans improved. The "normalization" field documents the statistic
+      // inside the artifact so a comparison between snapshots is
+      // self-describing.
       val probeMedian = median(accepted.map(_.nullT))
       val normed = rs.map(_._2).sum / probeMedian
-      // per-query normalized twins (verdict r15 task 7): each query's time
-      // as a multiple of the same probe median, so cross-round PER-QUERY
-      // ratios are host-speed-invariant too — the r15 judge spent time
-      // separating a uniform ~12% host drift from real regressions; with
-      // this map the ratio of two rounds' queries_normalized entries does it
+      // per-query normalized twins: each query's time as a multiple of the
+      // same probe median, so PER-QUERY ratios between snapshots are
+      // host-speed-invariant too — separating a uniform ~12% host drift from
+      // real regressions is then the ratio of two snapshots'
+      // queries_normalized entries
       val qsN = rs.map { case (k, v) => "\"" + k + "\":" + f(v / probeMedian) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${f(rs.map(_._2).sum)},"unit":"sec","value_normalized":${f(normed)},"normalization":"sum_of_per_query_minima / median(accepted-run null probes, each median-of-3)","queries":$qs,"queries_normalized":$qsN,"sf":"$sfDir","runs":${matrix.size},"rejected_runs":${allRuns.size - matrix.size},"run_totals":$runTotals,"spread":${f(spread)},"null_query":$nulls,"null_query_min":${f(nullTimes.min)},"null_query_median":${f(probeMedian)}}"""
@@ -263,7 +255,7 @@ object Bench {
     val byName = results.toMap
     // Compact summary line (NO per-query map, < 500 bytes): the driver's
     // bounded stdout-tail capture truncated the 55-entry headline line
-    // mid-object in round 13 (`BENCH_r13.json parsed: null`), so the LAST
+    // mid-object (`parsed: null`), so the LAST
     // line printed is always this small record that fits any tail window;
     // per-query numbers live in bench_full.json (and the headline line above
     // it, when the tail happens to be long enough).
@@ -276,7 +268,7 @@ object Bench {
       // Full sweep → file (immune to stdout-tail truncation); headline → stdout.
       // An unstable sweep refuses the snapshot: it lands in a sibling file so a
       // previously committed stable bench_full.json is never overwritten by noise.
-      // ≥2 accepted runs required (r16): a single accepted sweep has spread
+      // ≥2 accepted runs required: a single accepted sweep has spread
       // 0.0 BY CONSTRUCTION — nothing reproduced anything — and one such
       // degenerate min-of-one artifact overwrote a healthy committed
       // snapshot with uniformly ~1.5× numbers before this guard.

@@ -1488,17 +1488,15 @@ object SparkEntry {
         // exchange-terminated (semi-join / pair-filter tops), so each
         // reference would re-run the tokenize+semi-join / the all-pairs
         // scan — the pairRecallGate rationale, applied to this composite
-        // gate (r17; measured 4.96 → 4.43 s in the round's A/B)
+        // gate (measured 4.96 → 4.43 s)
         val survEmb = gateCkpt(emb.join(surv.withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_semi"))
-        // the kept set DIRECTLY over the gate's checkpointed survivor frames
-        // (r17): curateCorpusSemantic(docs, emb, …).select(doc_id) is
-        // semanticDedup(emb ⋉ survivors).filter(keep) re-joined to survivors —
-        // and keepers are a SUBSET of the survivors by construction, so the
-        // re-join only re-keys the identical id set. Composing the entry from
-        // surv/survEmb runs the tokenize+langid pass and the semi-join ONCE
-        // (the operator's internal persists ran them again) — same kept set,
-        // same gate verdicts, oracle unchanged.
+        // the kept set DIRECTLY over the gate's checkpointed survivor frames:
+        // quality gates first, then semanticDedup over the survivors'
+        // embeddings (failed docs never enter the k-means pass or the cell
+        // join). Keepers are a SUBSET of the survivors by construction, so no
+        // re-join to the survivors is needed, and the tokenize+langid pass and
+        // the semi-join run ONCE.
         val kept = Similarity.semanticDedup(survEmb, 0.4, nassign = 3)
           .filter(col("keep")).select(col("vec_id").as("doc_id"))
         val truth = gateCkpt(Similarity.cosineDupPairs(survEmb, 0.4))
@@ -2436,7 +2434,7 @@ object SparkEntry {
 
     Q("dedup_winnow_pairs", // the MOSS grouping step: pairs sharing >= 3
       // winnowing fingerprints, postings df-bounded to [2, 1000] BEFORE the
-      // self-join (the containment/skew-safe-spans pattern) so a stop-phrase
+      // self-join (the containment pattern) so a stop-phrase
       // fingerprint caps at C(maxDf,2) bucket pairs. The guarantee makes this
       // a recall-floored near-dup detector: DedupSpec measures 1.0 recall vs
       // the exact 0.9-Jaccard truth at these params.

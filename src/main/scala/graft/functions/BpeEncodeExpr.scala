@@ -53,7 +53,7 @@ case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String, Int)])
           // lowest-rank adjacent pair present in this word
           // fuse the PAIR THAT MATCHED, never merges(bestRank) by position —
           // the Seq is rank-ordered straight from Bpe.trainMerges, but a
-          // vocabulary reloaded from mergesTable arrives in arbitrary row
+          // vocabulary reloaded from a persisted table arrives in arbitrary row
           // order, where a positional lookup fuses the wrong pair (or loops
           // forever when that pair is absent from the word)
           var bestRank = Int.MaxValue

@@ -49,11 +49,6 @@ object TextFns {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Single-expression shingle form for small/test use — see [[shinglesFromTokens]]
-    * for the two-projection form hot paths must use. */
-  def wordShingles(text: Column, n: Int): Column =
-    shinglesFromTokens(tokens(text), n)
-
   /** LSH banding of a MinHash signature: (band, bucket-hash) structs, to be exploded
     * and equi-joined. bands×rows must equal the signature length. */
   def minhashBands(sig: Column, bands: Int, rows: Int): Column =

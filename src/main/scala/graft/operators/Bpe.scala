@@ -102,13 +102,4 @@ object Bpe {
   def tokenCounts(docs: DataFrame, merges: Seq[Merge]): DataFrame =
     docs.select(col("doc_id"), encode(col("text"), merges).as("bpe_tokens"))
       .select(col("doc_id"), size(col("bpe_tokens")).cast("long").as("n_bpe_tokens"))
-
-  /** The trained vocabulary as a DataFrame (rank, left, right, merged) —
-    * persist this next to the corpus; encode jobs load it and ride it into
-    * [[encode]] as literals. */
-  def mergesTable(spark: org.apache.spark.sql.SparkSession, merges: Seq[Merge]): DataFrame = {
-    import spark.implicits._
-    merges.map(m => (m.rank, m.left, m.right, m.left + m.right))
-      .toDF("rank", "left", "right", "merged")
-  }
 }

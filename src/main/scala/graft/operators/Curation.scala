@@ -16,7 +16,7 @@ import graft.functions.TextFns
   * re-tokenization — and the quality/language filters run BEFORE the dedup
   * shuffle, so only surviving documents are shuffled. Dedup groups on the
   * normalized text here (oracle-reproducible); at 100 TB swap the group key
-  * for the 8-byte fingerprint ([[Dedup.exactDedupByFingerprint]]'s key) so the
+  * for the 8-byte fingerprint ([[curateCorpusByFingerprint]]) so the
   * shuffle carries hashes, not documents.
   */
 object Curation {
@@ -70,41 +70,6 @@ object Curation {
                                 maxAvgTokenLen: Double = 5.0): DataFrame =
     dedupAgg(scoredSurvivors(docs, lang, minTokens, maxAvgTokenLen),
       xxhash64(col("norm")).as("fp"))
-
-  /** [[curateCorpus]] with SEMANTIC dedup: the same language/quality gates,
-    * then near-duplicate removal in EMBEDDING space ([[Similarity.semanticDedup]],
-    * SemDeDup) instead of exact normalized-text groups — catching paraphrases
-    * and near-rewrites that exact dedup cannot. Embeddings semi-join the
-    * quality survivors BEFORE the dedup (filter-before-shuffle: failed docs
-    * never enter the k-means pass or the cell join); the representative kept
-    * per semantic cluster is the smallest surviving doc_id. `docs.doc_id`
-    * must align with `emb.vec_id` (the fixture contract; a deployment keys
-    * both off the corpus primary id). */
-  def curateCorpusSemantic(docs: DataFrame, emb: DataFrame, threshold: Double = 0.4,
-                           lang: String = "en", minTokens: Int = 20,
-                           maxAvgTokenLen: Double = 5.0,
-                           nlist: Int = 0, nassign: Int = 2): DataFrame = {
-    // The dedup phase drives MANY actions over the survivor embeddings (the
-    // auto-nlist count, the k-means seed collect, one collect per Lloyd's
-    // round, the pair materialization) — each would re-run the document
-    // scoring + semi-join lineage from scratch. Persist the scored survivors
-    // (shared by the semi-join AND the final result join — without it the
-    // tokenize+langid pass runs twice) and the semi-joined embeddings, then
-    // release both once the keep set is materialized eagerly.
-    val survivors = scoredSurvivors(docs, lang, minTokens, maxAvgTokenLen).persist()
-    val survEmb = emb.join(
-      survivors.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      .persist()
-    try {
-      val kept = Similarity.semanticDedup(survEmb, threshold, nlist, nassign)
-        .filter(col("keep")).select(col("vec_id").as("doc_id"))
-        .localCheckpoint(true)
-      survivors.join(kept, "doc_id")
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("avg_token_len"), 6).as("avg_token_len"))
-        .localCheckpoint(true)
-    } finally { survEmb.unpersist(); survivors.unpersist() }
-  }
 
   /** Benchmark decontamination: flag corpus documents that share any word
     * `n`-gram with a benchmark/eval set — the overlap check every serious
@@ -414,8 +379,7 @@ object Curation {
     * no shuffle, no RNG state. */
   def mixtureSample(docs: DataFrame, weights: Map[String, Double],
                     defaultWeight: Double = 1.0,
-                    domainCol: String = "source",
-                    fastHash: Boolean = false): DataFrame = {
+                    domainCol: String = "source"): DataFrame = {
     (weights.values.toSeq :+ defaultWeight).foreach(w =>
       require(w >= 0 && w <= 1, s"mixture weight out of [0,1]: $w"))
     // Per-domain keep thresholds rounded DRIVER-SIDE, folded in sorted key
@@ -429,15 +393,9 @@ object Curation {
       case ((dom, w), e) =>
         when(col(domainCol) === dom, lit(math.round(w * 10000d))).otherwise(e)
     }
-    // Both selectors are pure functions of the content; the rolling-hash form
-    // is oracle-expressible (the query entry's contract), the xxhash64 form is
-    // the 100 TB path (one hash pass, no char-wise regex+rolling loop —
-    // measured ~20x at 1M docs). Same keep-rate semantics.
-    val fp =
-      if (fastHash) pmod(TextFns.fastFingerprint(col("text")), lit(10000L))
-      else pmod(TextFns.fingerprint(col("text")), lit(10000L))
     docs
-      .select(col("doc_id"), col(domainCol).as("domain"), fp.as("fp"))
+      .select(col("doc_id"), col(domainCol).as("domain"),
+        pmod(TextFns.fingerprint(col("text")), lit(10000L)).as("fp"))
       .filter(col("fp") < threshold)
       .select("doc_id", "domain")
   }
@@ -457,8 +415,7 @@ object Curation {
     * round trip. Thresholds become integer hash buckets in-plan via round()
     * on BOTH engines (never a truncating cast — the CAST-semantics rule). */
   def mixtureTemperature(docs: DataFrame, tau: Double, budget: Double,
-                         domainCol: String = "source",
-                         fastHash: Boolean = false): DataFrame = {
+                         domainCol: String = "source"): DataFrame = {
     require(tau > 0, s"temperature must be positive: $tau")
     require(budget > 0 && budget <= 1, s"budget out of (0,1]: $budget")
     // The whole rate table derives from ONE corpus count aggregate. The
@@ -478,11 +435,9 @@ object Curation {
         round(least(lit(1d),
           lit(budget) * col("n") * (col("w") / col("z")) / col("n_d")) * 10000d)
           .cast("long").as("thr"))
-    val fp =
-      if (fastHash) pmod(TextFns.fastFingerprint(col("text")), lit(10000L))
-      else pmod(TextFns.fingerprint(col("text")), lit(10000L))
     docs
-      .select(col("doc_id"), col(domainCol).as("domain"), fp.as("fp"))
+      .select(col("doc_id"), col(domainCol).as("domain"),
+        pmod(TextFns.fingerprint(col("text")), lit(10000L)).as("fp"))
       .join(broadcast(rates), "domain")
       .filter(col("fp") < col("thr"))
       .select("doc_id", "domain")
@@ -533,21 +488,16 @@ object Curation {
     * exchange + local sorts, the scale-safe total order (writers hand it to
     * `repartitionByRange(...).sortWithinPartitions(...)`). Content-identical
     * documents share a key; the doc_id tie-break keeps the order total.
-    * `fastHash` swaps the oracle-expressible rolling hash for xxhash64 (the
-    * 100 TB path — one hash pass, better dispersion). */
-  def shuffleOrder(docs: DataFrame, seed: Long = 0L,
-                   fastHash: Boolean = false): DataFrame = {
+    * The key is the oracle-expressible rolling hash ([[TextFns.fingerprint]]). */
+  def shuffleOrder(docs: DataFrame, seed: Long = 0L): DataFrame = {
     // the seed rides INSIDE the hashed text (prepended as a token), so
     // changing it re-disperses every key — no per-seed salt column needed.
     // Negative seeds encode strip-proof ("seedm7", not "seed-7"): the
     // oracle-hash normalizer strips non-alphanumerics, so a '-' sign would
-    // collapse seeds 7 and -7 into the same key stream on that path while
-    // the xxhash64 path kept them distinct.
+    // collapse seeds 7 and -7 into the same key stream.
     val seedTok = if (seed < 0) s"seedm${seed.toString.drop(1)}" else s"seed$seed"
     val seeded = concat(lit(s"$seedTok "), col("text"))
-    val key = if (fastHash) TextFns.fastFingerprint(seeded)
-              else TextFns.fingerprint(seeded)
-    docs.select(col("doc_id"), key.as("shuffle_key"))
+    docs.select(col("doc_id"), TextFns.fingerprint(seeded).as("shuffle_key"))
   }
 
   /** [[mixtureSample]] generalized to weights ABOVE 1 — epoch-style
@@ -918,7 +868,7 @@ object Curation {
     * documents and wants long/high-quality ones preferred, not mandated.
     *
     * Determinism contract matches [[mixtureSample]]: u is a pure content
-    * function (rolling-hash bucket; `fastHash` = xxhash64 scale path), so
+    * function (rolling-hash bucket), so
     * the sample is reproducible across runs, engines, and partitionings,
     * and a re-crawled duplicate draws the SAME u. Keys are rounded to 9
     * decimals (absorbs cross-engine ln/divide ulps; ~1e5 distinct levels
@@ -927,14 +877,11 @@ object Curation {
     * Scale shape: map-only key computation + TakeOrderedAndProject top-k;
     * no RNG state, no shuffle before the heap. Zero/negative weights drop
     * (ln(u)/w flips sign there — exclude rather than invert). */
-  def weightedSample(docs: DataFrame, k: Int, weightCol: String = "n_chars",
-                     fastHash: Boolean = false): DataFrame = {
+  def weightedSample(docs: DataFrame, k: Int, weightCol: String = "n_chars"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val fp =
-      if (fastHash) pmod(TextFns.fastFingerprint(col("text")), lit(10000L))
-      else pmod(TextFns.fingerprint(col("text")), lit(10000L))
     docs
-      .select(col("doc_id"), col(weightCol).cast("double").as("weight"), fp.as("fp"))
+      .select(col("doc_id"), col(weightCol).cast("double").as("weight"),
+        pmod(TextFns.fingerprint(col("text")), lit(10000L)).as("fp"))
       .filter(col("weight") > 0)
       .select(col("doc_id"), col("weight"),
         round(log((col("fp").cast("double") + 0.5d) / 10000d) / col("weight"), 9)
@@ -1347,27 +1294,22 @@ object Curation {
     * Unchanged docs are omitted — at 100 TB the overwhelmingly common case
     * must not be materialized.
     *
-    * Scale shape: each side reduces to (doc_id, 8-byte content fingerprint)
-    * in its own map-only projection BEFORE the single full-outer join on
-    * doc_id — no document body ever crosses the exchange, the same key
-    * discipline as [[graft.operators.Dedup.exactDedupByFingerprint]].
-    * `fastHash` picks xxhash64 (scale default) vs the oracle-reproducible
-    * rolling hash; verdicts agree with a direct text compare barring 64-bit
-    * collision (the `pipeline_curate_fp` caveat).
+    * Scale shape: each side reduces to (doc_id, 8-byte xxhash64 content
+    * fingerprint, [[graft.functions.TextFns.fastFingerprint]]) in its own
+    * map-only projection BEFORE the single full-outer join on doc_id — no
+    * document body ever crosses the exchange, the same key discipline as
+    * [[graft.operators.Dedup.exactDedupCanonicalByFingerprint]]. Verdicts
+    * agree with a direct text compare barring 64-bit collision (the
+    * `pipeline_curate_fp` caveat).
     *
     * Presence is carried by explicit per-side marker columns, NOT inferred
     * from fingerprint nullness — a null-text document fingerprints as the
-    * empty document on BOTH paths (the slow path coalesces before hashing,
-    * like [[graft.functions.TextFns.fastFingerprint]] already does), so a
-    * null-text row present in both snapshots reports `unchanged`, and a
-    * null-vs-text edit reports `changed` instead of vanishing into a
-    * null `=!=` comparison. */
-  def snapshotDiff(oldDocs: DataFrame, newDocs: DataFrame,
-                   fastHash: Boolean = true): DataFrame = {
+    * empty document, so a null-text row present in both snapshots reports
+    * `unchanged`, and a null-vs-text edit reports `changed` instead of
+    * vanishing into a null `=!=` comparison. */
+  def snapshotDiff(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     def fp(df: DataFrame, as: String, mark: String): DataFrame = df.select(col("doc_id"),
-      (if (fastHash) TextFns.fastFingerprint(col("text"))
-       else TextFns.fingerprint(coalesce(col("text"), lit("")))).as(as),
-      lit(true).as(mark))
+      TextFns.fastFingerprint(col("text")).as(as), lit(true).as(mark))
     fp(oldDocs, "old_fp", "in_old")
       .join(fp(newDocs, "new_fp", "in_new"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"),

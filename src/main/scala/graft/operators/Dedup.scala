@@ -19,7 +19,8 @@ object Dedup {
 
   /** Exact dedup: keep the smallest doc_id per normalized-text group, with the
     * group size. Groups on the full normalized text here because the oracle must
-    * reproduce it; `exactDedupByFingerprint` is the shuffle-light scale variant. */
+    * reproduce it; [[exactDedupCanonicalByFingerprint]] is the shuffle-light
+    * scale form, keyed on an 8-byte fingerprint. */
   def exactDedup(docs: DataFrame): DataFrame =
     docs.groupBy(TextFns.normalize(col("text")).as("norm"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("dup_count"))
@@ -53,9 +54,8 @@ object Dedup {
     * exchange carries (8-byte fp, quality, doc_id) and the argmax still merges
     * map-side (hash-aggregatable, skew-immune — a hot duplicate group reduces
     * inside each map task). Selects the identical survivor set as the text-keyed
-    * form modulo 64-bit fingerprint collision (~n²/2⁶⁵ expected collisions, the
-    * same caveat as [[exactDedupByFingerprint]]); DedupSpec asserts survivor-set
-    * equality on the fixture. */
+    * form modulo 64-bit fingerprint collision (~n²/2⁶⁵ expected collisions);
+    * DedupSpec asserts survivor-set equality on the fixture. */
   def exactDedupCanonicalByFingerprint(docs: DataFrame,
                                        quality: org.apache.spark.sql.Column): DataFrame =
     docs.groupBy(TextFns.fastFingerprint(col("text")).as("fp"))
@@ -93,13 +93,6 @@ object Dedup {
         (col("doc_id") === col("rep")).as("keep"))
   }
 
-  /** Exact dedup, scale path: group on xxhash64(normalized text) — an 8-byte
-    * shuffle key instead of the document body. */
-  def exactDedupByFingerprint(docs: DataFrame): DataFrame =
-    docs.groupBy(TextFns.fastFingerprint(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("dup_count"))
-      .select("doc_id", "dup_count")
-
   /** Incremental (cross-snapshot) dedup — how dedup actually runs in
     * production: a new crawl `batch` arrives and must be deduplicated first
     * against ITSELF, then against the already-ingested `base` corpus, without
@@ -124,13 +117,6 @@ object Dedup {
       .select("doc_id", "batch_dup_count")
   }
 
-  /** MinHash + LSH near-dup candidate pairs: shingle → 64-hash MinHash signature →
-    * band buckets → self-equi-join on (band, bucket) → estimate Jaccard as the
-    * fraction of agreeing signature positions; keep pairs above `threshold`.
-    *
-    * bands=16 × rows=4: detection probability at J=0.5 is 1-(1-0.5^4)^16 ≈ 0.65,
-    * at J=0.8 ≈ 0.9988 — the usual near-dup operating point.
-    */
   /** Per-doc MinHash signature table: (doc_id, sig[numHashes]) — the artifact
     * a cross-snapshot near-dedup persists per corpus snapshot (the near-dup
     * analog of [[incrementalDedup]]'s fingerprint table). Explode-once /
@@ -154,25 +140,6 @@ object Dedup {
       .groupBy("doc_id")
       .agg(graft.functions.MinHashSigAgg.minhashSig(col("h"), numHashes).as("sig"))
 
-  /** [[minhashSignatures]] as a MAP-ONLY projection — no aggregation, so it
-    * runs where a groupBy cannot: append-mode Structured Streaming (the
-    * per-micro-batch signature step of
-    * [[graft.streaming.StreamingViews.streamMinhashBaseMatches]]) and
-    * per-row re-signature passes. Bit-identical output to the aggregate form
-    * (shared splitmix64 mix — DedupSpec asserts equality); the aggregate
-    * stays preferred in batch jobs (it streams exploded shingles through one
-    * buffer instead of materializing the hash array per row). */
-  def minhashSignaturesMapOnly(docs: DataFrame, shingleSize: Int = 3,
-                               numHashes: Int = 64): DataFrame =
-    docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        transform(array_distinct(TextFns.shinglesFromTokens(col("toks"), shingleSize)),
-          s => xxhash64(s)).as("hs"))
-      .select(col("doc_id"),
-        graft.functions.MinHashSigExpr.minhashSigRow(col("hs"), numHashes).as("sig"))
-      .filter(col("sig").isNotNull)
-
   /** Signature table → bare (doc_id, band, bucket) rows. Candidate generation
     * joins these — carrying the 64-long signature through the bucket shuffle
     * would inflate it `bands`-fold (one copy per band); signatures re-attach
@@ -190,6 +157,13 @@ object Dedup {
                          bands: Int = 16, rows: Int = 4): DataFrame =
     minhashBuckets(minhashSignatures(docs, shingleSize, bands * rows), bands, rows)
 
+  /** MinHash + LSH near-dup candidate pairs: shingle → 64-hash MinHash signature →
+    * band buckets → self-equi-join on (band, bucket) → estimate Jaccard as the
+    * fraction of agreeing signature positions; keep pairs above `threshold`.
+    *
+    * bands=16 × rows=4: detection probability at J=0.5 is 1-(1-0.5^4)^16 ≈ 0.65,
+    * at J=0.8 ≈ 0.9988 — the usual near-dup operating point.
+    */
   def minhashLshPairs(docs: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5,
                       bands: Int = 16, rows: Int = 4): DataFrame = {
     val sigs = minhashSignatures(docs, shingleSize, bands * rows)
@@ -486,20 +460,14 @@ object Dedup {
     * and drop out (their fraction is undefined).
     *
     * Scale: one explode of distinct grams per doc, one count aggregation per
-    * gram, one equi-join back, one per-doc aggregation. With `hashKey = true`
-    * the shuffle/join key is xxhash64(gram) — 8 bytes instead of the gram
-    * string, the form to run at corpus scale (a 2^-64 collision merges two
-    * gram counts; doc-level fractions are insensitive to it, but the DuckDB
-    * oracle entry keeps string keys for bit-exact reproducibility). */
-  def dupNgramStats(docs: DataFrame, n: Int = 3,
-                    hashKey: Boolean = false): DataFrame = {
+    * gram, one equi-join back, one per-doc aggregation. The key is the gram
+    * string, so the DuckDB oracle entry reproduces it bit-exactly. */
+  def dupNgramStats(docs: DataFrame, n: Int = 3): DataFrame = {
     val g = docs
       .select(col("doc_id"), TextFns.normalize(col("text")).as("norm"))
       .select(col("doc_id"), split(col("norm"), " ").as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(TextFns.shinglesFromTokens(col("toks"), n))).as("gram"))
-      .select(col("doc_id"),
-        (if (hashKey) xxhash64(col("gram")) else col("gram")).as("gram"))
     // grams are distinct within a doc, so count(*) per gram = containing docs
     val freq = g.groupBy("gram").agg(count(lit(1)).as("ndocs"))
     g.join(freq, "gram")
@@ -824,45 +792,25 @@ object Dedup {
     * Scale shape: ONE corpus tokenize pass (a second reference to the
     * exploded-gram subtree would re-run the scan — the uncached-subtree trap);
     * the corpus-sized exchanges are keyed by the GRAM — 8-byte xxhash64 by
-    * default (`hashGrams`; the string-keyed form exists for the oracle, same
-    * caveat as [[exactDedupByFingerprint]]). The distinct-doc count per gram
+    * default (`hashGrams`; the string-keyed form exists for the oracle, which
+    * cannot reproduce a 64-bit collision). The distinct-doc count per gram
     * is PRIMITIVE window arithmetic over one (gram, doc) sort — dense_rank
     * then its partition max — never an object aggregation (the
     * collect-positions form allocated one buffer per (gram, doc) group:
     * measured 70 s → ~10 s at 1M docs / 17M grams when replaced by the
     * windows); the island merge is a per-doc window — bounded by
-    * tokens-per-document, never corpus-sized.
-    *
-    * `skewSafe`: the default single-pass window puts ALL rows of one gram in
-    * one task's sort — fine until a stop-phrase gram appears in a large
-    * fraction of a 100 TB corpus, at which point that task dies (the same
-    * hot-key regime the sessionizer's two-level form exists for). The
-    * skew-safe form counts distinct docs per gram with two hash aggregations
-    * (map-side partials combine — a hot gram reduces inside every map task)
-    * and LEFT SEMI joins the duplicated-gram keys back; it pays a second
-    * tokenize pass (the probe re-runs the exploded-gram subtree) and AQE
-    * splits any hot join key. Identical output (DedupSpec). */
+    * tokens-per-document, never corpus-sized. */
   def duplicateSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2,
-                     hashGrams: Boolean = true, skewSafe: Boolean = false): DataFrame = {
+                     hashGrams: Boolean = true): DataFrame = {
     require(n >= 1, s"gram size must be >= 1, got $n")
     require(minDocs >= 2, s"minDocs must be >= 2 (a span is duplicated across docs), got $minDocs")
-    val keyed = keyedGrams(docs, n, hashGrams)
-    val hits =
-      if (skewSafe) {
-        val dupGrams = keyed.select("g", "doc_id").distinct()
-          .groupBy("g").agg(count(lit(1)).as("__nd"))
-          .filter(col("__nd") >= minDocs)
-          .select("g")
-        keyed.join(dupGrams, Seq("g"), "left_semi").select("doc_id", "pos")
-      } else {
-        val wgOrd = org.apache.spark.sql.expressions.Window.partitionBy("g").orderBy("doc_id")
-        val wgAll = org.apache.spark.sql.expressions.Window.partitionBy("g")
-        keyed
-          .withColumn("__dr", dense_rank().over(wgOrd)) // ties = same doc
-          .withColumn("__nd", max(col("__dr")).over(wgAll)) // = distinct docs for this gram
-          .filter(col("__nd") >= minDocs)
-          .select("doc_id", "pos")
-      }
+    val wgOrd = org.apache.spark.sql.expressions.Window.partitionBy("g").orderBy("doc_id")
+    val wgAll = org.apache.spark.sql.expressions.Window.partitionBy("g")
+    val hits = keyedGrams(docs, n, hashGrams)
+      .withColumn("__dr", dense_rank().over(wgOrd)) // ties = same doc
+      .withColumn("__nd", max(col("__dr")).over(wgAll)) // = distinct docs for this gram
+      .filter(col("__nd") >= minDocs)
+      .select("doc_id", "pos")
     mergeIslands(hits, n)
   }
 
@@ -1069,18 +1017,13 @@ object Dedup {
     *
     * Scale shape: two corpus passes (frequency fit + removal — CCNet's own
     * structure; cache/checkpoint the segmented corpus to make it one read at
-    * scale) plus a per-doc regroup. The frequent table is broadcast by
-    * default — it is bounded by segments/minDf (see [[segmentFrequencies]]),
-    * so the anti join is map-side and the exploded corpus never shuffles on
-    * the segment; pass `broadcastFrequent = false` if a pathological corpus
-    * (tiny minDf) makes the model exceed broadcast limits, and the anti join
-    * falls back to a shuffle join AQE can still optimize.
+    * scale) plus a per-doc regroup. The frequent table is broadcast — it is
+    * bounded by segments/minDf (see [[segmentFrequencies]]), so the anti join
+    * is map-side and the exploded corpus never shuffles on the segment.
     * [[removeFrequentSegmentsStateless]] is the one-pass map-only form for a
     * FROZEN model (the streaming face and the 100 TB apply path). */
-  def removeFrequentSegments(docs: DataFrame, minDf: Long = 10L,
-                             broadcastFrequent: Boolean = true): DataFrame = {
-    val freqRaw = segmentFrequencies(docs, minDf).select("segment")
-    val freq = if (broadcastFrequent) broadcast(freqRaw) else freqRaw
+  def removeFrequentSegments(docs: DataFrame, minDf: Long = 10L): DataFrame = {
+    val freq = broadcast(segmentFrequencies(docs, minDf).select("segment"))
     val segged = docs.select(col("doc_id"), segmentsCol(col("text")).as("__segs"))
     val kept = segged
       .select(col("doc_id"), posexplode(col("__segs")).as(Seq("__pos", "segment")))
@@ -1172,17 +1115,6 @@ object Dedup {
       .select(col("doc_id"), col("__f.pos").as("pos"), col("__f.fp").as("fp"))
   }
 
-  /** Near-duplicate candidate pairs from shared winnowing fingerprints:
-    * `(a_id, b_id, shared_fps)` for pairs sharing at least `minShared`
-    * distinct fingerprints. The MOSS grouping step: because of the winnowing
-    * guarantee, any pair sharing a run of >= w+k-1 tokens appears here with
-    * shared_fps >= 1 — `minShared` trades that recall floor for precision.
-    *
-    * Scale shape: the fingerprint table is df-bounded BEFORE the self-join
-    * (fingerprints in [2, maxDf] docs — two hash aggregations + a semi join,
-    * the [[duplicateSpans]] skew-safe pattern), so a stop-phrase fingerprint
-    * shared by half the corpus caps at maxDf² bucket pairs instead of
-    * exploding; the pair count per fingerprint is C(df, 2) <= C(maxDf, 2). */
   /** The ONE gram-key definition shared by every winnowing face (batch
     * fingerprints, pairs, incremental, and the streaming gate): md5-60-bit
     * when the selection must be oracle-reproducible, xxhash64 at scale. A
@@ -1192,6 +1124,18 @@ object Dedup {
       org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     g => if (md5Keys) TextFns.md5PrefixLong(g, 15) else xxhash64(g)
 
+  /** Near-duplicate candidate pairs from shared winnowing fingerprints:
+    * `(a_id, b_id, shared_fps)` for pairs sharing at least `minShared`
+    * distinct fingerprints. The MOSS grouping step: because of the winnowing
+    * guarantee, any pair sharing a run of >= w+k-1 tokens appears here with
+    * shared_fps >= 1 — `minShared` trades that recall floor for precision.
+    *
+    * Scale shape: the fingerprint table is df-bounded BEFORE the self-join
+    * (fingerprints in [2, maxDf] docs — two hash aggregations whose map-side
+    * partials reduce a hot fingerprint inside every map task, then a semi
+    * join), so a stop-phrase fingerprint shared by half the corpus caps at
+    * maxDf² bucket pairs instead of exploding; the pair count per
+    * fingerprint is C(df, 2) <= C(maxDf, 2). */
   def winnowPairs(docs: DataFrame, k: Int = 5, w: Int = 4, minShared: Long = 2L,
                   maxDf: Int = 1000, md5Keys: Boolean = false): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")

@@ -275,7 +275,7 @@ object Multimodal {
     // chunk walk: [len:4 BE][type:4][data][crc:4], IDAT data concatenates;
     // every chunk's CRC32 (over type + data) is VERIFIED — a bit-flipped
     // chunk is a refusal, matching the "refuse what it cannot faithfully
-    // decode" contract (advisor, round 12)
+    // decode" contract
     val idat = new java.io.ByteArrayOutputStream()
     var i = 8
     var end = false
@@ -305,7 +305,7 @@ object Multimodal {
         got += n
       }
       if (got < raw.length) return None
-      // refuse trailing compressed data (advisor, round 12): an IDAT stream
+      // refuse trailing compressed data: an IDAT stream
       // carrying MORE scanlines than IHDR claims would otherwise decode
       // silently as a valid image — probe one more byte and require the
       // stream to be genuinely finished
@@ -591,10 +591,9 @@ object Multimodal {
   private val MaxGifFramePixels = 1L << 26
 
   /** Walk a GIF like [[gifFrameWalk]] but also CONCATENATE each image's data
-    * sub-blocks and LZW-decode them ([[gifLzwDecode]]) — the last
-    * structure-not-pixels stand-in removed (r12 verdict ask #2): frame
-    * geometry comes from the descriptors, pixels from the genuine
-    * variable-width decode, and interlaced frames (packed bit 0x40)
+    * sub-blocks and LZW-decode them ([[gifLzwDecode]]) — a genuine pixel
+    * decode, not a structure-only stand-in: frame geometry comes from the
+    * descriptors, pixels from the variable-width decode, and interlaced frames (packed bit 0x40)
     * de-interlace into row order per the spec's four-pass layout. Returns
     * `(descriptor_idx, left, top, w, h, pixels)` — the index counts IMAGE
     * DESCRIPTORS (the [[gifFrames]] numbering), so a dropped earlier frame
@@ -851,7 +850,7 @@ object Multimodal {
     * padded to even length). ENFORCED: `fmt ` must precede `data` (the spec's
     * canonical order — sample bytes cannot be framed before the format is
     * known), and a malformed `fmt ` (size < 16) is a refusal, not a skip
-    * (advisor, round 12: doc and untrusted-input behavior must agree). None
+    * (doc and untrusted-input behavior must agree). None
     * for non-WAV / non-PCM16 / truncated payloads (never throw on untrusted
     * bytes). */
   def wavPcm16Layout(payload: Array[Byte]): Option[(Int, Int, Int)] = {
@@ -981,7 +980,7 @@ object Multimodal {
     * the centroid are computed locally, so the operator adds zero exchanges
     * at any scale.
     *
-    * Overflow contract (advisor, r14): |real_fp| ≤ W·max|x|·2^scaleBits —
+    * Overflow contract: |real_fp| ≤ W·max|x|·2^scaleBits —
     * the Long accumulators fit for ANY PCM16 input (≤ 2^42 at the
     * defaults) — but `power = real² + imag²` and the centroid numerator
     * square that, so they fit Long only while W·max|x|·2^scaleBits <
@@ -1433,7 +1432,7 @@ object Multimodal {
             // (T.81 §B.2.4.1: 8-bit sample precision requires Pq=0), and this
             // decoder is SOF0-only — refuse like every other cannot-decode-
             // faithfully case (subsampling, SOF2+), instead of leniently
-            // widening the contract (advisor, r13).
+            // widening the contract.
             if (pq != 0 || tq > 3) return None
             if (q + 1 + 64 > p + len) return None
             val tab = new Array[Int](64)
@@ -1677,7 +1676,7 @@ object Multimodal {
     * `channels · width · height` (gray: one sample per pixel; 4:4:4 color:
     * three interleaved RGB samples per pixel) — named for what it counts,
     * with `channels` alongside, so the 3× relation to `width·height` is
-    * self-describing for API consumers (advisor, r13). */
+    * self-describing for API consumers. */
   case class JpegPixels(media_id: Long, width: Int, height: Int, channels: Int,
                         n_samples: Long, pixel_sum: Long, pixel_poly: Long,
                         pixel_first: Int, pixel_last: Int)
@@ -1912,29 +1911,6 @@ object Multimodal {
     }
   }
 
-  /** FRAME-HEAVY deterministic AVI fixtures — the long-video regime
-    * [[keyframes]]' two-pass walk exists for: every video carries
-    * `framesPerVideo` frames (vs [[syntheticAvisFromDocuments]]'s 1–3), flat
-    * per 8×8 block like every JPEG fixture here so re-encode round-trips
-    * exactly. Frame f of video v has block value
-    * `(v·31 + f·7 + by·37 + bx·11) mod 251`. */
-  def syntheticLongAvisFromDocuments(spark: SparkSession, docs: DataFrame,
-                                     framesPerVideo: Int, w: Int = 48,
-                                     h: Int = 32): Dataset[MediaRecord] = {
-    require(framesPerVideo >= 1 && w >= 8 && h >= 8,
-      s"bad long-AVI fixture shape ($framesPerVideo, $w, $h)")
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val frames = (0 until framesPerVideo).map { f =>
-          encodeJpegGray(w, h,
-            (x, y) => ((id * 31 + f * 7 + (y / 8) * 37 + (x / 8) * 11) % 251).toInt)
-        }
-        MediaRecord(id, "video/avi", encodeAviMjpeg(w, h, frames))
-      }
-    }
-  }
-
   /** One video frame's scene-change signal: `delta_sum` is the exact integer
     * Σ|sample − previous frame's sample| over the decoded sample stream
     * (`n_samples` = channels·w·h terms), `is_cut` flags
@@ -1970,7 +1946,7 @@ object Multimodal {
     * ITERATOR so callers pick their memory shape — sceneCuts drops the
     * pixels as it advances (two decoded frames in memory), keyframes
     * retains the frames it selects. ONE home for the delta conventions:
-    * the two operators' orderings must never drift (advisor, r14). */
+    * the two operators' orderings must never drift. */
   private def frameDeltas(payload: Array[Byte])
       : Iterator[(Int, Int, Int, Int, Array[Byte], Long)] = {
     var prev: Array[Byte] = null
@@ -2059,7 +2035,7 @@ object Multimodal {
     * [[sceneCuts]]'s detection: per video, keep only the `k` frames with the
     * largest scene-change deltas (delta desc, frame asc — the sceneCuts
     * rank) and emit each as a standalone baseline JPEG. Same zero-exchange
-    * typed flatMap, now TWO-PASS (the long-video form the r14 doc promised):
+    * typed flatMap, TWO-PASS (the long-video form):
     * pass 1 is the [[sceneCuts]]-shaped delta walk — pixels drop as it
     * advances, two decoded frames in memory — yielding the k winner indices;
     * pass 2 re-walks the payload decoding ONLY the winners, one at a time.
@@ -2155,7 +2131,7 @@ object Multimodal {
     * a subsample. Typed flatMap, map-only, zero exchanges; per output
     * sample the work is one L-tap integer dot product.
     *
-    * Overflow contract (advisor, r14): each |y| ≤ L·max|x|·2^scaleBits
+    * Overflow contract: each |y| ≤ L·max|x|·2^scaleBits
     * (≈1.3e8 for fixture-scale audio at the defaults, ≈2e12 for full-scale
     * PCM16) always fits Long, but the position-weighted `y_poly` grows as
     * n_out²·|y| — full-scale material overflows once a clip passes a few
@@ -2283,56 +2259,21 @@ object Multimodal {
     * per distinct hash, the copy count and the canonical (smallest) media
     * id. Downstream keeps `media_id == canonical_id` rows. One map-only
     * decode+hash pass, one 16-byte-keyed aggregation — the `dedup_exact`
-    * shape with a perceptual key. Near-dups (small nonzero Hamming) are
-    * [[imageNearDupPairs]] over these clusters' representatives. */
+    * shape with a perceptual key. Near-dups (small nonzero Hamming) come
+    * from probing a banded index of these clusters' representatives
+    * ([[writeImageDedupIndex]], [[imageNearDupsAgainstIndex]]). */
   def imageDupClusters(spark: SparkSession, media: DataFrame): DataFrame =
     imageDHash(spark, media).toDF()
       .groupBy(col("dhash_hi"), col("dhash_lo"))
       .agg(count(lit(1)).as("n_images"),
         min(col("media_id")).as("canonical_id"))
 
-  /** Near-duplicate image PAIRS by banded dHash Hamming distance — the
-    * MinHash-LSH shape on the 64-bit perceptual key: candidates must share
-    * at least one of the four 16-bit bands (pigeonhole: two hashes within
-    * Hamming distance ≤ 3 differ in at most 3 bands, so one band matches
-    * exactly — recall 1 at the default threshold), then verify with
-    * `bit_count(xor)` over both halves. Run it over [[imageDupClusters]]'s
-    * canonical representatives, never the raw corpus: pairing inside an
-    * exact-dup cluster is quadratic in an image's copy count and carries no
-    * information the cluster row lacks. */
-  def imageNearDupPairs(spark: SparkSession, hashes: DataFrame,
-                        maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4x16 banding guarantees recall only for Hamming <= 3, got $maxHamming")
-    def banded(idAs: String, hiAs: String, loAs: String): DataFrame =
-      hashes.select(col("media_id").as(idAs), col("dhash_hi").as(hiAs),
-          col("dhash_lo").as(loAs))
-        .withColumn("b", explode(array(
-          struct(lit(0).as("band"), col(loAs).bitwiseAND(lit(0xffffL)).as("key")),
-          struct(lit(1).as("band"),
-            shiftright(col(loAs), 16).bitwiseAND(lit(0xffffL)).as("key")),
-          struct(lit(2).as("band"), col(hiAs).bitwiseAND(lit(0xffffL)).as("key")),
-          struct(lit(3).as("band"),
-            shiftright(col(hiAs), 16).bitwiseAND(lit(0xffffL)).as("key")))))
-        .select(col(idAs), col(hiAs), col(loAs),
-          col("b.band").as("band"), col("b.key").as("key"))
-    val a = banded("id_a", "hi_a", "lo_a")
-    val b = banded("id_b", "hi_b", "lo_b")
-    a.join(b, a("band") === b("band") && a("key") === b("key") &&
-        col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-  }
-
   // ------------------------------------------------------------------
   // Persisted dHash image-dedup index — the [[graft.operators.Dedup]]
   // winnow-index lifecycle (build / probe / append / delete / compact /
-  // re-bucket over Lake bucketed parquet) for the IMAGE modality, r14
-  // verdict ask #4: text dedup has the cross-snapshot incremental story;
-  // live image ingest needs the same — probe arriving images against the
+  // re-bucket over Lake bucketed parquet) for the IMAGE modality: text
+  // dedup has the cross-snapshot incremental story; live image ingest
+  // needs the same — probe arriving images against the
   // frozen corpus's hashes without ever re-decoding the base.
   // ------------------------------------------------------------------
 
@@ -2340,8 +2281,9 @@ object Multimodal {
     * per (media_id, band) carrying the full hash plus `bkey` =
     * band·2¹⁶ + that band's 16-bit slice — ONE bucketable long combining
     * band id and band bits, so the index clusters on the exact key a probe
-    * joins. Shares [[imageNearDupPairs]]' 4×16 banding (pigeonhole:
-    * recall 1 at Hamming ≤ 3); carrying dhash_hi/lo in the row lets the
+    * joins. 4×16 banding (pigeonhole: two hashes within Hamming ≤ 3 differ
+    * in at most 3 bands, so one band matches exactly — recall 1 at
+    * Hamming ≤ 3); carrying dhash_hi/lo in the row lets the
     * probe verify exact Hamming without a second lookup. */
   private[graft] def dHashBandRows(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id"), col("dhash_hi"), col("dhash_lo"))

@@ -29,25 +29,6 @@ object Similarity {
     1.0 - math.pow(1.0 - math.pow(p, nbits), tables)
   }
 
-  /** Smallest table count reaching `targetRecall` for pairs at `cosine` with
-    * `nbits`-bit buckets (the recall knob once bucket size is fixed). */
-  def lshTablesFor(cosine: Double, nbits: Int, targetRecall: Double,
-                   maxTables: Int = 256): Int = {
-    require(targetRecall > 0 && targetRecall < 1, s"targetRecall in (0,1), got $targetRecall")
-    (1 to maxTables).find(t => lshPairRecall(cosine, nbits, t) >= targetRecall)
-      .getOrElse(throw new IllegalArgumentException(
-        f"recall $targetRecall%.2f at cosine $cosine%.2f unreachable within " +
-          s"$maxTables tables at nbits=$nbits — lower nbits (coarser buckets)"))
-  }
-
-  /** Expected LSH candidate-pair volume under uniform buckets:
-    * tables · n² / 2^(nbits+1). Compare against n²/2 (all-pairs) — when the
-    * ratio tables/2^nbits approaches 1 the corpus has no locality to exploit
-    * at that recall target and brute force is honest (the near-orthogonal
-    * fixture case; see README known limitations). */
-  def lshCandidatePairs(n: Long, nbits: Int, tables: Int): Double =
-    tables.toDouble * n.toDouble * n.toDouble / math.pow(2.0, nbits + 1)
-
   /** Scale-adaptive fan-out ahead of an O(rows × queries) stage (guide §2.5
     * "input skew: one huge unsplittable file → repartition immediately after
     * the read", §2.6 idle capacity): the stream side of every
@@ -201,25 +182,18 @@ object Similarity {
   /** Exact top-k neighbors for each query vector (self-matches excluded). Ranking is
     * on (rounded similarity DESC, vec_id ASC) — fully deterministic.
     *
-    * Broadcast side is EXPLICIT: the default (`broadcastCorpus = false`)
-    * broadcasts the QUERY set and streams the corpus — the only shape that
+    * The QUERY set is broadcast and the corpus streams — the only shape that
     * survives a 100 TB corpus (the corpus is scanned once, never collected to
-    * the driver; per-task state is |queries| vectors). Pass
-    * `broadcastCorpus = true` only when the corpus is known-small (a reference
-    * dictionary) and the query set is the big side. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     broadcastCorpus: Boolean = false): DataFrame = {
+    * the driver; per-task state is |queries| vectors). */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       VectorFns.toDoubleArray(col("embedding")).as("q_emb"))
     val c = corpus.select(col("vec_id"),
       VectorFns.toDoubleArray(col("embedding")).as("embedding"))
-    // the stream side does |broadcast side| dot products per row — fan it out
-    val joined =
-      if (broadcastCorpus) fanOut(q, "query_id")
-        .join(broadcast(c), col("query_id") =!= col("vec_id"))
-      else broadcast(q).join(fanOut(c, "vec_id"), col("query_id") =!= col("vec_id"))
-    val scored = joined.select(col("query_id"), col("vec_id"),
-      VectorFns.simKey(VectorFns.dot(col("q_emb"), col("embedding"))).as("cosine"))
+    // the stream side does |queries| dot products per row — fan it out
+    val scored = broadcast(q).join(fanOut(c, "vec_id"), col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"),
+        VectorFns.simKey(VectorFns.dot(col("q_emb"), col("embedding"))).as("cosine"))
     heapTopK(scored, k)
   }
 
@@ -272,51 +246,18 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2)))
 
-  /** DataFrame-form Lloyd's k-means over the embedding column — the trained
-    * centroids [[ivfTopK]] promises. Deterministic end to end: the seed set is
-    * the `nlist` vectors with smallest (xxhash64(vec_id), vec_id); each round
-    * assigns every vector to its nearest centroid (map-only argmax over the
-    * centroid literals — no join, no shuffle of the corpus) and recomputes the
-    * means in ONE partial-aggregated shuffle of (cell → sum[dim], n) partials
-    * ([[graft.functions.VectorMeanAgg]]). Empty cells keep their previous
-    * centroid. Per round the driver collects nlist mean vectors — kilobytes.
-    *
-    * 100 TB note: `iters` full-corpus passes are a TRAINING cost, paid once and
-    * amortized by persisting the assignment ([[ivfAssignments]] +
-    * `Lake.writeBucketed`); a deployment would fit on `Ops.hashSample` of the
-    * corpus (centroid quality needs a sample, not the population) and only the
-    * final assignment pass must see every row. */
-  def trainCentroids(corpus: DataFrame, nlist: Int = 16, iters: Int = 3): Centroids = {
-    val e = corpus.select(col("vec_id"),
-      VectorFns.toDoubleArray(col("embedding")).as("emb"))
-    var cents: Centroids = e
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy(col("h").asc, col("vec_id").asc).limit(nlist)
-      .select(col("emb")).collect()
-      .map(_.getSeq[Double](0)).toSeq.zipWithIndex.map(_.swap)
-    var round = 0
-    while (round < iters) {
-      val means = e
-        .select(bestCell(col("emb"), cents).as("cell"), col("emb"))
-        .groupBy("cell")
-        .agg(graft.functions.VectorMeanAgg.vectorMean(col("emb")).as("mean"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      cents = cents.map { case (id, old) => (id, means.getOrElse(id, old)) }
-      round += 1
-    }
-    cents
-  }
-
-  /** [[trainCentroids]] fitted on a driver-collected deterministic hash sample —
-    * ONE Spark action total instead of `1 + iters` full-corpus jobs. Centroid
-    * fitting is model estimation: quality needs a bounded sample, not the
-    * population (the 100 TB note on [[trainCentroids]]), and `sampleSize`
-    * vectors of `dim` doubles fit any driver (4096 × 64 ≈ 2 MB). The sample is
-    * the smallest (xxhash64(vec_id), vec_id) rows — so the seed set (its first
-    * `nlist` rows) equals [[trainCentroids]]'s exactly, and when the corpus has
-    * at most `sampleSize` rows the "sample" is the whole corpus. Assignment
-    * replicates [[graft.functions.NearestCentroidExpr]] (argmax dot, ties to
-    * the larger cell id). */
+  /** Lloyd's k-means over the embedding column — the trained centroids
+    * [[ivfTopK]] promises — fitted on a driver-collected deterministic hash
+    * sample: ONE Spark action. Centroid fitting is model estimation: quality
+    * needs a bounded sample, not the population, and `sampleSize` vectors of
+    * `dim` doubles fit any driver (4096 × 64 ≈ 2 MB). Only the final
+    * assignment pass must see every row, and persisting it ([[ivfAssignments]]
+    * + `Lake.writeBucketed`) pays that once. The sample is the smallest
+    * (xxhash64(vec_id), vec_id) rows and the seed set its first `nlist` rows;
+    * when the corpus has at most `sampleSize` rows the "sample" is the whole
+    * corpus. Empty cells keep their previous centroid. Assignment replicates
+    * [[graft.functions.NearestCentroidExpr]] (argmax dot, ties to the larger
+    * cell id). */
   def trainCentroidsSampled(corpus: DataFrame, nlist: Int, iters: Int = 3,
                             sampleSize: Int = 4096): Centroids =
     fitCentroids(collectTrainSample(corpus, sampleSize), nlist, iters)
@@ -382,11 +323,11 @@ object Similarity {
     * construction (one cell per corpus vector, distinct probe cells per
     * query) — no dedup pass.
     *
-    * Probe side is EXPLICIT (the lesson of `bruteForceTopK`'s broadcast flag):
-    * the default (`broadcastProbes = true`) broadcasts the |queries| × nprobe
-    * probe set so the assignment never shuffles — right for query SERVING
-    * (bounded query sets). Pass `false` for corpus-scale query sets (batch
-    * kNN, self-join dedup): the probe side then shuffles on cell while a
+    * Probe side is EXPLICIT: the default (`broadcastProbes = true`)
+    * broadcasts the |queries| × nprobe probe set so the assignment never
+    * shuffles — right for query SERVING (bounded query sets). Pass `false`
+    * for corpus-scale query sets (batch kNN, self-join dedup): the probe
+    * side then shuffles on cell while a
     * `Lake.writeBucketed(_, .., "cell", n)` assignment still avoids any
     * corpus-side exchange (one-sided shuffle onto the bucketed layout). */
   def ivfProbeAssigned(assigned: DataFrame, centroids: Centroids,
@@ -404,18 +345,16 @@ object Similarity {
     heapTopK(cand, k)
   }
 
-  /** IVF (inverted-file) ANN end to end: k-means centroids ([[trainCentroids]]),
-    * nearest-cell assignment ([[ivfAssignments]]), nprobe-cell probe + exact
-    * re-rank ([[ivfProbeAssigned]]). Recall loss is bounded by cell-boundary
-    * effects (a true neighbor outside the probed cells); identical vectors
-    * always share a cell. Measured on the sf0.001 fixture (near-orthogonal
-    * synthetic embeddings, the hard case): recall@10 vs [[bruteForceTopK]] is
-    * asserted >= 0.8 in SimilaritySpec at the defaults below. */
+  /** IVF (inverted-file) ANN end to end: k-means centroids
+    * ([[trainCentroidsSampled]]), nearest-cell assignment ([[ivfAssignments]]),
+    * nprobe-cell probe + exact re-rank ([[ivfProbeAssigned]]). Recall loss is
+    * bounded by cell-boundary effects (a true neighbor outside the probed
+    * cells); identical vectors always share a cell. Measured on the sf0.001
+    * fixture (near-orthogonal synthetic embeddings, the hard case): recall@10
+    * vs [[bruteForceTopK]] is asserted >= 0.8 in SimilaritySpec at the
+    * defaults below. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4, iters: Int = 3): DataFrame = {
-    // Sampled fit (ONE bounded collect), not the 1 + iters distributed jobs —
-    // the amortization the 100 TB note above prescribes; identical centroids
-    // whenever the corpus fits the sample cap (every fixture does).
     val cents = trainCentroidsSampled(corpus, nlist, iters)
     ivfProbeAssigned(ivfAssignments(corpus, cents), cents, queries, k, nprobe)
   }
@@ -652,11 +591,21 @@ object Similarity {
     heapTopK(cand, k)
   }
 
+  /** Cells sized to the corpus: nlist = n / targetCellSize keeps the per-cell
+    * quadratic work CONSTANT as the corpus grows — the sizing every
+    * SemDeDup-style deployment must do (a fixed nlist turns quadratic again
+    * at the next scale factor). Cell size also CAPS the join parallelism:
+    * all rows of a cell land on one task, so nlist is simultaneously the
+    * task count — prefer more, smaller cells (128 here) until training cost
+    * or recall (cell-boundary losses, recovered by nassign) says otherwise. */
+  def semanticNlistFor(n: Long, targetCellSize: Int = 128): Int =
+    math.max(4, math.ceil(n.toDouble / targetCellSize)).toInt
+
   /** Semantic near-duplicate pairs, SemDeDup-style (Abbas et al. 2023,
     * "SemDeDup: Data-efficient learning at web-scale through semantic
     * deduplication", arXiv:2303.09540): k-means the embedding space
-    * ([[trainCentroids]]), then generate candidate pairs only WITHIN each
-    * cluster cell and exact-filter them at `threshold`. Complements the
+    * ([[trainCentroidsSampled]]'s fit), then generate candidate pairs only
+    * WITHIN each cluster cell and exact-filter them at `threshold`. Complements the
     * hyperplane-LSH blocking of [[cosineDupPairsLsh]]: LSH cells are
     * data-oblivious random cuts, k-means cells adapt to the corpus's density
     * structure — near-dup pairs concentrate inside cells, so recall at equal
@@ -673,23 +622,11 @@ object Similarity {
     * — payload-last re-attachment only pays once nassign grows past the ~2-3
     * a recall target needs; at that point prefer the LSH form, whose banding
     * is built for high replication. */
-  /** Cells sized to the corpus: nlist = n / targetCellSize keeps the per-cell
-    * quadratic work CONSTANT as the corpus grows — the sizing every
-    * SemDeDup-style deployment must do (a fixed nlist turns quadratic again
-    * at the next scale factor). Cell size also CAPS the join parallelism:
-    * all rows of a cell land on one task, so nlist is simultaneously the
-    * task count — prefer more, smaller cells (128 here) until training cost
-    * or recall (cell-boundary losses, recovered by nassign) says otherwise. */
-  def semanticNlistFor(n: Long, targetCellSize: Int = 128): Int =
-    math.max(4, math.ceil(n.toDouble / targetCellSize)).toInt
-
   def semanticDupPairs(emb: DataFrame, threshold: Double,
                        nlist: Int = 0, nassign: Int = 1, iters: Int = 3,
                        trainSampleSize: Int = 4096): DataFrame = {
     // One collect serves both the auto-nlist count (when the corpus fits the
-    // sample cap, its size IS the corpus size) and centroid training — the
-    // distributed Lloyd's path ([[trainCentroids]]) costs 1 + iters corpus
-    // jobs and buys nothing for a model fit.
+    // sample cap, its size IS the corpus size) and centroid training.
     val sample = collectTrainSample(emb, trainSampleSize)
     // Corpus size counted under the SAME isNotNull filter the sample and the
     // assignment path use — null-embedding rows are never clustered, so they
@@ -777,8 +714,8 @@ object Similarity {
     * rows are the `ksub` smallest (xxhash64(vec_id), vec_id), sliced per
     * subspace; empty cells keep their previous centroid.
     *
-    * 100 TB note: same amortization story as [[trainCentroids]] — train on an
-    * `Ops.hashSample`, pay the full-corpus pass only for the final encode, and
+    * 100 TB note: same amortization story as [[trainCentroidsSampled]] — train
+    * on an `Ops.hashSample`, pay the full-corpus pass only for the final encode, and
     * persist the (vec_id, codes) table: the corpus then serves ANN queries
     * from m ints per vector instead of `dim` floats (a 32× memory/scan cut at
     * m=8, dim=64 float32). */

@@ -14,17 +14,15 @@ object Lake {
 
   /** Write the event table date-partitioned: `path/event_date=YYYY-MM-DD/...`.
     * Daily granularity keeps partition count ~365/year (catalog-friendly) while
-    * letting every hour/day-bucketed view prune to the days it touches. */
+    * letting every hour/day-bucketed view prune to the days it touches.
+    * `spark.read.parquet(path)` reads it back with `event_date` available
+    * for partition pruning. */
   def writeEventsPartitioned(events: DataFrame, path: String): Unit =
     events
       .withColumn("event_date", to_date(col("ts")))
       .write.mode("overwrite")
       .partitionBy("event_date")
       .parquet(path)
-
-  /** Read back with the partition column available for pruning. */
-  def readEvents(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Bucketed layout: hash-cluster a table on its join/agg key at WRITE time, so
     * every future equi-join or aggregation on that key reads co-located buckets
@@ -119,16 +117,15 @@ object Lake {
   }
 
   /** Name of the marker file [[rebucketBucketed]] holds through its
-    * non-atomic catalog swap (advisor, r14): written into the table path
-    * after staging completes, immediately before the file swap begins
-    * (advisor, r15 — never before staging, whose failure leaves the table
-    * fully correct), deleted only after the catalog entry matches the new
-    * file layout. Underscore-prefixed, so parquet readers and
-    * [[bucketIdOfFile]] ignore it. */
+    * non-atomic catalog swap: written into the table path after staging
+    * completes, immediately before the file swap begins (never before
+    * staging, whose failure leaves the table fully correct), deleted only
+    * after the catalog entry matches the new file layout. Underscore-prefixed,
+    * so parquet readers and [[bucketIdOfFile]] ignore it. */
   private[graft] val CatalogSwapMarker = "_catalog_swap_pending"
 
   /** Verify a bucketed table's catalog spec matches its on-disk layout —
-    * the loud-failure guard the r14 advisory asked for: a crash between
+    * a loud-failure guard: a crash between
     * [[rebucketBucketed]]'s file swap and its catalog recreate leaves the
     * catalog planning zero-exchange co-located joins against files that
     * hash elsewhere, which silently returns WRONG results. Checks, in
@@ -181,7 +178,7 @@ object Lake {
     spark.table(table)
   }
 
-  /** CONTENT-level layout audit (r15 advisory, the optional deep check):
+  /** CONTENT-level layout audit (the optional deep check):
     * sample up to `perFileRows` rows from each live bucket file and verify
     * every sampled row hashes into the bucket its FILE NAME claims under
     * `(bucketCol, buckets)`. This is the one drift
@@ -241,7 +238,7 @@ object Lake {
       // hook between staging and swap: [[rebucketBucketed]] plants its
       // catalog-swap marker HERE — after staging succeeded (a staging
       // failure leaves layout + catalog untouched, so no marker should
-      // outlive it) and before the first live file can move (advisor, r15)
+      // outlive it) and before the first live file can move
       beforeSwap()
       swapBucketFiles(spark, path, stagingPath, affected)
     } finally spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
@@ -306,7 +303,7 @@ object Lake {
     val rows = spark.read.parquet(path)
     val schemaDdl = rows.schema.toDDL
     // the affected set derives from the LIVE FILES, never the caller's
-    // oldBuckets (advisory, for the API contract above): an understated
+    // oldBuckets (the API contract above): an understated
     // count would otherwise leave live files beyond it unswapped — stale
     // rows that hash elsewhere under n′, silently corrupting co-located
     // reads (the trap resplitIvfIndex avoids by listing cells from disk)
@@ -316,16 +313,16 @@ object Lake {
     // the file-then-catalog swap is the non-atomic tail (acknowledged in
     // the API doc); hold a marker through it so a crash FAILS LOUDLY at the
     // next mutation/verified read instead of planning wrong co-located
-    // joins against a stale spec (advisor, r14). The marker is written
-    // AFTER staging succeeds, immediately before the first live file can
-    // move (advisor, r15): a crash during staging leaves files AND catalog
-    // at oldBuckets — correct, no recovery needed — and a marker written
-    // earlier would instruct recreating a newBuckets catalog over
-    // oldBuckets files, passing the stray-id check when growing and
-    // silently mis-planning every co-located join. With this ordering the
-    // marker's recreate-into-newBuckets instruction is right in every
-    // crash window it can survive: mid-swap (trash present — its own
-    // recovery runs first) or between swap and catalog recreate.
+    // joins against a stale spec. The marker is written AFTER staging
+    // succeeds, immediately before the first live file can move: a crash
+    // during staging leaves files AND catalog at oldBuckets — correct, no
+    // recovery needed — and a marker written earlier would instruct
+    // recreating a newBuckets catalog over oldBuckets files, passing the
+    // stray-id check when growing and silently mis-planning every
+    // co-located join. With this ordering the marker's
+    // recreate-into-newBuckets instruction is right in every crash window
+    // it can survive: mid-swap (trash present — its own recovery runs
+    // first) or between swap and catalog recreate.
     val marker = new org.apache.hadoop.fs.Path(path, CatalogSwapMarker)
     def plantMarker(): Unit = {
       val out = fs.create(marker, false)
@@ -346,7 +343,7 @@ object Lake {
       affected = (liveBuckets ++ (0 until newBuckets)).distinct.sorted, rows,
       ".rebucket_staging", beforeSwap = plantMarker)
     catch { case e: Throwable =>
-      // clean aborts must not brick a healthy table (advisor, r15): if no
+      // clean aborts must not brick a healthy table: if no
       // live file reached the trash, the layout is byte-identical and the
       // catalog still correct — release the marker (and the empty trash
       // dir the refused swap may have created; the entry guard proved no
@@ -446,31 +443,6 @@ object Lake {
     repartitioned.write.mode("overwrite").parquet(outPath)
     files.toLong
   }
-
-  /** Interchange formats: the engine is parquet-first (columnar, statistics,
-    * pushdown), but ingest pipelines land CSV/JSONL too. Explicit schema on
-    * read — never inferSchema (a full extra pass over 100 TB). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def readCsv(spark: SparkSession, path: String,
-              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def readJsonl(spark: SparkSession, path: String,
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  /** ORC: the other columnar interchange format (schema travels in the file,
-    * same pushdown/pruning machinery as parquet). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** Register every testdata table plus derived views as temp views so the whole
     * engine surface is reachable from `spark.sql(...)` — the general query

@@ -795,14 +795,19 @@ object StreamingViews {
       .select(col("k").as(keyCol), col("l_event_id"), col("r_event_id"))
   }
 
-  /** S4 streaming: the reference's LOGGED BATCH — each customer event lands in
+  /** S4 streaming: the reference's LOGGED BATCH writes each customer event to
     * `customer_latest_info` AND `global_recent_customers` atomically
-    * (`cassandra_subscriber.py:121-163`) — as one foreachBatch body: both views
-    * derive from the same micro-batch, and writes are idempotent by deterministic
-    * per-batchId paths (a replayed batch overwrites itself, fixing the reference's
-    * at-least-once double-count, SURVEY.md §2 W3). Increments compact on read via
-    * [[latestFromIncrements]] — the append-plus-compact pattern a real deployment
-    * would hand to a table format's MERGE. */
+    * (`cassandra_subscriber.py:121-163`). Here one foreachBatch body derives
+    * both views from the same micro-batch but writes them one after the
+    * other — `recent_log`, then `latest_increment` — each to its own
+    * `batch=N` path. The pair is NOT atomic: a crash between the two writes
+    * leaves batch N in `recent_log` and missing from `latest_increment`, and
+    * only Spark's replay of batch N makes them agree (a cross-view commit
+    * marker is ROADMAP.md item 3). The deterministic per-batchId paths make
+    * that replay idempotent — a replayed batch overwrites itself, fixing the
+    * reference's at-least-once double-count, SURVEY.md §2 W3. Increments
+    * compact on read via [[latestFromIncrements]] — the append-plus-compact
+    * pattern a real deployment would hand to a table format's MERGE. */
   def maintainViews(events: DataFrame, outDir: String, checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
     events.writeStream

@@ -51,8 +51,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encode is independent of merge Seq order (reloaded-vocabulary path)") {
-    // mergesTable tells deployments to persist and reload the vocabulary; a
-    // DataFrame read returns rows in arbitrary order — encoding must depend
+    // a deployment persists and reloads the vocabulary; a DataFrame read
+    // returns rows in arbitrary order — encoding must depend
     // only on ranks, never on Seq position
     val merges = Bpe.trainMerges(corpus, numMerges = 10)
     val shuffled = merges.reverse

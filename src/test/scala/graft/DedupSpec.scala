@@ -41,7 +41,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fingerprint dedup agrees with exact dedup on group structure") {
-    val r = rowSet(Dedup.exactDedupByFingerprint(docs).select("doc_id", "dup_count"))
+    // a constant quality ties every group, so the argmax falls to the smallest
+    // id: the fingerprint-keyed form must rebuild exactDedup's groups
+    val r = rowSet(Dedup.exactDedupCanonicalByFingerprint(docs,
+      org.apache.spark.sql.functions.lit(0)))
     assert(r === Set(Seq(1L, 2L), Seq(3L, 1L), Seq(4L, 2L)))
   }
 
@@ -98,9 +101,6 @@ class DedupSpec extends SparkSpec {
     val fixStr = rowSet(Dedup.duplicateSpans(fixtureDocs, n = 8, minDocs = 2, hashGrams = false))
     assert(fixHash === fixStr)
     assert(fixHash.nonEmpty, "fixture plants duplicate groups; spans must exist")
-    // the skew-safe (agg + semi-join) form selects the identical spans
-    val fixSkew = rowSet(Dedup.duplicateSpans(fixtureDocs, n = 8, minDocs = 2, skewSafe = true))
-    assert(fixSkew === fixHash)
   }
 
   test("dup-span fraction: full-overlap docs score 1.0, unique-tail doc scores 14/18") {
@@ -316,9 +316,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("per-row minhash signature is bit-identical to the aggregate form") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFns
     val agg = Dedup.minhashSignatures(fixtureDocs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    val row = Dedup.minhashSignaturesMapOnly(fixtureDocs).collect()
+    // the per-row expression the streaming near-dup gate signs each batch with
+    val row = fixtureDocs
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        transform(array_distinct(TextFns.shinglesFromTokens(col("toks"), 3)),
+          s => xxhash64(s)).as("hs"))
+      .select(col("doc_id"),
+        graft.functions.MinHashSigExpr.minhashSigRow(col("hs"), 64).as("sig"))
+      .filter(col("sig").isNotNull)
+      .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
     assert(row.keySet === agg.keySet, "same docs must be signed by both forms")
     assert(agg.forall { case (id, sig) => row(id) === sig },
@@ -385,7 +396,7 @@ class DedupSpec extends SparkSpec {
       Seq(6L, 6L, true)))
   }
 
-  test("dupNgramStats: cross-document shared-trigram fraction, hash-keyed form agrees") {
+  test("dupNgramStats: cross-document shared-trigram fraction") {
     val d = Seq(
       (1L, "a b c d"),   // grams: "a b c", "b c d"
       (2L, "a b c x"),   // grams: "a b c", "b c x" — shares "a b c" with 1
@@ -397,9 +408,6 @@ class DedupSpec extends SparkSpec {
       Seq(2L, 2L, 1L, 0.5),
       Seq(3L, 2L, 0L, 0.0))
     assert(rowSet(Dedup.dupNgramStats(d, n = 3)
-      .select("doc_id", "n_grams", "n_shared", "dup_gram_fraction")) === expected)
-    // 8-byte-key scale form: same result (collisions are 2^-64 events)
-    assert(rowSet(Dedup.dupNgramStats(d, n = 3, hashKey = true)
       .select("doc_id", "n_grams", "n_shared", "dup_gram_fraction")) === expected)
   }
 
@@ -458,13 +466,6 @@ class DedupSpec extends SparkSpec {
     assert(stateless === join)
     // non-vacuous: every doc lost exactly the planted banner
     assert(join.forall(_(2) == 1L), "every doc should lose the planted banner")
-  }
-
-  test("removeFrequentSegments without broadcast hint selects the identical result") {
-    val hinted = rowSet(Dedup.removeFrequentSegments(segDocs, minDf = 2))
-    val plain = rowSet(Dedup.removeFrequentSegments(segDocs, minDf = 2,
-      broadcastFrequent = false))
-    assert(plain === hinted)
   }
 
   // ---- winnowing fingerprints (Schleimer et al. 2003) ------------------------

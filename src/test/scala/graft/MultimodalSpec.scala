@@ -956,9 +956,12 @@ class MultimodalSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
     assert(clusters((0x80808080L, 0x80808080L)) === ((2L, 1L)))
     assert(clusters((0x80808080L, 0x80800080L)) === ((1L, 2L)))
-    // banded near-dup: (1,2) and (2,3) at Hamming 1, (1,3) at 0 — all found
+    // banded near-dup through the index probe's 4x16 bands: (1,2) and (2,3)
+    // at Hamming 1, (1,3) at 0 — all found
     val hashesDf = Multimodal.imageDHash(spark, media).toDF()
-    val pairs = Multimodal.imageNearDupPairs(spark, hashesDf, maxHamming = 3)
+    val pairs = Multimodal.imageNearDupsAgainstIndex(hashesDf,
+        Multimodal.dHashBandRows(hashesDf), maxHamming = 3)
+      .filter(col("batch_id") < col("base_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(pairs === Set((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 0L)))
     // PNG payloads hash through the same path

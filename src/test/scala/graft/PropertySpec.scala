@@ -240,10 +240,6 @@ class PropertySpec extends SparkSpec {
           case _ => ()
         }
       }
-      // the skew-safe aggregation form selects the identical span set
-      val skew = Dedup.duplicateSpans(df, n = n, minDocs = 2, skewSafe = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(skew === spans.toSet)
       // trim removes exactly the covered tokens; fraction = covered / total
       val removed = Dedup.trimDuplicateSpans(df, n = n, minDocs = 2).collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -358,10 +354,14 @@ class PropertySpec extends SparkSpec {
       (3L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (4L, Array(0.0f, 0.0f, 1.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val kept = Curation.curateCorpusSemantic(docs, emb, threshold = 0.9,
-      lang = "en", minTokens = 5, maxAvgTokenLen = 100.0, nlist = 2, nassign = 1)
+    // the pipeline_curate_semantic composition: quality survivors first, then
+    // SemDeDup over the survivors' embeddings
+    val surv = Curation.scoredSurvivors(docs, "en", 5, 100.0).select(col("doc_id").as("vec_id"))
+    val kept = graft.operators.Similarity.semanticDedup(
+        emb.join(surv, Seq("vec_id"), "left_semi"), 0.9, nlist = 2, nassign = 1)
+      .filter(col("keep")).select("vec_id")
     // 2 fails quality (never reaches the dedup); 3 is a semantic dup of 1
-    assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 4L))
+    assert(kept.collect().map(_.getLong(0)).toSet === Set(1L, 4L))
   }
 
   test("chunking covers every token exactly: stride-prefixes + last chunk reconstruct the doc") {
@@ -724,16 +724,13 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("snapshotDiff: added/removed/changed verdicts, unchanged omitted, both hash forms agree") {
+  test("snapshotDiff: added/removed/changed verdicts, unchanged omitted") {
     val old = Seq((1L, "kept the same"), (2L, "will change"), (3L, "will vanish"))
       .toDF("doc_id", "text")
     val neu = Seq((1L, "kept  THE same"), // normalize-equal -> unchanged, omitted
       (2L, "has changed"), (4L, "brand new")).toDF("doc_id", "text")
-    Seq(true, false).foreach { fast =>
-      val r = rowSet(graft.operators.Curation.snapshotDiff(old, neu, fastHash = fast))
-      assert(r === Set(Seq(2L, "changed"), Seq(3L, "removed"), Seq(4L, "added")),
-        s"fastHash=$fast got $r")
-    }
+    val r = rowSet(graft.operators.Curation.snapshotDiff(old, neu))
+    assert(r === Set(Seq(2L, "changed"), Seq(3L, "removed"), Seq(4L, "added")), s"got $r")
   }
 
   test("snapshotDiff: null-text presence comes from markers, not fingerprint nullness") {
@@ -742,11 +739,8 @@ class PropertySpec extends SparkSpec {
     val neu = Seq((1L, None: Option[String]), // null in both -> unchanged, omitted
       (2L, None: Option[String]), // text -> null: changed, not silently dropped
       (4L, None: Option[String])).toDF("doc_id", "text") // new null doc -> added
-    Seq(true, false).foreach { fast =>
-      val r = rowSet(graft.operators.Curation.snapshotDiff(old, neu, fastHash = fast))
-      assert(r === Set(Seq(2L, "changed"), Seq(3L, "removed"), Seq(4L, "added")),
-        s"fastHash=$fast got $r")
-    }
+    val r = rowSet(graft.operators.Curation.snapshotDiff(old, neu))
+    assert(r === Set(Seq(2L, "changed"), Seq(3L, "removed"), Seq(4L, "added")), s"got $r")
   }
 
   test("containmentPairsPrefix equals containmentPairs when no gram exceeds maxDf") {

@@ -683,18 +683,16 @@ class SimilaritySpec extends SparkSpec {
     info(f"planted recall measured=$measured%.3f analytic(cos 0.97)=$predicted%.3f")
     assert(math.abs(measured - predicted) < 0.2,
       f"analytic model off: measured $measured%.3f vs predicted $predicted%.3f")
-    // sizing helpers: more tables -> monotone recall; impossible targets refuse
-    assert(Similarity.lshTablesFor(0.9, nbits = 8, targetRecall = 0.8) <= 8)
-    intercept[IllegalArgumentException](
-      Similarity.lshTablesFor(0.1, nbits = 16, targetRecall = 0.99, maxTables = 4))
-    // candidate-volume estimate: coarse buckets at high tables approach all-pairs
-    assert(Similarity.lshCandidatePairs(1000, 3, 8) === 8.0 * 1000 * 1000 / 16)
+    // the sizing formula moves the right way: more tables raise recall,
+    // finer buckets (more bits) lower it
+    assert(Similarity.lshPairRecall(0.9, 8, 8) > Similarity.lshPairRecall(0.9, 8, 4))
+    assert(Similarity.lshPairRecall(0.9, 16, 4) < Similarity.lshPairRecall(0.9, 8, 4))
   }
 
   test("trainCentroids is deterministic and assigns every vector to one cell") {
     val emb = graft.sources.Tables.embeddings(spark, fixtureDir)
-    val c1 = Similarity.trainCentroids(emb, nlist = 8, iters = 2)
-    val c2 = Similarity.trainCentroids(emb, nlist = 8, iters = 2)
+    val c1 = Similarity.trainCentroidsSampled(emb, nlist = 8, iters = 2)
+    val c2 = Similarity.trainCentroidsSampled(emb, nlist = 8, iters = 2)
     assert(c1 === c2, "k-means must be deterministic (seeded init, fixed order)")
     assert(c1.map(_._1) === (0 until 8))
     val assigned = Similarity.ivfAssignments(emb, c1)

@@ -25,9 +25,9 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("wordShingles builds n-grams; short docs give empty array") {
-    val r = one("a b c d").select(TextFns.wordShingles($"text", 3)).head()
+    val r = one("a b c d").select(TextFns.shinglesFromTokens(TextFns.tokens($"text"), 3)).head()
     assert(r.getSeq[String](0) === Seq("a b c", "b c d"))
-    val short = one("a b").select(TextFns.wordShingles($"text", 3)).head()
+    val short = one("a b").select(TextFns.shinglesFromTokens(TextFns.tokens($"text"), 3)).head()
     assert(short.getSeq[String](0) === Seq.empty)
   }
 
