@@ -93,7 +93,7 @@ object Analytics {
     * partitionings.
     *
     * Scale shape: ONE map-side-combined (key → sum, count) aggregate,
-    * `localCheckpoint`ed (r16): the global totals DERIVE from the key stats
+    * `localCheckpoint`ed: the global totals DERIVE from the key stats
     * (exact long sums of long sums — no float drift), so the corpus is
     * scanned once for the stats and once for the encode pass instead of
     * paying a third scan for a separate global aggregate; the global mean is

@@ -73,7 +73,7 @@ object Classify {
   private def nbModel(docs: DataFrame, toks: DataFrame,
                       labelCol: String): (DataFrame, DataFrame) = {
     // class-conditional counts: |vocab|·|classes| upper bound, vocab-sized.
-    // CHECKPOINT once (r16, the KN-family one-scan discipline): the class
+    // CHECKPOINT once (the KN-family one-scan discipline): the class
     // totals, the vocab distinct, the vocab size AND the dense model join
     // are four references — an unmaterialized plan re-ran the corpus
     // explode+aggregate per reference.
@@ -206,15 +206,15 @@ object Classify {
     *
     * Exact all-pairs form (anchor side BROADCASTS — the `bruteForceTopK`
     * contract): the recall oracle for [[hardNegativesIvf]], the 100 TB path.
-    * `queries` is deliberately non-defaulted (advisor finding, round 11): the
-    * anchor side is broadcast, so it must be a BOUNDED set the caller chose —
-    * a `queries = None` default would let a corpus-sized `embeddings` table
-    * silently become the broadcast side. Passing `None` mines every vector as
-    * an anchor (the small-fixture / oracle-twin use) and additionally
-    * requires `exactOracleOk = true` (verdict, round 12 — closing the
-    * remaining hole where an explicit `None` on a corpus-sized table still
-    * silently broadcast the corpus): the flag is the caller's written
-    * acknowledgement that `embeddings` itself is small enough to broadcast.
+    * `queries` is deliberately non-defaulted: the anchor side is broadcast,
+    * so it must be a BOUNDED set the caller chose — a `queries = None`
+    * default would let a corpus-sized `embeddings` table silently become the
+    * broadcast side. Passing `None` mines every vector as an anchor (the
+    * small-fixture / oracle-twin use) and additionally requires
+    * `exactOracleOk = true`, so an explicit `None` on a corpus-sized table
+    * cannot silently broadcast the corpus either: the flag is the caller's
+    * written acknowledgement that `embeddings` itself is small enough to
+    * broadcast.
     * Negatives always come from the full labeled corpus. */
   def hardNegatives(embeddings: DataFrame, k: Int = 5,
                     queries: Option[DataFrame],

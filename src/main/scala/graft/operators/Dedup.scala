@@ -371,8 +371,14 @@ object Dedup {
       .withColumn("keep", col("doc_id") === col("cluster_id"))
   }
 
-  /** Largest pair set [[resolveClusters]] collects to the driver (16 bytes
-    * per edge: ~16 MB at the bound). */
+  /** Largest input collected to the driver, one bound for both
+    * size-adaptive operators: the pair set of [[resolveClusters]] (16 bytes
+    * per pair: ~16 MB at the bound) and the edges plus seed rows of
+    * [[Graph.labelPropagate]], which collects generic rows and interns their
+    * ids. At the bound (990,000 edges over 495,000 nodes, 10,000 seeds, 3
+    * rounds) it ran in a 1 GB `local[4]` driver heap for long and for string
+    * ids, the executors and the input checkpoints in that heap too, and
+    * failed at 512 MB. */
   private[graft] val maxDriverEdges: Long = 1000000L
 
   /** The distributed connected-component form of [[resolveClusters]], with

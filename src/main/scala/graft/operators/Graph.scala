@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.sql.types._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Iterative graph analytics over plain `(src, dst[, weight])` edge lists —
   * the entity-importance / label-spreading layer a crawl-curation pipeline
@@ -25,7 +28,14 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * never re-exchange them, so the per-round exchange is `O(|V|)`, not
   * `O(|E|)`. Both operators plan under the session's own AQE setting and
   * change no session conf. PlanSpec's "executed chain" test pins exactly
-  * one exchange per round on the real path. */
+  * one exchange per round on the real path.
+  *
+  * [[labelPropagate]] is size-adaptive: edges and seed rows numbering at
+  * most [[Dedup.maxDriverEdges]] (the bound [[Dedup.resolveClusters]]
+  * collects under) run their rounds in driver memory, because at that size
+  * each Spark job's fixed cost, not the data, sets the latency. The entry
+  * graph takes the driver path at sf0.001 and sf0.01 and the distributed
+  * rounds at sf0.1. [[pageRank]] always runs distributed. */
 object Graph {
 
   /** PageRank by `iters` power iterations from the uniform vector.
@@ -170,21 +180,64 @@ object Graph {
     * Per round each UNSEEDED node takes the most frequent label among its
     * in-neighbors' current labels (ties → smallest label); seed labels are
     * clamped and never change. Unlabeled nodes cast no vote and stay absent
-    * until a labeled in-neighbor appears. The per-node argmax is ONE
-    * skew-immune hash aggregation ([[graft.functions.ArgMaxAgg]] on
-    * `struct(cnt, -label)` — map-side partial, no per-node window sort), the
-    * same shape as [[Ops.latestPerKey]]. Deterministic: integer votes,
-    * total tie-break. */
+    * until a labeled in-neighbor appears. Every edge casts one vote per label
+    * row of its source, so duplicate edges and repeated seed rows count each
+    * time they appear. Deterministic: integer votes, total tie-break.
+    *
+    * Size-adaptive, the same decision shape as [[Dedup.resolveClusters]]: the
+    * non-null edges materialize once, src-partitioned, and are counted. When
+    * the node ids compare in the join exactly as JVM values do (integral or
+    * binary-collated string ids of one type on both frames) and edges plus
+    * seed rows number at most [[Dedup.maxDriverEdges]], both are collected
+    * and the rounds run in driver memory ([[labelPropagateOnDriver]]); the
+    * labels return as a local relation. Otherwise the rounds run
+    * distributed ([[labelPropagateRounds]]). On the co-purchase entry graph
+    * sf0.001 (2,888 directed edges) and sf0.01 (97,036) take the driver path
+    * and sf0.1 (1,173,742) the distributed one. Both paths return the same
+    * multiset (PropertySpec asserts it on random graphs). */
   def labelPropagate(edges: DataFrame, seeds: DataFrame, iters: Int = 3): DataFrame = {
     // edges materialize partitioned by src with the partitioning recorded:
-    // every round's edges ⋈ labels join streams the edge table, no exchange
+    // every distributed round's edges ⋈ labels join streams the edge table,
+    // no exchange. The driver path reads the same checkpoint: partitioning
+    // only after the count would materialize the edges twice at scale.
     val np = edges.sparkSession.sessionState.conf.numShufflePartitions
     val e = CheckpointBridge.localCheckpoint(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .repartition(np, col("src")))
-    // the seeds frame is read once, however nondeterministic its source
+    // the seeds are read once, however nondeterministic their source: by one
+    // collect bounded by the room the edges leave under the bound, whole when
+    // they fit; otherwise that read is dropped and the checkpoint is the one
     val s = seeds.select(col("node"), col("label").cast("long").as("label"))
-      .localCheckpoint()
+    // counted on its rows, one job: `count()` plans an aggregation and
+    // AQE submits each of its stages as a job
+    val room = if (driverKeyed(e, s)) Dedup.maxDriverEdges - e.queryExecution.toRdd.count()
+      else -1L
+    val seedRows = if (room >= 0) s.limit(room.toInt + 1).collect() else Array.empty[Row]
+    if (room >= 0 && seedRows.length <= room) labelPropagateOnDriver(e, seedRows, s.schema, iters)
+    else labelPropagateRounds(e, s.localCheckpoint(), iters)
+  }
+
+  /** Whether the node ids of `e` and `seeds` share one type whose join
+    * equality is equality of the collected JVM values: integral ids and
+    * UTF8_BINARY strings (`StringType` equals only that collation).
+    * Floating-point ids (the join normalizes NaN and -0.0), other collations
+    * and binary ids (arrays compare by reference) stay distributed. */
+  private def driverKeyed(e: DataFrame, seeds: DataFrame): Boolean = {
+    val t = seeds.schema("node").dataType
+    e.schema("src").dataType == t && e.schema("dst").dataType == t && (t match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    })
+  }
+
+  /** The distributed rounds of [[labelPropagate]] over the non-null
+    * `(src, dst)` edge list `e` and the `(node, label: long)` seeds `s`,
+    * each read once. The per-node argmax is ONE skew-immune hash
+    * aggregation ([[graft.functions.ArgMaxAgg]] on `struct(cnt, -label)` —
+    * map-side partial, no per-node window sort), the same shape as
+    * [[Ops.latestPerKey]]. */
+  private[graft] def labelPropagateRounds(e: DataFrame, s: DataFrame,
+                                          iters: Int): DataFrame = {
     var labels = s
     for (_ <- 0 until iters) {
       val voted = e
@@ -202,5 +255,64 @@ object Graph {
       labels = s.unionByName(voted.join(s, Seq("node"), "left_anti"))
     }
     labels.localCheckpoint()
+  }
+
+  /** The rounds of [[labelPropagate]] in driver memory, over the edge list
+    * `e`, collected here, and the collected `(node, label: long)` seed rows
+    * typed by `schema`. Reproduces [[labelPropagateRounds]] row for row: the
+    * seed rows pass through as read (repeats and null ids included) and
+    * each of a node's seed rows votes; a null label votes like any other and
+    * loses every count tie, as `-label` orders null first in the argmax. */
+  private def labelPropagateOnDriver(e: DataFrame, seedRows: Array[Row],
+                                     schema: StructType, iters: Int): DataFrame = {
+    // dense node indices; in-edges grouped by dst (CSR) so a round is one
+    // pass over each node's in-neighbors
+    val index = mutable.HashMap.empty[Any, Int]
+    val ids = mutable.ArrayBuffer.empty[Any]
+    def intern(v: Any): Int = index.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    val (src, dst) = {
+      val rows = e.collect()
+      (rows.map(r => intern(r.get(0))), rows.map(r => intern(r.get(1))))
+    }
+    val n = ids.length
+    val inStart = new Array[Int](n + 1)
+    dst.foreach(d => inStart(d + 1) += 1)
+    for (v <- 0 until n) inStart(v + 1) += inStart(v)
+    val inSrc = new Array[Int](src.length)
+    val fill = inStart.clone()
+    for (i <- src.indices) { inSrc(fill(dst(i))) = src(i); fill(dst(i)) += 1 }
+    type Label = java.lang.Long
+    val seeded = new Array[Array[Label]](n)
+    seedRows.groupBy(_.get(0)).foreach { case (node, rs) =>
+      index.get(node).foreach(v => seeded(v) = rs.map(_.get(1).asInstanceOf[Label]))
+    }
+    // the argmax order of (cnt, -label): -label wraps like the engine's
+    // non-ANSI negation, and a null label sorts below every other
+    def beats(c: Long, l: Label, bc: Long, bl: Label): Boolean =
+      c > bc || (c == bc && l != null && (bl == null || -l.longValue > -bl.longValue))
+    var labels = seeded
+    for (_ <- 0 until iters) {
+      val prev = labels
+      labels = Array.tabulate(n) { v =>
+        if (seeded(v) != null) seeded(v)
+        else {
+          val votes = mutable.HashMap.empty[Label, Long]
+          var i = inStart(v)
+          while (i < inStart(v + 1)) {
+            val ls = prev(inSrc(i))
+            if (ls != null) ls.foreach(l => votes(l) = votes.getOrElse(l, 0L) + 1L)
+            i += 1
+          }
+          var best: Label = null
+          var bestCnt = 0L
+          votes.foreach { case (l, c) => if (beats(c, l, bestCnt, best)) { best = l; bestCnt = c } }
+          if (bestCnt == 0L) null else Array(best)
+        }
+      }
+    }
+    val voted = (0 until n).iterator
+      .filter(v => seeded(v) == null && labels(v) != null)
+      .map(v => Row(ids(v), labels(v)(0)))
+    e.sparkSession.createDataFrame((seedRows.iterator ++ voted).toSeq.asJava, schema)
   }
 }

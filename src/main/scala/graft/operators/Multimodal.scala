@@ -87,10 +87,6 @@ object Multimodal {
     } else ("unknown", 0, 0)
   }
 
-  /** Build a genuine 24-bit uncompressed BMP (BITMAPFILEHEADER +
-    * BITMAPINFOHEADER + padded BGR rows) — deterministic pixel bytes derived
-    * from `seed`, so fixtures are real encoded files, not placeholder blobs.
-    * Byte length is exactly 54 + rowSize·height with rowSize = ⌈3·w/4⌉·4. */
   /** Write the 54-byte BITMAPFILEHEADER + BITMAPINFOHEADER for a 24-bit
     * BI_RGB image into `out` (which must already have the full file length) —
     * shared by [[encodeBmp]] and [[resizeBmp]]. */
@@ -112,6 +108,10 @@ object Multimodal {
     putLe(46, 0); putLe(50, 0) // palette fields
   }
 
+  /** Build a genuine 24-bit uncompressed BMP (BITMAPFILEHEADER +
+    * BITMAPINFOHEADER + padded BGR rows) — deterministic pixel bytes derived
+    * from `seed`, so fixtures are real encoded files, not placeholder blobs.
+    * Byte length is exactly 54 + rowSize·height with rowSize = ⌈3·w/4⌉·4. */
   def encodeBmp(width: Int, height: Int, seed: Long = 0L): Array[Byte] = {
     require(width >= 1 && height >= 1, s"bad dims ${width}x$height")
     val rowSize = ((3 * width + 3) / 4) * 4
@@ -1926,18 +1926,6 @@ object Multimodal {
                       n_samples: Long, delta_sum: Long, is_cut: Boolean,
                       key_rank: Int)
 
-  /** Scene-cut / keyframe detection over MJPEG-in-AVI — the sampling step a
-    * VLM training pipeline runs before frame extraction (take only frames
-    * where the scene changed, not every near-duplicate of a static shot).
-    * All frames of one video sit in ONE payload, so the per-frame deltas
-    * against the previous decoded frame AND the per-video keyframe ranking
-    * happen inside the same zero-exchange typed flatMap that
-    * [[aviFramePixels]] uses — payloads never shuffle, only the per-frame
-    * metadata rows leave the task, and peak memory per video is two decoded
-    * frames (current + previous) plus the metadata tuples. Undecodable
-    * frames drop without shifting later indices (the [[aviFramePixels]]
-    * contract); the next frame then deltas against the last DECODED frame —
-    * change-since-last-usable-frame, which is what a sampler acts on. */
   /** Shared per-video frame-delta walk behind [[sceneCuts]] and
     * [[keyframes]]: each decoded AVI frame in movi order, paired with its
     * exact-integer scene-change delta vs the previous DECODED frame
@@ -1968,6 +1956,18 @@ object Multimodal {
     }
   }
 
+  /** Scene-cut / keyframe detection over MJPEG-in-AVI — the sampling step a
+    * VLM training pipeline runs before frame extraction (take only frames
+    * where the scene changed, not every near-duplicate of a static shot).
+    * All frames of one video sit in ONE payload, so the per-frame deltas
+    * against the previous decoded frame AND the per-video keyframe ranking
+    * happen inside the same zero-exchange typed flatMap that
+    * [[aviFramePixels]] uses — payloads never shuffle, only the per-frame
+    * metadata rows leave the task, and peak memory per video is two decoded
+    * frames (current + previous) plus the metadata tuples. Undecodable
+    * frames drop without shifting later indices (the [[aviFramePixels]]
+    * contract); the next frame then deltas against the last DECODED frame —
+    * change-since-last-usable-frame, which is what a sampler acts on. */
   def sceneCuts(spark: SparkSession, media: DataFrame,
                 cutThresholdPerSample: Int = 30): Dataset[SceneCut] = {
     require(cutThresholdPerSample >= 0, s"bad cut threshold $cutThresholdPerSample")

@@ -114,9 +114,8 @@ object Search {
       .agg(count(lit(1)).cast("double").as("tf"))
     // df from the tf rows themselves (count of matched docs per term) via a
     // window — NOT a separate aggregate: tf is an uncached subtree, so a
-    // second reference would re-run its corpus scan (advisor, round 5). The
-    // window's term-keyed exchange carries only the (term, doc)-aggregated
-    // matched rows.
+    // second reference would re-run its corpus scan. The window's term-keyed
+    // exchange carries only the (term, doc)-aggregated matched rows.
     val withDf = tf.withColumn("df",
       count(lit(1)).over(Window.partitionBy(col("term"))).cast("double"))
     val contrib = withDf

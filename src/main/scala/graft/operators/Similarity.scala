@@ -70,13 +70,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** [[cosineDupPairs]], 100 TB form: candidate pairs come only from shared
-    * hyperplane-LSH buckets (equi-join on (table, bucket)), then the exact cosine
-    * threshold filters them — recall < 1 by construction (a pair can land in
-    * different buckets in every table), precision = 1 (the exact filter runs on
-    * every candidate). `tables` trades recall for candidate volume; identical
-    * vectors always share every bucket. The all-pairs form is O(n²) in comparisons
-    * AND in shuffle; this is O(sum over buckets of size²) with an equi-key shuffle. */
   /** Bare (vec_id, tbl, bucket) hyperplane-LSH tag rows for `tables`
     * independent tables — candidate generation joins these; carrying the
     * embedding through the bucket shuffle would inflate it `tables`-fold
@@ -104,6 +97,13 @@ object Similarity {
       emb.select(col("vec_id"), VectorFns.toDoubleArray(col("embedding")).as("embedding")),
       dim, nbits, tables)
 
+  /** [[cosineDupPairs]], 100 TB form: candidate pairs come only from shared
+    * hyperplane-LSH buckets (equi-join on (table, bucket)), then the exact cosine
+    * threshold filters them — recall < 1 by construction (a pair can land in
+    * different buckets in every table), precision = 1 (the exact filter runs on
+    * every candidate). `tables` trades recall for candidate volume; identical
+    * vectors always share every bucket. The all-pairs form is O(n²) in comparisons
+    * AND in shuffle; this is O(sum over buckets of size²) with an equi-key shuffle. */
   def cosineDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
                         nbits: Int = 8, tables: Int = 4): DataFrame = {
     val e = emb.select(col("vec_id"), VectorFns.toDoubleArray(col("embedding")).as("embedding"))
@@ -950,12 +950,6 @@ object Similarity {
     else exactRerank(heapTopK(scored, rerankFactor * k), corpus, queries, k)
   }
 
-  /** LSH-bucketed ANN: tag every vector with `tables` independent hyperplane
-    * buckets, equi-join queries to corpus on (table, bucket), exact re-rank, top-k.
-    * Recall < 1 by construction; `tables` trades recall for candidate count.
-    * Size `nbits` to the corpus: ~log2(corpusRows / targetBucketSize) — buckets
-    * much finer than the corpus (2^nbits >> rows) leave most queries with no
-    * candidates at all. */
   /** Deterministic ±1/√outDim sign matrix for [[randomProject]] — the
     * Achlioptas (2003) database-friendly Johnson–Lindenstrauss projection
     * (signs suffice; no Gaussians needed). The sign is PURE INTEGER
@@ -1447,6 +1441,12 @@ object Similarity {
     rows.toDF("dim_idx", "mean_r", "variance_r", "max_abs_cov_r")
   }
 
+  /** LSH-bucketed ANN: tag every vector with `tables` independent hyperplane
+    * buckets, equi-join queries to corpus on (table, bucket), exact re-rank, top-k.
+    * Recall < 1 by construction; `tables` trades recall for candidate count.
+    * Size `nbits` to the corpus: ~log2(corpusRows / targetBucketSize) — buckets
+    * much finer than the corpus (2^nbits >> rows) leave most queries with no
+    * candidates at all. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
               nbits: Int = 8, tables: Int = 4): DataFrame = {
     def tagged(df: DataFrame, idAs: String, embAs: String): DataFrame =

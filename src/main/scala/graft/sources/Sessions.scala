@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *    keep bounded buffers, while the 128-key default is sized for giant
   *    collect_list state — at the default, a 100k-key LWW silently degrades
   *    to sort-based aggregation. 1M is the buffer-size × keys-per-task
-  *    budget, not "as high as possible" (advisor, round 5): the largest
+  *    budget, not "as high as possible": the largest
   *    bounded buffer is MinHashSigAgg's 64-long signature (~600 B with
   *    object overhead) → 1M buffers ≈ 0.6 GB/task worst case, inside a
   *    multi-GB executor-task budget; ArgMax (one row ≈ 200 B) and TopK

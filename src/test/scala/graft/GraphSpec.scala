@@ -101,6 +101,21 @@ class GraphSpec extends SparkSpec {
     assert(r("x") === 9L) // 2 votes for 9 beat 1 vote for 1 despite 1 < 9
   }
 
+  test("labelPropagate: a seed table above the driver bound runs distributed") {
+    // a three-edge graph beside more seed rows than the driver bound: the
+    // seeds count toward the bound, so nothing is collected to the driver
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val edges = Seq((0L, -1L), (1L, -1L), (1L, -2L)).toDF("src", "dst")
+    val seeds = spark.range(graft.operators.Dedup.maxDriverEdges)
+      .select(col("id").as("node"), (col("id") % 2 + 4).as("label"))
+    val r = Graph.labelPropagate(edges, seeds, iters = 1)
+    assert(r.queryExecution.logical.collectFirst { case l: LocalRelation => l }.isEmpty,
+      "seeds above the bound must not be collected")
+    assert(r.count() === graft.operators.Dedup.maxDriverEdges + 2)
+    val voted = r.filter(col("node") < 0).collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(voted === Map(-1L -> 4L, -2L -> 5L)) // -1: one vote each for 4 and 5, tie to 4
+  }
+
   test("triangleCounts: K4 gives 3 per node; cycles and paths give none") {
     // K4 on 1-4 (4 triangles, 3 per node) + a diamond-free square 5-8 + a
     // path 9-10; duplicate and reversed edges must not double-count

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCode
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graft.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
@@ -485,7 +486,7 @@ class PlanSpec extends SparkSpec {
       // the per-round dataflow shape has its own dedicated test below.
       "q_pagerank" -> 1, // post-checkpoint rounding projection (+1 edge-build agg when AQE reuses nothing)
       "q_pagerank_weighted" -> 1,
-      "q_label_propagation" -> 1,
+      "q_label_propagation" -> 0, // driver rounds at fixture scale: the result is a local relation
       "dedup_containment" -> 5, // explode-once bucket form: df-count pre-filter agg (bounds the collect_list buffers BEFORE collection — the round-8 ADVICE fix, a deliberate +1) + gkey bucket agg + (a,b) pair agg + the r17 fanOut of the tokenize stage (textually once per posting reference; ReuseExchange runs one); every exchange carries (gkey|doc_id|n) longs, never grams or text
       "dedup_containment_prefix" -> 8, // + the in-range ordering join's per-doc agg and the candidate distinct — the prefix machinery's priced overhead — and the r17 tokenize fanOut (one textual copy per gramSets reference); candidate re-joins broadcast the tiny pair set
       "search_hybrid_rrf_batch" -> 10, // per-query fusion: batch-BM25's 6 (pinned above) + vec-channel heap-topk (+ its r17 corpus fanOut) + the two rank-bounded channel outputs' (query, doc) full-outer; all post-channel frames <= queries x 2*kRetrieval rows
@@ -717,6 +718,36 @@ class PlanSpec extends SparkSpec {
     assert(!chain.exists(carriesEdges), s"a round exchanged edge rows:\n${ran(plans.last)}")
     assert(plans.flatMap(shuffles).count(carriesEdges) == 1,
       s"edges must be exchanged exactly once:\n$all")
+  }
+
+  /** Spark jobs started while `body` runs, counted on the same listener bus
+    * `executedPlans` flushes: under AQE one action runs a job per query
+    * stage, so this counts what a query's construction costs in jobs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusBridge.flush(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusBridge.flush(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("eager-job budget: the graph entries' construction runs at most its pinned jobs") {
+    // Building these DataFrames runs jobs before any action (checkpoints,
+    // counts, collects), and at small scale each job's fixed cost is the
+    // query's cost. Lower a budget when a change cuts jobs; never raise one.
+    val budget = Map(
+      "q_label_propagation" -> 10, // edge checkpoint + its count + the seed and edge collects (19 with distributed rounds)
+      "q_pagerank" -> 19,
+      "q_pagerank_weighted" -> 19)
+    val actual = budget.keys.toSeq.sorted.map { q =>
+      q -> jobsDuring { SparkEntry.queries(q)(spark, d); () }
+    }
+    val over = actual.filter { case (q, n) => n > budget(q) }
+    assert(over.isEmpty, s"eager jobs above budget: $over (budget ${budget.toSeq.sorted})")
   }
 
   test("graph operators plan every exchanging job adaptively and leave the session conf as found") {

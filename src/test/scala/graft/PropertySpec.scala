@@ -507,6 +507,41 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("labelPropagate's driver rounds equal its distributed rounds on random graphs") {
+    import graft.operators.Graph
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val genCase = for {
+      n <- Gen.choose(2, 20)
+      pairs <- Gen.listOf(Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+      seeds <- Gen.listOf(Gen.zip(Gen.choose(0, n - 1), Gen.choose(0L, 3L)))
+      iters <- Gen.choose(1, 4)
+      stringIds <- Gen.oneOf(true, false)
+      nullLabel <- Gen.oneOf(true, false)
+    } yield {
+      // a self-loop and a duplicate edge always; nodes n and n + 1 form a
+      // component no seed reaches; node n + 2 is seeded but has no edges
+      val edges = (0, 0) :: (0, 1) :: (0, 1) :: (n, n + 1) :: (n + 1, n) :: pairs
+      val s = (0, Option(1L)) :: (0, Option(1L)) :: (n + 2, Option(2L)) ::
+        (if (nullLabel) List((n - 1, Option.empty[Long])) else Nil) ++
+        seeds.map { case (v, l) => (v, Option(l)) }
+      (edges, s, iters, stringIds)
+    }
+    def multiset(df: DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    forAll(genCase) { case (edges, seeds, iters, stringIds) =>
+      val (e, s) =
+        if (stringIds) (edges.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst"),
+          seeds.map { case (v, l) => (s"n$v", l) }.toDF("node", "label"))
+        else (edges.map { case (a, b) => (a * 3L, b * 3L) }.toDF("src", "dst"),
+          seeds.map { case (v, l) => (v * 3L, l) }.toDF("node", "label"))
+      val driver = Graph.labelPropagate(e, s, iters)
+      assert(driver.queryExecution.logical.isInstanceOf[LocalRelation],
+        "a graph this small must take the driver path")
+      assert(multiset(driver) === multiset(Graph.labelPropagateRounds(e, s, iters)))
+    }
+  }
+
   // ---- sketches: quantitative error bounds vs their exact twins -------------
 
   test("approx_count_distinct is within the documented HLL error of the exact count") {
