@@ -31,9 +31,12 @@ object SparkEntry {
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
   private def dec6(c: Column): Column = c.cast("decimal(18,6)")
 
+  /** One registry entry. `headline` marks the scale-path form of each major
+    * capability group — the subset `Bench` prints on its stdout line. */
   private case class Q(name: String,
                        fn: (SparkSession, String) => DataFrame,
-                       oracle: Option[String])
+                       oracle: Option[String],
+                       headline: Boolean = false)
 
   /** Pinned merge table for `text_bpe_encode_fixed` — each side is a single
     * char or the product of an EARLIER rank (the trained-vocabulary invariant
@@ -62,23 +65,485 @@ object SparkEntry {
       Piece("on", -3.0), Piece("ly", -3.0), Piece("ch", -3.0))
   }
 
-  /** Shared oracle for both multi-benchmark decontamination forms (join and
-    * stateless-literal): identical matched-pair reports by construction —
-    * Spark keys grams by xxhash64, this SQL by literal strings. */
-  private val batchDecontaminateOracle: String =
-    """WITH t AS (SELECT doc_id,
-         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
+  // ------------------------------------------------------------------
+  // Oracle SQL shared by more than one entry. Each fragment has one
+  // definition, so a fix to it reaches every oracle that uses it. A
+  // fragment opening with `WITH` is a CTE list the caller continues with
+  // `,` + more CTEs or with the final SELECT.
+  // ------------------------------------------------------------------
+
+  /** [[graft.functions.TextFns.normalize]] of `text` as DuckDB SQL. */
+  private val normSql = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
+
+  /** `t(doc_id, norm)`: each document's [[normSql]] text. */
+  private val normCte = s"WITH t AS (SELECT doc_id, $normSql AS norm FROM documents)"
+
+  /** `t(doc_id, toks)`: each document's [[graft.functions.TextFns.tokens]]. */
+  private val tokensCte =
+    s"WITH t AS (SELECT doc_id, string_split($normSql, ' ') AS toks FROM documents)"
+
+  /** `g(doc_id, grams)`: each document's distinct word 3-grams (`[]` under
+    * three tokens), over the `t(doc_id, norm)` CTE that `normT` opens. */
+  private def trigramCtes(normT: String): String = normT + """,
        tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
        g AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
            list_transform(generate_series(1, len(toks) - 2),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-           ELSE [] END) AS grams FROM tk),
+           ELSE [] END) AS grams FROM tk)"""
+
+  /** `b(doc_id, bg)`: every adjacent word pair of each document, over
+    * [[tokensCte]]'s `t`. */
+  private val bigramCtes = tokensCte + """,
+       b AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
+           list_transform(generate_series(1, len(toks) - 1),
+             i -> toks[i] || ' ' || toks[i+1])
+           ELSE [] END) AS bg FROM t)"""
+
+  /** `p(a_id, b_id, jaccard)`: 3-gram Jaccard of every document pair that
+    * shares a 40-char normalized prefix (the blocking key of the n-gram
+    * Jaccard dedup entries). */
+  private val jaccardPairCtes = trigramCtes(normCte) + """,
+       bg AS (SELECT doc_id, substr(norm, 1, 40) AS block, grams FROM g JOIN t USING (doc_id)),
+       p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+           len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
+         FROM bg a JOIN bg b ON a.block = b.block AND a.doc_id < b.doc_id)"""
+
+  /** `cc(id, cluster_id)`: connected components (min doc_id label) of the
+    * [[jaccardPairCtes]] pairs at jaccard >= 0.3, every document a node. */
+  private val jaccardClusterCtes = "WITH RECURSIVE" + jaccardPairCtes.stripPrefix("WITH") + """,
+       e AS (SELECT a_id AS src, b_id AS dst FROM p WHERE jaccard >= 0.3
+             UNION SELECT b_id, a_id FROM p WHERE jaccard >= 0.3),
+       reach AS (
+         SELECT doc_id AS id, doc_id AS label FROM documents
+         UNION
+         SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
+       cc AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id)"""
+
+  /** Shared oracle for both min-id cluster forms (two-phase and star
+    * contraction): the same components, each labelled by its min doc_id. */
+  private val jaccardClustersOracle = jaccardClusterCtes + """
+       SELECT id AS doc_id, cluster_id, id = cluster_id AS keep FROM cc"""
+
+  /** `l(doc_id, norm, n_tokens, avg_token_len, score_en..score_fr,
+    * pred_lang)`: the stopword language ID and quality features of the
+    * curation oracles; 'und' when no stopword hits, ties to en, de, es, fr
+    * in that order. */
+  private val langScoredCtes = normCte + """,
+       x AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t),
+       s AS (SELECT doc_id, norm, CAST(len(toks) AS BIGINT) AS n_tokens,
+         CAST(length(replace(norm, ' ', '')) AS DOUBLE) / len(toks) AS avg_token_len,
+         len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS score_en,
+         len(list_filter(toks, t -> t IN ('der','die','und','ist','das'))) AS score_de,
+         len(list_filter(toks, t -> t IN ('el','la','de','que','y'))) AS score_es,
+         len(list_filter(toks, t -> t IN ('le','la','et','les','des'))) AS score_fr
+         FROM x),
+       l AS (SELECT *,
+         CASE WHEN greatest(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
+              WHEN score_en = greatest(score_en, score_de, score_es, score_fr) THEN 'en'
+              WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
+              WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
+              ELSE 'fr' END AS pred_lang
+         FROM s)"""
+
+  /** Shared oracle for both curation forms (text-keyed and
+    * fingerprint-keyed dedup): English docs of at least 20 tokens averaging
+    * at most 5 chars, one row per normalized text. */
+  private val curateOracle = langScoredCtes + """,
+       f AS (SELECT * FROM l
+         WHERE pred_lang = 'en' AND n_tokens >= 20 AND avg_token_len <= 5.0)
+       SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens,
+         round(min(avg_token_len), 6) AS avg_token_len, count(*) AS dup_count
+       FROM f GROUP BY norm"""
+
+  /** Multinomial Naive-Bayes model CTEs (add-one smoothing, lang labels)
+    * trained on `FROM $train`: `tok(doc_id, lang, term)`,
+    * `pri(cand, logprior)` and `model(term, cand, logp)`. */
+  private def nbModelCtes(train: String): String =
+    s"""WITH t AS (SELECT doc_id, lang,
+         unnest(string_split($normSql, ' ')) AS term FROM $train),
+       tok AS (SELECT doc_id, lang, term FROM t WHERE len(term) > 0),
+       ct AS (SELECT lang AS cand, term, count(*) AS c_ct FROM tok GROUP BY 1, 2),
+       cc AS (SELECT cand, sum(c_ct) AS c_c FROM ct GROUP BY 1),
+       v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS vsz FROM tok),
+       pri AS (SELECT lang AS cand,
+         ln(CAST(count(*) AS DOUBLE) / (SELECT CAST(count(*) AS DOUBLE) FROM $train)) AS logprior
+         FROM $train GROUP BY 1),
+       vocab AS (SELECT DISTINCT term FROM ct),
+       model AS (SELECT vocab.term, pri.cand,
+         ln((CAST(coalesce(ct.c_ct, 0) AS DOUBLE) + 1.0) / (CAST(cc.c_c AS DOUBLE) + v.vsz)) AS logp
+         FROM vocab CROSS JOIN pri JOIN cc USING (cand)
+         LEFT JOIN ct ON ct.term = vocab.term AND ct.cand = pri.cand, v)"""
+
+  /** `scored(doc_id, cand, nb_score)`: every document scored under the
+    * [[nbModelCtes]] model trained on all documents. */
+  private val nbSelfScoredCtes = nbModelCtes("documents") + """,
+       sc AS (SELECT tok.doc_id, model.cand, sum(model.logp) AS loglik
+         FROM tok JOIN model ON tok.term = model.term GROUP BY 1, 2),
+       scored AS (SELECT doc_id, cand, round(loglik + logprior, 6) AS nb_score
+         FROM sc JOIN pri USING (cand))"""
+
+  /** Shared oracle for the three per-doc encode gates (trained BPE, trained
+    * unigram, sampled unigram): the whitespace word count, the gate
+    * columns TRUE. */
+  private val wordCountGateOracle = tokensCte + """
+       SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
+         TRUE AS chars_preserved, TRUE AS count_bounded
+       FROM t"""
+
+  /** `enc(doc_id, n_words, encw)` of the pinned-table encode oracles: each
+    * `[<>]`-stripped document's words char-wrapped ('<s><t><r>'), then one
+    * left-to-right replace pass per (left, right) fuse, in table order.
+    * Per-symbol brackets share no boundary chars, so each pass is exactly
+    * one non-chaining fuse of the encoder. */
+  private def bracketEncodeCtes(fuses: Seq[(String, String)]): String =
+    """WITH t AS (SELECT doc_id,
+         string_split(lower(trim(regexp_replace(
+           regexp_replace(text, '[<>]', '', 'g'), '\s+', ' ', 'g'))), ' ') AS toks
+         FROM documents),
+       enc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
+         list_transform(toks, w -> """ +
+      fuses.foldLeft("""regexp_replace(w, '(.)', '<\1>', 'g')""") {
+        case (w, (l, r)) => s"replace($w, '<$l><$r>', '<$l$r>')" } + """) AS encw
+         FROM t)"""
+
+  private val bpeEncodeCtes = bracketEncodeCtes(fixedBpeMerges.map(m => m.left -> m.right))
+  private val unigramEncodeCtes =
+    bracketEncodeCtes(fixedUnigramPieces.map(p => p.piece.take(1) -> p.piece.drop(1)))
+
+  /** `s(doc_id, pack_group, n_tokens, tokens_before)`: each document's token
+    * count and the tokens ahead of it in its doc_id % 32 pack group. */
+  private val packCtes = tokensCte + """,
+       s AS (SELECT doc_id, doc_id % 32 AS pack_group,
+         CAST(len(toks) AS BIGINT) AS n_tokens FROM t),
+       w AS (SELECT *, SUM(n_tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS tokens_before
+         FROM s)"""
+
+  /** `g2(doc_id, pos, gram)`: every word `n`-gram of each document with its
+    * 0-based start, over [[tokensCte]]'s `t`. */
+  private def posGramCtes(n: Int): String = tokensCte + s""",
+       g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - ${n - 1})) AS i, toks
+         FROM t WHERE len(toks) >= $n),
+       g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+${n - 1}], ' ') AS gram
+         FROM g)"""
+
+  /** `s(doc_id, pos, island)`: the `h(doc_id, pos)` hit positions in islands
+    * of `n`-grams, a new island wherever a hit starts more than `n` tokens
+    * after the previous one. */
+  private def hitIslandCtes(n: Int): String = s""",
+       l AS (SELECT doc_id, pos,
+         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > $n
+              THEN 1 ELSE 0 END AS ni
+         FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+       s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
+           ROWS UNBOUNDED PRECEDING) AS island FROM l)"""
+
+  /** One row per [[hitIslandCtes]] island of `n`-grams: its first and last
+    * token position and its hit count. */
+  private def islandSpansSelect(n: Int): String = s"""
+       SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
+         CAST(max(pos) + ${n - 1} AS BIGINT) AS span_end, CAST(count(*) AS BIGINT) AS n_grams
+       FROM s GROUP BY doc_id, island"""
+
+  /** Islands of the 8-grams that occur in at least two documents. */
+  private val dupSpanCtes = posGramCtes(8) + """,
+       d AS (SELECT gram FROM g2 GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
+       h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN d USING (gram))""" + hitIslandCtes(8)
+
+  /** Islands of each corpus doc's 3-grams found in the benchmark docs
+    * (doc_id % 20 = 0). */
+  private val benchSpanCtes = posGramCtes(3) + """,
+       bench AS (SELECT DISTINCT gram FROM g2 WHERE doc_id % 20 = 0),
+       h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN bench USING (gram)
+         WHERE g2.doc_id % 20 <> 0)""" + hitIslandCtes(3)
+
+  /** The span-trim SELECT over [[hitIslandCtes]]' `s`: every token of
+    * `docs(doc_id, toks)` inside an island's span (its last `n`-gram
+    * included) removed, the rest rejoined. */
+  private def trimSpansSelect(docs: String, n: Int): String = s""",
+       sp AS (SELECT doc_id, min(pos) AS a, max(pos) + ${n - 1} AS b
+         FROM s GROUP BY doc_id, island),
+       tok AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS j, toks FROM $docs),
+       tok2 AS (SELECT doc_id, j - 1 AS p, toks[j] AS w FROM tok),
+       kept AS (SELECT k.doc_id, k.p, k.w FROM tok2 k
+         WHERE NOT EXISTS (SELECT 1 FROM sp
+           WHERE sp.doc_id = k.doc_id AND k.p BETWEEN sp.a AND sp.b)),
+       agg AS (SELECT doc_id, array_to_string(list(w ORDER BY p), ' ') AS text_trimmed,
+         count(*) AS n_kept FROM kept GROUP BY doc_id)
+       SELECT $docs.doc_id, coalesce(agg.text_trimmed, '') AS text_trimmed,
+         CAST(len($docs.toks) - coalesce(agg.n_kept, 0) AS BIGINT) AS n_tokens_removed
+       FROM $docs LEFT JOIN agg ON $docs.doc_id = agg.doc_id"""
+
+  /** [[graft.functions.TextFns.fingerprint]]'s polynomial rolling hash of a
+    * `clean` column (normalized text without [^a-z0-9 ] chars). */
+  private val cleanFingerprintSql = """list_reduce(list_prepend(CAST(0 AS BIGINT),
+           list_transform(generate_series(1, length(clean)),
+             i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
+           (acc, c) -> (acc * 31 + c) % 1000000007)"""
+
+  /** `f(doc_id, source, fp)`: each document's
+    * [[graft.functions.TextFns.fingerprint]]. */
+  private val fingerprintCtes =
+    s"""WITH t AS (SELECT doc_id, source,
+         regexp_replace($normSql, '[^a-z0-9 ]', '', 'g') AS clean FROM documents),
+       f AS (SELECT doc_id, source, $cleanFingerprintSql AS fp FROM t)"""
+
+  /** `p(a_id, b_id, cosine)`: every embedding pair's dot product (the
+    * cosine of the unit fixture vectors), rounded to the 6-decimal
+    * cross-engine key. */
+  private val cosinePairCtes =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         round(list_reduce(list_prepend(0.0,
+           list_transform(generate_series(1, len(a.emb)), i -> a.emb[i] * b.emb[i])),
+           (acc, x) -> acc + x), 6) AS cosine
+         FROM e a JOIN e b ON a.vec_id < b.vec_id)"""
+
+  /** Shared oracle for both cosine pair-recall gates (LSH blocking and
+    * SemDeDup cells) against the exact pairs at cosine >= 0.4. */
+  private val cosinePairRecallOracle = cosinePairCtes + """
+       SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, TRUE AS recall_ok,
+         TRUE AS precision_one
+       FROM p WHERE cosine >= 0.4"""
+
+  /** Oracle of a [[topkRecallGate]] or [[persistedEqualityGate]] row for the
+    * embeddings `WHERE queries` as queries: their count, k results each,
+    * and `gate` TRUE. */
+  private def topkGateOracle(gate: String, queries: String = "vec_id < 20",
+                             k: Int = 10): String =
+    s"""SELECT CAST(count(*) AS BIGINT) AS n_queries,
+       CAST($k * count(*) AS BIGINT) AS n_results, TRUE AS $gate
+       FROM embeddings WHERE $queries"""
+
+  /** Oracle of a stream-equals-batch gate row: the `from` row count as
+    * `countCol` and `stream_equals_batch` TRUE. */
+  private def streamGateOracle(countCol: String, from: String): String =
+    s"""SELECT CAST(count(*) AS BIGINT) AS $countCol, TRUE AS stream_equals_batch
+       FROM $from"""
+
+  /** `ex`, `rk` and the top-10 SELECT that rerank a `short(query_id, vec_id)`
+    * candidate list by exact cosine over `e(vec_id, emb)` — the tail of the
+    * shortlist-then-rerank ANN oracles. */
+  private val rerankTop10Select = """,
+       ex AS (SELECT short.query_id, short.vec_id,
+         round(list_reduce(list_prepend(0.0,
+           list_transform(generate_series(1, len(c.emb)),
+             i -> qe.emb[i] * c.emb[i])),
+           (acc, x) -> acc + x), 6) AS cosine
+         FROM short JOIN e c ON short.vec_id = c.vec_id
+         JOIN e qe ON short.query_id = qe.vec_id),
+       rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+         ORDER BY cosine DESC, vec_id) AS rank FROM ex)
+       SELECT query_id, vec_id, cosine, rank FROM rk WHERE rank <= 10"""
+
+  /** `e(vec_id, emb)` and `sl(j, ws)`: the 16 fixed ±0.25 (±1/√16) sign
+    * rows over the 64 dims, by the integer sign hash of
+    * [[Similarity.rpSignRows]]. */
+  private val rpSignCtes =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       sgn AS (SELECT j, i,
+         CASE WHEN ((s * s) % 2038074743) % 2 = 0 THEN 0.25 ELSE -0.25 END AS w
+         FROM (SELECT j, i, ((y * y) % 2038074743) AS s
+           FROM (SELECT j, i,
+             ((i * 1299721 + j * 7919 + 104729) % 2038074743) AS y
+             FROM generate_series(0, 15) AS gj(j), generate_series(0, 63) AS gi(i)))),
+       sl AS (SELECT j, list(w ORDER BY i) AS ws FROM sgn GROUP BY j)"""
+
+  /** `sc(doc_id, bm25)`: every document's BM25 (k1 1.2, b 0.75) for the
+    * fixed query 'vector merge stream'. */
+  private val bm25ThreeTermCtes = tokensCte + """,
+       x AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
+         CAST(len(list_filter(toks, w -> w = 'vector')) AS DOUBLE) AS tf0,
+         CAST(len(list_filter(toks, w -> w = 'merge')) AS DOUBLE) AS tf1,
+         CAST(len(list_filter(toks, w -> w = 'stream')) AS DOUBLE) AS tf2
+         FROM t),
+       st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl,
+         sum(CASE WHEN tf0 > 0 THEN 1.0 ELSE 0.0 END) AS df0,
+         sum(CASE WHEN tf1 > 0 THEN 1.0 ELSE 0.0 END) AS df1,
+         sum(CASE WHEN tf2 > 0 THEN 1.0 ELSE 0.0 END) AS df2
+         FROM x),
+       sc AS (SELECT doc_id, round(
+           ln(1 + (n_docs - df0 + 0.5) / (df0 + 0.5))
+             * (tf0 * 2.2) / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+         + ln(1 + (n_docs - df1 + 0.5) / (df1 + 0.5))
+             * (tf1 * 2.2) / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
+         + ln(1 + (n_docs - df2 + 0.5) / (df2 + 0.5))
+             * (tf2 * 2.2) / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS bm25
+         FROM x, st)"""
+
+  /** `e(doc_id, term)`: each document's distinct terms. */
+  private val docTermCtes = tokensCte + """,
+       e AS (SELECT DISTINCT doc_id, term FROM (SELECT doc_id, unnest(toks) AS term FROM t))"""
+
+  /** `tf(term, doc_id, tf)` of every non-empty term and `n(n_docs)`. */
+  private val termFreqCtes = tokensCte + """,
+       n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
+       p AS (SELECT doc_id, unnest(toks) AS term FROM t),
+       tf AS (SELECT term, doc_id, CAST(count(*) AS DOUBLE) AS tf
+         FROM p WHERE len(term) > 0 GROUP BY 1, 2)"""
+
+  /** `f(doc_id, w, h, i)`: each document's synthetic AVI frames
+    * ([[Multimodal.syntheticAvisFromDocuments]]'s sizes and frame count). */
+  private val aviFramesCte =
+    """WITH f AS (SELECT doc_id, (doc_id % 13) + 4 AS w, (doc_id % 11) + 4 AS h,
+         unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
+         FROM documents)"""
+
+  /** `d(doc_id, w, h, i, delta_sum)`: each AVI frame's summed absolute pixel
+    * change from the previous frame (the first frame: its pixel sum). */
+  private val aviDeltaCtes = aviFramesCte + """,
+       d AS (SELECT doc_id, w, h, i,
+         CAST(list_sum(list_transform(generate_series(0, w * h - 1), j ->
+           CASE WHEN i = 0
+           THEN (doc_id * 31 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
+           ELSE abs((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
+                  - (doc_id * 31 + (i - 1) * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)
+           END)) AS BIGINT) AS delta_sum
+         FROM f)"""
+
+  /** The checksum columns of frame `i` (w × h samples) of an
+    * [[aviFramesCte]] video: sum, position-weighted sum, first and last
+    * sample. */
+  private val aviPixelCols =
+    """CAST(list_sum(list_transform(generate_series(0, w * h - 1),
+         j -> (doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251))
+         AS BIGINT) AS pixel_sum,
+       CAST(list_sum(list_transform(generate_series(0, w * h - 1),
+         j -> (j + 1) * ((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)))
+         AS BIGINT) AS pixel_poly,
+       CAST((doc_id * 31 + i * 257) % 251 AS INT) AS pixel_first,
+       CAST((doc_id * 31 + i * 257 + ((h - 1) // 8) * 37 + ((w - 1) // 8) * 11) % 251 AS INT) AS pixel_last"""
+
+  /** `wl(doc_id, k, st, len)`: each synthetic WAV's 32-sample windows at
+    * hop 16 ([[Multimodal]]'s fixture: 64 + doc_id % 37 samples). */
+  private val wavWindowCtes =
+    """WITH d AS (SELECT doc_id, 64 + doc_id % 37 AS n FROM documents),
+       w AS (SELECT doc_id, n,
+         unnest(generate_series(0, (n - 1) // 16)) AS k FROM d),
+       wl AS (SELECT doc_id, k, 16 * k AS st,
+         least(32, n - 16 * k) AS len FROM w)"""
+
+  /** Shared oracle for both hourly (event type, count) views, batch and
+    * queue-stream. */
+  private val hourTypeCountsOracle =
+    """SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
+       event_type, count(*) AS cnt FROM events GROUP BY 1, 2"""
+
+  /** Shared oracle for both multi-granularity bucket counts, batch and
+    * stream. */
+  private val bucketCountsOracle =
+    """WITH b AS (
+       SELECT '5min' AS granularity,
+         '5min:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') ||
+         lpad(CAST((minute(CAST(ts AS TIMESTAMP)) // 5) * 5 AS VARCHAR), 2, '0') AS time_bucket
+       FROM events
+       UNION ALL
+       SELECT 'hourly', 'hourly:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') FROM events
+       UNION ALL
+       SELECT 'daily', 'daily:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d') FROM events)
+       SELECT granularity, time_bucket, count(*) AS cnt FROM b GROUP BY 1, 2"""
+
+  /** `s1`, `s2`, `s3(user_id, t0, t)`: the users reaching each funnel stage
+    * (signup, then view, then purchase, all within 168 h of the signup). */
+  private val funnelCtes =
+    """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+         FROM events),
+       s1 AS (SELECT user_id, min(ts) AS t0, min(ts) AS t FROM e
+         WHERE event_type = 'signup' GROUP BY user_id),
+       s2 AS (SELECT e.user_id, min(s1.t0) AS t0, min(e.ts) AS t
+         FROM e JOIN s1 USING (user_id)
+         WHERE e.event_type = 'view' AND e.ts >= s1.t
+           AND e.ts <= s1.t0 + INTERVAL 168 HOURS GROUP BY e.user_id),
+       s3 AS (SELECT e.user_id, min(s2.t0) AS t0, min(e.ts) AS t
+         FROM e JOIN s2 USING (user_id)
+         WHERE e.event_type = 'purchase' AND e.ts >= s2.t
+           AND e.ts <= s2.t0 + INTERVAL 168 HOURS GROUP BY e.user_id)"""
+
+  /** Oracle of the hourly top-3 event types, the type column named `item`. */
+  private def hourlyTopTypesOracle(item: String): String =
+    s"""SELECT hour_bucket, $item, cnt, rank FROM (
+         SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
+           event_type AS $item, count(*) AS cnt,
+           row_number() OVER (
+             PARTITION BY strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H')
+             ORDER BY count(*) DESC, event_type) AS rank
+         FROM events GROUP BY 1, 2)
+       WHERE rank <= 3"""
+
+  /** Shared oracle for both 5-minute range self-join forms (plain and
+    * band-bucketed). */
+  private val rangeJoinOracle =
+    """SELECT a.user_id AS user_id, a.event_id AS a_event_id, b.event_id AS b_event_id
+       FROM events a JOIN events b ON a.user_id = b.user_id
+       AND CAST(b.ts AS TIMESTAMP) > CAST(a.ts AS TIMESTAMP)
+       AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 5 MINUTE"""
+
+  /** Shared oracle for both distinct-count error gates (HLL++ and the
+    * merged datasketches HLL): the exact count per type, the gate TRUE. */
+  private val distinctBoundsOracle =
+    """SELECT event_type, count(DISTINCT user_id) AS exact_users,
+       TRUE AS within_bounds
+       FROM events GROUP BY event_type"""
+
+  /** Shared oracle for both sessionize forms (window and skew-safe): a new
+    * session after a gap of more than 30 minutes. */
+  private val sessionizeOracle =
+    """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+         FROM events),
+       l AS (SELECT event_id, user_id, ts,
+         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+         FROM e),
+       n AS (SELECT event_id, user_id, ts,
+         CASE WHEN prev IS NULL
+              OR epoch_us(ts) - epoch_us(prev) > 1800000000
+              THEN 1 ELSE 0 END AS nw FROM l)
+       SELECT event_id, user_id,
+         CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
+           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+       FROM n"""
+
+  /** Shared oracle for both canonical exact-dedup forms (text-keyed and
+    * fingerprint-keyed): per normalized text the longest raw text wins,
+    * ties to the smaller doc_id. */
+  private val exactCanonicalOracle =
+    s"""WITH t AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q,
+         $normSql AS norm FROM documents),
+       r AS (SELECT doc_id, norm,
+         row_number() OVER (PARTITION BY norm ORDER BY q DESC, doc_id) AS rn,
+         count(*) OVER (PARTITION BY norm) AS dup_count FROM t)
+       SELECT doc_id, CAST(dup_count AS BIGINT) AS dup_count
+       FROM r WHERE rn = 1"""
+
+  /** Shared oracle for the PNG and JPEG pixel-exact resize gates. */
+  private val pixelsExactOracle = "SELECT doc_id AS media_id, TRUE AS pixels_exact FROM documents"
+
+  /** Shared oracle for both multi-benchmark decontamination forms (join and
+    * stateless-literal): identical matched-pair reports by construction —
+    * Spark keys grams by xxhash64, this SQL by literal strings. */
+  private val batchDecontaminateOracle: String = trigramCtes(normCte) + """,
        bench AS (SELECT DISTINCT bench_id, gram FROM (
          SELECT doc_id % 3 AS bench_id, unnest(grams) AS gram FROM g
          WHERE doc_id % 20 = 0) b0),
        cg AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id % 20 <> 0)
        SELECT cg.doc_id, b.bench_id, CAST(count(*) AS BIGINT) AS matched_grams
        FROM cg JOIN bench b USING (gram) GROUP BY 1, 2"""
+
+  /** `corp(doc_id, grams)`, the corpus docs (doc_id % 20 <> 0), and
+    * `hits(doc_id, m)`, each one's 3-grams found in the benchmark docs —
+    * shared by the exact, stateless and Bloom decontamination oracles. */
+  private val decontaminateCtes: String = trigramCtes(normCte) + """,
+       bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 0),
+       corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 20 <> 0),
+       cg AS (SELECT doc_id, unnest(grams) AS gram FROM corp),
+       hits AS (SELECT cg.doc_id, count(b.gram) AS m
+         FROM cg LEFT JOIN bench b USING (gram) GROUP BY cg.doc_id)"""
+
+  /** Shared oracle for both decontamination forms (join and stateless). */
+  private val decontaminateOracle: String = decontaminateCtes + """
+       SELECT c.doc_id, CAST(coalesce(h.m, 0) AS BIGINT) AS matched_grams,
+         coalesce(h.m, 0) > 0 AS contaminated
+       FROM corp c LEFT JOIN hits h USING (doc_id)"""
 
   /** `multimodal_wav_spectrum`'s fixed-point twiddle tables, shared between
     * the operator call and its oracle SQL: the DuckDB side gets the SAME
@@ -197,18 +662,12 @@ object SparkEntry {
          CAST(len(t.segs) - len(list_filter(t.segs, s -> NOT list_contains(fl.freq, s))) AS BIGINT) AS n_segments_removed
        FROM t, fl"""
 
-  /** Kneser-Ney self-scored tertile CTEs shared by the perplexity-bucket and
-    * curriculum-order oracles: bigram KN probabilities, per-doc mean log
+  /** Kneser-Ney self-scored tertile CTEs shared by the KN-score,
+    * perplexity-bucket and curriculum-order oracles: bigram KN probabilities,
+    * per-doc mean log
     * score rounded to 6, tertile thresholds (quantile_cont ≡ Spark's exact
     * `percentile`, both rounded to 6 before the boundary compare). */
-  private val knBucketCtes: String =
-    """WITH t AS (SELECT doc_id,
-         string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-         FROM documents),
-       b AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-           list_transform(generate_series(1, len(toks) - 1),
-             i -> toks[i] || ' ' || toks[i+1])
-           ELSE [] END) AS bg FROM t),
+  private val knBucketCtes: String = bigramCtes + """,
        cb AS (SELECT bg, count(*) AS c_bg,
            string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2
          FROM b GROUP BY bg),
@@ -227,7 +686,11 @@ object SparkEntry {
        th AS (SELECT
            round(quantile_cont(kn_score, 0.3333333333333333), 6) AS t0,
            round(quantile_cont(kn_score, 0.6666666666666666), 6) AS t1
-         FROM s)"""
+         FROM s),
+       pb AS (SELECT doc_id, n_bigrams, kn_score,
+           CAST(3 - (CASE WHEN kn_score > t0 THEN 1 ELSE 0 END +
+                     CASE WHEN kn_score > t1 THEN 1 ELSE 0 END) AS BIGINT) AS ppl_bucket
+         FROM s, th)"""
 
   /** Frozen seed centroids for the cluster-balance entries: the vec_id < 8
     * embeddings, ids 0..7 — deterministic and DuckDB-replayable (a fitted
@@ -238,7 +701,7 @@ object SparkEntry {
         graft.functions.VectorFns.toDoubleArray(col("embedding")))
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toSeq
 
-  /** Shared assignment CTEs for both cluster-balance oracles: dot-product
+  /** Assignment CTEs for both cluster-balance oracles: dot-product
     * argmax against the vec_id < 8 seed vectors, ties to the LARGER seed id
     * (the NearestCentroidExpr contract), prototypicality dot rounded to the
     * 6-decimal cross-engine sim key. */
@@ -254,14 +717,20 @@ object SparkEntry {
          FROM sc),
        a AS (SELECT vec_id, cid AS cluster_id, round(dot, 6) AS pdot FROM asg WHERE rn = 1)"""
 
+  /** Oracle of a cluster-balance entry: per [[clusterAssignCtes]] cluster,
+    * the 40 vectors first by `order` (ties to the smaller vec_id). */
+  private def clusterKeepOracle(order: String): String = clusterAssignCtes + s""",
+       r AS (SELECT vec_id, cluster_id,
+           row_number() OVER (PARTITION BY cluster_id ORDER BY $order ASC,
+             vec_id ASC) AS keep_rank FROM a)
+       SELECT vec_id, cluster_id, CAST(keep_rank AS BIGINT) AS keep_rank
+       FROM r WHERE keep_rank <= 40"""
+
   /** Winnowing CTEs shared by the fingerprint and pair oracles: 5-gram hashes
     * keyed by the first 15 hex digits of md5 (60 bits — exact in both
     * engines), windows of 4, rightmost-minimum selection (the reversed-list
     * list_position picks the LAST argmin), distinct (pos, fp) per doc. */
-  private val winnowSelCtes: String =
-    """WITH t AS (SELECT doc_id,
-         string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-         FROM documents),
+  private val winnowSelCtes: String = tokensCte + """,
        g AS (SELECT doc_id,
            list_transform(generate_series(1, len(toks) - 4),
              i -> CAST(('0x' || substr(md5(array_to_string(toks[i:i+4], ' ')), 1, 15)) AS BIGINT)) AS hs
@@ -273,58 +742,30 @@ object SparkEntry {
          FROM g WHERE len(hs) >= 4),
        fps AS (SELECT DISTINCT doc_id, CAST(u.pos AS INT) AS pos, u.fp AS fp FROM sel)"""
 
-  /** Shared oracle for both containment forms: the base bucket form and the
-    * positional-prefix-filtered form are bit-identical on the fixture (max
-    * gram df = 7 < 20 — both exact; see
-    * [[graft.operators.Dedup.containmentPairsPrefix]]). */
-  private val containmentOracle: String =
-    """WITH t AS (SELECT doc_id,
-         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-       tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-       g0 AS (SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3 THEN
-           list_transform(generate_series(1, len(toks) - 2),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-           ELSE [] END) AS grams FROM tk),
-       g AS (SELECT * FROM g0 WHERE len(grams) > 0),
-       sz AS (SELECT doc_id, CAST(len(grams) AS DOUBLE) AS n_grams FROM g),
-       post AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-       keep AS (SELECT gram FROM (SELECT gram, count(*) AS df FROM post GROUP BY gram)
-                WHERE df BETWEEN 2 AND 20),
-       bounded AS (SELECT p.doc_id, p.gram FROM post p JOIN keep k ON p.gram = k.gram),
-       inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           CAST(count(*) AS DOUBLE) AS inter
-         FROM bounded a JOIN bounded b
-           ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY 1, 2),
-       sc AS (SELECT i.a_id, i.b_id, i.inter / sa.n_grams AS c_ab,
-           i.inter / sb.n_grams AS c_ba
-         FROM inter i JOIN sz sa ON sa.doc_id = i.a_id
-         JOIN sz sb ON sb.doc_id = i.b_id)
-       SELECT a_id AS contained_id, b_id AS container_id, c_ab AS containment
-       FROM sc WHERE c_ab >= 0.8
-       UNION ALL
-       SELECT b_id, a_id, c_ba FROM sc WHERE c_ba >= 0.8"""
+  /** Shared oracle for every batch-vs-base winnow entry (in memory, on disk,
+    * and each index lifecycle step): batch docs are doc_id % 20 = 0, base
+    * fingerprints with df over 1000 are skipped, pairs share >= 3. */
+  private val winnowBatchPairsOracle: String = winnowSelCtes + """,
+       basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
+       batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
+       good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
+       SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
+         CAST(count(*) AS BIGINT) AS shared_fps
+       FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
+       GROUP BY 1, 2 HAVING count(*) >= 3"""
 
-  /** Oracle for the prefix-filtered containment entry: identical dataflow to
-    * [[containmentOracle]], but over the boilerplate-augmented corpus (the
-    * planted mid-df regime — see the entry comment) and with the df bound
-    * raised to the entry's maxDf = 1000. */
-  private val containmentPrefixOracle: String =
-    """WITH t AS (SELECT doc_id,
-         lower(trim(regexp_replace(
-           text || ' zqbp zqboiler zqplate zqg' || CAST(doc_id % 10 AS VARCHAR),
-           '\s+', ' ', 'g'))) AS norm FROM documents WHERE doc_id % 4 = 0),
-       tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-       g0 AS (SELECT doc_id,
-         list_distinct(CASE WHEN len(toks) >= 3 THEN
-           list_transform(generate_series(1, len(toks) - 2),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-           ELSE [] END) AS grams FROM tk),
-       g AS (SELECT * FROM g0 WHERE len(grams) > 0),
-       sz AS (SELECT doc_id, CAST(len(grams) AS DOUBLE) AS n_grams FROM g),
-       post AS (SELECT doc_id, unnest(grams) AS gram FROM g),
+  /** Containment oracle over the `t(doc_id, norm)` corpus CTE `normT`:
+    * directed 3-gram containment >= 0.8 of every pair sharing a gram with
+    * df in [2, `maxDf`]. Both containment forms are bit-identical to it —
+    * the base form at maxDf 20 on the raw fixture (max gram df = 7), the
+    * positional-prefix form at maxDf 1000 on its planted corpus (see
+    * [[graft.operators.Dedup.containmentPairsPrefix]]). */
+  private def containmentOracle(normT: String, maxDf: Int): String = trigramCtes(normT) + s""",
+       ne AS (SELECT * FROM g WHERE len(grams) > 0),
+       sz AS (SELECT doc_id, CAST(len(grams) AS DOUBLE) AS n_grams FROM ne),
+       post AS (SELECT doc_id, unnest(grams) AS gram FROM ne),
        keep AS (SELECT gram FROM (SELECT gram, count(*) AS df FROM post GROUP BY gram)
-                WHERE df BETWEEN 2 AND 1000),
+                WHERE df BETWEEN 2 AND $maxDf),
        bounded AS (SELECT p.doc_id, p.gram FROM post p JOIN keep k ON p.gram = k.gram),
        inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
            CAST(count(*) AS DOUBLE) AS inter
@@ -340,7 +781,7 @@ object SparkEntry {
        SELECT b_id, a_id, c_ba FROM sc WHERE c_ba >= 0.8"""
 
   // ------------------------------------------------------------------
-  // Driver-visible quality gates (verdict r9 task 1): the spec-level
+  // Oracle-checked quality gates: the spec-level
   // recall / agreement / bit-equality gates, promoted into the driver
   // record through the proven bounds-gate pattern (q_sketch_reagg_bounds):
   // Spark computes the quality metric AND its boolean verdict, every
@@ -358,8 +799,8 @@ object SparkEntry {
   // operator form.
   // ------------------------------------------------------------------
 
-  /** Materialize a gate input once. r17 NOTE (measured, then mostly
-    * retired): checkpointing every gate input looked like the KN/NB one-scan
+  /** Materialize a gate input once. Checkpointing every gate input (measured,
+    * then mostly retired) looked like the KN/NB one-scan
     * discipline, but Spark's ReuseExchange/ReuseSubquery already dedups the
     * identical exchange subtrees a gate's 2–3 references create inside ONE
     * plan — the measured effect of blanket gate checkpoints was a 0.5–1.4 s
@@ -422,7 +863,7 @@ object SparkEntry {
     // exchange that ReuseExchange collapses across the gate's references),
     // pair sets end in join+filter — NOT exchange-terminated — so the
     // truth's expensive pair scan would re-run once per reference (3× with
-    // precision). Checkpoint the bounded pair lists once (r17, measured:
+    // precision). Checkpoint the bounded pair lists once (measured:
     // the pair gates were the one family where the gate checkpoint WON).
     val t = gateCkpt(truth.select(col("a_id"), col("b_id")))
     val g =
@@ -444,24 +885,7 @@ object SparkEntry {
 
   /** Shared oracle for both curation-audit forms (text-keyed and
     * fingerprint-keyed — verdicts identical barring 64-bit collision). */
-  private val curateAuditOracle: String =
-    """WITH t AS (SELECT doc_id,
-        lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-      x AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t),
-      s AS (SELECT doc_id, norm, CAST(len(toks) AS BIGINT) AS n_tokens,
-        CAST(length(replace(norm, ' ', '')) AS DOUBLE) / len(toks) AS avg_token_len,
-        len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS score_en,
-        len(list_filter(toks, t -> t IN ('der','die','und','ist','das'))) AS score_de,
-        len(list_filter(toks, t -> t IN ('el','la','de','que','y'))) AS score_es,
-        len(list_filter(toks, t -> t IN ('le','la','et','les','des'))) AS score_fr
-        FROM x),
-      l AS (SELECT *,
-        CASE WHEN greatest(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
-             WHEN score_en = greatest(score_en, score_de, score_es, score_fr) THEN 'en'
-             WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
-             WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
-             ELSE 'fr' END AS pred_lang
-        FROM s),
+  private val curateAuditOracle: String = langScoredCtes + """,
       g AS (SELECT doc_id, norm,
         CASE WHEN pred_lang != 'en' THEN 'lang'
              WHEN n_tokens < 20 THEN 'too_short'
@@ -641,25 +1065,15 @@ object SparkEntry {
       Some("""SELECT e.event_id, e.user_id, coalesce(c.c_name, 'Unknown') AS customer_name
               FROM events e LEFT JOIN
               (SELECT c_custkey, c_name FROM customer WHERE c_mktsegment = 'BUILDING') c
-              ON e.user_id = c.c_custkey""")),
+              ON e.user_id = c.c_custkey"""), headline = true),
 
     Q("a1_hour_counts",
       (s, d) => Views.hourCounts(Tables.events(s, d)),
-      Some("""SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
-              event_type, count(*) AS cnt FROM events GROUP BY 1, 2""")),
+      Some(hourTypeCountsOracle), headline = true),
 
     Q("a2_bucket_counts",
       (s, d) => Views.multiGranularityCounts(Tables.events(s, d)),
-      Some("""WITH b AS (
-              SELECT '5min' AS granularity,
-                '5min:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') ||
-                lpad(CAST((minute(CAST(ts AS TIMESTAMP)) // 5) * 5 AS VARCHAR), 2, '0') AS time_bucket
-              FROM events
-              UNION ALL
-              SELECT 'hourly', 'hourly:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') FROM events
-              UNION ALL
-              SELECT 'daily', 'daily:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d') FROM events)
-              SELECT granularity, time_bucket, count(*) AS cnt FROM b GROUP BY 1, 2""")),
+      Some(bucketCountsOracle), headline = true),
 
     Q("a3_hour_totals",
       (s, d) => Views.hourTotals(Tables.events(s, d)),
@@ -673,7 +1087,7 @@ object SparkEntry {
       Some("""SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props
               FROM (SELECT *, row_number() OVER (PARTITION BY user_id
                       ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn FROM events)
-              WHERE rn = 1""")),
+              WHERE rn = 1"""), headline = true),
 
     Q("s5_counter_lookup",
       (s, d) => Views.counterLookup(Tables.events(s, d), "hourly", "hourly:2024010100"),
@@ -699,7 +1113,7 @@ object SparkEntry {
               (SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
                 row_number() OVER (PARTITION BY event_type
                   ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id) AS rn FROM events)
-              WHERE rn <= 10""")))
+              WHERE rn <= 10"""), headline = true))
 
   // ------------------------------------------------------------------
   // general relational closure (SURVEY.md §7.2 step 3)
@@ -723,7 +1137,7 @@ object SparkEntry {
               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
               count(*) AS count_order
               FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-              GROUP BY l_returnflag, l_linestatus""")),
+              GROUP BY l_returnflag, l_linestatus"""), headline = true),
 
     Q("q5_region_revenue", // TPC-H Q5 shape: 6-table join chain — Catalyst prunes,
       // reorders, and broadcasts the small dims; the fact scan shuffles once
@@ -770,7 +1184,7 @@ object SparkEntry {
               JOIN lineitem ON o_orderkey = l_orderkey
               WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
               GROUP BY o_orderkey, o_orderdate
-              ORDER BY revenue DESC, o_orderkey LIMIT 10""")),
+              ORDER BY revenue DESC, o_orderkey LIMIT 10"""), headline = true),
 
     Q("q_semi_join",
       (s, d) => Tables.customer(s, d)
@@ -778,7 +1192,7 @@ object SparkEntry {
           Seq("c_custkey"), "left_semi")
         .select("c_custkey", "c_name"),
       Some("""SELECT c_custkey, c_name FROM customer c
-              WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""")),
+              WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"""), headline = true),
 
     Q("q_anti_join",
       (s, d) => Tables.customer(s, d)
@@ -896,7 +1310,7 @@ object SparkEntry {
       Some("""WITH e AS (SELECT event_type,
                 strftime(CAST(ts AS TIMESTAMP), '%Y%m%d') AS day_bucket FROM events)
               SELECT event_type, day_bucket, count(*) AS n FROM e
-              GROUP BY CUBE(event_type, day_bucket)""")),
+              GROUP BY CUBE(event_type, day_bucket)"""), headline = true),
 
     Q("q_window_ranking", // ranking-family closure: ntile buckets, rank with
       // gaps, dense rank, percent_rank/cume_dist distribution positions
@@ -959,7 +1373,7 @@ object SparkEntry {
                 ORDER BY CAST(ts AS TIMESTAMP), event_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
               FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)""")),
+              WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)"""), headline = true),
 
     Q("q_window_range_frame", // event-time RANGE frame: trailing 1-hour sum per user.
       // Frame bounds are on epoch MICROSECONDS (not an interval literal) so both
@@ -1054,25 +1468,19 @@ object SparkEntry {
                 PARTITION BY user_id ORDER BY uts, is_l, tie
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS purchase_event_id
               FROM u)
-              SELECT event_id, user_id, ts, purchase_event_id FROM f WHERE is_l = 1""")),
+              SELECT event_id, user_id, ts, purchase_event_id FROM f WHERE is_l = 1"""), headline = true),
 
     Q("q_range_join",
       (s, d) => Ops.rangeSelfJoin(
         Tables.events(s, d).select("user_id", "ts", "event_id"),
         Seq("user_id"), "ts", "event_id", expr("INTERVAL 5 MINUTES")),
-      Some("""SELECT a.user_id AS user_id, a.event_id AS a_event_id, b.event_id AS b_event_id
-              FROM events a JOIN events b ON a.user_id = b.user_id
-              AND CAST(b.ts AS TIMESTAMP) > CAST(a.ts AS TIMESTAMP)
-              AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 5 MINUTE""")),
+      Some(rangeJoinOracle)),
 
     Q("q_range_join_bucketed", // the 100 TB form — identical output, bounded per-task work
       (s, d) => Ops.rangeSelfJoinBucketed(
         Tables.events(s, d).select("user_id", "ts", "event_id"),
         Seq("user_id"), "ts", "event_id", bandSeconds = 300L),
-      Some("""SELECT a.user_id AS user_id, a.event_id AS a_event_id, b.event_id AS b_event_id
-              FROM events a JOIN events b ON a.user_id = b.user_id
-              AND CAST(b.ts AS TIMESTAMP) > CAST(a.ts AS TIMESTAMP)
-              AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 5 MINUTE""")),
+      Some(rangeJoinOracle), headline = true),
 
     Q("q_interval_join", // symmetric interval-overlap join ([ts, ts+10m) windows)
       (s, d) => {
@@ -1169,9 +1577,7 @@ object SparkEntry {
             (col("__est") >= col("exact_users") * 0.85 &&
              col("__est") <= col("exact_users") * 1.15).as("within_bounds"))
       },
-      Some("""SELECT event_type, count(DISTINCT user_id) AS exact_users,
-              TRUE AS within_bounds
-              FROM events GROUP BY event_type""")),
+      Some(distinctBoundsOracle)),
 
     Q("q_sketch_reagg", // RE-AGGREGATABLE distinct-count sketches — the
       // incremental-dashboard pattern at 100 TB: materialize one HLL sketch
@@ -1187,8 +1593,8 @@ object SparkEntry {
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("distinct_users_est")),
       None),
 
-    Q("q_sketch_reagg_bounds", // driver-visible error gate for the sketch layer
-      // (verdict r5 task 5): per stratum, the merged-HLL estimate must land in
+    Q("q_sketch_reagg_bounds", // oracle-checked error gate for the sketch layer:
+      // per stratum, the merged-HLL estimate must land in
       // [exact*(1-eps), exact*(1+eps)] against the EXACT distinct count — the
       // boolean plus the exact count ARE hash-oracled (DuckDB computes the same
       // exact count and expects within_bounds = TRUE; it cannot reproduce the
@@ -1208,9 +1614,7 @@ object SparkEntry {
             (col("est") >= col("exact_users") * 0.95 &&
              col("est") <= col("exact_users") * 1.05).as("within_bounds"))
       },
-      Some("""SELECT event_type, count(DISTINCT user_id) AS exact_users,
-              TRUE AS within_bounds
-              FROM events GROUP BY event_type""")),
+      Some(distinctBoundsOracle)),
 
     Q("q_pivot",
       (s, d) => Tables.events(s, d)
@@ -1397,7 +1801,7 @@ object SparkEntry {
       (s, d) => Ops.approxHeavyHitters(Tables.events(s, d), "event_type",
         k = 5, capacity = 64),
       Some("""SELECT event_type AS item, count(*) AS est_count FROM events
-              GROUP BY event_type ORDER BY est_count DESC, item LIMIT 5""")),
+              GROUP BY event_type ORDER BY est_count DESC, item LIMIT 5"""), headline = true),
 
     Q("q_heavy_hitters_by_key", // per-group Misra-Gries in the EXACT regime
       // (150 users << capacity 1024): top-3 users per event type; tasks keep
@@ -1419,28 +1823,7 @@ object SparkEntry {
     Q("pipeline_curate", // flagship composition: lang filter → quality gate → dedup
       (s, d) => Curation.curateCorpus(Tables.documents(s, d),
         lang = "en", minTokens = 20, maxAvgTokenLen = 5.0),
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              x AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t),
-              s AS (SELECT doc_id, norm, CAST(len(toks) AS BIGINT) AS n_tokens,
-                CAST(length(replace(norm, ' ', '')) AS DOUBLE) / len(toks) AS avg_token_len,
-                len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS score_en,
-                len(list_filter(toks, t -> t IN ('der','die','und','ist','das'))) AS score_de,
-                len(list_filter(toks, t -> t IN ('el','la','de','que','y'))) AS score_es,
-                len(list_filter(toks, t -> t IN ('le','la','et','les','des'))) AS score_fr
-                FROM x),
-              l AS (SELECT *,
-                CASE WHEN greatest(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
-                     WHEN score_en = greatest(score_en, score_de, score_es, score_fr) THEN 'en'
-                     WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
-                     WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
-                     ELSE 'fr' END AS pred_lang
-                FROM s),
-              f AS (SELECT * FROM l
-                WHERE pred_lang = 'en' AND n_tokens >= 20 AND avg_token_len <= 5.0)
-              SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens,
-                round(min(avg_token_len), 6) AS avg_token_len, count(*) AS dup_count
-              FROM f GROUP BY norm""")),
+      Some(curateOracle)),
 
     Q("pipeline_curate_fp", // same pipeline, 100 TB shuffle shape: dedup keyed on
       // xxhash64(norm) so the exchange carries 8-byte keys, not documents —
@@ -1448,28 +1831,7 @@ object SparkEntry {
       // PropertySpec asserts multiset equivalence for every corpus)
       (s, d) => Curation.curateCorpusByFingerprint(Tables.documents(s, d),
         lang = "en", minTokens = 20, maxAvgTokenLen = 5.0),
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              x AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t),
-              s AS (SELECT doc_id, norm, CAST(len(toks) AS BIGINT) AS n_tokens,
-                CAST(length(replace(norm, ' ', '')) AS DOUBLE) / len(toks) AS avg_token_len,
-                len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS score_en,
-                len(list_filter(toks, t -> t IN ('der','die','und','ist','das'))) AS score_de,
-                len(list_filter(toks, t -> t IN ('el','la','de','que','y'))) AS score_es,
-                len(list_filter(toks, t -> t IN ('le','la','et','les','des'))) AS score_fr
-                FROM x),
-              l AS (SELECT *,
-                CASE WHEN greatest(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
-                     WHEN score_en = greatest(score_en, score_de, score_es, score_fr) THEN 'en'
-                     WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
-                     WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
-                     ELSE 'fr' END AS pred_lang
-                FROM s),
-              f AS (SELECT * FROM l
-                WHERE pred_lang = 'en' AND n_tokens >= 20 AND avg_token_len <= 5.0)
-              SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens,
-                round(min(avg_token_len), 6) AS avg_token_len, count(*) AS dup_count
-              FROM f GROUP BY norm""")),
+      Some(curateOracle)),
 
     Q("pipeline_curate_semantic", // quality gates + SemDeDup embedding-space
       // dedup (catches paraphrases exact dedup cannot) as a DRIVER-VISIBLE
@@ -1521,9 +1883,7 @@ object SparkEntry {
       // (chunkSize=64, overlap=16 → stride 48); every token covered, last
       // chunk may be short; map-only expansion, tokenize-once
       (s, d) => Curation.chunkDocuments(Tables.documents(s, d), 64, 16),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               c AS (SELECT doc_id, toks,
                 CAST(greatest(ceil((len(toks) - 64) / 48.0), 0) AS BIGINT) + 1 AS n_chunks
                 FROM t),
@@ -1538,14 +1898,7 @@ object SparkEntry {
       // groups (doc_id mod 32 — parallelism knob), running token total per
       // group, pack cut at each 2048-token budget crossing
       (s, d) => Curation.packByTokenBudget(Tables.documents(s, d), 2048, 32),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              s AS (SELECT doc_id, doc_id % 32 AS pack_group,
-                CAST(len(toks) AS BIGINT) AS n_tokens FROM t),
-              w AS (SELECT *, SUM(n_tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS tokens_before
-                FROM s)
+      Some(packCtes + """
               SELECT doc_id, pack_group, n_tokens,
                 CAST(floor(tokens_before / 2048.0) AS BIGINT) AS pack_id FROM w""")),
 
@@ -1554,14 +1907,7 @@ object SparkEntry {
       // attention mask / boundary loss reset reads. Budget 512 so sf-fixture
       // packs actually span multiple docs per pack.
       (s, d) => Curation.packManifest(Tables.documents(s, d), 512, 32),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              s AS (SELECT doc_id, doc_id % 32 AS pack_group,
-                CAST(len(toks) AS BIGINT) AS n_tokens FROM t),
-              w AS (SELECT *, SUM(n_tokens) OVER (PARTITION BY pack_group ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS tokens_before
-                FROM s),
+      Some(packCtes + """,
               p AS (SELECT *, CAST(floor(tokens_before / 512.0) AS BIGINT) AS pack_id FROM w)
               SELECT doc_id, pack_group, pack_id,
                 CAST(row_number() OVER (PARTITION BY pack_group, pack_id ORDER BY doc_id) AS BIGINT)
@@ -1646,12 +1992,7 @@ object SparkEntry {
             (col("__nToks") >= col("n_words") &&
               col("__nToks") <= col("__wordChars")).as("count_bounded"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents)
-              SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-                TRUE AS chars_preserved, TRUE AS count_bounded
-              FROM t""")),
+      Some(wordCountGateOracle), headline = true),
 
     Q("text_bpe_encode_fixed", // the encode half under a PINNED literal merge
       // table: deterministic, so hash-oracled — DuckDB replays the merges in
@@ -1663,7 +2004,7 @@ object SparkEntry {
       // stays rows-only (text_bpe_merges) — the merge LOOP is what SQL can't
       // express, not the encode. Literal '<'/'>' chars are stripped on BOTH
       // sides before encoding: the oracle's bracket delimiters would otherwise
-      // collide with document text containing them (advisor, round 5 — the
+      // collide with document text containing them (the
       // fixture has none, but the parity must not depend on that).
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),
@@ -1671,18 +2012,7 @@ object SparkEntry {
             regexp_replace(col("text"), "[<>]", ""), fixedBpeMerges).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_bpe_tokens"),
           array_join(col("toks"), " ").as("bpe_tokens")),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(
-                  regexp_replace(text, '[<>]', '', 'g'), '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              enc AS (SELECT doc_id, list_transform(toks, w ->
-                  replace(replace(replace(replace(replace(replace(replace(replace(replace(replace(
-                    regexp_replace(w, '(.)', '<\1>', 'g'),
-                    '<t><a>', '<ta>'), '<ta><b>', '<tab>'), '<l><e>', '<le>'),
-                    '<s><t>', '<st>'), '<e><r>', '<er>'), '<st><r>', '<str>'),
-                    '<a><n>', '<an>'), '<j><o>', '<jo>'), '<o><w>', '<ow>'),
-                    '<h><a>', '<ha>')) AS encw
-                FROM t)
+      Some(bpeEncodeCtes + """
               SELECT doc_id,
                 CAST(list_sum(list_transform(encw, e -> len(e) - len(replace(e, '<', '')))) AS BIGINT) AS n_bpe_tokens,
                 array_to_string(list_transform(encw, e -> trim(replace(e, '><', ' '), '<>')), ' ') AS bpe_tokens
@@ -1702,19 +2032,7 @@ object SparkEntry {
           size(col("toks")).cast("long").as("n_bpe_tokens"))
         .withColumn("fertility",
           round(col("n_bpe_tokens").cast("double") / col("n_words"), 6)),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(
-                  regexp_replace(text, '[<>]', '', 'g'), '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              enc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-                list_transform(toks, w ->
-                  replace(replace(replace(replace(replace(replace(replace(replace(replace(replace(
-                    regexp_replace(w, '(.)', '<\1>', 'g'),
-                    '<t><a>', '<ta>'), '<ta><b>', '<tab>'), '<l><e>', '<le>'),
-                    '<s><t>', '<st>'), '<e><r>', '<er>'), '<st><r>', '<str>'),
-                    '<a><n>', '<an>'), '<j><o>', '<jo>'), '<o><w>', '<ow>'),
-                    '<h><a>', '<ha>')) AS encw
-                FROM t),
+      Some(bpeEncodeCtes + """,
               n AS (SELECT doc_id, n_words,
                 CAST(list_sum(list_transform(encw, e -> len(e) - len(replace(e, '<', '')))) AS BIGINT) AS n_bpe_tokens
                 FROM enc)
@@ -1773,12 +2091,7 @@ object SparkEntry {
             (col("__nToks") >= col("n_words") &&
               col("__nToks") <= col("__wordChars")).as("count_bounded"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents)
-              SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-                TRUE AS chars_preserved, TRUE AS count_bounded
-              FROM t""")),
+      Some(wordCountGateOracle), headline = true),
 
     Q("text_unigram_encode_fixed", // the Viterbi decode under a PINNED piece
       // table chosen so the optimum is provably "use every piece occurrence"
@@ -1793,16 +2106,7 @@ object SparkEntry {
             regexp_replace(col("text"), "[<>]", ""), fixedUnigramPieces).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_unigram_tokens"),
           array_join(col("toks"), " ").as("unigram_tokens")),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(
-                  regexp_replace(text, '[<>]', '', 'g'), '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              enc AS (SELECT doc_id, list_transform(toks, w ->
-                  replace(replace(replace(replace(replace(replace(
-                    regexp_replace(w, '(.)', '<\1>', 'g'),
-                    '<e><r>', '<er>'), '<a><n>', '<an>'), '<i><n>', '<in>'),
-                    '<o><n>', '<on>'), '<l><y>', '<ly>'), '<c><h>', '<ch>')) AS encw
-                FROM t)
+      Some(unigramEncodeCtes + """
               SELECT doc_id,
                 CAST(list_sum(list_transform(encw, e -> len(e) - len(replace(e, '<', '')))) AS BIGINT) AS n_unigram_tokens,
                 array_to_string(list_transform(encw, e -> trim(replace(e, '><', ' '), '<>')), ' ') AS unigram_tokens
@@ -1840,12 +2144,7 @@ object SparkEntry {
             (col("__nToks") >= col("__nVit") &&
               col("__nToks") <= col("__wordChars")).as("count_bounded"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents)
-              SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-                TRUE AS chars_preserved, TRUE AS count_bounded
-              FROM t""")),
+      Some(wordCountGateOracle)),
 
     Q("text_unigram_fertility", // tokenizer-audit fertility under the pinned
       // unigram piece table (the text_bpe_fertility twin — comparing the two
@@ -1862,17 +2161,7 @@ object SparkEntry {
           size(col("toks")).cast("long").as("n_unigram_tokens"))
         .withColumn("fertility",
           round(col("n_unigram_tokens").cast("double") / col("n_words"), 6)),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(
-                  regexp_replace(text, '[<>]', '', 'g'), '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              enc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
-                list_transform(toks, w ->
-                  replace(replace(replace(replace(replace(replace(
-                    regexp_replace(w, '(.)', '<\1>', 'g'),
-                    '<e><r>', '<er>'), '<a><n>', '<an>'), '<i><n>', '<in>'),
-                    '<o><n>', '<on>'), '<l><y>', '<ly>'), '<c><h>', '<ch>')) AS encw
-                FROM t),
+      Some(unigramEncodeCtes + """,
               n AS (SELECT doc_id, n_words,
                 CAST(list_sum(list_transform(encw, e -> len(e) - len(replace(e, '<', '')))) AS BIGINT) AS n_unigram_tokens
                 FROM enc)
@@ -1883,13 +2172,7 @@ object SparkEntry {
     Q("text_lm_score", // CCNet-style LM quality signal: self-trained bigram
       // counts, per-doc mean bigram log-probability
       (s, d) => Curation.lmScore(Tables.documents(s, d)),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              b AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-                  list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END) AS bg FROM t),
+      Some(bigramCtes + """,
               cb AS (SELECT bg, count(*) AS c_bg FROM b GROUP BY bg),
               cw AS (SELECT string_split(bg, ' ')[1] AS w1, sum(c_bg) AS c_w1
                 FROM cb GROUP BY 1)
@@ -1905,28 +2188,8 @@ object SparkEntry {
       // integer-count algebra in doubles, so fully hash-oracled against
       // DuckDB recomputing the identical expression tree
       (s, d) => Curation.lmScoreKneserNey(Tables.documents(s, d)),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              b AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-                  list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END) AS bg FROM t),
-              cb AS (SELECT bg, count(*) AS c_bg,
-                  string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2
-                FROM b GROUP BY bg),
-              ls AS (SELECT w1, sum(c_bg) AS c_w1, count(*) AS n1p_w1
-                FROM cb GROUP BY w1),
-              rs AS (SELECT w2, count(*) AS n1p_w2,
-                  sum(count(*)) OVER () AS n_types
-                FROM cb GROUP BY w2),
-              m AS (SELECT bg,
-                  (c_bg - 0.75) / c_w1 + 0.75 * n1p_w1 / c_w1 *
-                    (CAST(n1p_w2 AS DOUBLE) / n_types) AS p_kn
-                FROM cb JOIN ls USING (w1) JOIN rs USING (w2))
-              SELECT doc_id, count(*) AS n_bigrams,
-                round(avg(ln(p_kn)), 6) AS kn_score
-              FROM b JOIN m USING (bg) GROUP BY doc_id""")),
+      Some(knBucketCtes + """
+              SELECT doc_id, n_bigrams, kn_score FROM s""")),
 
     Q("pipeline_perplexity_buckets", // CCNet's OUTPUT artifact: head/middle/
       // tail perplexity tertiles. NOT an ntile window (whole-corpus one-task
@@ -1935,11 +2198,7 @@ object SparkEntry {
       // boundary comparison hash-oracles
       (s, d) => Curation.perplexityBuckets(Tables.documents(s, d)),
       Some(knBucketCtes + """
-              SELECT doc_id, n_bigrams, kn_score,
-                CAST(3 - (CASE WHEN kn_score > t0 THEN 1 ELSE 0 END +
-                          CASE WHEN kn_score > t1 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS ppl_bucket
-              FROM s, th""")),
+              SELECT doc_id, n_bigrams, kn_score, ppl_bucket FROM pb""")),
 
     Q("pipeline_curriculum_order", // curriculum data ordering (Bengio et al.
       // 2009): one sortable key per doc — bucket-major (easy tertile first),
@@ -1952,11 +2211,7 @@ object SparkEntry {
                 ppl_bucket * 4503599627370496 +
                   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT)
                   AS order_key
-              FROM (SELECT doc_id,
-                  CAST(3 - (CASE WHEN kn_score > t0 THEN 1 ELSE 0 END +
-                            CASE WHEN kn_score > t1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS ppl_bucket
-                FROM s, th) z""")),
+              FROM pb""")),
 
     Q("pipeline_vocab_coverage", // tokenizer-vocabulary coverage monitor: the
       // corpus's OOV rate against a FROZEN vocab (top-20 tokens of the
@@ -1997,17 +2252,9 @@ object SparkEntry {
           docs.filter(pmod(col("doc_id"), lit(2)) === 0),
           docs.filter(pmod(col("doc_id"), lit(2)) === 1))
       },
-      Some("""WITH t0 AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              tb AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-                  list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END) AS bg FROM t0 WHERE doc_id % 2 = 0),
-              sb AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
-                  list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END) AS bg FROM t0 WHERE doc_id % 2 = 1),
+      Some(bigramCtes + """,
+              tb AS (SELECT doc_id, bg FROM b WHERE doc_id % 2 = 0),
+              sb AS (SELECT doc_id, bg FROM b WHERE doc_id % 2 = 1),
               cb AS (SELECT bg, count(*) AS c_bg,
                   string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2
                 FROM tb GROUP BY bg),
@@ -2032,7 +2279,7 @@ object SparkEntry {
               SELECT doc_id, count(*) AS n_bigrams,
                 CAST(sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov_bigrams,
                 round(avg(ln(p_kn)), 6) AS kn_score
-              FROM j GROUP BY doc_id""")),
+              FROM j GROUP BY doc_id"""), headline = true),
 
     Q("text_nb_classify", // model-based filtering: multinomial Naive Bayes
       // (add-one smoothing) self-trained on the lang label and self-scored —
@@ -2041,30 +2288,12 @@ object SparkEntry {
       // score = one corpus equi-join; fixture self-accuracy 0.47 vs 0.20
       // chance, gated in ClassifySpec)
       (s, d) => Classify.naiveBayesSelf(Tables.documents(s, d)),
-      Some("""WITH t AS (SELECT doc_id, lang,
-                unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-                FROM documents),
-              tok AS (SELECT doc_id, lang, term FROM t WHERE len(term) > 0),
-              ct AS (SELECT lang AS cand, term, count(*) AS c_ct FROM tok GROUP BY 1, 2),
-              cc AS (SELECT cand, sum(c_ct) AS c_c FROM ct GROUP BY 1),
-              v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS vsz FROM tok),
-              pri AS (SELECT lang AS cand,
-                ln(CAST(count(*) AS DOUBLE) / (SELECT CAST(count(*) AS DOUBLE) FROM documents)) AS logprior
-                FROM documents GROUP BY 1),
-              vocab AS (SELECT DISTINCT term FROM ct),
-              model AS (SELECT vocab.term, pri.cand,
-                ln((CAST(coalesce(ct.c_ct, 0) AS DOUBLE) + 1.0) / (CAST(cc.c_c AS DOUBLE) + v.vsz)) AS logp
-                FROM vocab CROSS JOIN pri JOIN cc USING (cand)
-                LEFT JOIN ct ON ct.term = vocab.term AND ct.cand = pri.cand, v),
-              sc AS (SELECT tok.doc_id, model.cand, sum(model.logp) AS loglik
-                FROM tok JOIN model ON tok.term = model.term GROUP BY 1, 2),
-              scored AS (SELECT doc_id, cand, round(loglik + logprior, 6) AS nb_score
-                FROM sc JOIN pri USING (cand)),
+      Some(nbSelfScoredCtes + """,
               pred AS (SELECT doc_id, cand AS pred_lang, nb_score,
                 row_number() OVER (PARTITION BY doc_id ORDER BY nb_score DESC, cand ASC) AS rn
                 FROM scored)
               SELECT p.doc_id, d.lang, p.pred_lang, p.nb_score, p.pred_lang = d.lang AS correct
-              FROM pred p JOIN documents d USING (doc_id) WHERE rn = 1""")),
+              FROM pred p JOIN documents d USING (doc_id) WHERE rn = 1"""), headline = true),
 
     Q("text_nb_metrics", // the evaluation table for the NB curation filter:
       // per-class precision/recall/F1 + support from ONE classes²-bounded
@@ -2072,25 +2301,7 @@ object SparkEntry {
       // bit-reproducible
       (s, d) => Classify.classificationMetrics(
         Classify.naiveBayesSelf(Tables.documents(s, d))),
-      Some("""WITH t AS (SELECT doc_id, lang,
-                unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-                FROM documents),
-              tok AS (SELECT doc_id, lang, term FROM t WHERE len(term) > 0),
-              ct AS (SELECT lang AS cand, term, count(*) AS c_ct FROM tok GROUP BY 1, 2),
-              cc AS (SELECT cand, sum(c_ct) AS c_c FROM ct GROUP BY 1),
-              v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS vsz FROM tok),
-              pri AS (SELECT lang AS cand,
-                ln(CAST(count(*) AS DOUBLE) / (SELECT CAST(count(*) AS DOUBLE) FROM documents)) AS logprior
-                FROM documents GROUP BY 1),
-              vocab AS (SELECT DISTINCT term FROM ct),
-              model AS (SELECT vocab.term, pri.cand,
-                ln((CAST(coalesce(ct.c_ct, 0) AS DOUBLE) + 1.0) / (CAST(cc.c_c AS DOUBLE) + v.vsz)) AS logp
-                FROM vocab CROSS JOIN pri JOIN cc USING (cand)
-                LEFT JOIN ct ON ct.term = vocab.term AND ct.cand = pri.cand, v),
-              sc AS (SELECT tok.doc_id, model.cand, sum(model.logp) AS loglik
-                FROM tok JOIN model ON tok.term = model.term GROUP BY 1, 2),
-              scored AS (SELECT doc_id, cand, round(loglik + logprior, 6) AS nb_score
-                FROM sc JOIN pri USING (cand)),
+      Some(nbSelfScoredCtes + """,
               pred AS (SELECT doc_id, cand AS pred_lang,
                 row_number() OVER (PARTITION BY doc_id ORDER BY nb_score DESC, cand ASC) AS rn
                 FROM scored),
@@ -2120,25 +2331,7 @@ object SparkEntry {
       // per-bin means are exact integer arithmetic — bit-reproducible
       (s, d) => Classify.calibrationBins(
         Classify.naiveBayesScoresSelf(Tables.documents(s, d)), bins = 10),
-      Some("""WITH t AS (SELECT doc_id, lang,
-                unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-                FROM documents),
-              tok AS (SELECT doc_id, lang, term FROM t WHERE len(term) > 0),
-              ct AS (SELECT lang AS cand, term, count(*) AS c_ct FROM tok GROUP BY 1, 2),
-              cc AS (SELECT cand, sum(c_ct) AS c_c FROM ct GROUP BY 1),
-              v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS vsz FROM tok),
-              pri AS (SELECT lang AS cand,
-                ln(CAST(count(*) AS DOUBLE) / (SELECT CAST(count(*) AS DOUBLE) FROM documents)) AS logprior
-                FROM documents GROUP BY 1),
-              vocab AS (SELECT DISTINCT term FROM ct),
-              model AS (SELECT vocab.term, pri.cand,
-                ln((CAST(coalesce(ct.c_ct, 0) AS DOUBLE) + 1.0) / (CAST(cc.c_c AS DOUBLE) + v.vsz)) AS logp
-                FROM vocab CROSS JOIN pri JOIN cc USING (cand)
-                LEFT JOIN ct ON ct.term = vocab.term AND ct.cand = pri.cand, v),
-              sc AS (SELECT tok.doc_id, model.cand, sum(model.logp) AS loglik
-                FROM tok JOIN model ON tok.term = model.term GROUP BY 1, 2),
-              scored AS (SELECT doc_id, cand, round(loglik + logprior, 6) AS nb_score
-                FROM sc JOIN pri USING (cand)),
+      Some(nbSelfScoredCtes + """,
               soft AS (SELECT doc_id, cand, nb_score,
                 exp(nb_score - max(nb_score) OVER (PARTITION BY doc_id)) AS e
                 FROM scored),
@@ -2166,26 +2359,10 @@ object SparkEntry {
           docs.filter(pmod(col("doc_id"), lit(2)) === 0),
           docs.filter(pmod(col("doc_id"), lit(2)) =!= 0))
       },
-      Some("""WITH tr AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-              te AS (SELECT * FROM documents WHERE doc_id % 2 <> 0),
-              t AS (SELECT doc_id, lang,
-                unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-                FROM tr),
-              tok AS (SELECT doc_id, lang, term FROM t WHERE len(term) > 0),
-              ct AS (SELECT lang AS cand, term, count(*) AS c_ct FROM tok GROUP BY 1, 2),
-              cc AS (SELECT cand, sum(c_ct) AS c_c FROM ct GROUP BY 1),
-              v AS (SELECT CAST(count(DISTINCT term) AS DOUBLE) AS vsz FROM tok),
-              pri AS (SELECT lang AS cand,
-                ln(CAST(count(*) AS DOUBLE) / (SELECT CAST(count(*) AS DOUBLE) FROM tr)) AS logprior
-                FROM tr GROUP BY 1),
-              vocab AS (SELECT DISTINCT term FROM ct),
-              model AS (SELECT vocab.term, pri.cand,
-                ln((CAST(coalesce(ct.c_ct, 0) AS DOUBLE) + 1.0) / (CAST(cc.c_c AS DOUBLE) + v.vsz)) AS logp
-                FROM vocab CROSS JOIN pri JOIN cc USING (cand)
-                LEFT JOIN ct ON ct.term = vocab.term AND ct.cand = pri.cand, v),
+      Some(nbModelCtes("documents WHERE doc_id % 2 = 0") + """,
               s AS (SELECT doc_id, lang,
                 unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS term
-                FROM te),
+                FROM documents WHERE doc_id % 2 <> 0),
               stok AS (SELECT doc_id, lang, term FROM s WHERE len(term) > 0),
               sc AS (SELECT stok.doc_id, any_value(stok.lang) AS lang, model.cand,
                 sum(model.logp) AS loglik
@@ -2253,8 +2430,7 @@ object SparkEntry {
       // blocked Levenshtein with a native banded early-abandon DP
       // (O(len*maxDist) per distinct candidate pair)
       (s, d) => Dedup.editDistancePairs(Tables.documents(s, d), maxDist = 20),
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
+      Some(normCte + """,
               g AS (SELECT doc_id, norm, substr(norm, 1, 40) AS pb,
                 substr(norm, greatest(length(norm) - 39, 1), 40) AS sb FROM t)
               SELECT a.doc_id AS a_id, b.doc_id AS b_id,
@@ -2265,21 +2441,14 @@ object SparkEntry {
     Q("dedup_exact",
       (s, d) => Dedup.exactDedup(Tables.documents(s, d)),
       Some("""SELECT min(doc_id) AS doc_id, count(*) AS dup_count FROM documents
-              GROUP BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))""")),
+              GROUP BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""), headline = true),
 
     Q("dedup_exact_canonical", // canonical selection: per duplicate group keep
       // the LONGEST raw text (ties to smallest doc_id) — one skew-immune
       // max_by aggregation, no window sort of the duplicate group
       (s, d) => Dedup.exactDedupCanonical(Tables.documents(s, d),
         length(col("text")).cast("long")),
-      Some("""WITH t AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-                FROM documents),
-              r AS (SELECT doc_id, norm,
-                row_number() OVER (PARTITION BY norm ORDER BY q DESC, doc_id) AS rn,
-                count(*) OVER (PARTITION BY norm) AS dup_count FROM t)
-              SELECT doc_id, CAST(dup_count AS BIGINT) AS dup_count
-              FROM r WHERE rn = 1""")),
+      Some(exactCanonicalOracle), headline = true),
 
     Q("dedup_exact_canonical_fp", // scale path of the canonical selection: same
       // argmax, but keyed on the 8-byte xxhash64 fingerprint instead of the
@@ -2290,14 +2459,7 @@ object SparkEntry {
       // dedup_exact_canonical's FULL hash oracle — promoted from rows-only.
       (s, d) => Dedup.exactDedupCanonicalByFingerprint(Tables.documents(s, d),
         length(col("text")).cast("long")),
-      Some("""WITH t AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS q,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm
-                FROM documents),
-              r AS (SELECT doc_id, norm,
-                row_number() OVER (PARTITION BY norm ORDER BY q DESC, doc_id) AS rn,
-                count(*) OVER (PARTITION BY norm) AS dup_count FROM t)
-              SELECT doc_id, CAST(dup_count AS BIGINT) AS dup_count
-              FROM r WHERE rn = 1""")),
+      Some(exactCanonicalOracle)),
 
     Q("dedup_dup_spans", // cross-document duplicate SPANS (Lee et al. 2022
       // substring dedup, dataflow form): every 8-gram shared by >= 2 docs,
@@ -2306,24 +2468,7 @@ object SparkEntry {
       // identical output barring a 64-bit collision (cf pipeline_curate_fp),
       // and DedupSpec asserts hashed == string-keyed on the fixture.
       (s, d) => Dedup.duplicateSpans(Tables.documents(s, d), n = 8, minDocs = 2),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 7)) AS i, toks
-                FROM t WHERE len(toks) >= 8),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7], ' ') AS gram
-                FROM g),
-              d AS (SELECT gram FROM g2 GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-              h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN d USING (gram)),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l)
-              SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-                CAST(max(pos) + 7 AS BIGINT) AS span_end, count(*) AS n_grams
-              FROM s GROUP BY doc_id, island""")),
+      Some(dupSpanCtes + islandSpansSelect(8)), headline = true),
 
     Q("dedup_incremental_spans", // cross-snapshot duplicate spans: the new
       // batch (doc_id % 5 = 0) is span-checked against ITSELF (>= 2 batch
@@ -2336,82 +2481,28 @@ object SparkEntry {
           docs.filter(col("doc_id") % 5 === 0),
           docs.filter(col("doc_id") % 5 =!= 0), n = 8, minDocs = 2)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 7)) AS i, toks
-                FROM t WHERE len(toks) >= 8),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7], ' ') AS gram
-                FROM g),
+      Some(posGramCtes(8) + """,
               bg AS (SELECT * FROM g2 WHERE doc_id % 5 = 0),
               baseg AS (SELECT DISTINCT gram FROM g2 WHERE doc_id % 5 <> 0),
               nd AS (SELECT gram, count(DISTINCT doc_id) AS nd FROM bg GROUP BY gram),
               h AS (SELECT bg.doc_id, bg.pos FROM bg
                 JOIN nd ON bg.gram = nd.gram
                 LEFT JOIN baseg ON bg.gram = baseg.gram
-                WHERE nd.nd >= 2 OR baseg.gram IS NOT NULL),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l)
-              SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-                CAST(max(pos) + 7 AS BIGINT) AS span_end, count(*) AS n_grams
-              FROM s GROUP BY doc_id, island""")),
+                WHERE nd.nd >= 2 OR baseg.gram IS NOT NULL)""" +
+        hitIslandCtes(8) + islandSpansSelect(8))),
 
     Q("dedup_trim_spans", // the removal half of substring dedup: normalized
       // text rebuilt with every cross-doc duplicate span dropped (the
       // conservative remove-all-occurrences ExactSubstr policy); docs with no
       // duplicated span pass through whole
       (s, d) => Dedup.trimDuplicateSpans(Tables.documents(s, d), n = 8, minDocs = 2),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 7)) AS i, toks
-                FROM t WHERE len(toks) >= 8),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7], ' ') AS gram
-                FROM g),
-              d AS (SELECT gram FROM g2 GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-              h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN d USING (gram)),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l),
-              sp AS (SELECT doc_id, min(pos) AS a, max(pos) + 7 AS b
-                FROM s GROUP BY doc_id, island),
-              tok AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS j, toks FROM t),
-              tok2 AS (SELECT doc_id, j - 1 AS p, toks[j] AS w FROM tok),
-              kept AS (SELECT k.doc_id, k.p, k.w FROM tok2 k
-                WHERE NOT EXISTS (SELECT 1 FROM sp
-                  WHERE sp.doc_id = k.doc_id AND k.p BETWEEN sp.a AND sp.b)),
-              agg AS (SELECT doc_id, array_to_string(list(w ORDER BY p), ' ') AS text_trimmed,
-                count(*) AS n_kept FROM kept GROUP BY doc_id)
-              SELECT t.doc_id, coalesce(agg.text_trimmed, '') AS text_trimmed,
-                CAST(len(t.toks) - coalesce(agg.n_kept, 0) AS BIGINT) AS n_tokens_removed
-              FROM t LEFT JOIN agg ON t.doc_id = agg.doc_id""")),
+      Some(dupSpanCtes + trimSpansSelect("t", 8))),
 
     Q("text_dup_span_fraction", // per-doc fraction of tokens covered by
       // cross-doc duplicate spans — the boilerplate-share quality signal a
       // curation gate consumes; 0.0 for documents with no duplicated span
       (s, d) => Dedup.dupSpanFraction(Tables.documents(s, d), n = 8, minDocs = 2),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 7)) AS i, toks
-                FROM t WHERE len(toks) >= 8),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+7], ' ') AS gram
-                FROM g),
-              d AS (SELECT gram FROM g2 GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-              h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN d USING (gram)),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l),
+      Some(dupSpanCtes + """,
               sp AS (SELECT doc_id, min(pos) AS a, max(pos) + 7 AS b
                 FROM s GROUP BY doc_id, island),
               c AS (SELECT doc_id, sum(b - a + 1) AS cov FROM sp GROUP BY doc_id)
@@ -2447,7 +2538,7 @@ object SparkEntry {
               SELECT a.doc_id AS a_id, b2.doc_id AS b_id,
                 CAST(count(*) AS BIGINT) AS shared_fps
               FROM b a JOIN b b2 ON a.fp = b2.fp AND a.doc_id < b2.doc_id
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+              GROUP BY 1, 2 HAVING count(*) >= 3"""), headline = true),
 
     Q("dedup_winnow_incremental", // the cross-snapshot lifecycle the sampled
       // fingerprint table exists for: the new-crawl slice (doc_id % 20 = 0)
@@ -2462,17 +2553,10 @@ object SparkEntry {
           docs.filter(col("doc_id") % 20 =!= 0),
           k = 5, w = 4, minShared = 3L, maxDf = 1000, md5Keys = true)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle)),
 
-    Q("dedup_winnow_persisted", // the winnow index lifecycle ON DISK (r11
-      // verdict ask #7, completing symmetry with the IVF persisted family):
+    Q("dedup_winnow_persisted", // the winnow index lifecycle ON DISK
+      // (completing symmetry with the IVF persisted family):
       // the frozen base's fingerprints persist bucketed on fp
       // (Dedup.writeWinnowIndex), the new-crawl slice probes the table read
       // BACK from disk — so this entry's hash match proves the store/probe
@@ -2491,14 +2575,7 @@ object SparkEntry {
             k = 5, w = 4, md5Keys = true),
           s.table("graft_winnow_idx"), minShared = 3L, maxDf = 1000)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle), headline = true),
 
     Q("dedup_winnow_persisted_append", // the winnow index lifecycle's APPEND
       // half (the sim_ivf_persisted_append_topk contract): build the bucketed
@@ -2525,17 +2602,10 @@ object SparkEntry {
             k = 5, w = 4, md5Keys = true),
           s.table("graft_winnow_idx_app"), minShared = 3L, maxDf = 1000)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle)),
 
     Q("dedup_winnow_persisted_delete", // the winnow index lifecycle's DELETE
-      // half (r12 verdict ask #1, completing build/append/delete/probe
+      // half (completing build/append/delete/probe
       // symmetry with sim_ivf_persisted_delete_topk): build the bucketed
       // table on the base snapshot, append DECOYS — the probe batch's own
       // texts under shifted doc_ids, so every decoy WOULD surface as a
@@ -2566,17 +2636,10 @@ object SparkEntry {
           Dedup.winnowFingerprints(batch, k = 5, w = 4, md5Keys = true),
           s.table("graft_winnow_idx_del"), minShared = 3L, maxDf = 1000)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle), headline = true),
 
-    Q("dedup_winnow_persisted_compact", // bucketed-layout COMPACTION (r12
-      // verdict ask #4): build on half the base, append the other half —
+    Q("dedup_winnow_persisted_compact", // bucketed-layout COMPACTION:
+      // build on half the base, append the other half —
       // each fp bucket now holds one file per write, the append-side
       // fragmentation every probe then pays in file opens — compact
       // (Lake.compactBucketed: only multi-file buckets rewritten, one file
@@ -2604,17 +2667,10 @@ object SparkEntry {
             k = 5, w = 4, md5Keys = true),
           s.table("graft_winnow_idx_cmp"), minShared = 3L, maxDf = 1000)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle), headline = true),
 
-    Q("dedup_winnow_persisted_rebucket", // bucket-count REBUILD (r13 verdict
-      // ask #5, the mutation compaction defers to): build on half the base
+    Q("dedup_winnow_persisted_rebucket", // bucket-count REBUILD (the
+      // mutation compaction defers to): build on half the base
       // at 4 buckets, append the other half, then RE-BUCKET to 8
       // (Lake.rebucketBucketed — whole-table staged rewrite through the
       // shared rewriteBuckets protocol, then the catalog entry recreated
@@ -2642,14 +2698,7 @@ object SparkEntry {
             k = 5, w = 4, md5Keys = true),
           s.table("graft_winnow_idx_reb"), minShared = 3L, maxDf = 1000)
       },
-      Some(winnowSelCtes + """,
-              basef AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 <> 0),
-              batchf AS (SELECT DISTINCT doc_id, fp FROM fps WHERE doc_id % 20 = 0),
-              good AS (SELECT fp FROM basef GROUP BY fp HAVING count(*) <= 1000)
-              SELECT batchf.doc_id AS batch_id, basef.doc_id AS base_id,
-                CAST(count(*) AS BIGINT) AS shared_fps
-              FROM batchf JOIN basef USING (fp) JOIN good USING (fp)
-              GROUP BY 1, 2 HAVING count(*) >= 3""")),
+      Some(winnowBatchPairsOracle), headline = true),
 
     Q("dedup_minhash_lsh", // DRIVER-VISIBLE recall gate (was rows-only):
       // MinHash-LSH candidate pairs (16 bands x 4 rows, est-Jaccard >= 0.5)
@@ -2664,21 +2713,9 @@ object SparkEntry {
           Dedup.minhashLshPairs(docs, threshold = 0.5),
           floor = 0.8)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, substr(norm, 1, 40) AS block,
-                string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, block,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-                  len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
-                FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id)
+      Some(jaccardPairCtes + """
               SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, TRUE AS recall_ok
-              FROM p WHERE jaccard >= 0.5""")),
+              FROM p WHERE jaccard >= 0.5"""), headline = true),
 
     Q("dedup_simhash", // DRIVER-VISIBLE recall gate: pigeonhole banding makes
       // candidate recall EXACTLY 1.0 at the Hamming budget (a pair within
@@ -2688,7 +2725,7 @@ object SparkEntry {
       // every truth pair must appear among the banded candidates.
       (s, d) => {
         val docs = Tables.documents(s, d)
-        // simhashes materialize ONCE (r17, the gate one-scan discipline) and
+        // simhashes materialize ONCE (the gate one-scan discipline) and
         // feed the all-pairs truth, its broadcast twin, AND the banded
         // candidate pairs — the corpus used to tokenize+sign three times.
         // The truth's nested-loop stream side does O(n) bit_counts per row:
@@ -2715,20 +2752,8 @@ object SparkEntry {
     Q("dedup_ngram_jaccard",
       (s, d) => Dedup.ngramJaccardPairs(Tables.documents(s, d), n = 3,
         prefixLen = 40, threshold = 0.3),
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, substr(norm, 1, 40) AS block,
-                string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, block,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-                  len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
-                FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id)
-              SELECT a_id, b_id, jaccard FROM p WHERE jaccard >= 0.3""")),
+      Some(jaccardPairCtes + """
+              SELECT a_id, b_id, jaccard FROM p WHERE jaccard >= 0.3"""), headline = true),
 
     Q("dedup_containment", // asymmetric near-dup: a short doc pasted inside a
       // longer one scores C(short->long) ~ 1 where Jaccard stays low; directed
@@ -2739,14 +2764,14 @@ object SparkEntry {
       // literal strings — identical barring 64-bit collision.
       (s, d) => Dedup.containmentPairs(Tables.documents(s, d), n = 3,
         maxDf = 20, threshold = 0.8),
-      Some(containmentOracle)),
+      Some(containmentOracle(normCte, maxDf = 20))),
 
     Q("dedup_containment_prefix", // same semantics through the PPJoin-style
       // positional prefix filter: candidates must share one of the contained
       // side's RAREST |g|-ceil(t|g|)+1 grams (pigeonhole bound), so the
       // bucket pair explosion fires only on shared rare grams; exact |A∩B|
       // then comes from array_intersect over candidate gram arrays.
-      // WIRED IN ITS WINNING REGIME (verdict r9 task 2): the raw sf fixtures
+      // WIRED IN ITS WINNING REGIME: the raw sf fixtures
       // have max gram df 25 — no mid-df boilerplate, the regime where the
       // prefix machinery is pure overhead and the base form wins (measured
       // A/B). So this entry PLANTS the regime the form exists for: each doc
@@ -2758,8 +2783,8 @@ object SparkEntry {
       // pair space to shared-RARE-gram candidates. The oracle replays the
       // same augmentation verbatim — still hash-exact; form-equivalence vs
       // the base form at equal params stays pinned in PropertySpec. The
-      // fixture is the doc_id%4 quarter-corpus (verdict r9 task 2's "shrink
-      // its fixture"): at fixture scale NO pair space explodes enough for the
+      // fixture is the doc_id%4 quarter-corpus (kept small): at fixture
+      // scale NO pair space explodes enough for the
       // prefix machinery's constants to pay for themselves — the measured
       // WIN evidence for this form is a 200k-doc mid-df A/B (5.1 s vs the
       // base form's 13.8 s) — so the sweep entry's
@@ -2773,7 +2798,11 @@ object SparkEntry {
               (col("doc_id") % 10).cast("string")).as("text"))
         Dedup.containmentPairsPrefix(docs, n = 3, maxDf = 1000, threshold = 0.8)
       },
-      Some(containmentPrefixOracle)),
+      Some(containmentOracle(
+        """WITH t AS (SELECT doc_id, lower(trim(regexp_replace(
+             text || ' zqbp zqboiler zqplate zqg' || CAST(doc_id % 10 AS VARCHAR),
+             '\s+', ' ', 'g'))) AS norm FROM documents WHERE doc_id % 4 = 0)""",
+        maxDf = 1000))),
 
     Q("dedup_clusters", // connected components over ngram-jaccard pairs
       (s, d) => {
@@ -2781,27 +2810,7 @@ object SparkEntry {
         Dedup.resolveClusters(docs,
           Dedup.ngramJaccardPairs(docs, n = 3, prefixLen = 40, threshold = 0.3))
       },
-      Some("""WITH RECURSIVE t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, substr(norm, 1, 40) AS block,
-                string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, block,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id
-                WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-                  len(list_distinct(list_concat(a.grams, b.grams))) >= 0.3),
-              e AS (SELECT a_id AS src, b_id AS dst FROM p
-                    UNION SELECT b_id, a_id FROM p),
-              reach AS (
-                SELECT doc_id AS id, doc_id AS label FROM documents
-                UNION
-                SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
-              cc AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id)
-              SELECT id AS doc_id, cluster_id, id = cluster_id AS keep FROM cc""")),
+      Some(jaccardClustersOracle)),
 
     Q("dedup_clusters_star", // same components via large-star/small-star
       // contraction — diameter-independent round bound; same oracle
@@ -2810,36 +2819,11 @@ object SparkEntry {
         Dedup.resolveClustersStar(docs,
           Dedup.ngramJaccardPairs(docs, n = 3, prefixLen = 40, threshold = 0.3))
       },
-      Some("""WITH RECURSIVE t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, substr(norm, 1, 40) AS block,
-                string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, block,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id
-                WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-                  len(list_distinct(list_concat(a.grams, b.grams))) >= 0.3),
-              e AS (SELECT a_id AS src, b_id AS dst FROM p
-                    UNION SELECT b_id, a_id FROM p),
-              reach AS (
-                SELECT doc_id AS id, doc_id AS label FROM documents
-                UNION
-                SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
-              cc AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id)
-              SELECT id AS doc_id, cluster_id, id = cluster_id AS keep FROM cc""")),
+      Some(jaccardClustersOracle)),
 
     Q("dedup_embedding_cosine",
       (s, d) => Similarity.cosineDupPairs(Tables.embeddings(s, d), 0.4),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(a.emb)), i -> a.emb[i] * b.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM e a JOIN e b ON a.vec_id < b.vec_id)
+      Some(cosinePairCtes + """
               SELECT a_id, b_id, cosine FROM p WHERE cosine >= 0.4""")),
 
     Q("dedup_embedding_cosine_lsh", // LSH-blocked scale form as a
@@ -2856,15 +2840,7 @@ object SparkEntry {
           Similarity.cosineDupPairsLsh(emb, 0.4, dim = 64, nbits = 3, tables = 8),
           floor = 0.8, withPrecision = true)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(a.emb)), i -> a.emb[i] * b.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM e a JOIN e b ON a.vec_id < b.vec_id)
-              SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, TRUE AS recall_ok,
-                TRUE AS precision_one
-              FROM p WHERE cosine >= 0.4""")),
+      Some(cosinePairRecallOracle), headline = true),
 
     Q("dedup_clusters_canonical", // canonical-selection cluster resolution:
       // components over ngram-jaccard pairs, survivor = LONGEST member
@@ -2876,26 +2852,7 @@ object SparkEntry {
           Dedup.ngramJaccardPairs(docs, n = 3, prefixLen = 40, threshold = 0.3),
           quality = col("n_chars"))
       },
-      Some("""WITH RECURSIVE t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, substr(norm, 1, 40) AS block,
-                string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, block,
-                list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM g a JOIN g b ON a.block = b.block AND a.doc_id < b.doc_id
-                WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-                  len(list_distinct(list_concat(a.grams, b.grams))) >= 0.3),
-              e AS (SELECT a_id AS src, b_id AS dst FROM p
-                    UNION SELECT b_id, a_id FROM p),
-              reach AS (
-                SELECT doc_id AS id, doc_id AS label FROM documents
-                UNION
-                SELECT e.src, r.label FROM e JOIN reach r ON e.dst = r.id),
-              cc AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
+      Some(jaccardClusterCtes + """,
               rep AS (SELECT cluster_id, id AS rep FROM
                 (SELECT cc.id, cc.cluster_id,
                    row_number() OVER (PARTITION BY cc.cluster_id
@@ -2973,8 +2930,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamed, flagged(emb)))
           .select(col("n_new_vecs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_new_vecs, TRUE AS stream_equals_batch
-              FROM embeddings WHERE vec_id % 5 = 0""")),
+      Some(streamGateOracle("n_new_vecs", "embeddings WHERE vec_id % 5 = 0"))),
 
     Q("dedup_semantic_pairs", // SemDeDup k-means-cell-blocked cosine pairs as
       // a DRIVER-VISIBLE recall gate vs the exact all-pairs truth: nlist
@@ -2992,15 +2948,7 @@ object SparkEntry {
           Similarity.semanticDupPairs(emb, 0.4, nassign = 3),
           floor = 0.8, withPrecision = true)
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(a.emb)), i -> a.emb[i] * b.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM e a JOIN e b ON a.vec_id < b.vec_id)
-              SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, TRUE AS recall_ok,
-                TRUE AS precision_one
-              FROM p WHERE cosine >= 0.4""")),
+      Some(cosinePairRecallOracle)),
 
     Q("dedup_semantic", // SemDeDup keep/drop as a DRIVER-VISIBLE verdict gate:
       // components over within-cell pairs, smallest vec_id survives. Gated:
@@ -3048,7 +2996,7 @@ object SparkEntry {
                 FROM q, e WHERE query_id != vec_id),
               r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                 ORDER BY cosine DESC, vec_id) AS rank FROM s)
-              SELECT query_id, vec_id, cosine, rank FROM r WHERE rank <= 10""")),
+              SELECT query_id, vec_id, cosine, rank FROM r WHERE rank <= 10"""), headline = true),
 
     Q("sim_lsh_topk", // DRIVER-VISIBLE recall gate (was rows-only): hyperplane
       // LSH top-10 vs the exact brute-force twin, mean recall@10 over the
@@ -3063,9 +3011,7 @@ object SparkEntry {
           Similarity.lshTopK(emb, q, 10, dim = 64, nbits = 3, tables = 8),
           k = 10, floor = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok")), headline = true),
 
     Q("sim_ivf_topk", // DRIVER-VISIBLE recall gate: k-means-trained IVF
       // (nlist=8, nprobe=5) vs brute force — measured recall@10 0.905,
@@ -3078,9 +3024,7 @@ object SparkEntry {
           Similarity.ivfTopK(emb, q, 10, nlist = 8, nprobe = 5),
           k = 10, floor = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok"))),
 
     Q("sim_ivf_persisted_topk", // the index LIFECYCLE, now as a DRIVER-VISIBLE
       // bit-equality gate: build the cell-partitioned index on disk once,
@@ -3099,9 +3043,7 @@ object SparkEntry {
           Similarity.ivfProbePersisted(s, path, cents, q, 10, nprobe = 5),
           Similarity.ivfTopK(emb, q, 10, nlist = 8, nprobe = 5))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory")), headline = true),
 
     Q("sim_ivf_persisted_append_topk", // the index lifecycle's APPEND half
       // (FAISS add-after-train): build the cell-partitioned index on the
@@ -3125,9 +3067,7 @@ object SparkEntry {
           Similarity.ivfProbeAssigned(
             Similarity.ivfAssignments(emb, cents), cents, q, 10, nprobe = 5))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory"))),
 
     Q("sim_ivf_persisted_compact_topk", // cell-directory COMPACTION — the
       // maintenance half the append lifecycle needs (every append lands new
@@ -3155,12 +3095,10 @@ object SparkEntry {
           Similarity.ivfProbeAssigned(
             Similarity.ivfAssignments(emb, cents), cents, q, 10, nprobe = 5))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory")), headline = true),
 
     Q("sim_ivf_persisted_resplit_topk", // cell-count REBUILD from the index
-      // itself (r13 verdict ask #5's cell-directory half): build the
+      // itself (the cell-directory half of the layout rebuilds): build the
       // persisted index under nlist=8 centroids, then RE-SPLIT it to a
       // fresh nlist=16 set (Similarity.resplitIvfIndex — the index stores
       // the vectors, so re-assignment is one map-only argmax pass over the
@@ -3184,9 +3122,7 @@ object SparkEntry {
           Similarity.ivfProbeAssigned(
             Similarity.ivfAssignments(emb, cents16), cents16, q, 10, nprobe = 5))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory")), headline = true),
 
     Q("sim_ivf_persisted_delete_topk", // the lifecycle's DELETE half (FAISS
       // remove_ids), completing build / append / delete / probe: build on the
@@ -3211,9 +3147,7 @@ object SparkEntry {
           Similarity.ivfProbeAssigned(
             Similarity.ivfAssignments(survivors, cents), cents, q, 10, nprobe = 5))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20 AND vec_id % 7 <> 3""")),
+      Some(topkGateOracle("persisted_equals_memory", "vec_id < 20 AND vec_id % 7 <> 3"))),
 
     Q("sim_ivfpq_persisted_delete_topk", // the IVFADC lifecycle's DELETE
       // half — deleteFromIvfIndex is layout-agnostic (rows rewrite whole,
@@ -3235,7 +3169,7 @@ object SparkEntry {
           .select(col("vec_id")).collect().map(_.getLong(0))
         Similarity.deleteFromIvfIndex(s, pathA, ids)
         // in-memory survivor twin replaces the survivors-rebuild index write
-        // (r17 — see sim_ivfpq_persisted_append_topk): same gate verdict, one
+        // (see sim_ivfpq_persisted_append_topk): same gate verdict, one
         // full persisted write less, independently-encoded compare side
         persistedEqualityGate(
           Similarity.ivfPqProbePersisted(s, pathA, cents, books,
@@ -3243,9 +3177,7 @@ object SparkEntry {
           Similarity.ivfPqTopK(survivors, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20 AND vec_id % 7 <> 3""")),
+      Some(topkGateOracle("persisted_equals_memory", "vec_id < 20 AND vec_id % 7 <> 3"))),
 
     Q("sim_ivfpq_persisted_compact_topk", // the IVFADC COMPACTION twin —
       // compactIvfIndex is layout-agnostic (cells rewrite whole, whatever
@@ -3266,7 +3198,7 @@ object SparkEntry {
         Similarity.appendIvfPqIndex(batch, cents, books, pathA)
         val compacted = Similarity.compactIvfIndex(s, pathA)
         require(compacted > 0, "append left no fragmented cell — fixture broken")
-        // in-memory twin replaces the one-shot-rebuild index write (r17 — see
+        // in-memory twin replaces the one-shot-rebuild index write (see
         // sim_ivfpq_persisted_append_topk): same gate verdict, one full
         // persisted write less, independently-encoded compare side
         persistedEqualityGate(
@@ -3275,9 +3207,7 @@ object SparkEntry {
           Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory"))),
 
     Q("sim_pq_topk", // DRIVER-VISIBLE recall gate: product-quantization ANN
       // (ADC scan + exact rerank; m=16, ksub=32, rerank 8k) vs brute force —
@@ -3294,9 +3224,7 @@ object SparkEntry {
           Similarity.pqTopK(emb, q, 10, m = 16, ksub = 32, iters = 3, rerankFactor = 8),
           k = 10, floor = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok"))),
 
     Q("sim_opq_topk", // DRIVER-VISIBLE recall gate: OPQ-style decorrelated PQ
       // (FAISS OPQMatrix preprocessing, PCA-rotation form of Ge et al. 2013)
@@ -3316,9 +3244,7 @@ object SparkEntry {
             iters = 3, rerankFactor = 8),
           k = 10, floor = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok")), headline = true),
 
     Q("sim_ivfpq_topk", // DRIVER-VISIBLE recall gate: IVFADC (FAISS IVFx,PQy
       // architecture — coarse cells + PQ-coded residuals, nprobe-cell ADC
@@ -3336,9 +3262,7 @@ object SparkEntry {
             nprobe = 6, rerankFactor = 8),
           k = 10, floor = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok"))),
 
     Q("sim_ivfpq_persisted_topk", // the IVFADC index LIFECYCLE as a
       // DRIVER-VISIBLE bit-equality gate: residual-PQ codes cell-partitioned
@@ -3362,9 +3286,7 @@ object SparkEntry {
           Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory"))),
 
     Q("sim_ivfpq_persisted_append_topk", // the IVFADC lifecycle's APPEND
       // half: new vectors assign + residual-PQ-encode under the FROZEN
@@ -3397,9 +3319,7 @@ object SparkEntry {
           Similarity.ivfPqTopK(emb, q, 10, (cents, books),
             nprobe = 6, rerankFactor = 8))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS persisted_equals_memory
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("persisted_equals_memory"))),
 
     Q("sim_random_projection", // Johnson–Lindenstrauss sign projection 64→16
       // dims: map-only, one native dot per output dim against a literal
@@ -3409,14 +3329,7 @@ object SparkEntry {
       (s, d) => Similarity.randomProject(Tables.embeddings(s, d), dim = 64, outDim = 16)
         .select(col("vec_id"), posexplode(col("rp")).as(Seq("dim", "rp_val")))
         .withColumn("dim", col("dim").cast("long")),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              sgn AS (SELECT j, i,
-                CASE WHEN ((s * s) % 2038074743) % 2 = 0 THEN 0.25 ELSE -0.25 END AS w
-                FROM (SELECT j, i, ((y * y) % 2038074743) AS s
-                  FROM (SELECT j, i,
-                    ((i * 1299721 + j * 7919 + 104729) % 2038074743) AS y
-                    FROM generate_series(0, 15) AS gj(j), generate_series(0, 63) AS gi(i)))),
-              sl AS (SELECT j, list(w ORDER BY i) AS ws FROM sgn GROUP BY j)
+      Some(rpSignCtes + """
               SELECT vec_id, j AS dim,
                 round(list_reduce(list_prepend(0.0,
                   list_transform(generate_series(1, len(emb)), i -> emb[i] * ws[i])),
@@ -3434,14 +3347,7 @@ object SparkEntry {
             dim = 64, outDim = 16, rerankFactor = 10)
           .withColumn("rank", col("rank").cast("long"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              sgn AS (SELECT j, i,
-                CASE WHEN ((s * s) % 2038074743) % 2 = 0 THEN 0.25 ELSE -0.25 END AS w
-                FROM (SELECT j, i, ((y * y) % 2038074743) AS s
-                  FROM (SELECT j, i,
-                    ((i * 1299721 + j * 7919 + 104729) % 2038074743) AS y
-                    FROM generate_series(0, 15) AS gj(j), generate_series(0, 63) AS gi(i)))),
-              sl AS (SELECT j, list(w ORDER BY i) AS ws FROM sgn GROUP BY j),
+      Some(rpSignCtes + """,
               rv AS (SELECT vec_id, j,
                 round(list_reduce(list_prepend(0.0,
                   list_transform(generate_series(1, len(emb)), i -> emb[i] * ws[i])),
@@ -3455,17 +3361,7 @@ object SparkEntry {
                 FROM q, r WHERE query_id != vec_id),
               short AS (SELECT query_id, vec_id FROM
                 (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY rp_dot DESC, vec_id) AS srk FROM s) WHERE srk <= 100),
-              ex AS (SELECT short.query_id, short.vec_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(c.emb)),
-                    i -> qe.emb[i] * c.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM short JOIN e c ON short.vec_id = c.vec_id
-                JOIN e qe ON short.query_id = qe.vec_id),
-              rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rank FROM ex)
-              SELECT query_id, vec_id, cosine, rank FROM rk WHERE rank <= 10""")),
+                  ORDER BY rp_dot DESC, vec_id) AS srk FROM s) WHERE srk <= 100)""" + rerankTop10Select), headline = true),
 
     Q("sim_pca_topk", // PCA-trained ANN (the TRAINED linear compressor next
       // to RP's oblivious one): one distributed covariance pass + driver
@@ -3484,9 +3380,7 @@ object SparkEntry {
           Similarity.pcaTopK(emb, q, 10, dim = 64, outDim = 16, rerankFactor = 10),
           k = 10, floor = 0.7)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(10 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 20""")),
+      Some(topkGateOracle("recall_ok")), headline = true),
 
     Q("pipeline_embedding_whiten", // WHITENING correctness surfaced as
       // arithmetic the driver can hash: fit a whitened PCA (one distributed
@@ -3501,7 +3395,7 @@ object SparkEntry {
         dim = 64, outDim = 16),
       Some("""SELECT CAST(i AS INT) AS dim_idx, 0.0 AS mean_r, 1.0 AS variance_r,
               0.0 AS max_abs_cov_r
-              FROM (SELECT unnest(generate_series(0, 15)) AS i) t""")),
+              FROM (SELECT unnest(generate_series(0, 15)) AS i) t"""), headline = true),
 
     Q("sim_mrl_topk", // Matryoshka-prefix ANN: shortlist on the first 16 dims
       // (zero-arithmetic slice — an MRL encoder's prefix is a valid coarse
@@ -3522,17 +3416,7 @@ object SparkEntry {
                 FROM q, p WHERE query_id != vec_id),
               short AS (SELECT query_id, vec_id FROM
                 (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY pre_dot DESC, vec_id) AS srk FROM s) WHERE srk <= 100),
-              ex AS (SELECT short.query_id, short.vec_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(c.emb)),
-                    i -> qe.emb[i] * c.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM short JOIN e c ON short.vec_id = c.vec_id
-                JOIN e qe ON short.query_id = qe.vec_id),
-              rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rank FROM ex)
-              SELECT query_id, vec_id, cosine, rank FROM rk WHERE rank <= 10""")),
+                  ORDER BY pre_dot DESC, vec_id) AS srk FROM s) WHERE srk <= 100)""" + rerankTop10Select)),
 
     Q("sim_binary_topk", // binary-quantized ANN: per-dimension sign bits pack
       // into ONE long (32x compression; Charikar 2002 — Hamming between sign
@@ -3555,17 +3439,7 @@ object SparkEntry {
                 FROM q, e WHERE query_id != vec_id),
               short AS (SELECT query_id, vec_id FROM
                 (SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY ham ASC, vec_id) AS srk FROM h) WHERE srk <= 100),
-              ex AS (SELECT short.query_id, short.vec_id,
-                round(list_reduce(list_prepend(0.0,
-                  list_transform(generate_series(1, len(c.emb)),
-                    i -> qe.emb[i] * c.emb[i])),
-                  (acc, x) -> acc + x), 6) AS cosine
-                FROM short JOIN e c ON short.vec_id = c.vec_id
-                JOIN e qe ON short.query_id = qe.vec_id),
-              rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rank FROM ex)
-              SELECT query_id, vec_id, cosine, rank FROM rk WHERE rank <= 10""")),
+                  ORDER BY ham ASC, vec_id) AS srk FROM h) WHERE srk <= 100)""" + rerankTop10Select), headline = true),
 
     Q("sim_centroid_classify", // nearest-class-centroid (Rocchio) classifier:
       // per-class mean vector via ONE (class, dim) agg, cosine scoring over a
@@ -3588,7 +3462,7 @@ object SparkEntry {
                 row_number() OVER (PARTITION BY vec_id ORDER BY centroid_cos DESC, cand ASC) AS rn
                 FROM sc)
               SELECT vec_id, label, pred_label, centroid_cos, pred_label = label AS correct
-              FROM pred WHERE rn = 1""")),
+              FROM pred WHERE rn = 1"""), headline = true),
 
     Q("sim_hard_negatives", // hard-negative mining for contrastive training
       // (DPR / triplet mining): per anchor the 5 highest-cosine DIFFERENT-
@@ -3634,9 +3508,7 @@ object SparkEntry {
             queries = anchors),
           k = 5, floor = 0.75)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(5 * count(*) AS BIGINT) AS n_results, TRUE AS recall_ok
-              FROM embeddings WHERE vec_id < 1000""")),
+      Some(topkGateOracle("recall_ok", "vec_id < 1000", k = 5)), headline = true),
 
     Q("sim_knn_classify", // instance-based classification (label propagation):
       // exact 5-NN majority vote, heap-bounded top-k + (n·k)-row vote agg,
@@ -3698,22 +3570,8 @@ object SparkEntry {
           TextFns.markerHits(t, TextFns.langMarkers(3)._2).cast("long").as("score_fr"),
           TextFns.predictLang(t).as("pred_lang"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              s AS (SELECT doc_id,
-                len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS score_en,
-                len(list_filter(toks, t -> t IN ('der','die','und','ist','das'))) AS score_de,
-                len(list_filter(toks, t -> t IN ('el','la','de','que','y'))) AS score_es,
-                len(list_filter(toks, t -> t IN ('le','la','et','les','des'))) AS score_fr
-                FROM t)
-              SELECT doc_id, score_en, score_de, score_es, score_fr,
-                CASE WHEN greatest(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
-                     WHEN score_en = greatest(score_en, score_de, score_es, score_fr) THEN 'en'
-                     WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
-                     WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
-                     ELSE 'fr' END AS pred_lang
-              FROM s""")),
+      Some(langScoredCtes + """
+              SELECT doc_id, score_en, score_de, score_es, score_fr, pred_lang FROM l""")),
 
     Q("text_quality",
       (s, d) => {
@@ -3742,7 +3600,7 @@ object SparkEntry {
                 round(CAST(punct_cnt AS DOUBLE) / length(text), 6) AS punct_ratio,
                 round(CAST(len(list_filter(toks, t -> t IN ('the','and','of','to','in'))) AS DOUBLE)
                   / len(toks), 6) AS stopword_ratio
-              FROM x""")),
+              FROM x"""), headline = true),
 
     Q("text_gopher_rules", // Gopher A1.1 composite rule gate: per-rule flags + keep
       (s, d) => Curation.gopherQualityRules(Tables.documents(s, d)),
@@ -3850,8 +3708,7 @@ object SparkEntry {
           .groupBy("gram").agg(count(lit(1)).as("freq"))
         Ops.topN(grams, 50, Seq(col("freq").desc, col("gram").asc))
       },
-      Some("""WITH t AS (SELECT string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               g AS (SELECT unnest(CASE WHEN len(toks) >= 3 THEN
                   list_transform(generate_series(1, len(toks) - 2),
                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -3863,19 +3720,14 @@ object SparkEntry {
       // top-50 pairs by ln(c_ab*N/(c_a*c_b)) with a min-count floor (bare PMI
       // is maximized by hapax pairs); N is a scalar over the checkpointed
       // vocab-bounded unigram frame riding a one-row broadcast — never a
-      // second corpus scan, never an unpartitioned window (r16)
+      // second corpus scan, never an unpartitioned window
       (s, d) => Curation.cooccurrencePmi(Tables.documents(s, d),
         minCount = 5, topN = 50),
-      Some("""WITH t AS (SELECT string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(bigramCtes + """,
               u0 AS (SELECT unnest(toks) AS w FROM t),
               u AS (SELECT w, count(*) AS c_w FROM u0 WHERE len(w) > 0 GROUP BY 1),
               un AS (SELECT w, c_w, sum(c_w) OVER () AS n_total FROM u),
-              bg0 AS (SELECT unnest(CASE WHEN len(toks) >= 2 THEN
-                  list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END) AS bg FROM t),
-              bc AS (SELECT bg, count(*) AS c_ab FROM bg0 GROUP BY 1 HAVING count(*) >= 5),
+              bc AS (SELECT bg, count(*) AS c_ab FROM b GROUP BY 1 HAVING count(*) >= 5),
               bb AS (SELECT string_split(bg, ' ')[1] AS a, string_split(bg, ' ')[2] AS b,
                 c_ab FROM bc),
               j AS (SELECT bb.a, bb.b, bb.c_ab, ua.c_w AS c_a, ub.c_w AS c_b, ua.n_total
@@ -3888,15 +3740,10 @@ object SparkEntry {
       // fraction of its distinct trigrams shared with >= 1 other document
       // (boilerplate that document-level dedup misses)
       (s, d) => Dedup.dupNgramStats(Tables.documents(s, d), n = 3),
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END)) AS gram FROM tk),
-              f AS (SELECT gram, count(*) AS ndocs FROM g GROUP BY gram),
-              j AS (SELECT doc_id, ndocs FROM g JOIN f USING (gram))
+      Some(trigramCtes(normCte) + """,
+              dg AS (SELECT doc_id, unnest(grams) AS gram FROM g),
+              f AS (SELECT gram, count(*) AS ndocs FROM dg GROUP BY gram),
+              j AS (SELECT doc_id, ndocs FROM dg JOIN f USING (gram))
               SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
                 CAST(coalesce(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_shared,
                 CAST(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS dup_gram_fraction
@@ -3905,15 +3752,8 @@ object SparkEntry {
     Q("text_fingerprint",
       (s, d) => Tables.documents(s, d).select(col("doc_id"),
         TextFns.fingerprint(col("text")).as("fingerprint")),
-      Some("""WITH t AS (SELECT doc_id,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                  '[^a-z0-9 ]', '', 'g') AS clean FROM documents)
-              SELECT doc_id,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-              FROM t""")),
+      Some(fingerprintCtes + """
+              SELECT doc_id, fp AS fingerprint FROM f""")),
 
     Q("multimodal_blob_features", // REAL-codec round trip: each doc becomes a
       // genuine 24-bit BMP (dims a pure function of doc_id), and the features
@@ -3932,7 +3772,7 @@ object SparkEntry {
               CAST(54 + ((3 * ((doc_id % 16) + 1) + 3) // 4) * 4 * ((doc_id % 12) + 1) AS BIGINT) AS byte_len,
               CAST((doc_id % 16) + 1 AS BIGINT) AS width,
               CAST((doc_id % 12) + 1 AS BIGINT) AS height
-              FROM documents""")),
+              FROM documents"""), headline = true),
 
     Q("multimodal_resize", // REAL pixel-level nearest-neighbor resize: the
       // synthetic BMPs (dims doc_id%16+1 x doc_id%12+1) resize to 8x8 through
@@ -3965,8 +3805,8 @@ object SparkEntry {
               FROM documents, (SELECT unnest([1, 101, 201, 301]) AS pos) t
               WHERE pos <= octet_length(encode(text))""")),
 
-    Q("multimodal_gif_frames", // format-AWARE frame extraction (r11 verdict
-      // ask #1, replacing the byte-offset stand-in for this axis): each doc
+    Q("multimodal_gif_frames", // format-AWARE frame extraction (replacing
+      // the byte-offset stand-in for this axis): each doc
       // becomes a REAL multi-frame GIF89a — valid clear-code LZW image data,
       // global color table, graphic-control extensions — with frame geometry
       // a pure function of doc_id, and the frames come from walking the
@@ -3981,10 +3821,10 @@ object SparkEntry {
               CAST((doc_id % 16) + 1 + i AS INT) AS frame_w,
               CAST((doc_id % 12) + 1 + i AS INT) AS frame_h
               FROM (SELECT doc_id, unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
-                    FROM documents) t""")),
+                    FROM documents) t"""), headline = true),
 
-    Q("multimodal_gif_pixels", // the GIF walk's PIXEL half (r12 verdict ask
-      // #2, removing the last structure-not-pixels stand-in): each doc
+    Q("multimodal_gif_pixels", // the GIF walk's PIXEL half (removing the
+      // last structure-not-pixels stand-in): each doc
       // becomes a real GIF89a whose frame pixels are the oracle-arithmetic
       // function (doc_id·31 + i·257 + j·7) mod 127, and the features come
       // from genuinely LZW-DECODING the image data sub-blocks
@@ -4012,7 +3852,7 @@ object SparkEntry {
                   j -> (j + 1) * ((doc_id * 31 + i * 257 + j * 7) % 127))) AS BIGINT) AS pixel_poly,
                 CAST((doc_id * 31 + i * 257) % 127 AS INT) AS pixel_first,
                 CAST((doc_id * 31 + i * 257 + (w * h - 1) * 7) % 127 AS INT) AS pixel_last
-              FROM g""")),
+              FROM g"""), headline = true),
 
     Q("multimodal_wav_windows", // format-aware AUDIO windowing: each doc
       // becomes a real PCM16 mono RIFF/WAVE file (sample i = (doc_id·31 +
@@ -4025,11 +3865,7 @@ object SparkEntry {
       (s, d) => Multimodal.wavWindows(s,
           Multimodal.syntheticWavsFromDocuments(s, Tables.documents(s, d)).toDF(),
           windowSamples = 32, hopSamples = 16).toDF(),
-      Some("""WITH d AS (SELECT doc_id, 64 + doc_id % 37 AS n FROM documents),
-              w AS (SELECT doc_id, n,
-                unnest(generate_series(0, (n - 1) // 16)) AS k FROM d),
-              wl AS (SELECT doc_id, k, 16 * k AS st,
-                least(32, n - 16 * k) AS len FROM w)
+      Some(wavWindowCtes + """
               SELECT doc_id AS media_id, CAST(k AS INT) AS window_idx,
                 CAST(st AS BIGINT) AS start_sample,
                 CAST(len AS BIGINT) AS n_samples,
@@ -4042,10 +3878,10 @@ object SparkEntry {
                   i -> (((doc_id * 31 + i * 7) % 4096) - 2048 < 0)
                        <> (((doc_id * 31 + (i - 1) * 7) % 4096) - 2048 < 0)))
                   AS BIGINT) AS zero_crossings
-              FROM wl""")),
+              FROM wl"""), headline = true),
 
-    Q("multimodal_resize_png", // the resize path's PNG half (r11 verdict ask
-      // #3): synthetic PNGs (real deflated scanlines, even ids RGB / odd ids
+    Q("multimodal_resize_png", // the resize path's PNG half:
+      // synthetic PNGs (real deflated scanlines, even ids RGB / odd ids
       // RGBA) resize to 8x8 through actual inflate → unfilter → sample →
       // re-deflate, then features come from re-PARSING the re-encoded bytes.
       // byte_len is deliberately NOT emitted — deflate output length is
@@ -4088,7 +3924,7 @@ object SparkEntry {
             }
           }.toDF("media_id", "pixels_exact")
       },
-      Some("""SELECT doc_id AS media_id, TRUE AS pixels_exact FROM documents""")),
+      Some(pixelsExactOracle), headline = true),
 
     Q("multimodal_jpeg_pixels", // BASELINE JPEG (ITU-T T.81), the dominant
       // web-scrape image format: each doc becomes a real SOF0 file — Annex K
@@ -4116,7 +3952,7 @@ object SparkEntry {
                   AS BIGINT) AS pixel_poly,
                 CAST((doc_id * 31) % 251 AS INT) AS pixel_first,
                 CAST((doc_id * 31 + ((h - 1) // 8) * 37 + ((w - 1) // 8) * 11) % 251 AS INT) AS pixel_last
-              FROM d""")),
+              FROM d"""), headline = true),
 
     Q("multimodal_jpeg_color_pixels", // the COLOR half of the JPEG gate:
       // 4:4:4 YCbCr files whose three planes are each flat-per-block (so the
@@ -4150,7 +3986,7 @@ object SparkEntry {
                 CAST(sum((3 * j + 1) * r + (3 * j + 2) * g + (3 * j + 3) * b) AS BIGINT) AS pixel_poly,
                 CAST(min(CASE WHEN j = 0 THEN r END) AS INT) AS pixel_first,
                 CAST(min(CASE WHEN j = w * h - 1 THEN b END) AS INT) AS pixel_last
-              FROM rgb GROUP BY doc_id, w, h""")),
+              FROM rgb GROUP BY doc_id, w, h"""), headline = true),
 
     Q("multimodal_resize_jpeg", // the resize path's JPEG half: synthetic
       // baseline JPEGs resize to 8x8 through actual decode → nearest-neighbor
@@ -4196,7 +4032,7 @@ object SparkEntry {
             }
           }.toDF("media_id", "pixels_exact")
       },
-      Some("""SELECT doc_id AS media_id, TRUE AS pixels_exact FROM documents""")),
+      Some(pixelsExactOracle)),
 
     Q("multimodal_avi_frames", // format-aware VIDEO: each doc becomes a real
       // RIFF/AVI MJPEG container (LIST hdrl with avih/strh/strf, LIST movi
@@ -4209,25 +4045,16 @@ object SparkEntry {
       (s, d) => Multimodal.aviFramePixels(s,
           Multimodal.syntheticAvisFromDocuments(s, Tables.documents(s, d)).toDF())
         .toDF(),
-      Some("""WITH f AS (SELECT doc_id, (doc_id % 13) + 4 AS w, (doc_id % 11) + 4 AS h,
-                unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
-                FROM documents)
+      Some(aviFramesCte + """
               SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
                 CAST(w AS INT) AS width, CAST(h AS INT) AS height,
                 CAST(w * h AS BIGINT) AS n_pixels,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1),
-                  j -> (doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251))
-                  AS BIGINT) AS pixel_sum,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1),
-                  j -> (j + 1) * ((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)))
-                  AS BIGINT) AS pixel_poly,
-                CAST((doc_id * 31 + i * 257) % 251 AS INT) AS pixel_first,
-                CAST((doc_id * 31 + i * 257 + ((h - 1) // 8) * 37 + ((w - 1) // 8) * 11) % 251 AS INT) AS pixel_last
-              FROM f""")),
+                """ + aviPixelCols + """
+              FROM f"""), headline = true),
 
     Q("multimodal_scene_cuts", // scene-cut / keyframe detection over MJPEG
-      // AVI — the VLM-training sampling op after frame extraction (r13
-      // verdict ask #2): per decoded frame, the exact integer Σ|sample −
+      // AVI — the VLM-training sampling op after frame extraction:
+      // per decoded frame, the exact integer Σ|sample −
       // previous frame's sample| (frame 0 deltas against black — its own
       // sample sum), is_cut at mean-change > 30/sample, and the per-video
       // keyframe rank (delta desc, frame asc). All frames of one video sit
@@ -4238,27 +4065,17 @@ object SparkEntry {
       (s, d) => Multimodal.sceneCuts(s,
           Multimodal.syntheticAvisFromDocuments(s, Tables.documents(s, d)).toDF())
         .toDF(),
-      Some("""WITH f AS (SELECT doc_id, (doc_id % 13) + 4 AS w, (doc_id % 11) + 4 AS h,
-                unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
-                FROM documents),
-              d AS (SELECT doc_id, w, h, i,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1), j ->
-                  CASE WHEN i = 0
-                  THEN (doc_id * 31 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
-                  ELSE abs((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
-                         - (doc_id * 31 + (i - 1) * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)
-                  END)) AS BIGINT) AS delta_sum
-                FROM f)
+      Some(aviDeltaCtes + """
               SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
                 CAST(w AS INT) AS width, CAST(h AS INT) AS height,
                 CAST(w * h AS BIGINT) AS n_samples, delta_sum,
                 delta_sum > 30 * w * h AS is_cut,
                 CAST(row_number() OVER (PARTITION BY doc_id
                   ORDER BY delta_sum DESC, i) AS INT) AS key_rank
-              FROM d""")),
+              FROM d"""), headline = true),
 
-    Q("multimodal_wav_spectrum", // windowed SPECTRAL features (r13 verdict
-      // ask #4): per wavWindows-shaped window, the DFT power at fixed bins
+    Q("multimodal_wav_spectrum", // windowed SPECTRAL features:
+      // per wavWindows-shaped window, the DFT power at fixed bins
       // {1,2,4,8} of W=32 plus the spectral centroid — real/imag are exact
       // integer inner products against fixed-point twiddle tables
       // (round(cos·2^12), round(sin·2^12)) whose INTEGERS are embedded into
@@ -4272,11 +4089,7 @@ object SparkEntry {
           Multimodal.syntheticWavsFromDocuments(s, Tables.documents(s, d)).toDF(),
           windowSamples = 32, hopSamples = 16, bins = wavSpecBins,
           scaleBits = 12).toDF(),
-      Some(s"""WITH d AS (SELECT doc_id, 64 + doc_id % 37 AS n FROM documents),
-              w AS (SELECT doc_id, n,
-                unnest(generate_series(0, (n - 1) // 16)) AS k FROM d),
-              wl AS (SELECT doc_id, k, 16 * k AS st,
-                least(32, n - 16 * k) AS len FROM w),
+      Some(wavWindowCtes + s""",
               bins(bin, ct, sn) AS (VALUES $wavSpecValuesSql),
               r AS (SELECT doc_id, k, st, len, bin,
                 CAST(list_sum(list_transform(generate_series(0, len - 1),
@@ -4294,7 +4107,7 @@ object SparkEntry {
                 CAST(p.len AS BIGINT) AS n_samples,
                 CAST(p.bin AS INT) AS bin, p.real_fp, p.imag_fp,
                 CAST(p.pw AS BIGINT) AS power, c.centroid_num, c.centroid_den
-              FROM p JOIN c ON p.doc_id = c.doc_id AND p.k = c.k""")),
+              FROM p JOIN c ON p.doc_id = c.doc_id AND p.k = c.k"""), headline = true),
 
     Q("multimodal_keyframes", // keyframe EXTRACTION (the sampling step after
       // scene-cut detection): per video keep the top-2 frames by
@@ -4309,17 +4122,7 @@ object SparkEntry {
       (s, d) => Multimodal.keyframes(s,
           Multimodal.syntheticAvisFromDocuments(s, Tables.documents(s, d)).toDF(),
           k = 2).toDF().drop("jpeg"),
-      Some("""WITH f AS (SELECT doc_id, (doc_id % 13) + 4 AS w, (doc_id % 11) + 4 AS h,
-                unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
-                FROM documents),
-              d AS (SELECT doc_id, w, h, i,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1), j ->
-                  CASE WHEN i = 0
-                  THEN (doc_id * 31 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
-                  ELSE abs((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251
-                         - (doc_id * 31 + (i - 1) * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)
-                  END)) AS BIGINT) AS delta_sum
-                FROM f),
+      Some(aviDeltaCtes + """,
               r AS (SELECT doc_id, w, h, i,
                 row_number() OVER (PARTITION BY doc_id
                   ORDER BY delta_sum DESC, i) AS rk FROM d)
@@ -4327,15 +4130,8 @@ object SparkEntry {
                 CAST(rk AS INT) AS key_rank,
                 CAST(w AS INT) AS width, CAST(h AS INT) AS height,
                 CAST(w * h AS BIGINT) AS n_samples,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1),
-                  j -> (doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251))
-                  AS BIGINT) AS pixel_sum,
-                CAST(list_sum(list_transform(generate_series(0, w * h - 1),
-                  j -> (j + 1) * ((doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)))
-                  AS BIGINT) AS pixel_poly,
-                CAST((doc_id * 31 + i * 257) % 251 AS INT) AS pixel_first,
-                CAST((doc_id * 31 + i * 257 + ((h - 1) // 8) * 37 + ((w - 1) // 8) * 11) % 251 AS INT) AS pixel_last
-              FROM r WHERE rk <= 2""")),
+                """ + aviPixelCols + """
+              FROM r WHERE rk <= 2"""), headline = true),
 
     Q("multimodal_wav_resample", // integer-factor audio RESAMPLING (8 kHz ->
       // 4 kHz, the resample step every ASR pipeline runs): channel-0
@@ -4364,7 +4160,7 @@ object SparkEntry {
                 CAST(sum((j + 1) * yv) AS BIGINT) AS y_poly,
                 CAST(min(CASE WHEN j = 0 THEN yv END) AS BIGINT) AS y_first,
                 CAST(min(CASE WHEN j = (n + 1) // 2 - 1 THEN yv END) AS BIGINT) AS y_last
-              FROM y GROUP BY doc_id, n""")),
+              FROM y GROUP BY doc_id, n"""), headline = true),
 
     Q("multimodal_dhash", // perceptual image fingerprint (dHash): 9x8
       // nearest-neighbor grid over genuinely DECODED JPEG pixels, bit
@@ -4378,7 +4174,7 @@ object SparkEntry {
         .toDF(),
       Some(dHashCtes("doc_id") + """
               SELECT doc_id AS media_id, CAST(w AS INT) AS width,
-                CAST(h AS INT) AS height, dhash_hi, dhash_lo FROM hashes""")),
+                CAST(h AS INT) AS height, dhash_hi, dhash_lo FROM hashes"""), headline = true),
 
     Q("dedup_image_clusters", // visual exact-dup CLUSTERS over a clone-
       // planted fixture (payload a pure function of doc_id % 100, so same-
@@ -4392,10 +4188,10 @@ object SparkEntry {
       (s, d) => Multimodal.imageDupClusters(s,
           Multimodal.syntheticCloneJpegsFromDocuments(s,
             Tables.documents(s, d), classes = 100).toDF()),
-      Some(dHashCtes("doc_id % 100") + dHashClusterSelect)),
+      Some(dHashCtes("doc_id % 100") + dHashClusterSelect), headline = true),
 
-    Q("dedup_image_persisted", // the image-dedup index ON DISK (r14 verdict
-      // ask #4, giving the image modality the winnow-index lifecycle): the
+    Q("dedup_image_persisted", // the image-dedup index ON DISK (giving the
+      // image modality the winnow-index lifecycle): the
       // frozen corpus's dHashes persist as band rows bucketed on
       // bkey = band*2^16 + slice (Multimodal.writeImageDedupIndex), the
       // new-crawl slice decodes, hashes, and probes the table read BACK
@@ -4461,11 +4257,11 @@ object SparkEntry {
       Some(dHashCtes("doc_id % 100") + dHashIndexProbeSelect)),
 
     Q("dedup_image_persisted_rebucket", // bucket-count REBUILD for the image
-      // index (r15 verdict ask #4 — closing the lifecycle symmetry with the
+      // index (closing the lifecycle symmetry with the
       // winnow index's rebucket and IVF's resplit): build at 4 buckets on
       // half the base corpus, append the other half, RE-BUCKET to 8 through
       // the one shared Lake.rebucketBucketed staged rewrite (marker-guarded
-      // catalog swap, planted only after staging succeeds — r16), and probe
+      // catalog swap, planted only after staging succeeds), and probe
       // through the layout-verified reader at the n′ spec. Shares
       // dedup_image_persisted's base-only oracle, so the hash match IS the
       // rebucket-preserves-every-probe-answer proof (the
@@ -4490,7 +4286,7 @@ object SparkEntry {
           graft.sources.Lake.readBucketedVerified(s, path, "graft_img_idx_reb",
             "bkey", 8))
       },
-      Some(dHashCtes("doc_id % 100") + dHashIndexProbeSelect)))
+      Some(dHashCtes("doc_id % 100") + dHashIndexProbeSelect), headline = true))
 
   // ------------------------------------------------------------------
   // corpus governance: decontamination, domain capping, mixture sampling,
@@ -4506,21 +4302,7 @@ object SparkEntry {
           corpus = docs.filter(col("doc_id") % 20 =!= 0),
           benchmark = docs.filter(col("doc_id") % 20 === 0), n = 3)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 0),
-              corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 20 <> 0),
-              cg AS (SELECT doc_id, unnest(grams) AS gram FROM corp),
-              hits AS (SELECT cg.doc_id, count(b.gram) AS m
-                FROM cg LEFT JOIN bench b USING (gram) GROUP BY cg.doc_id)
-              SELECT c.doc_id, CAST(coalesce(h.m, 0) AS BIGINT) AS matched_grams,
-                coalesce(h.m, 0) > 0 AS contaminated
-              FROM corp c LEFT JOIN hits h USING (doc_id)""")),
+      Some(decontaminateOracle), headline = true),
 
     Q("pipeline_decontaminate_batch", // one-pass MULTI-benchmark contamination
       // report: 3 synthetic benchmarks carved from the eval slice
@@ -4585,7 +4367,7 @@ object SparkEntry {
         Dedup.removeFrequentSegmentsStateless(docs,
           Dedup.frequentSegmentModel(docs, minDf = 10L))
       },
-      Some(boilerplateRemovalOracle)),
+      Some(boilerplateRemovalOracle), headline = true),
 
     Q("pipeline_decontaminate_stateless", // the same verdicts via the literal-
       // probed stateless form (no join, no aggregation — the shape that runs
@@ -4597,21 +4379,7 @@ object SparkEntry {
           Curation.benchmarkGramHashes(docs.filter(col("doc_id") % 20 === 0), n = 3),
           n = 3)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 0),
-              corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 20 <> 0),
-              cg AS (SELECT doc_id, unnest(grams) AS gram FROM corp),
-              hits AS (SELECT cg.doc_id, count(b.gram) AS m
-                FROM cg LEFT JOIN bench b USING (gram) GROUP BY cg.doc_id)
-              SELECT c.doc_id, CAST(coalesce(h.m, 0) AS BIGINT) AS matched_grams,
-                coalesce(h.m, 0) > 0 AS contaminated
-              FROM corp c LEFT JOIN hits h USING (doc_id)""")),
+      Some(decontaminateOracle)),
 
     Q("pipeline_decontaminate_bloom", // the benchmark-outgrows-broadcast
       // regime as a PER-DOC driver gate: a distributed-fitted fixed-size
@@ -4633,21 +4401,10 @@ object SparkEntry {
           .select(col("doc_id"), col("exact_contaminated"),
             (!col("exact_contaminated") || col("__bloom")).as("no_false_negative"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
-              tk AS (SELECT doc_id, string_split(norm, ' ') AS toks FROM t),
-              g AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3 THEN
-                  list_transform(generate_series(1, len(toks) - 2),
-                    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                  ELSE [] END) AS grams FROM tk),
-              bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 20 = 0),
-              corp AS (SELECT doc_id, grams FROM g WHERE doc_id % 20 <> 0),
-              cg AS (SELECT doc_id, unnest(grams) AS gram FROM corp),
-              hits AS (SELECT cg.doc_id, count(b.gram) AS m
-                FROM cg LEFT JOIN bench b USING (gram) GROUP BY cg.doc_id)
+      Some(decontaminateCtes + """
               SELECT c.doc_id, coalesce(h.m, 0) > 0 AS exact_contaminated,
                 TRUE AS no_false_negative
-              FROM corp c LEFT JOIN hits h USING (doc_id)""")),
+              FROM corp c LEFT JOIN hits h USING (doc_id)"""), headline = true),
 
     Q("pipeline_decontaminate_spans", // SPAN-level decontamination, the
       // SURGICAL sibling of pipeline_decontaminate: every corpus token span
@@ -4662,26 +4419,7 @@ object SparkEntry {
           corpus = docs.filter(col("doc_id") % 20 =!= 0),
           benchmark = docs.filter(col("doc_id") % 20 === 0), n = 3)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 2)) AS i, toks
-                FROM t WHERE len(toks) >= 3),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+2], ' ') AS gram
-                FROM g),
-              bench AS (SELECT DISTINCT gram FROM g2 WHERE doc_id % 20 = 0),
-              h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN bench USING (gram)
-                WHERE g2.doc_id % 20 <> 0),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 3
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l)
-              SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-                CAST(max(pos) + 2 AS BIGINT) AS span_end,
-                CAST(count(*) AS BIGINT) AS n_grams
-              FROM s GROUP BY doc_id, island""")),
+      Some(benchSpanCtes + islandSpansSelect(3))),
 
     Q("pipeline_decontaminate_trim", // the removal half: corpus documents
       // rebuilt with every benchmark-covered span dropped — clean docs pass
@@ -4693,35 +4431,9 @@ object SparkEntry {
           corpus = docs.filter(col("doc_id") % 20 =!= 0),
           benchmark = docs.filter(col("doc_id") % 20 === 0), n = 3)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              g AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 2)) AS i, toks
-                FROM t WHERE len(toks) >= 3),
-              g2 AS (SELECT doc_id, i - 1 AS pos, array_to_string(toks[i:i+2], ' ') AS gram
-                FROM g),
-              bench AS (SELECT DISTINCT gram FROM g2 WHERE doc_id % 20 = 0),
-              h AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN bench USING (gram)
-                WHERE g2.doc_id % 20 <> 0),
-              l AS (SELECT doc_id, pos,
-                CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 3
-                     THEN 1 ELSE 0 END AS ni
-                FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-              s AS (SELECT doc_id, pos, sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS UNBOUNDED PRECEDING) AS island FROM l),
-              sp AS (SELECT doc_id, min(pos) AS a, max(pos) + 2 AS b
-                FROM s GROUP BY doc_id, island),
-              corp AS (SELECT doc_id, toks FROM t WHERE doc_id % 20 <> 0),
-              tok AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS j, toks FROM corp),
-              tok2 AS (SELECT doc_id, j - 1 AS p, toks[j] AS w FROM tok),
-              kept AS (SELECT k.doc_id, k.p, k.w FROM tok2 k
-                WHERE NOT EXISTS (SELECT 1 FROM sp
-                  WHERE sp.doc_id = k.doc_id AND k.p BETWEEN sp.a AND sp.b)),
-              agg AS (SELECT doc_id, array_to_string(list(w ORDER BY p), ' ') AS text_trimmed,
-                count(*) AS n_kept FROM kept GROUP BY doc_id)
-              SELECT corp.doc_id, coalesce(agg.text_trimmed, '') AS text_trimmed,
-                CAST(len(corp.toks) - coalesce(agg.n_kept, 0) AS BIGINT) AS n_tokens_removed
-              FROM corp LEFT JOIN agg ON corp.doc_id = agg.doc_id""")),
+      Some(benchSpanCtes + """,
+              corp AS (SELECT doc_id, toks FROM t WHERE doc_id % 20 <> 0)""" +
+        trimSpansSelect("corp", 3)), headline = true),
 
     Q("w_stream_decontaminate_bloom", // the Bloom decontamination gate over a
       // REAL stream, now a DRIVER-VISIBLE stream≡batch gate: the fixed-size
@@ -4744,8 +4456,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamed, verdicts(docs)))
           .select(col("n_corpus_docs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_corpus_docs, TRUE AS stream_equals_batch
-              FROM documents WHERE doc_id % 20 <> 0""")),
+      Some(streamGateOracle("n_corpus_docs", "documents WHERE doc_id % 20 <> 0"))),
 
     Q("w_stream_lm_score_kn", // frozen-model KN scoring at the stream
       // boundary (the CCNet crawl-intake deployment): the model tables are
@@ -4772,8 +4483,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamed, batch))
           .select(col("n_scored_docs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_scored_docs, TRUE AS stream_equals_batch
-              FROM documents WHERE doc_id % 2 = 1""")),
+      Some(streamGateOracle("n_scored_docs", "documents WHERE doc_id % 2 = 1"))),
 
     Q("w_stream_incremental_dedup", // the governance intake gate as a REAL
       // stream, now a DRIVER-VISIBLE stream≡batch gate: file-source docs ->
@@ -4800,8 +4510,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamedFps, batchFps))
           .select(col("n_new_docs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_new_docs, TRUE AS stream_equals_batch
-              FROM documents WHERE doc_id % 5 = 0""")),
+      Some(streamGateOracle("n_new_docs", "documents WHERE doc_id % 5 = 0"))),
 
     Q("w_stream_minhash_matches", // streaming NEAR-dup suspect stream, now a
       // DRIVER-VISIBLE stream≡batch gate: new docs (doc_id % 5 = 0) stream
@@ -4827,8 +4536,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamed, flagged(docs)))
           .select(col("n_new_docs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_new_docs, TRUE AS stream_equals_batch
-              FROM documents WHERE doc_id % 5 = 0""")),
+      Some(streamGateOracle("n_new_docs", "documents WHERE doc_id % 5 = 0"))),
 
     Q("w_stream_winnow_matches", // streaming SUBSTRING-overlap suspect stream
       // as a stream≡batch gate: new docs (doc_id % 5 = 0) stream against the
@@ -4855,8 +4563,7 @@ object SparkEntry {
           .crossJoin(multisetEqualCol(streamed, flagged(docs)))
           .select(col("n_new_docs"), col("__eq").as("stream_equals_batch"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_new_docs, TRUE AS stream_equals_batch
-              FROM documents WHERE doc_id % 5 = 0""")),
+      Some(streamGateOracle("n_new_docs", "documents WHERE doc_id % 5 = 0"))),
 
     Q("w_stream_gif_frames", // the format-aware multimodal path on a LIVE
       // stream: encode -> GIF block walk is a stateless typed mapPartitions
@@ -4879,7 +4586,7 @@ object SparkEntry {
               TRUE AS stream_equals_batch FROM documents""")),
 
     Q("w_stream_wav_windows", // the AUDIO half of the streaming multimodal
-      // parity (r12 verdict ask #3, the w_stream_gif_frames precedent):
+      // parity (the w_stream_gif_frames precedent):
       // encode -> RIFF chunk walk -> PCM16 windowing is equally stateless, so
       // the chain runs unchanged in append mode with ZERO streaming state;
       // the stream-vs-batch multiset equality plus the arithmetic window
@@ -4919,9 +4626,7 @@ object SparkEntry {
           .select(col("n_frames"), col("total_pixel_sum"),
             col("__eq").as("stream_equals_batch"))
       },
-      Some("""WITH f AS (SELECT doc_id, (doc_id % 13) + 4 AS w, (doc_id % 11) + 4 AS h,
-                unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS i
-                FROM documents)
+      Some(aviFramesCte + """
               SELECT CAST(count(*) AS BIGINT) AS n_frames,
                 CAST(sum(list_sum(list_transform(generate_series(0, w * h - 1),
                   j -> (doc_id * 31 + i * 257 + ((j // w) // 8) * 37 + ((j % w) // 8) * 11) % 251)))
@@ -4973,7 +4678,7 @@ object SparkEntry {
               TRUE AS stream_equals_batch FROM documents""")),
 
     Q("w_stream_wav_resample", // anti-alias FIR resampling on a LIVE stream
-      // (r14 verdict ask #6, the one missing media streaming twin): the
+      // (the one missing media streaming twin): the
       // L-tap convolution and per-file checksums are local to one row's
       // payload — stateless, append mode, ZERO streaming state (the
       // w_stream_wav_spectrum shape with the resampler inside). Stream-vs-
@@ -5025,7 +4730,7 @@ object SparkEntry {
             .as("variance_r"))
       },
       Some("""SELECT CAST(i AS INT) AS dim_idx, 0.0 AS mean_r, 1.0 AS variance_r
-              FROM (SELECT unnest(generate_series(0, 15)) AS i) t""")),
+              FROM (SELECT unnest(generate_series(0, 15)) AS i) t"""), headline = true),
 
     Q("pipeline_data_card", // the per-(domain, lang) release summary: volumes,
       // length distribution, exact-dup rate — one keyed aggregation pass
@@ -5081,14 +4786,7 @@ object SparkEntry {
       (s, d) => Curation.mixtureSample(Tables.documents(s, d),
         weights = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.0),
         defaultWeight = 0.35),
-      Some("""WITH t AS (SELECT doc_id, source,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                  '[^a-z0-9 ]', '', 'g') AS clean FROM documents),
-              f AS (SELECT doc_id, source,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS fp FROM t),
+      Some(fingerprintCtes + """,
               w AS (SELECT doc_id, source AS domain, fp,
                 CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5
                             WHEN 'src2' THEN 0.25 WHEN 'src3' THEN 0.0
@@ -5109,7 +4807,7 @@ object SparkEntry {
             .when(pmod(col("doc_id"), lit(10)) < 9, "books")
             .otherwise("code")),
         tau = 2.0, budget = 0.5),
-      Some("""WITH docs AS (SELECT doc_id, text,
+      Some(s"""WITH docs AS (SELECT doc_id, text,
                 CASE WHEN doc_id % 10 < 6 THEN 'web'
                      WHEN doc_id % 10 < 9 THEN 'books'
                      ELSE 'code' END AS domain FROM documents),
@@ -5121,13 +4819,10 @@ object SparkEntry {
                 CAST(round(least(1.0, 0.5 * n * (w / z) / n_d) * 10000) AS BIGINT) AS thr
                 FROM f, z),
               t AS (SELECT doc_id, domain,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
+                regexp_replace($normSql,
                   '[^a-z0-9 ]', '', 'g') AS clean FROM docs),
               fp AS (SELECT doc_id, domain,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) % 10000 AS fp FROM t)
+                $cleanFingerprintSql % 10000 AS fp FROM t)
               SELECT doc_id, domain FROM fp JOIN r USING (domain)
               WHERE fp < thr""")),
 
@@ -5137,14 +4832,7 @@ object SparkEntry {
       (s, d) => Curation.mixtureUpsample(Tables.documents(s, d),
         weights = Map("src0" -> 2.5, "src1" -> 0.5, "src2" -> 2.0),
         defaultWeight = 1.0),
-      Some("""WITH t AS (SELECT doc_id, source,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                  '[^a-z0-9 ]', '', 'g') AS clean FROM documents),
-              f AS (SELECT doc_id, source,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS fp FROM t),
+      Some(fingerprintCtes + """,
               w AS (SELECT doc_id, source AS domain, fp,
                 CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 0.5
                             WHEN 'src2' THEN 2.0 ELSE 1.0 END AS w FROM f),
@@ -5161,18 +4849,11 @@ object SparkEntry {
       // re-crawled duplicate lands in the SAME split (no leakage); map-only
       (s, d) => Curation.assignSplit(Tables.documents(s, d),
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)),
-      Some("""WITH t AS (SELECT doc_id,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                  '[^a-z0-9 ]', '', 'g') AS clean FROM documents),
-              f AS (SELECT doc_id,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS fp FROM t)
+      Some(fingerprintCtes + """
               SELECT doc_id, CASE
                 WHEN fp % 10000 < 9000 THEN 'train'
                 WHEN fp % 10000 < 9500 THEN 'val'
-                ELSE 'test' END AS split FROM f""")),
+                ELSE 'test' END AS split FROM f"""), headline = true),
 
     Q("pipeline_split_fp", // the 100 TB path of pipeline_split as a
       // DRIVER-VISIBLE gate: identical split semantics keyed on xxhash64
@@ -5220,12 +4901,10 @@ object SparkEntry {
         val docs = Tables.documents(s, d)
         Curation.dsirWeights(docs, docs.filter(col("source").isin("src0", "src1")))
       },
-      Some("""WITH tok AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               fr AS (SELECT doc_id, f FROM (SELECT doc_id, unnest(list_concat(toks,
                   CASE WHEN len(toks) >= 2 THEN list_transform(generate_series(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i+1]) ELSE [] END)) AS f FROM tok)
+                    i -> toks[i] || ' ' || toks[i+1]) ELSE [] END)) AS f FROM t)
                 WHERE length(f) > 0),
               cr AS (SELECT f, count(*) AS c_r FROM fr GROUP BY f),
               ct AS (SELECT f, count(*) AS c_t FROM fr JOIN documents USING (doc_id)
@@ -5256,9 +4935,9 @@ object SparkEntry {
         val docs = Tables.documents(s, d)
         val target = docs.filter(col("source").isin("src0", "src1"))
         def topHalf(df: DataFrame, w: String): DataFrame = {
-          // threshold selection, NOT a global row_number window (r16: an
+          // threshold selection, NOT a global row_number window (an
           // unpartitioned rank sorts the whole corpus in one task — the
-          // sweep this round's PlanSpec gate now enforces). One median
+          // sweep PlanSpec's gate enforces). One median
           // aggregate broadcast back, keep everything at or above it — the
           // qualityQuantileFilter shape; DSIR log-weights are continuous
           // doubles, so boundary ties are measure-zero and only widen both
@@ -5380,7 +5059,7 @@ object SparkEntry {
                  * sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, len(c)),
                     i -> c[i] * c[i])), (acc, x) -> acc + x))), 6) AS centroid_cos
                 FROM e, cent)
-              SELECT vec_id, centroid_cos, centroid_cos < -0.15 AS is_outlier FROM sc""")),
+              SELECT vec_id, centroid_cos, centroid_cos < -0.15 AS is_outlier FROM sc"""), headline = true),
 
     Q("pipeline_cluster_balance", // cluster-balanced pruning (Sorscher et al.
       // 2022 / DataComp): assign to 8 frozen seed centroids (the vec_id < 8
@@ -5390,13 +5069,8 @@ object SparkEntry {
       // window sort, so a power-law hot cluster combines map-side
       (s, d) => Curation.clusterBalance(Tables.embeddings(s, d),
         clusterSeeds(s, d), perCluster = 40),
-      Some(clusterAssignCtes + """,
-              r AS (SELECT vec_id, cluster_id,
-                  row_number() OVER (PARTITION BY cluster_id ORDER BY
-                    CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 13)) AS BIGINT) ASC,
-                    vec_id ASC) AS keep_rank FROM a)
-              SELECT vec_id, cluster_id, CAST(keep_rank AS BIGINT) AS keep_rank
-              FROM r WHERE keep_rank <= 40""")),
+      Some(clusterKeepOracle(
+        "CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 13)) AS BIGINT)")), headline = true),
 
     Q("pipeline_cluster_prune", // the keepHardest mode: within each cluster
       // keep the 40 LEAST prototypical vectors (ascending assigned-centroid
@@ -5404,30 +5078,18 @@ object SparkEntry {
       // the abundant-data regime; same assignment, same heap aggregation
       (s, d) => Curation.clusterBalance(Tables.embeddings(s, d),
         clusterSeeds(s, d), perCluster = 40, keepHardest = true),
-      Some(clusterAssignCtes + """,
-              r AS (SELECT vec_id, cluster_id, pdot,
-                  row_number() OVER (PARTITION BY cluster_id ORDER BY pdot ASC,
-                    vec_id ASC) AS keep_rank FROM a)
-              SELECT vec_id, cluster_id, CAST(keep_rank AS BIGINT) AS keep_rank
-              FROM r WHERE keep_rank <= 40""")),
+      Some(clusterKeepOracle("pdot"))),
 
     Q("pipeline_weighted_sample", // Efraimidis–Spirakis weighted sampling
       // without replacement: top-100 by ln(u)/w with u from the content
       // hash — deterministic across engines/partitionings (no RNG state),
       // longer docs preferred proportionally to n_chars; map-only + heap
       (s, d) => Curation.weightedSample(Tables.documents(s, d), k = 100),
-      Some("""WITH t AS (SELECT doc_id, n_chars,
-                regexp_replace(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-                  '[^a-z0-9 ]', '', 'g') AS clean FROM documents),
-              f AS (SELECT doc_id, n_chars,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS fp FROM t),
-              s AS (SELECT doc_id, CAST(n_chars AS DOUBLE) AS weight,
-                round(ln((CAST(fp % 10000 AS DOUBLE) + 0.5) / 10000) / n_chars, 9)
+      Some(fingerprintCtes + """,
+              s AS (SELECT doc_id, CAST(d.n_chars AS DOUBLE) AS weight,
+                round(ln((CAST(fp % 10000 AS DOUBLE) + 0.5) / 10000) / d.n_chars, 9)
                   AS es_key
-                FROM f WHERE n_chars > 0)
+                FROM f JOIN documents d USING (doc_id) WHERE d.n_chars > 0)
               SELECT doc_id, weight, es_key FROM s
               ORDER BY es_key DESC, doc_id LIMIT 100""")),
 
@@ -5438,11 +5100,7 @@ object SparkEntry {
       Some("""WITH t AS (SELECT doc_id,
                 regexp_replace(lower(trim(regexp_replace('seed7 ' || text, '\s+', ' ', 'g'))),
                   '[^a-z0-9 ]', '', 'g') AS clean FROM documents)
-              SELECT doc_id,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(generate_series(1, length(clean)),
-                    i -> CAST(ord(substr(clean, i, 1)) AS BIGINT))),
-                  (acc, c) -> (acc * 31 + c) % 1000000007) AS shuffle_key
+              SELECT doc_id, """ + cleanFingerprintSql + """ AS shuffle_key
               FROM t""")),
 
     Q("q_funnel", // ordered-funnel completion signup→view→purchase within a
@@ -5452,21 +5110,10 @@ object SparkEntry {
       // the |users|-row previous-stage table — no per-user event sort
       (s, d) => Analytics.funnel(Tables.events(s, d),
         Seq("signup", "view", "purchase"), maxSpanHours = 168),
-      Some("""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                FROM events),
-              s1 AS (SELECT user_id, min(ts) AS t0, min(ts) AS t FROM e
-                WHERE event_type = 'signup' GROUP BY user_id),
-              s2 AS (SELECT e.user_id, min(s1.t0) AS t0, min(e.ts) AS t
-                FROM e JOIN s1 USING (user_id)
-                WHERE e.event_type = 'view' AND e.ts >= s1.t
-                  AND e.ts <= s1.t0 + INTERVAL 168 HOURS GROUP BY e.user_id),
-              s3 AS (SELECT e.user_id, min(s2.t0) AS t0, min(e.ts) AS t
-                FROM e JOIN s2 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts >= s2.t
-                  AND e.ts <= s2.t0 + INTERVAL 168 HOURS GROUP BY e.user_id)
+      Some(funnelCtes + """
               SELECT 1 AS stage_idx, 'signup' AS stage, count(*) AS n_users FROM s1
               UNION ALL SELECT 2, 'view', count(*) FROM s2
-              UNION ALL SELECT 3, 'purchase', count(*) FROM s3""")),
+              UNION ALL SELECT 3, 'purchase', count(*) FROM s3"""), headline = true),
 
     Q("q_retention_cohorts", // weekly retention triangle: cohort = week of a
       // user's first event; retained = any event in a later week. Two
@@ -5497,7 +5144,7 @@ object SparkEntry {
               SELECT user_id, event_id, value,
                 round(((st.s - e.c) * gn + 10.0 * gs)
                   / (100.0 * gn * (st.n - 1 + 10.0)), 6) AS te_loo
-              FROM e JOIN st USING (user_id) CROSS JOIN g""")),
+              FROM e JOIN st USING (user_id) CROSS JOIN g"""), headline = true),
 
     Q("q_rolling_features", // feature-engineering projection: per-user lag-1/2
       // values and preceding-3-row mean/min/max in one shared per-key ordered
@@ -5542,19 +5189,7 @@ object SparkEntry {
       (s, d) => Ops.sessionize(Tables.events(s, d), Seq("user_id"), "ts",
         "event_id", gapSeconds = 1800L)
         .select("event_id", "user_id", "session_seq"),
-      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events),
-              l AS (SELECT event_id, user_id, ts,
-                lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-                FROM e),
-              n AS (SELECT event_id, user_id, ts,
-                CASE WHEN prev IS NULL
-                     OR epoch_us(ts) - epoch_us(prev) > 1800000000
-                     THEN 1 ELSE 0 END AS nw FROM l)
-              SELECT event_id, user_id,
-                CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-              FROM n""")),
+      Some(sessionizeOracle), headline = true),
 
     Q("q_sessionize_skewsafe", // two-level skew-safe sessionization: sort
       // within (user, 1h range) then merge boundary sessions — no task ever
@@ -5564,19 +5199,7 @@ object SparkEntry {
       (s, d) => Ops.sessionizeSkewSafe(Tables.events(s, d), Seq("user_id"), "ts",
         "event_id", gapSeconds = 1800L, rangeSeconds = 3600L)
         .select("event_id", "user_id", "session_seq"),
-      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events),
-              l AS (SELECT event_id, user_id, ts,
-                lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-                FROM e),
-              n AS (SELECT event_id, user_id, ts,
-                CASE WHEN prev IS NULL
-                     OR epoch_us(ts) - epoch_us(prev) > 1800000000
-                     THEN 1 ELSE 0 END AS nw FROM l)
-              SELECT event_id, user_id,
-                CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-              FROM n""")),
+      Some(sessionizeOracle)),
 
     Q("dedup_incremental", // cross-snapshot dedup: new batch (doc_id % 5 = 0)
       // self-dedups then anti-joins the base corpus — both sides reduced to
@@ -5588,12 +5211,11 @@ object SparkEntry {
           batch = docs.filter(col("doc_id") % 5 === 0),
           base = docs.filter(col("doc_id") % 5 =!= 0))
       },
-      Some("""WITH t AS (SELECT doc_id,
-                lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS norm FROM documents),
+      Some(normCte + """,
               nb AS (SELECT min(doc_id) AS doc_id, count(*) AS batch_dup_count, norm
                 FROM t WHERE doc_id % 5 = 0 GROUP BY norm)
               SELECT doc_id, batch_dup_count FROM nb
-              WHERE norm NOT IN (SELECT norm FROM t WHERE doc_id % 5 <> 0)""")),
+              WHERE norm NOT IN (SELECT norm FROM t WHERE doc_id % 5 <> 0)"""), headline = true),
 
     Q("dedup_incremental_minhash", // cross-snapshot NEAR-dedup, the fuzzy
       // sibling of dedup_incremental, as a DRIVER-VISIBLE recall gate:
@@ -5626,36 +5248,16 @@ object SparkEntry {
             (col("__nwf") >= col("__nw") * 0.8).as("base_recall_ok"))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_batch, TRUE AS base_recall_ok
-              FROM documents WHERE doc_id % 5 = 0""")),
+              FROM documents WHERE doc_id % 5 = 0"""), headline = true),
 
     Q("search_bm25", // Okapi BM25 top-25 for a 3-term query: map-side tf kernel,
       // single-row stats broadcast, TakeOrderedAndProject top-k — no corpus
       // explode, no shuffle of documents
       (s, d) => Search.bm25TopK(Tables.documents(s, d),
         queryTerms = Seq("vector", "merge", "stream"), k = 25),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              x AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                CAST(len(list_filter(toks, w -> w = 'vector')) AS DOUBLE) AS tf0,
-                CAST(len(list_filter(toks, w -> w = 'merge')) AS DOUBLE) AS tf1,
-                CAST(len(list_filter(toks, w -> w = 'stream')) AS DOUBLE) AS tf2
-                FROM t),
-              st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl,
-                sum(CASE WHEN tf0 > 0 THEN 1.0 ELSE 0.0 END) AS df0,
-                sum(CASE WHEN tf1 > 0 THEN 1.0 ELSE 0.0 END) AS df1,
-                sum(CASE WHEN tf2 > 0 THEN 1.0 ELSE 0.0 END) AS df2
-                FROM x),
-              sc AS (SELECT doc_id, round(
-                  ln(1 + (n_docs - df0 + 0.5) / (df0 + 0.5))
-                    * (tf0 * 2.2) / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                + ln(1 + (n_docs - df1 + 0.5) / (df1 + 0.5))
-                    * (tf1 * 2.2) / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                + ln(1 + (n_docs - df2 + 0.5) / (df2 + 0.5))
-                    * (tf2 * 2.2) / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS bm25
-                FROM x, st)
+      Some(bm25ThreeTermCtes + """
               SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
-              ORDER BY bm25 DESC, doc_id LIMIT 25""")),
+              ORDER BY bm25 DESC, doc_id LIMIT 25"""), headline = true),
 
     Q("search_hybrid_rrf", // hybrid retrieval: BM25 top-50 + exact-cosine
       // top-50 (query = embedding of vec 0) fused by Reciprocal Rank Fusion
@@ -5668,27 +5270,7 @@ object SparkEntry {
           queryTerms = Seq("vector", "merge", "stream"),
           queryVecs = emb.filter(col("vec_id") === 0), k = 10, kRetrieval = 50)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              x AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                CAST(len(list_filter(toks, w -> w = 'vector')) AS DOUBLE) AS tf0,
-                CAST(len(list_filter(toks, w -> w = 'merge')) AS DOUBLE) AS tf1,
-                CAST(len(list_filter(toks, w -> w = 'stream')) AS DOUBLE) AS tf2
-                FROM t),
-              st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl,
-                sum(CASE WHEN tf0 > 0 THEN 1.0 ELSE 0.0 END) AS df0,
-                sum(CASE WHEN tf1 > 0 THEN 1.0 ELSE 0.0 END) AS df1,
-                sum(CASE WHEN tf2 > 0 THEN 1.0 ELSE 0.0 END) AS df2
-                FROM x),
-              sc AS (SELECT doc_id, round(
-                  ln(1 + (n_docs - df0 + 0.5) / (df0 + 0.5))
-                    * (tf0 * 2.2) / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                + ln(1 + (n_docs - df1 + 0.5) / (df1 + 0.5))
-                    * (tf1 * 2.2) / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-                + ln(1 + (n_docs - df2 + 0.5) / (df2 + 0.5))
-                    * (tf2 * 2.2) / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS bm25
-                FROM x, st),
+      Some(bm25ThreeTermCtes + """,
               lex AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
                 FROM sc WHERE bm25 > 0 ORDER BY bm25 DESC, doc_id LIMIT 50),
               e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -5705,7 +5287,7 @@ object SparkEntry {
                 l.lex_rank, v.vec_rank
                 FROM lex l FULL OUTER JOIN vr v ON l.doc_id = v.vec_id)
               SELECT doc_id, rrf, lex_rank, vec_rank FROM f
-              ORDER BY rrf DESC, doc_id LIMIT 10""")),
+              ORDER BY rrf DESC, doc_id LIMIT 10"""), headline = true),
 
     Q("search_hybrid_rrf_batch", // hybrid retrieval for a query SET: every
       // rank keyed on the logical query_id (lexical via bm25TopKBatch, vector
@@ -5722,9 +5304,7 @@ object SparkEntry {
         Search.hybridTopKBatch(Tables.documents(s, d), emb, queries, qv,
           k = 10, kRetrieval = 50)
       },
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
                 avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t),
               q AS (SELECT CAST(query_id AS BIGINT) AS query_id, qtext FROM (VALUES
@@ -5778,16 +5358,12 @@ object SparkEntry {
       (s, d) => Search.invertedIndex(Tables.documents(s, d), minDf = 2, maxDf = 200)
         .withColumn("postings",
           array_join(transform(col("postings"), _.cast("string")), " ")),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              e AS (SELECT DISTINCT doc_id, term
-                FROM (SELECT doc_id, unnest(toks) AS term FROM t)),
+      Some(docTermCtes + """,
               g AS (SELECT term, count(*) AS df FROM e GROUP BY term
                 HAVING count(*) >= 2 AND count(*) <= 200)
               SELECT term, g.df,
                 string_agg(CAST(e.doc_id AS VARCHAR), ' ' ORDER BY e.doc_id) AS postings
-              FROM e JOIN g USING (term) GROUP BY term, g.df""")),
+              FROM e JOIN g USING (term) GROUP BY term, g.df"""), headline = true),
 
     Q("search_postings_sharded", // hot-term sharded index: full coverage with
       // every buffer bounded — terms past maxDf split postings by
@@ -5796,11 +5372,7 @@ object SparkEntry {
         minDf = 2, maxDf = 150, shards = 4)
         .withColumn("postings",
           array_join(transform(col("postings"), _.cast("string")), " ")),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              e AS (SELECT DISTINCT doc_id, term
-                FROM (SELECT doc_id, unnest(toks) AS term FROM t)),
+      Some(docTermCtes + """,
               g AS (SELECT term, count(*) AS df FROM e GROUP BY term
                 HAVING count(*) >= 2),
               sh AS (SELECT e.term,
@@ -5815,9 +5387,7 @@ object SparkEntry {
       // to the phrase vocabulary BEFORE any exchange, so the vote shuffle
       // tracks the terms' df, never corpus size
       (s, d) => Search.phraseSearch(Tables.documents(s, d), Seq("table", "part")),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               s AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 1)) AS st, toks
                 FROM t)
               SELECT doc_id, count(*) AS n_occurrences FROM s
@@ -5829,9 +5399,7 @@ object SparkEntry {
       // exchange of the matched positions only
       (s, d) => Search.proximitySearch(Tables.documents(s, d),
         "spark", "stream", window = 5),
-      Some("""WITH t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
+      Some(tokensCte + """,
               p AS (SELECT doc_id,
                 list_filter(generate_series(1, len(toks)), i -> toks[i] = 'spark') AS pa,
                 list_filter(generate_series(1, len(toks)), i -> toks[i] = 'stream') AS pb
@@ -5850,14 +5418,12 @@ object SparkEntry {
           (3L, "scan filter")).toDF("query_id", "qtext")
         Search.bm25TopKBatch(Tables.documents(s, d), qs, k = 10)
       },
-      Some("""WITH q(query_id, qtext) AS (VALUES
+      Some(tokensCte + """,
+              q(query_id, qtext) AS (VALUES
                 (CAST(1 AS BIGINT), 'vector merge stream'),
                 (CAST(2 AS BIGINT), 'join hash customer'),
                 (CAST(3 AS BIGINT), 'scan filter')),
               qt AS (SELECT DISTINCT query_id, unnest(string_split(qtext, ' ')) AS term FROM q),
-              t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
               st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
                 avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t),
               e AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
@@ -5874,7 +5440,7 @@ object SparkEntry {
               r AS (SELECT query_id, doc_id, bm25,
                 row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS rn
                 FROM sc)
-              SELECT query_id, doc_id, bm25 FROM r WHERE rn <= 10""")),
+              SELECT query_id, doc_id, bm25 FROM r WHERE rn <= 10"""), headline = true),
 
     Q("search_tfidf_weights", // TF-IDF sparse matrix build (smooth idf,
       // sklearn-style): one (term, doc) count agg + df window over the
@@ -5882,13 +5448,7 @@ object SparkEntry {
       // lexical-vector artifact, hash-oracled row for row
       (s, d) => Search.tfidfWeights(Tables.documents(s, d))
         .withColumn("w", round(col("w"), 6)),
-      Some("""WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-              t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              p AS (SELECT doc_id, unnest(toks) AS term FROM t),
-              tf AS (SELECT term, doc_id, CAST(count(*) AS DOUBLE) AS tf
-                FROM p WHERE len(term) > 0 GROUP BY 1, 2),
+      Some(termFreqCtes + """,
               w AS (SELECT term, doc_id, tf,
                 CAST(count(*) OVER (PARTITION BY term) AS DOUBLE) AS df, n_docs
                 FROM tf, n)
@@ -5922,13 +5482,7 @@ object SparkEntry {
       // norm and dot together; TakeOrderedAndProject top-k — hash-oracled
       (s, d) => Search.tfidfCosineTopK(
         Search.tfidfWeights(Tables.documents(s, d)), queryDocId = 42, k = 25),
-      Some("""WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-              t AS (SELECT doc_id,
-                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS toks
-                FROM documents),
-              p AS (SELECT doc_id, unnest(toks) AS term FROM t),
-              tf AS (SELECT term, doc_id, CAST(count(*) AS DOUBLE) AS tf
-                FROM p WHERE len(term) > 0 GROUP BY 1, 2),
+      Some(termFreqCtes + """,
               w AS (SELECT term, doc_id,
                 tf * (ln((1 + n_docs) /
                   (1 + CAST(count(*) OVER (PARTITION BY term) AS DOUBLE))) + 1) AS w
@@ -5941,7 +5495,7 @@ object SparkEntry {
               sc AS (SELECT doc_id, round(dot / sqrt(norm2 * qnorm2), 6) AS tfidf_cos
                 FROM d, qn)
               SELECT doc_id, tfidf_cos FROM sc WHERE tfidf_cos > 0
-              ORDER BY tfidf_cos DESC, doc_id LIMIT 25""")))
+              ORDER BY tfidf_cos DESC, doc_id LIMIT 25"""), headline = true))
 
   // ------------------------------------------------------------------
   // graph analytics — entity importance + label spreading over the
@@ -5954,7 +5508,7 @@ object SparkEntry {
       .select((col("c_custkey").cast("long") * 2).as("node"),
         col("c_nationkey").as("label"))
 
-  /** Long node id → the public 'c:k' / 's:k' name (r17): the graph runs on
+  /** Long node id → the public 'c:k' / 's:k' name: the graph runs on
     * LONG node ids end to end — customers map to 2k, suppliers to 2k+1, an
     * injective encoding, so distinct/group/join semantics are identical to
     * the concatenated strings — and every graph shuffle (node distinct,
@@ -5972,8 +5526,8 @@ object SparkEntry {
     * [[graft.operators.Graph.pageRank]] still carries the dangling term).
     * Node ids namespaced `c:`/`s:` so the two key spaces cannot collide. */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    // group on the RAW INTEGER keys (r16) and keep the node ids as LONGS all
-    // the way through the iteration (r17 — see graphNodeName): the entries
+    // group on the RAW INTEGER keys and keep the node ids as LONGS all
+    // the way through the iteration (see graphNodeName): the entries
     // stringify only the final |V|-row result
     val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
@@ -6115,10 +5669,10 @@ object SparkEntry {
           .select(date_format(col("window.start"), "yyyyMMddHH").as("hour_bucket"),
             col("cnt"))),
       Some("""SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
-              count(*) AS cnt FROM events GROUP BY 1""")),
+              count(*) AS cnt FROM events GROUP BY 1"""), headline = true),
 
-    Q("w_stream_heavy_hitters", // streaming HEAVY HITTERS (r13 verdict ask
-      // #3, the update-mode twin of q_heavy_hitters): the STREAM side is the
+    Q("w_stream_heavy_hitters", // streaming HEAVY HITTERS (the update-mode
+      // twin of q_heavy_hitters): the STREAM side is the
       // stateful windowed (hour, item) count — the w1 shape keyed by item —
       // and the per-window top-3 ranks the SETTLED aggregate (windows×items
       // rows, never raw events; rank = cnt desc, item asc — the library's
@@ -6132,21 +5686,14 @@ object SparkEntry {
         StreamingViews.topKPerWindow(settled, "hour_bucket", "event_type",
           "cnt", k = 3)
       },
-      Some("""SELECT hour_bucket, event_type, cnt, rank FROM (
-                SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
-                  event_type, count(*) AS cnt,
-                  row_number() OVER (
-                    PARTITION BY strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H')
-                    ORDER BY count(*) DESC, event_type) AS rank
-                FROM events GROUP BY 1, 2)
-              WHERE rank <= 3""")),
+      Some(hourlyTopTypesOracle("event_type")), headline = true),
 
     Q("w_stream_heavy_hitters_sketch", // the BOUNDED-STATE streaming heavy
       // hitter (unbounded item domains): capacity-bounded Misra-Gries
       // sketches inside flatMapGroupsWithState, state keyed by
       // (window, pmod(xxhash64(item), 4)) so a window's events spread over
       // 4 tasks instead of funneling the hot current-hour key through one
-      // (r14 verdict) — state is windows × shards × capacity whatever the
+      // — state is windows × shards × capacity whatever the
       // stream carries — settled by the max-n_updates emission per sketch
       // (the streamFunnel argmax discipline) and ranked read-side. Item-
       // deterministic sharding keeps each item's counts in ONE shard, and
@@ -6163,14 +5710,7 @@ object SparkEntry {
           StreamingViews.settleSketch(emissions).withColumnRenamed("est_count", "cnt"),
           "hour_bucket", "item", "cnt", k = 3)
       },
-      Some("""SELECT hour_bucket, item, cnt, rank FROM (
-                SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
-                  event_type AS item, count(*) AS cnt,
-                  row_number() OVER (
-                    PARTITION BY strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H')
-                    ORDER BY count(*) DESC, event_type) AS rank
-                FROM events GROUP BY 1, 2)
-              WHERE rank <= 3""")),
+      Some(hourlyTopTypesOracle("item")), headline = true),
 
     Q("w_stream_image_clusters", // visual dedup on a LIVE stream: the
       // map-only decode+dHash runs stateless; the cluster group-by is the
@@ -6181,7 +5721,7 @@ object SparkEntry {
       (s, d) => StreamingViews.runToMemory(s, s"$d/documents.parquet",
         "graft_wimg_sink", src => Multimodal.imageDupClusters(s,
           Multimodal.syntheticCloneJpegsFromDocuments(s, src, classes = 100).toDF())),
-      Some(dHashCtes("doc_id % 100") + dHashClusterSelect)),
+      Some(dHashCtes("doc_id % 100") + dHashClusterSelect), headline = true),
 
     Q("w_stream_image_matches", // the stream-static near-dup gate family's
       // IMAGE edition (minhash / winnow / cosine now have a visual sibling):
@@ -6242,24 +5782,14 @@ object SparkEntry {
         "graft_wq_sink", src => StreamingViews.hourCounts(
           QueueIngest.decodeFrames(QueueIngest.encodeFrames(Tables.normalizeEventTs(src)))
             .withColumn("ts", col("ts").cast("timestamp")))),
-      Some("""SELECT strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') AS hour_bucket,
-              event_type, count(*) AS cnt FROM events GROUP BY 1, 2""")),
+      Some(hourTypeCountsOracle)),
 
     Q("w2_stream_bucket_counts", // A2 as a real streaming query (counter table parity)
       (s, d) => StreamingViews.runToMemory(s, s"$d/events.parquet",
         "graft_w2_sink", src => StreamingViews.bucketCounts(
           // watermarks require TIMESTAMP (tz-aware); equal to ntz under UTC session
           Tables.normalizeEventTs(src).withColumn("ts", col("ts").cast("timestamp")))),
-      Some("""WITH b AS (
-              SELECT '5min' AS granularity,
-                '5min:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') ||
-                lpad(CAST((minute(CAST(ts AS TIMESTAMP)) // 5) * 5 AS VARCHAR), 2, '0') AS time_bucket
-              FROM events
-              UNION ALL
-              SELECT 'hourly', 'hourly:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d%H') FROM events
-              UNION ALL
-              SELECT 'daily', 'daily:' || strftime(CAST(ts AS TIMESTAMP), '%Y%m%d') FROM events)
-              SELECT granularity, time_bucket, count(*) AS cnt FROM b GROUP BY 1, 2""")),
+      Some(bucketCountsOracle)),
 
     Q("w_sliding_window", // sliding windows — absent from the reference (tumbling only)
       (s, d) => Tables.events(s, d)
@@ -6352,18 +5882,7 @@ object SparkEntry {
           .filter(col("stage_reached") >= 1)
           .select(col("user_id"), col("stage_reached"))
       },
-      Some("""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                FROM events),
-              s1 AS (SELECT user_id, min(ts) AS t0, min(ts) AS t FROM e
-                WHERE event_type = 'signup' GROUP BY user_id),
-              s2 AS (SELECT e.user_id, min(s1.t0) AS t0, min(e.ts) AS t
-                FROM e JOIN s1 USING (user_id)
-                WHERE e.event_type = 'view' AND e.ts >= s1.t
-                  AND e.ts <= s1.t0 + INTERVAL 168 HOURS GROUP BY e.user_id),
-              s3 AS (SELECT e.user_id, min(s2.t0) AS t0, min(e.ts) AS t
-                FROM e JOIN s2 USING (user_id)
-                WHERE e.event_type = 'purchase' AND e.ts >= s2.t
-                  AND e.ts <= s2.t0 + INTERVAL 168 HOURS GROUP BY e.user_id)
+      Some(funnelCtes + """
               SELECT s1.user_id,
                 CASE WHEN s3.user_id IS NOT NULL THEN 3
                      WHEN s2.user_id IS NOT NULL THEN 2
@@ -6390,13 +5909,24 @@ object SparkEntry {
     scanQueries ++ viewQueries ++ relationalQueries ++ pipelineQueries ++
       searchQueries ++ graphQueries ++ streamingQueries
 
+  private val duplicateNames = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+  require(duplicateNames.isEmpty,
+    s"duplicate SparkEntry query names: ${duplicateNames.toSeq.sorted.mkString(", ")}")
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (engine-specific hashes/sketches) → rows-only check. */
-  def oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(sql => q.name -> sql.stripMargin)).toMap
+    * the same parquet tables, exactly as written. Omitted for
+    * non-SQL-expressible ops (engine-specific hashes/sketches) → rows-only
+    * check. */
+  val oracleSql: Map[String, String] =
+    all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The entries `Bench` reports on its stdout line, in registry order: a
+    * subset, so the line stays short enough for a tail capture to parse (a
+    * 75-entry line was truncated); the complete sweep over every entry goes
+    * to `bench_full.json`. */
+  val headline: Seq[String] = all.filter(_.headline).map(_.name)
 }

@@ -17,9 +17,7 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     dump(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
 
@@ -44,6 +42,12 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/failed.json"), json)
     failed.toMap
   }
+
+  /** The oracle SQL as a JSON object, one key per line in sorted order, so
+    * two dumps diff line by line. */
+  private[graft] def oracleJson(oracles: Map[String, String]): String =
+    oracles.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{\n", ",\n", "\n}")
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in oracle SQL or an exception message would otherwise

@@ -33,4 +33,20 @@ class VerifySpec extends SparkSpec {
     assert(failed.isEmpty)
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/failed.json")) === "{}")
   }
+
+  test("oracleJson: keys sorted, one per line, values escaped") {
+    val json = Verify.oracleJson(Map("q_b" -> "SELECT 2", "q_a" -> "SELECT\t'1'"))
+    assert(json === "{\n\"q_a\": \"SELECT\\t'1'\",\n\"q_b\": \"SELECT 2\"\n}")
+  }
+
+  test("registry: 270 distinct query names, 265 oracles, each naming a query") {
+    // SparkEntry fails to initialize on a duplicate name, so the map size
+    // is the distinct-name count
+    assert(SparkEntry.queries.size === 270)
+    assert(SparkEntry.oracleSql.size === 265)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.forall { case (_, sql) => sql != null && sql.trim.nonEmpty })
+    assert(SparkEntry.headline.size === 78)
+    assert(SparkEntry.headline.toSet.subsetOf(SparkEntry.queries.keySet))
+  }
 }
