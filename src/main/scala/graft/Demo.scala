@@ -51,9 +51,9 @@ object Demo {
     // The reference's full ingest-to-read lifecycle in one artifact
     // (`cassandra_subscriber.py:102-233` -> `realtime_api.py:82-322`): file
     // stream -> foreachBatch view maintenance (both views written per
-    // micro-batch, one after the other — not atomically, see
-    // `StreamingViews.maintainViews`) -> endpoint read over the compacted
-    // view, asserted equal to the batch-computed view.
+    // micro-batch, concurrently and not atomically; a replay makes them
+    // agree, see `StreamingViews.maintainViews`) -> endpoint read over the
+    // compacted view, asserted equal to the batch-computed view.
     println("== Streaming lifecycle: file stream -> maintainViews -> endpoint read")
     val tmp = java.nio.file.Files.createTempDirectory("graft_demo_stream")
     val diff = try {

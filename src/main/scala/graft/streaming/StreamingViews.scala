@@ -798,16 +798,27 @@ object StreamingViews {
   /** S4 streaming: the reference's LOGGED BATCH writes each customer event to
     * `customer_latest_info` AND `global_recent_customers` atomically
     * (`cassandra_subscriber.py:121-163`). Here one foreachBatch body derives
-    * both views from the same micro-batch but writes them one after the
-    * other — `recent_log`, then `latest_increment` — each to its own
-    * `batch=N` path. The pair is NOT atomic: a crash between the two writes
-    * leaves batch N in `recent_log` and missing from `latest_increment`, and
-    * only Spark's replay of batch N makes them agree (a cross-view commit
-    * marker is ROADMAP.md item 3). The deterministic per-batchId paths make
-    * that replay idempotent — a replayed batch overwrites itself, fixing the
-    * reference's at-least-once double-count, SURVEY.md §2 W3. Increments
-    * compact on read via [[latestFromIncrements]] — the append-plus-compact
-    * pattern a real deployment would hand to a table format's MERGE. */
+    * both views from the same persisted micro-batch and writes them
+    * concurrently, each to its own `batch=N` path: `recent_log` on the batch
+    * thread, `latest_increment` on a thread started inside the body, so it
+    * inherits the batch's job group and `query.stop()` cancels it too.
+    *
+    * The increment is the batch's LWW winners over `batch.coalesce(1)`: one
+    * task per micro-batch, no shuffle, one file per batch. A micro-batch is
+    * bound by fixed per-job cost, not by rows, so a shuffle's extra stage
+    * costs more than the single task saves.
+    *
+    * The body joins the increment thread whether or not `recent_log`
+    * threw, then rethrows the first failure (`recent_log`'s, else the
+    * increment's), so the batch fails and Spark does not commit it. The pair is NOT atomic: a crash or a failure in one
+    * write can leave batch N in one view and missing from the other, and only
+    * Spark's replay of batch N makes them agree. A cross-view commit marker
+    * (ROADMAP.md item 3) must publish after the join. The deterministic
+    * per-batchId paths make that replay idempotent — a replayed batch
+    * overwrites itself, fixing the reference's at-least-once double-count,
+    * SURVEY.md §2 W3. Increments compact on read via [[latestFromIncrements]]
+    * — the append-plus-compact pattern a real deployment would hand to a
+    * table format's MERGE. */
   def maintainViews(events: DataFrame, outDir: String, checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
     events.writeStream
@@ -815,12 +826,16 @@ object StreamingViews {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         batch.persist()
-        try {
-          batch.write.mode("overwrite")
-            .parquet(s"$outDir/recent_log/batch=$batchId")
-          Views.latestInfo(batch).write.mode("overwrite")
+        var incrementFailure: Throwable = null
+        val increment = new Thread(() =>
+          try Views.latestInfo(batch.coalesce(1)).write.mode("overwrite")
             .parquet(s"$outDir/latest_increment/batch=$batchId")
-        } finally { batch.unpersist(); () }
+          catch { case t: Throwable => incrementFailure = t },
+          s"maintainViews-increment-$batchId")
+        increment.start()
+        try batch.write.mode("overwrite").parquet(s"$outDir/recent_log/batch=$batchId")
+        finally { increment.join(); batch.unpersist(); () }
+        if (incrementFailure != null) throw incrementFailure
       }
       .start()
 

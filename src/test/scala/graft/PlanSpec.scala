@@ -9,10 +9,13 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graft.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.{Ops, Similarity, Views}
 import graft.sources.Tables
+import graft.streaming.StreamingViews
 
 /** Physical-plan assertions — the 100 TB contract (SURVEY.md §4). Correct rows
   * are not enough: these tests fail if a plan regression re-introduces a full
@@ -748,6 +751,32 @@ class PlanSpec extends SparkSpec {
     }
     val over = actual.filter { case (q, n) => n > budget(q) }
     assert(over.isEmpty, s"eager jobs above budget: $over (budget ${budget.toSeq.sorted})")
+  }
+
+  test("maintainViews: a micro-batch plans no Exchange and runs at most its pinned jobs") {
+    // Per micro-batch: the persisted batch's table-cache stage, the
+    // recent_log write and the one-task increment write. At this size each
+    // job's fixed cost is the batch's cost. Lower the budget freely; never
+    // raise it.
+    val jobBudget = 3
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_views").toString
+    val stream = MemoryStream[TestEvent](4)
+    def batch(n: Int) = (0 until 400).map(i => TestEvent(n * 400L + i, i % 50, "view",
+      new java.sql.Timestamp(1700000000000L + i * 1000L), i.toDouble, "{}"))
+    var jobs = 0
+    val plans = executedPlans {
+      val q = StreamingViews.maintainViews(stream.toDF(), s"$dir/out", s"$dir/ckpt",
+        Trigger.ProcessingTime(0))
+      try {
+        stream.addData(batch(0)); q.processAllAvailable()
+        jobs = jobsDuring { stream.addData(batch(1)); q.processAllAvailable() }
+      } finally q.stop()
+    }
+    assert(plans.size === 4, plans.mkString("\n")) // two view writes per batch
+    val exchanging = plans.filter(p => ran(p).contains("Exchange"))
+    assert(exchanging.isEmpty, s"a view write shuffles:\n${exchanging.mkString("\n")}")
+    assert(jobs <= jobBudget, s"$jobs jobs per micro-batch, budget $jobBudget")
   }
 
   test("graph operators plan every exchanging job adaptively and leave the session conf as found") {

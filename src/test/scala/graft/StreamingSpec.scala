@@ -776,7 +776,8 @@ class StreamingSpec extends SparkSpec {
       stream.addData(allEvents.take(3)); q.processAllAvailable()
       stream.addData(allEvents.drop(3)); q.processAllAvailable()
     } finally q.stop()
-    // both views written per micro-batch (the reference's logged-batch atomicity)
+    // both views written per micro-batch, concurrently and not atomically
+    // (unlike the reference's logged batch); a replay makes them agree
     val batches = new java.io.File(s"$dir/out/latest_increment").list().sorted.toSeq
     assert(batches === Seq("batch=0", "batch=1"))
     assert(new java.io.File(s"$dir/out/recent_log/batch=0").exists())
@@ -786,6 +787,55 @@ class StreamingSpec extends SparkSpec {
     val compacted = StreamingViews.latestFromIncrements(spark, s"$dir/out")
     assert(rowSet(compacted.select("user_id", "event_id")) ===
       rowSet(Views.latestInfo(allEvents.toDF()).select("user_id", "event_id")))
+  }
+
+  test("maintainViews increments: each batch=N holds the LWW winners of batch N's events") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_increments").toString
+    // user 10 repeats in batch 0; user 30 repeats in batch 1 at one ts, so
+    // event_id breaks the tie
+    val batches = Seq(allEvents.take(3),
+      allEvents.drop(3) :+ TestEvent(6, 30, "view", ts("2024-01-01 10:59:59"), 5.0, "{}"))
+    val stream = MemoryStream[TestEvent](4)
+    val q = StreamingViews.maintainViews(stream.toDF(), s"$dir/out", s"$dir/ckpt",
+      trigger = Trigger.ProcessingTime(0))
+    try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    batches.zipWithIndex.foreach { case (b, n) =>
+      val twin = Views.latestInfo(b.toDF())
+      val inc = spark.read.parquet(s"$dir/out/latest_increment/batch=$n")
+        .select(twin.columns.toIndexedSeq.map(col): _*)
+      assert(rowList(inc).sortBy(_.toString) === rowList(twin).sortBy(_.toString), s"batch=$n")
+    }
+  }
+
+  test("maintainViews failure path: a failed increment write fails the batch, and a restart repairs both views") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_maintain_fail").toString
+    val out = s"$dir/out"
+    val blocker = new java.io.File(s"$out/latest_increment")
+    blocker.getParentFile.mkdirs()
+    assert(blocker.createNewFile()) // a plain file where the increment's directory goes
+    val stream = MemoryStream[TestEvent](4)
+    def start() = StreamingViews.maintainViews(stream.toDF(), out, s"$dir/ckpt",
+      trigger = Trigger.ProcessingTime(0))
+    stream.addData(allEvents.take(3))
+    val q = start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    finally q.stop()
+    assert(!new java.io.File(s"$dir/ckpt/commits/0").exists(), "a failed batch was committed")
+    assert(blocker.delete())
+    val restarted = start()
+    try {
+      restarted.processAllAvailable()
+      stream.addData(allEvents.drop(3)); restarted.processAllAvailable()
+    } finally restarted.stop()
+    val events = allEvents.toDF()
+    assert(rowSet(StreamingViews.latestFromIncrements(spark, out)) === rowSet(Views.latestInfo(events)))
+    val twin = Views.recentLog(events)
+    val log = spark.read.parquet(s"$out/recent_log").select(twin.columns.toIndexedSeq.map(col): _*)
+    assert(log.count() === allEvents.size)
+    assert(rowSet(log) === rowSet(twin))
   }
 
   /** Stream `batches` (one parquet file each, one micro-batch per file)
