@@ -805,20 +805,21 @@ object StreamingViews {
     *
     * The increment is the batch's LWW winners over `batch.coalesce(1)`: one
     * task per micro-batch, no shuffle, one file per batch. A micro-batch is
-    * bound by fixed per-job cost, not by rows, so a shuffle's extra stage
-    * costs more than the single task saves.
+    * bound by fixed per-job cost, not by rows, so a shuffle's second stage
+    * and its re-planning cost more than spreading the batch over tasks saves.
     *
-    * The body joins the increment thread whether or not `recent_log`
-    * threw, then rethrows the first failure (`recent_log`'s, else the
-    * increment's), so the batch fails and Spark does not commit it. The pair is NOT atomic: a crash or a failure in one
-    * write can leave batch N in one view and missing from the other, and only
-    * Spark's replay of batch N makes them agree. A cross-view commit marker
-    * (ROADMAP.md item 3) must publish after the join. The deterministic
-    * per-batchId paths make that replay idempotent — a replayed batch
-    * overwrites itself, fixing the reference's at-least-once double-count,
-    * SURVEY.md §2 W3. Increments compact on read via [[latestFromIncrements]]
-    * — the append-plus-compact pattern a real deployment would hand to a
-    * table format's MERGE. */
+    * The body joins the increment thread whether or not `recent_log` threw,
+    * then rethrows the first failure (`recent_log`'s, else the increment's),
+    * so the batch fails and Spark does not commit it. The pair is NOT
+    * atomic: a crash or a failure in one write can leave batch N in one view
+    * and missing from the other, and only Spark's replay of batch N makes
+    * them agree. A cross-view commit marker (ROADMAP.md item 3) must publish
+    * after the join, never before it. The deterministic per-batchId paths
+    * make that replay idempotent — a replayed batch overwrites itself,
+    * fixing the reference's at-least-once double-count, SURVEY.md §2 W3.
+    * Increments compact on read via [[latestFromIncrements]] — the
+    * append-plus-compact pattern a real deployment would hand to a table
+    * format's MERGE. */
   def maintainViews(events: DataFrame, outDir: String, checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
     events.writeStream
@@ -834,7 +835,7 @@ object StreamingViews {
           s"maintainViews-increment-$batchId")
         increment.start()
         try batch.write.mode("overwrite").parquet(s"$outDir/recent_log/batch=$batchId")
-        finally { increment.join(); batch.unpersist(); () }
+        finally try increment.join() finally batch.unpersist()
         if (incrementFailure != null) throw incrementFailure
       }
       .start()
